@@ -78,48 +78,8 @@ object BoatCli {
     }, "boat-cli-warmup")
     warmup.setDaemon(true)
     warmup.start()
-    def step[T](tag: String)(f: => T): T = {
-      val s0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[boat-cli] $tag: ${(System.nanoTime() - s0) / 1e9}%.2f s")
-      r
-    }
     try {
-      // The PARSED frame is cached: it is consumed by the year-clamp
-      // aggregate inside clean() and then by every downstream pass
-      // (validation gate, parquet sink, summary) — without the cache
-      // the non-splittable multiLine CSV parse re-ran per action
-      // (r8 profile: ~1.5 s each × 3). The cache holds dataset-sized
-      // rows, the same thing the parquet sink writes — exactly what a
-      // production run persists between a validation pass and sinks.
-      val raw = step("load")(Parse.load(spark, in)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      Validate.requireColumns(raw, Parse.rawSchema.fieldNames.toSeq)
-      // cleaned is cached too (dataset-sized, like raw): the clean
-      // projection ends in the 126-entry country-normalize expression
-      // chain, which the three consumers below would otherwise each
-      // re-run — noticeable in the interpreted small-input mode
-      val cleaned = step("clean plan")(BoatPipeline.clean(raw)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      step("validate")(
-        Validate.validateOrThrow(cleaned, Validate.boatChecks(java.time.Year.now.getValue)))
-      // Both sinks read the validated cache and are independent —
-      // run them as concurrent jobs (the local scheduler is FIFO per
-      // core, not per job, so the small summary job fills the idle
-      // cores the single-file parquet write leaves unused).
-      val s = BoatPipeline.summary(cleaned).cache()
-      val parquetErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      val parquetJob = new Thread(() =>
-        try cleaned.write.mode("overwrite").parquet(s"$out/data.parquet")
-        catch { case t: Throwable => parquetErr.set(t) },
-        "boat-cli-parquet-sink")
-      parquetJob.start()
-      step("summary sink")(
-        s.coalesce(1).write.mode("overwrite").option("header", "true")
-          .csv(s"$sum/data_summary.csv"))
-      step("parquet sink join")(parquetJob.join())
-      if (parquetErr.get() != null) throw parquetErr.get()
-      if (show) s.show(false)
+      BoatPipeline.run(spark, in, out, show = show, summaryDir = summaryDir)
       println(s"[boat-cli] wrote $out/data.parquet and $sum/data_summary.csv")
       println(f"[boat-cli] pipeline wall: ${(System.nanoTime() - t0) / 1e9}%.2f s (incl. session start)")
     } finally spark.stop()

@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The validated, typed record at the pipeline boundary (SURVEY.md
   * §1.5: typed Dataset only where the schema is fixed and type safety
@@ -22,6 +23,9 @@ final case class BoatRecord(
   * sink, no pandas stage, no driver round-trip, and the summary runs
   * ONCE (the reference executes it twice — show + toPandas,
   * /root/reference/src/pipeline_pyspark.py:361-362).
+  * In [[run]] the parsed frame is materialized once and shared: the
+  * year-clamp scan scrubs and parses each line while it fills the
+  * cache, and the validation gate and both sinks read that cache.
   */
 object BoatPipeline {
 
@@ -93,20 +97,32 @@ object BoatPipeline {
       .orderBy(col("avg_price").desc_nulls_last, col("country"))
 
   /** End-to-end run: load → clean → validate (fail-fast) → Parquet
-    * sink (S4) + single-file CSV summary sink (S5). Returns the
-    * summary for display (S6) without re-executing it. */
+    * sink (S4) under `outDir` + single-file CSV summary sink (S5)
+    * under `summaryDir` (default `outDir`). Returns the summary for display (S6) without
+    * re-executing it.
+    *
+    * The parsed frame is persisted here, not in [[Parse.load]] or
+    * [[clean]], whose other callers must not inherit a dataset-sized
+    * cache. Its four consumers — the year-clamp scan, the validation
+    * gate, the Parquet sink and the summary — then scrub and parse
+    * each line once instead of once each. It is unpersisted on every
+    * exit; the returned summary stays cached, because `unpersist`
+    * does not cascade to a dependent cache that is already loaded. */
   def run(spark: SparkSession, inPath: String, outDir: String,
           currentYear: Int = java.time.Year.now.getValue,
-          show: Boolean = false): DataFrame = {
-    val raw = Parse.load(spark, inPath)
-    Validate.requireColumns(raw, Parse.rawSchema.fieldNames.toSeq)
-    val cleaned = clean(raw, currentYear)
-    Validate.validateOrThrow(cleaned, Validate.boatChecks(currentYear))
-    cleaned.write.mode("overwrite").parquet(s"$outDir/data.parquet")
-    val s = summary(cleaned).cache()
-    s.coalesce(1).write.mode("overwrite").option("header", "true")
-      .csv(s"$outDir/data_summary.csv")
-    if (show) s.show(false) // S6 console sink; reuses the cached result
-    s
+          show: Boolean = false,
+          summaryDir: Option[String] = None): DataFrame = {
+    val raw = Parse.load(spark, inPath).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      Validate.requireColumns(raw, Parse.rawSchema.fieldNames.toSeq)
+      val cleaned = clean(raw, currentYear)
+      Validate.validateOrThrow(cleaned, Validate.boatChecks(currentYear))
+      cleaned.write.mode("overwrite").parquet(s"$outDir/data.parquet")
+      val s = summary(cleaned).cache()
+      s.coalesce(1).write.mode("overwrite").option("header", "true")
+        .csv(s"${summaryDir.getOrElse(outDir)}/data_summary.csv")
+      if (show) s.show(false) // S6 console sink; reuses the cached result
+      s
+    } finally raw.unpersist()
   }
 }

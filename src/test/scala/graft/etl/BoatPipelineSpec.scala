@@ -1,13 +1,21 @@
 package graft.etl
 
 import graft.SparkSpec
+import java.nio.file.{Files, Paths}
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.collection.mutable.ArrayBuffer
 
 /** End-to-end golden test of the boat ETL on the checked-in mini
   * fixture (FIXTURES.md §2): every dirt class the reference handles,
   * with hand-computed expected values. currentYear pinned to 2026 so
   * the clamp goldens are stable. */
-class BoatPipelineSpec extends SparkSpec {
+class BoatPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val fixture = "/root/repo/src/test/resources/boat_mini.csv"
   private lazy val raw = Parse.load(spark, fixture)
@@ -118,5 +126,79 @@ class BoatPipelineSpec extends SparkSpec {
     val csv = spark.read.option("header", "true").csv(s"$out/data_summary.csv")
     assert(csv.count() == 13)
     assert(csv.columns.toSeq == Seq("country", "avg_price", "count"))
+  }
+
+  /** Ids of the RDDs that hold cached blocks, once the listener bus
+    * has delivered every block update. */
+  private def storedRdds(): Set[Int] = {
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+  }
+
+  /** The physical plan of every action `body` launches, in order. */
+  private def actionPlans[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = ArrayBuffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result = try body finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    (result, plans.synchronized(plans.toList))
+  }
+
+  private def cachedRelations(plan: SparkPlan): Seq[InMemoryRelation] =
+    collect(plan) { case m: InMemoryTableScanExec => m.relation }
+
+  private def fileScans(plan: SparkPlan): Seq[FileSourceScanExec] =
+    collect(plan) { case f: FileSourceScanExec => f }
+
+  test("run(): every action reads one parsed cache; only the summary stays cached") {
+    spark.catalog.clearCache()
+    val before = storedRdds()
+    val out = Files.createTempDirectory("boat_once").toString
+    val shown = new java.io.ByteArrayOutputStream()
+    val (s, plans) = actionPlans(Console.withOut(shown)(
+      BoatPipeline.run(spark, fixture, out, currentYear = 2026, show = true)))
+
+    // clamp scan, validation gate, Parquet sink, summary sink, show
+    assert(plans.size == 5, plans.mkString("\n"))
+    // no action reads the input file itself: every one goes through a
+    // cache, and the caches bottom out in ONE relation over the input
+    plans.foreach(p => assert(fileScans(p).isEmpty, p))
+    def inputCaches(r: InMemoryRelation): Seq[InMemoryRelation] =
+      if (fileScans(r.cachedPlan).nonEmpty) Seq(r)
+      else cachedRelations(r.cachedPlan).flatMap(inputCaches)
+    val perAction = plans.map(p => cachedRelations(p).flatMap(inputCaches))
+    perAction.foreach(rs => assert(rs.nonEmpty))
+    assert(perAction.flatten.map(_.cacheBuilder).distinct.size == 1)
+
+    // show printed from the summary cache: no aggregation re-ran
+    val showPlan = plans.last
+    assert(collect(showPlan) { case a: HashAggregateExec => a }.isEmpty, showPlan)
+    assert(cachedRelations(showPlan).forall(r => fileScans(r.cachedPlan).isEmpty))
+    assert(shown.toString.contains("Switzerland"))
+
+    // the parsed cache is gone; the returned summary is the one left
+    val after = storedRdds() -- before
+    assert(after.size == 1, spark.sparkContext.getRDDStorageInfo.mkString("\n"))
+    s.unpersist(blocking = true)
+    assert((storedRdds() -- before).isEmpty)
+  }
+
+  test("run(): the validation gate fails before any sink and leaves no cache") {
+    spark.catalog.clearCache()
+    val before = storedRdds()
+    val out = Files.createTempDirectory("boat_gate").toString
+    // every year exceeds 1900, so all clamp to 1965: outside 1800-1900
+    intercept[Validate.ValidationException] {
+      BoatPipeline.run(spark, fixture, out, currentYear = 1900)
+    }
+    assert(!Files.exists(Paths.get(out, "data.parquet")))
+    assert((storedRdds() -- before).isEmpty)
   }
 }

@@ -10,9 +10,22 @@ INPUT_FILE="${1:-src/test/resources/boat_mini.csv}"
 OUTPUT_DIR="${2:-target/smoke_output}"
 
 mkdir -p "$OUTPUT_DIR"
+# the CLI overwrites both sinks; clear them so the checks below cannot
+# pass on an earlier run's output
+rm -rf "$OUTPUT_DIR/data.parquet" "$OUTPUT_DIR/data_summary.csv"
 
 sbt -batch "runMain graft.etl.BoatCli -i $INPUT_FILE -o $OUTPUT_DIR -s $OUTPUT_DIR"
 
+# The CLI must have written both sinks: at least one Parquet part file,
+# and a non-empty CSV part file holding the summary.
+if ! compgen -G "$OUTPUT_DIR/data.parquet/part-*.parquet" >/dev/null; then
+  echo "ERROR: no Parquet part file under $OUTPUT_DIR/data.parquet" >&2
+  exit 1
+fi
+if ! find "$OUTPUT_DIR/data_summary.csv" -name 'part-*.csv' -size +0c 2>/dev/null | grep -q .; then
+  echo "ERROR: no non-empty CSV part file under $OUTPUT_DIR/data_summary.csv" >&2
+  exit 1
+fi
 echo "==> Parquet: $OUTPUT_DIR/data.parquet"
 echo "==> Summary CSV: $OUTPUT_DIR/data_summary.csv"
 
