@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.Tables
 
 /** Iterative graph computation over the events click graph — the
@@ -417,12 +418,14 @@ object GraphOps {
       val cutd = Checkpoints.cut(df)
       if (second != null) Checkpoints.release(second)
       second = newest; newest = cutd
+      require(cutd.schema(sc).dataType == LongType,
+              s"q209 renorm needs a long $sc, got ${cutd.schema(sc).dataType}")
       val row = cutd.agg(max(col(sc))).first()
       if (row.isNullAt(0)) // empty frame: div null = null, as before
         cutd.select(col(key), lit(null).cast("long").as(sc))
       else
-        cutd.select(col(key),
-                    expr(s"$sc * 1000000L div ${row.getLong(0)}L").as(sc))
+        cutd.select(col(key), call_function("div", col(sc) * lit(1000000L),
+                                            lit(row.getLong(0))).as(sc))
     }
     var hubs = e.select(col("u")).distinct()
       .select(col("u"), lit(1000000L).as("h"))
@@ -898,8 +901,10 @@ object GraphOps {
       .filter(col("event_type") === "click")
       .select(col("user_id"),
               get_json_object(col("props"), "$.k").cast("long").as("k"))
-    // undirected item projection, oriented a < b (the q116 edge set)
+    // undirected item projection, oriented a < b (the q116 edge set);
+    // null users form no basket (the oracle's self-join never matches them)
     val e = clicks
+      .filter(col("user_id").isNotNull)
       .groupBy(col("user_id"))
       .agg(sort_array(collect_set(col("k"))).as("ks"))
       .select(explode(
@@ -994,7 +999,9 @@ object GraphOps {
     // stream of the j≠i join — and the matrix is symmetric, so the
     // ordered form is the aggregated frame unioned with its mirror.
     // Values identical: cnt(j,i) = |users who clicked both|.
+    // Null users form no basket (the oracle's self-join never matches them).
     val pairCnt = clicks
+      .filter(col("user_id").isNotNull)
       .groupBy(col("user_id")).agg(sort_array(collect_set(col("k"))).as("ks"))
       .select(explode(
         graft.functions.VectorFunctions.longPairsGt(col("ks"))).as("p"))

@@ -1122,8 +1122,9 @@ object TextOps {
     * pipeline runs before anything tokenizes. Words become
     * space-separated symbol strings (" a b c "); each round counts
     * adjacent symbol pairs weighted by word frequency, picks the
-    * most frequent pair (count desc, then lexicographic — the
-    * deterministic tie-break the reference BPE leaves unspecified),
+    * most frequent pair (count desc, then pair ascending in UTF-8
+    * byte order — the deterministic tie-break the reference BPE
+    * leaves unspecified),
     * and rewrites every vocabulary entry with the pair merged.
     * Output: one row per merge step with the pair, the merged symbol
     * and its count — fully oracle-gated, the DuckDB twin replaying
@@ -1144,15 +1145,14 @@ object TextOps {
     * runs) is comfortably inside the equivalence bound.
     *
     * Scale shape: the corpus is touched ONCE (word counts — one
-    * shuffle on the word, vocabulary-sized output). Every merge
-    * round runs on the persisted VOCABULARY frame: a map-side pair
-    * explode, a pair-count aggregate (|symbol-vocab|² bound, in
-    * practice tiny), and a 1-row driver collect of the argmax (the
-    * bounded-scalar pattern of the year clamp / waterfill). At
-    * 100 TB the vocab frame is millions of rows against a corpus of
-    * trillions of tokens — the rounds cost nothing next to the one
-    * corpus pass, which is exactly why production BPE trainers
-    * (GPT-2's, SentencePiece) work from word counts too. */
+    * shuffle on the word, vocabulary-sized output), and that one
+    * (sym, cnt) table is collected to the driver, where
+    * [[bpeTrain]] runs every merge round: no Spark job per round.
+    * The collected table is bounded by the DISTINCT words, not by
+    * the corpus — at 100 TB it is millions of rows against a corpus
+    * of trillions of tokens, which is exactly why production BPE
+    * trainers (GPT-2's, SentencePiece) work from word counts too
+    * (sizes measured at sf0.1 in SCALE.md). */
   def q188BpeMerges(s: SparkSession, dir: String,
                     merges: Int = 6): DataFrame = {
     val words = Tables.documents(s, dir)
@@ -1172,57 +1172,55 @@ object TextOps {
 
   /** The q188 merge loop, shared with [[q191BpeEncode]]: trains
     * `merges` BPE merge steps on a (sym, cnt) vocabulary frame and
-    * returns them driver-side as (step, l, r, merged, pair_cnt).
-    * Persist lifecycle is self-contained — only the current
-    * vocabulary generation stays cached during the loop and every
-    * generation is unpersisted before returning (the output is a
-    * driver-side list, never a lineage over the cached frames). */
+    * returns them as (step, l, r, merged, pair_cnt). The frame is
+    * collected ONCE and every round runs on the driver, replaying the
+    * Spark formulation the oracle twin mirrors, step for step:
+    *  - `trim` strips U+0020 only, and `split(" ", -1)` keeps empty
+    *    symbols, as Spark's `trim`/`split` do;
+    *  - entries with fewer than 2 symbols contribute no pair;
+    *  - pair counts are long sums of `cnt`;
+    *  - the argmax is `pc` descending, then `l`, then `r`, both
+    *    ascending in UTF-8 BYTE order — Spark's (and DuckDB's) string
+    *    order, which differs from `String.compareTo`'s UTF-16 order
+    *    past the BMP;
+    *  - the rewrite is the pinned double literal replacement;
+    *  - a round with no pair left ends training early. */
   private[graft] def bpeTrain(
       words: DataFrame,
       merges: Int): Seq[(Int, String, String, String, Long)] = {
-    import org.apache.spark.storage.StorageLevel
-    var vocab = words.persist(StorageLevel.MEMORY_AND_DISK)
-    // the argmax collect of round i MATERIALIZES vocab_i, so its
-    // predecessor is safe to unpersist right after — only the
-    // current generation stays cached (at the 100 TB sizing the
-    // vocab frame is millions of rows; holding all merges+1
-    // generations would be pure cache waste), and the returned
-    // frame is driver-built, so the last generation frees too
-    var prevVocab: Option[DataFrame] = None
+    import org.apache.spark.unsafe.types.UTF8String
+    val vocab = words.select(col("sym"), col("cnt")).collect()
+    val syms = vocab.map(_.getString(0))
+    val cnts = vocab.map(_.getLong(1))
+    def trim(s: String): String = {
+      var (b, e) = (0, s.length)
+      while (b < e && s.charAt(b) == ' ') b += 1
+      while (e > b && s.charAt(e - 1) == ' ') e -= 1
+      s.substring(b, e)
+    }
+    val utf8: Ordering[String] =
+      (x, y) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    val rank = Ordering.Tuple3(Ordering.Long.reverse, utf8, utf8)
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     var step = 1
     while (step <= merges) {
-      val top = vocab
-        .select(col("cnt"), split(trim(col("sym")), " ").as("a"))
-        .filter(size(col("a")) >= 2)
-        .select(col("cnt"), explode(expr(
-          "transform(sequence(0, size(a) - 2)," +
-            " i -> struct(element_at(a, i + 1) AS l," +
-            "             element_at(a, i + 2) AS r))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("pc"))
-        .orderBy(col("pc").desc, col("l"), col("r"))
-        .limit(1).collect()
-      prevVocab.foreach(_.unpersist())
-      if (top.isEmpty) { step = merges + 1 } // degenerate corpus: done
+      val pc = scala.collection.mutable.HashMap[(String, String), Long]()
+      syms.indices.foreach { i =>
+        val a = trim(syms(i)).split(" ", -1)
+        (0 until a.length - 1).foreach { j =>
+          val p = (a(j), a(j + 1))
+          pc(p) = pc.getOrElse(p, 0L) + cnts(i)
+        }
+      }
+      if (pc.isEmpty) step = merges + 1 // degenerate corpus: done
       else {
-        val (l, r, pc) = (top(0).getString(0), top(0).getString(1),
-                          top(0).getLong(2))
-        out += ((step, l, r, l + r, pc))
-        val pat = lit(s" $l $r "); val rep = lit(s" $l$r ")
-        prevVocab = Some(vocab)
-        vocab = vocab
-          .select(replace(replace(col("sym"), pat, rep), pat, rep).as("sym"),
-                  col("cnt"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val (n, l, r) = pc.iterator.map { case ((l, r), n) => (n, l, r) }.min(rank)
+        out += ((step, l, r, l + r, n))
+        val (pat, rep) = (s" $l $r ", s" $l$r ")
+        syms.indices.foreach(i => syms(i) = syms(i).replace(pat, rep).replace(pat, rep))
         step += 1
       }
     }
-    // the final round leaves two generations registered: the last
-    // MATERIALIZED one (prevVocab — its successor was never collected)
-    // and the lazily-defined successor itself
-    prevVocab.foreach(_.unpersist())
-    vocab.unpersist()
     out.toSeq
   }
 
@@ -1265,16 +1263,18 @@ object TextOps {
     * integer chars-per-token compression ratio (the number tokenizer
     * evaluations quote).
     *
-    * Scale shape — the production-tokenizer recipe: encoding runs on
-    * the DISTINCT-WORD vocabulary (a static chain of the same pinned
-    * double literal replacements, one map pass over the vocab frame),
-    * never on the corpus; the corpus is touched exactly once to build
-    * per-(source, word) counts, and the encoded token lengths come
-    * back via a BROADCAST join on the word. At 100 TB the vocabulary
-    * is millions of rows against trillions of corpus tokens, so the
-    * join-back is the only corpus-sized stage and it is
-    * shuffle-free. Integer-exact end to end (counts, lengths, one
-    * exact integer division), so fully oracle-gated. */
+    * Scale shape — the production-tokenizer recipe: training and
+    * encoding both run on the DISTINCT-WORD vocabulary, never on the
+    * corpus. The corpus is touched exactly once, to build cached
+    * per-(source, word) counts; their per-word rollup is collected
+    * once for the driver-side trainer (no job per merge round);
+    * encoding is a static chain of the same pinned double literal
+    * replacements, one map pass over the vocab frame; and the encoded
+    * token lengths come back via a BROADCAST join on the word. At
+    * 100 TB the vocabulary is millions of rows against trillions of
+    * corpus tokens, so the join-back is the only corpus-sized stage
+    * and it is shuffle-free. Integer-exact end to end (counts,
+    * lengths, one exact integer division), so fully oracle-gated. */
   def q191BpeEncode(s: SparkSession, dir: String,
                     merges: Int = 6): DataFrame = {
     import org.apache.spark.storage.StorageLevel

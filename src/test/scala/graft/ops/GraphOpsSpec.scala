@@ -343,4 +343,30 @@ class GraphOpsSpec extends SparkSpec {
       s"got ${got.toSeq}")
     spark.catalog.clearCache()
   }
+
+  test("q249/q251: a null-user click contributes no pair") {
+    // the q249 planted path 1—2—3 and the q251 cohort, plus a null
+    // user clicking items 1 and 3: as a basket it would add the edge
+    // (1,3) — erasing q249's one prediction — and cooc(1,3) = 1,
+    // giving cohort user 0 a second recommendation
+    val tmp = java.nio.file.Files.createTempDirectory("nulluser").toString
+    val t0 = Timestamp.valueOf("2024-01-01 10:00:00")
+    val clicks: Seq[(Option[Long], Long)] = Seq(
+      (Some(0L), 1L), (Some(1L), 2L), (Some(1L), 3L),
+      (Some(100L), 1L), (Some(100L), 2L), (Some(101L), 2L), (Some(101L), 3L),
+      (None, 1L), (None, 3L))
+    clicks.zipWithIndex.map { case ((u, k), i) =>
+      (i.toLong, u, t0, "click", 1.0, s"""{"k": $k}""") }
+      .toDF("event_id", "user_id", "ts", "event_type", "value", "props")
+      .withColumn("ts", expr("CAST(unix_micros(ts) * 1000 AS LONG)"))
+      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+    val lp = GraphOps.q249LinkPredict(spark, tmp).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(lp.toSeq == Seq((1L, 3L)), s"q249 predictions ${lp.toSeq}")
+    // cooc(1,2) = 1 (user 100), cooc(2,3) = 2 (users 1, 101)
+    val cf = GraphOps.q251ItemCf(spark, tmp)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
+    assert(cf.toSeq == Seq((0L, 2L, 1L, 1), (1L, 1L, 1L, 1)), s"q251 ${cf.toSeq}")
+    spark.catalog.clearCache()
+  }
 }

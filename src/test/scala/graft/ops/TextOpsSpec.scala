@@ -55,6 +55,20 @@ class TextOpsSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("BPE trainer breaks count ties in UTF-8 byte order, as DuckDB does") {
+    // five words of one pair each, every pair counting 1, so the pair
+    // order alone picks each merge. U+FB01 sorts BEFORE U+1F600 in
+    // UTF-8 bytes (EF.. < F0..) but AFTER it in UTF-16 units
+    // (FB01 > D83D): String.compareTo would swap rounds 2/3 and 4/5.
+    // Round 6 finds no pair left and ends training early.
+    val (fi, smile) = ("\uFB01", new String(Character.toChars(0x1F600)))
+    val vocab = Seq(s" x $fi ", s" x $smile ", s" $fi y ", s" $smile y ", " x y ")
+      .map(_ -> 1L).toDF("sym", "cnt")
+    val got = TextOps.bpeTrain(vocab, merges = 6).map(m => (m._2, m._3))
+    assert(got == Seq(("x", "y"), ("x", fi), ("x", smile), (fi, "y"), (smile, "y")),
+      s"merge order: $got")
+  }
+
   test("q191 BPE encode: trained merges tokenize the hand corpus exactly") {
     // same corpus as the q188 spec — merges learned: (a,b) then (a,a).
     // Encoding: "abab" -> " ab ab " (2 tokens); "aaaa" -> " aa aa "

@@ -1,0 +1,58 @@
+package graft.queries
+
+import graft.{SparkEntry, SparkSpec, Tables, TablesSpec}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Building a query — the DataFrame, before any action — launches no
+  * Spark job: table schemas come from driver-side footer reads, and
+  * the BPE trainer collects its vocabulary once instead of running
+  * jobs per merge round. */
+class BuildJobsSpec extends SparkSpec {
+
+  /** Jobs started while `body` runs, counted once the listener bus
+    * has delivered every event. */
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try body finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("building q02, q10 and the non-BPE catalog queries launches no job") {
+    for (q <- Seq("q02_revenue_by_nation", "q10_monthly_orders", "q225_fuzzy_parts",
+                  "q249_link_predict", "q53_approx_percentiles", "q91_sparse_cosine")) {
+      val jobs = jobsDuring(SparkEntry.queries(q)(spark, sf0001))
+      assert(jobs == 0, s"building $q launched $jobs jobs")
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("both events.ts fixture generations load with no job") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+    for ((g, ts) <- Seq("nanos" -> "TIMESTAMP(NANOS,true)",
+                        "micros" -> "TIMESTAMP(MICROS,false)")) {
+      TablesSpec.writeEvents(s"$tmp/$g", ts)
+      val jobs = jobsDuring(Tables.events(spark, s"$tmp/$g"))
+      assert(jobs == 0, s"loading the $g generation launched $jobs jobs")
+    }
+  }
+
+  test("building q191 launches the same jobs for 2 and 6 merge rounds") {
+    def build(merges: Int): Int = {
+      spark.catalog.clearCache()
+      jobsDuring(graft.ops.TextOps.q191BpeEncode(spark, sf0001, merges))
+    }
+    val (two, six) = (build(2), build(6))
+    spark.catalog.clearCache()
+    assert(two == six, s"merge rounds launch jobs: $two jobs at 2 rounds, $six at 6")
+  }
+}
