@@ -1,16 +1,22 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Boat-CSV ingestion (SURVEY.md §2.1 S1-S3): raw-line read, blank
   * drop, line-level ascii scrub, then CSV parse — the reference's
   * preprocess_csv (/root/reference/src/pipeline_pyspark.py:186-201)
-  * without its tempfile round-trip: the scrub runs as a Column
-  * expression over `spark.read.text` lines and `from_csv` parses in
-  * the same stage, so the whole ingest is one distributed pass with
-  * no driver materialization.
+  * without its tempfile round-trip: the scrub runs as one codegen'd
+  * expression ([[AsciiScrub]]) over `spark.read.text` lines and
+  * `from_csv` parses in the same stage, so the whole ingest is one
+  * distributed pass with no driver materialization.
   */
 object Parse {
 
@@ -40,10 +46,11 @@ object Parse {
     * scrubbed text as CSV with an explicit schema (S3: quoted fields
     * contain commas and, in the real data, embedded newlines).
     *
-    * DEFAULT PATH (fully splittable): scrub as Column expressions over
-    * `spark.read.text` and parse each line with `from_csv` in the same
-    * stage — one distributed pass, no driver materialization, no
-    * shuffle, whole-stage codegen end to end. This is the 100 TB path.
+    * DEFAULT PATH (fully splittable): scrub each line with the
+    * [[AsciiScrub]] kernel over `spark.read.text` and parse it with
+    * `from_csv` in the same stage — one distributed pass, no driver
+    * materialization, no shuffle, whole-stage codegen end to end. This
+    * is the 100 TB path.
     *
     * FALLBACK (auto-detected): when the input contains quoted fields
     * spanning physical lines — detected by quote parity, which the
@@ -77,8 +84,8 @@ object Parse {
       .filter(trim(col("value")) =!= "")
       // header dropped on the RAW line: scrub(header) == header (the
       // header is ASCII-clean), and filtering after the scrub Project
-      // would inline the whole regexp chain into the Filter and run
-      // it twice per line (the known Filter-over-Project trap)
+      // would inline the scrub into the Filter and run it twice per
+      // line (the known Filter-over-Project trap)
       .filter(col("value") =!= lit(header))
       .select(Scrub.asciiScrub(col("value")).as("value"))
 
@@ -98,7 +105,9 @@ object Parse {
     * closes) a quoted region that continues past the line break, i.e.
     * the file has multi-line records. Early-exits on the first such
     * line (`isEmpty` plans a CollectLimit(1)); result cached per
-    * input version so repeated loads (bench loops) scan once. */
+    * input version so repeated loads (bench loops) scan once. The
+    * distributed branch tests each line with [[OddQuotes]], a byte
+    * count with no decode or regex. */
   private val multiLineCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   private val driverScanLimit = 64L << 20
@@ -106,7 +115,7 @@ object Parse {
     multiLineCache.computeIfAbsent(cacheKey(path), _ => {
       // Local files up to 64 MB are peeked on the DRIVER with an
       // early-exit byte scan: the answer is one bit, and a Spark job
-      // (scheduler + codegen + full-file regexp) costs ~1.5 s of the
+      // (scheduler + codegen + full-file scan) costs ~1.5 s of the
       // pipeline's wall for it (r8 profile). Anything bigger or
       // non-local falls back to the distributed scan — the same
       // early-exit CollectLimit(1) shape, sized for inputs a driver
@@ -139,10 +148,8 @@ object Parse {
         } else None
       } catch { case _: Exception => None }
       local.getOrElse {
-        val quotes = length(col("value")) -
-          length(regexp_replace(col("value"), "\"", ""))
-        java.lang.Boolean.valueOf(
-          !spark.read.text(path).filter(quotes % 2 === 1).isEmpty)
+        val odd = ColumnBridge.column(OddQuotes(ColumnBridge.expression(col("value"))))
+        java.lang.Boolean.valueOf(!spark.read.text(path).filter(odd).isEmpty)
       }
     })
 
@@ -225,5 +232,48 @@ object Parse {
            expr("substring(Type, instr(Type, ',') + 1)")).otherwise(lit(""))
     df.withColumn("Power", when(length(tail) > 0, tail).otherwise(lit("None")))
       .withColumn("Type", substring_index(col("Type"), ",", 1))
+  }
+}
+
+/** True when a line holds an odd number of `"` (0x22) bytes: the
+  * per-line test of `Parse`'s distributed multi-line detection. It
+  * counts bytes of the `UTF8String` directly; in UTF-8, 0x22 is never
+  * part of a multi-byte sequence, so the count equals the number of
+  * `"` characters. */
+case class OddQuotes(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"odd_quotes requires string, got ${other.simpleString}")
+  }
+
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "odd_quotes"
+
+  override protected def nullSafeEval(input: Any): Any =
+    OddQuotes.odd(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in =>
+      s"${ev.value} = graft.etl.OddQuotes.odd($in);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object OddQuotes {
+  /** Static so generated code can call it directly. */
+  def odd(s: UTF8String): Boolean = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var odd = false
+    var i = 0
+    while (i < n) {
+      if (Platform.getByte(base, off + i) == '"') odd = !odd
+      i += 1
+    }
+    odd
   }
 }

@@ -29,7 +29,9 @@ object EtlQueries {
   /** q12 — F2 ascii scrub. The harness text is clean ASCII, so the
     * query injects the reference's exact dirt classes (mojibake `Â£`,
     * `Â»`, accented `Ã©`, doubled spaces, space-comma) and scrubs them
-    * back out; the oracle applies the identical regex chain. */
+    * back out with the [[graft.etl.AsciiScrub]] kernel. The oracle
+    * replays the reference's seven-step regex chain, so it checks the
+    * kernel against an independent implementation. */
   def q12AsciiScrub(s: SparkSession, dir: String): DataFrame = {
     val dirty = concat(lit("Â£ "), col("p_name"), lit(" Â» "), col("p_brand"),
                        lit("  ,  Ã©nd"))
