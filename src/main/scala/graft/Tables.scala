@@ -157,23 +157,4 @@ object Tables {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (scanSplits(df) < p) df.repartition(p, key) else df
   }
-
-  /** On-disk bytes of a table, from filesystem METADATA only (no
-    * Spark job): the cheap proxy queries use to decide whether a
-    * shared-lineage persist pays for itself. Non-local or unlistable
-    * paths report Long.MaxValue — at cluster scale "unknown" means
-    * "assume big", which keeps the persist (the safe default: a
-    * wasted small-input cache costs milliseconds; a missing
-    * big-input cache costs a second corpus scan). */
-  def tableBytes(dir: String, name: String): Long =
-    try {
-      val p = java.nio.file.Paths.get(dir, s"$name.parquet")
-      if (!java.nio.file.Files.exists(p)) Long.MaxValue
-      else {
-        val s = java.nio.file.Files.walk(p)
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-    } catch { case _: Exception => Long.MaxValue }
 }

@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point mirroring the reference's argparse surface
   * (/root/reference/src/pipeline_pyspark.py:370-384):
   * `-i/--input <csv> -o/--output <dir> -s/--summary <dir>
@@ -13,33 +11,33 @@ import org.apache.spark.sql.SparkSession
 object BoatCli {
 
   def main(args: Array[String]): Unit = {
+    val usage = "(usage: -i <csv> -o <dir> -s <dir> [--show])"
     var input, output, summaryDir: Option[String] = None
     var show = false
     var i = 0
+    def value(): Option[String] = {
+      if (i + 1 >= args.length) sys.error(s"missing value for ${args(i)} $usage")
+      i += 2
+      Some(args(i - 1))
+    }
     while (i < args.length) {
       args(i) match {
-        case "-i" | "--input"   => input = Some(args(i + 1)); i += 2
-        case "-o" | "--output"  => output = Some(args(i + 1)); i += 2
-        case "-s" | "--summary" => summaryDir = Some(args(i + 1)); i += 2
+        case "-i" | "--input"   => input = value()
+        case "-o" | "--output"  => output = value()
+        case "-s" | "--summary" => summaryDir = value()
         case "--show"           => show = true; i += 1
         case "--no-spark" =>
           System.err.println("[boat-cli] --no-spark has no effect: the engine is Spark end to end")
           i += 1
-        case other => sys.error(s"unknown argument: $other (usage: -i <csv> -o <dir> -s <dir> [--show])")
+        case other => sys.error(s"unknown argument: $other $usage")
       }
     }
     val in = input.getOrElse(sys.error("missing -i/--input"))
     val out = output.getOrElse(sys.error("missing -o/--output"))
     val sum = summaryDir.getOrElse(out)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val t0 = System.nanoTime()
-    val spark = SparkSession.builder()
-      .appName("BoatDataETL").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     System.err.println(f"[boat-cli] spark session up in ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // One-shot CLI economics: the first parquet write and the first
     // CSV parse each pay 1-2 s of class-loading + codegen that a

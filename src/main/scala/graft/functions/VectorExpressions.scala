@@ -728,8 +728,12 @@ object SeqTriples {
   * DISTINCT input this is also element-for-element identical to the
   * `slice`-based i<j expansion (q200's formulation). Null elements
   * never pair (the HOF's null-comparison semantics). Output field
-  * names are (a, b); callers re-alias. Input sizes are capped
-  * upstream (dfCap/basket/maxDeg), so per-row work is bounded. */
+  * names are (a, b); callers re-alias. Per-row work and output are
+  * quadratic in the array size, and not every caller bounds it:
+  * q91/q216 posting lists are df-capped and q249's wedge side is
+  * maxDeg-capped, but q249's edge side and q251 expand per-user
+  * click baskets that have no cap, so one huge basket is expanded
+  * inside one row. */
 case class LongPairsGt(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -938,7 +942,8 @@ object NfcNormalize {
 }
 
 /** Morton (Z-order) interleave of two long keys' low 16 bits — the
-  * multi-column clustering key (q104, LayoutDemo §E): bit i of `a`
+  * multi-column clustering key (q104; file skipping measured in
+  * SCALE.md's Z-order bullet, commit d2071d8): bit i of `a`
   * lands at output bit 2i and bit i of `b` at bit 2i+1, so rows
   * sorted by the key tile the (a, b) plane with locality in BOTH
   * dimensions, and parquet min/max row-group pruning works for
@@ -1448,9 +1453,6 @@ object VectorFunctions {
   def dotF32(a: Column, b: Column): Column =
     ColumnBridge.column(
       DotF32(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  def l2normF32(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(dotF32(a, a))
 
   /** Exact squared L2 distance over two array<long> columns. */
   def sqDistL64(a: Column, b: Column): Column =

@@ -1256,7 +1256,8 @@ object Dedup {
     * fingerprint (pre-aggregated), so state is corpus-distinct-sized,
     * not corpus-sized. At warehouse scale the existing-fingerprint
     * frames persist as bucketed tables and the daily screen becomes
-    * a co-located join — cf. the bucketing levers in LayoutDemo §B. */
+    * a co-located join — cf. the bucketing lever measured in
+    * SCALE.md's layout bullet (commit d2071d8). */
   def q107IncrementalDedup(s: SparkSession, dir: String,
                            prefixTokens: Int = 8): DataFrame = {
     val docs = Tables.documents(s, dir)

@@ -617,7 +617,8 @@ object Similarity {
     * the only exchanges are the per-query shortlist window and a
     * broadcast join that fetches the R·|Q| shortlist embeddings for
     * re-ranking (at warehouse scale that fetch is the
-    * bloom/DPP-prunable id-lookup LayoutDemo demonstrates). This is
+    * bloom/DPP-prunable id-lookup SCALE.md's runtime bloom-filter
+    * bullet measures, commit d2071d8). This is
     * the billion-scale recipe precisely because the coarse scorer
     * reads M bytes per vector and the exact scorer touches only
     * R/N of the corpus. */
@@ -792,7 +793,8 @@ object Similarity {
     * Scale shape: the pairwise similarity runs ONLY within cells — a
     * cell-keyed self-join, never corpus × corpus; cells are the
     * C-way partition a 100 TB corpus would bucket its embedding store
-    * by (the LayoutDemo partition-by-cell layout), so each executor
+    * by (the partition-by-cell layout measured in SCALE.md, commit
+    * d2071d8), so each executor
     * scores its own cell locally. The assignment frame is persisted:
     * it feeds both join sides and the final verdict, and without the
     * cache the crossJoin-against-centroids assignment would run

@@ -659,8 +659,9 @@ object Relational {
     * l_suppkey) via the codegen'd [[graft.functions.ZOrder2]]
     * expression: the key a warehouse writer sorts by so parquet
     * min/max pruning serves range filters on EITHER column
-    * (LayoutDemo §E measures the file-skipping effect; this query
-    * oracle-gates the key computation itself — the oracle replays
+    * (SCALE.md's Z-order bullet records the file-skipping effect,
+    * measured at commit d2071d8; this query oracle-gates the key
+    * computation itself — the oracle replays
     * the interleave as 32 unrolled shift/AND terms). Pure map pass,
     * zero shuffles before the output sort. */
   def q104ZOrderKey(s: SparkSession, dir: String): DataFrame =

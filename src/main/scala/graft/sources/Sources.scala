@@ -15,15 +15,6 @@ object Sources {
   def readJsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
 
-  /** Schema'd CSV source (header skipped by position, quoted fields). */
-  def readCsv(spark: SparkSession, path: String, schema: StructType,
-              header: Boolean = true): DataFrame =
-    spark.read.schema(schema)
-      .option("header", header.toString)
-      .option("quote", "\"").option("escape", "\"")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-
   /** Dead-letter pattern: parse with PERMISSIVE + corrupt-record
     * capture, returning (good rows, quarantined raw lines). The
     * reference aborts the whole job on bad data (V3); at 100 TB the

@@ -7,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * getOrCreate — so the suite doesn't pay session bring-up per
   * spec). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local("4")
 
   def sf0001 = "/root/testdata/sf0.001"
 }

@@ -201,4 +201,14 @@ class BoatPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!Files.exists(Paths.get(out, "data.parquet")))
     assert((storedRdds() -- before).isEmpty)
   }
+
+  test("BoatCli: a value flag given last raises the usage error") {
+    // parsing fails before any session is built
+    Seq(Array("-i"), Array("-i", "x.csv", "-o"), Array("-i", "x.csv", "--summary"))
+      .foreach { args =>
+        val e = intercept[RuntimeException](BoatCli.main(args))
+        assert(e.getMessage ==
+          s"missing value for ${args.last} (usage: -i <csv> -o <dir> -s <dir> [--show])")
+      }
+  }
 }

@@ -58,4 +58,21 @@ if command -v python3 >/dev/null; then
     exit 1
   fi
   echo "==> QUERIES.md up to date"
+else
+  echo "SKIPPED: QUERIES.md freshness check (python3 not found)"
+fi
+
+# graft.Explain runs one catalog query through Session.local and must
+# print its timed line.
+SF_DIR=/root/testdata/sf0.001
+if [ -d "$SF_DIR" ]; then
+  EXPLAIN_OUT="$(sbt -batch "runMain graft.Explain $SF_DIR q01_pricing_summary" 2>&1)" || true
+  if ! grep -q '\[explain\] q01_pricing_summary timed:' <<<"$EXPLAIN_OUT"; then
+    echo "$EXPLAIN_OUT" | tail -n 20 >&2
+    echo "ERROR: graft.Explain printed no timed line for q01_pricing_summary" >&2
+    exit 1
+  fi
+  echo "==> graft.Explain: $(grep -o '\[explain\] q01_pricing_summary timed:.*' <<<"$EXPLAIN_OUT")"
+else
+  echo "SKIPPED: graft.Explain check ($SF_DIR not found)"
 fi

@@ -9,6 +9,5 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-8g} \
+exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -cp "target/scala-2.13/boatetlpysparkspark_2.13-0.1.0.jar:/opt/spark/jars/*" "$@"
