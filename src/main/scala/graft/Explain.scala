@@ -6,8 +6,11 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
+    val usage = "(usage: graft.Explain <sfDir> <queryName> [queryName ...])"
+    if (args.length < 2) sys.error(s"expected an sf directory and at least one query name $usage")
     val sfDir = args.head
     val names = args.tail.toSeq
+    names.filterNot(SparkEntry.queries.contains).foreach(n => sys.error(s"unknown query: $n $usage"))
     val spark = Session.local()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    if (args.length != 2)
+      sys.error(s"expected 2 arguments, got ${args.length} (usage: graft.Verify <sfDir> <outDir>)")
     val Array(sfDir, outDir) = args
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()

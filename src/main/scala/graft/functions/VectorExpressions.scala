@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Generator, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -716,73 +716,78 @@ object SeqTriples {
   }
 }
 
-/** Ascending value pairs of an array<long> in ONE codegen'd pass —
-  * the candidate-pair expansion kernel shared by the posting-list
-  * similarity operators (q91, q216), the market-basket pair miner
-  * (q200) and the wedge enumeration (q249). Enumerates, for every
-  * element x at position i, every element y (any position) with
-  * y > x, in (outer i asc, inner j asc) order — exactly the HOF
+/** Generator of the ascending value pairs (a, b) of an array<long>:
+  * for every element x at position i, every element y (any position)
+  * with y > x, in (outer i asc, inner j asc) order — the rows of
   * `flatten(transform(arr, x -> transform(filter(arr, y -> y > x),
-  * y -> struct(x, y))))` it replaces, which pays three interpreted
-  * lambda levels and two intermediate arrays per row. On a SORTED
-  * DISTINCT input this is also element-for-element identical to the
-  * `slice`-based i<j expansion (q200's formulation). Null elements
-  * never pair (the HOF's null-comparison semantics). Output field
-  * names are (a, b); callers re-alias. Per-row work and output are
-  * quadratic in the array size, and not every caller bounds it:
-  * q91/q216 posting lists are df-capped and q249's wedge side is
-  * maxDeg-capped, but q249's edge side and q251 expand per-user
-  * click baskets that have no cap, so one huge basket is expanded
-  * inside one row. */
-case class LongPairsGt(child: Expression) extends UnaryExpression {
+  * y -> struct(x, y))))`. Nulls never pair; a null array yields
+  * nothing. The pair multiset does not depend on element order, so
+  * aggregating callers need not sort the array. The pair kernel of
+  * q91, q216, q200, q249 (edges and wedges) and q251. `eval` and the
+  * generated code return a lazy iterator that `GenerateExec` drains
+  * inside whole-stage codegen, so a row costs O(n) memory however
+  * many pairs it has: a whale basket streams its C(n,2) pairs. */
+case class LongPairs(child: Expression) extends UnaryExpression with Generator {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"long_pairs_gt requires array<bigint>, got ${other.simpleString}")
+      s"long_pairs requires array<bigint>, got ${other.simpleString}")
   }
 
-  override def dataType: DataType = ArrayType(
+  override def elementSchema: StructType =
     StructType(Seq(StructField("a", LongType, nullable = false),
-                   StructField("b", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "long_pairs_gt"
+                   StructField("b", LongType, nullable = false)))
+  override def prettyName: String = "long_pairs"
 
-  override protected def nullSafeEval(input: Any): Any =
-    LongPairsGt.pairs(input.asInstanceOf[ArrayData])
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    LongPairs.iterator(child.eval(input).asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in =>
-      s"${ev.value} = graft.functions.LongPairsGt.pairs($in);")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val arr = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${arr.code}
+      |scala.collection.Iterator<InternalRow> ${ev.value} =
+      |  graft.functions.LongPairs.iterator(${arr.isNull} ? null : ${arr.value});
+      |""".stripMargin, isNull = FalseLiteral)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-object LongPairsGt {
+object LongPairs {
   /** Static so generated code can call it directly. */
-  def pairs(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    val out = new java.util.ArrayList[Any](n * (n - 1) / 2)
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val x = arr.getLong(i)
-        var j = 0
-        while (j < n) {
-          if (!arr.isNullAt(j)) {
-            val y = arr.getLong(j)
-            if (y > x)
-              out.add(InternalRow(x, y))
+  def iterator(arr: ArrayData): Iterator[InternalRow] =
+    if (arr == null) Iterator.empty else new Iterator[InternalRow] {
+      private val n = arr.numElements()
+      private var i = -1      // outer position, x = arr(i)
+      private var j = n       // next inner position to test
+      private var x, y = 0L
+      private var more = seek()
+
+      /** Moves to the next (i, j) with y > x; false once i runs out. */
+      private def seek(): Boolean = {
+        while (i < n) {
+          while (j < n) {
+            j += 1
+            if (!arr.isNullAt(j - 1)) { y = arr.getLong(j - 1); if (y > x) return true }
           }
-          j += 1
+          i += 1
+          if (i < n && !arr.isNullAt(i)) { x = arr.getLong(i); j = 0 }
         }
+        false
       }
-      i += 1
+
+      override def hasNext: Boolean = more
+
+      override def next(): InternalRow = {
+        if (!more) throw new NoSuchElementException("long_pairs: no more pairs")
+        val row = InternalRow(x, y)
+        more = seek()
+        row
+      }
     }
-    new GenericArrayData(out.toArray)
-  }
 }
 
 /** Product-quantization encoder in ONE codegen'd pass: the input
@@ -1488,10 +1493,10 @@ object VectorFunctions {
   def seqTriples(toks: Column): Column =
     ColumnBridge.column(SeqTriples(ColumnBridge.expression(toks)))
 
-  /** Ascending (a, b) value pairs of an array<long> — see
-    * [[LongPairsGt]]. */
-  def longPairsGt(arr: Column): Column =
-    ColumnBridge.column(LongPairsGt(ColumnBridge.expression(arr)))
+  /** Generator of the ascending (a, b) value pairs of an
+    * array<long> — see [[LongPairs]]. */
+  def longPairs(arr: Column): Column =
+    ColumnBridge.column(LongPairs(ColumnBridge.expression(arr)))
 
   /** Rolling base-31 fingerprint over a string column's characters. */
   def rollingHash31(text: Column): Column =

@@ -985,10 +985,11 @@ object Dedup {
     * inverted index restricted to rare grams, so the pair volume is
     * Σ_g df(g)² ≤ dfCap · Σ_g df(g) — LINEAR in corpus size with the
     * cap as the constant, never all-pairs. Pairs are expanded
-    * MAP-SIDE from each posting list (a codegen'd HOF, no self-join
-    * shuffle of the postings), the dot is one pair-keyed count with
-    * map-side combine, norms broadcast into the score, and the final
-    * top-k is a TakeOrdered, no global sort. */
+    * MAP-SIDE from each posting list (streamed by the codegen'd
+    * LongPairs generator, no self-join shuffle of the postings), the
+    * dot is one pair-keyed count with map-side combine, norms
+    * broadcast into the score, and the final top-k is a TakeOrdered,
+    * no global sort. */
   def q91SparseCosinePairs(s: SparkSession, dir: String,
                            dfCap: Int = 20, k: Int = 20): DataFrame = {
     val grams = Tables.documents(s, dir)
@@ -1003,7 +1004,7 @@ object Dedup {
     // semi-join and the collect shuffle on the same key, so the second
     // aggregate reuses the join's partitioning — one extra keyed
     // count, no extra full-stream shuffle. Candidate pairs are then
-    // generated MAP-SIDE from each ≤ dfCap list (codegen'd HOF
+    // generated MAP-SIDE from each ≤ dfCap list (LongPairs
     // expansion, ≤ dfCap²/2 rows per gram) instead of a gram-keyed
     // self-join.
     // one explicit hash exchange on gram, REUSED by the df-count
@@ -1025,14 +1026,11 @@ object Dedup {
     val norms = postings
       .select(explode(col("docs")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // codegen'd pair expansion (r15): LongPairsGt replays the
-    // 3-level HOF chain's y>x enumeration bit-for-bit as one
-    // primitive loop (spec-pinned), with no interpreted lambdas or
-    // intermediate arrays per posting list
+    // each posting list streams its doc_a < doc_b pairs through the
+    // codegen'd LongPairs generator
     val dots = postings
-      .select(explode(
-        graft.functions.VectorFunctions.longPairsGt(col("docs"))).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+      .select(graft.functions.VectorFunctions.longPairs(col("docs"))
+        .as(Seq("doc_a", "doc_b")))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("dot"))
     dots
@@ -2141,7 +2139,7 @@ object Dedup {
       .select(col("doc_id"), expr(s"wmin div $WinPosCap").as("h"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // NOTE (r15): the q91/q208 bucket-collect + LongPairsGt move was
+    // NOTE (r15): the q91/q208 bucket-collect + pair-expansion move was
     // A/B'd here and REJECTED (1.12 → 1.59 s min-of-4): with fp
     // persisted and tiny, both self-join sides ride broadcast off the
     // cache, which beats adding an h-exchange + ObjectHashAggregate
@@ -2267,7 +2265,7 @@ object Dedup {
     *
     * Scale shape: one per-doc shingle projection feeds the posting
     * lists and both verify sides (persisted); pair generation is
-    * q91's map-side HOF expansion (≤ dfCap²/2 pairs per rare
+    * q91's map-side LongPairs expansion (≤ dfCap²/2 pairs per rare
     * shingle, never a shingle-keyed self-join of the corpus). The
     * million-scale raw pair stream carries ONLY (a, b) longs into a
     * rare-shared count; candidates then pass a SOUND upper-bound
@@ -2310,10 +2308,8 @@ object Dedup {
       .join(wdf.filter(col("df").between(2L, dfCap.toLong)).select(col("w")),
             Seq("w"), "left_semi")
       .groupBy(col("w")).agg(collect_list(col("doc_id")).as("docs"))
-      // codegen'd pair expansion (r15) — the q91 LongPairsGt swap
-      .select(explode(
-        graft.functions.VectorFunctions.longPairsGt(col("docs"))).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+      .select(graft.functions.VectorFunctions.longPairs(col("docs"))
+        .as(Seq("doc_a", "doc_b")))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("rs"))
     // per-doc totals and the doc's COMMON-shingle count (df > dfCap):

@@ -857,14 +857,17 @@ object GraphOps {
     * DuckDB replay the ranking bit-for-bit where the float 1/log of
     * classic Adamic–Adar could diverge in accumulation order.
     *
-    * Scale shape: wedge enumeration z→(a,b) is the q116 self-join on
-    * the adjacency list keyed by the common neighbor — C(deg(z),2)
+    * Scale shape: the edge set comes from per-user click baskets and
+    * the wedges z→(a,b) from per-neighbor adjacency arrays, both
+    * streamed by the codegen'd LongPairs generator — C(deg(z),2)
     * wedges per node, so HUBS own the quadratic term. The operator
     * applies the standard LP hub suppression: neighbors with
     * deg(z) > maxDeg are excluded from wedge generation BEFORE the
-    * self-join (they contribute ≤ 1/maxDeg each and dominate the
+    * expansion (they contribute ≤ 1/maxDeg each and dominate the
     * candidate mass — the exact trade every production LP system
     * makes), bounding wedge count by n·maxDeg²/2 rather than Σdeg².
+    * Baskets are uncapped: the generator streams a whale user's
+    * pairs in memory linear in the basket, never C(n,2) in one row.
     * Existing edges leave via one left-anti join against the
     * (a < b)-oriented edge list; top-50 is a deterministic global
     * sort on (score desc, pair asc) over the already-aggregated
@@ -880,23 +883,12 @@ object GraphOps {
     * saturates). */
   def q249LinkPredict(s: SparkSession, dir: String,
                       maxDeg: Long = 256L): DataFrame = {
-    // r15 restructure (guide §2.3/§2.4): the r14 shape built the edge
-    // set with a clicks×clicks self-join (the 1M-row events scan
-    // JSON-parsed TWICE — probe + broadcast build — on a
-    // single-row-group fixture that runs stage 1 on one core) and
-    // enumerated wedges with an sz×sz self-join whose deg-join inputs
-    // the plan computed twice. Both self-joins become bounded
-    // array expansions:
-    //  - per-user baskets from ONE exchange (collect_set dedups
-    //    map-side, replacing distinct + self-join) → codegen'd
-    //    LongPairsGt pair explode = the same a<b edge set;
-    //  - per-neighbor adjacency arrays from ONE exchange, where
-    //    deg(z) is simply size(ns) (adj is duplicate-free), the hub
-    //    cap filters on the array size BEFORE expansion, and wedges
-    //    are the same LongPairsGt explode — no deg aggregate, no
-    //    deg join, no self-join.
-    // Wedge volume is unchanged (Σ C(d,2), d ≤ maxDeg bounds the
-    // per-row work); arithmetic is identical (w = 1e9 div deg(z)).
+    // edges and wedges are both array expansions, one exchange each:
+    // per-user baskets (collect_set dedups map-side) yield the a<b
+    // edge set, and per-neighbor adjacency arrays yield the wedges,
+    // with deg(z) = size(ns) (adj is duplicate-free) and the hub cap
+    // applied to the array size BEFORE expansion — no deg aggregate,
+    // deg join or self-join.
     val clicks = Tables.events(s, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id"),
@@ -906,10 +898,8 @@ object GraphOps {
     val e = clicks
       .filter(col("user_id").isNotNull)
       .groupBy(col("user_id"))
-      .agg(sort_array(collect_set(col("k"))).as("ks"))
-      .select(explode(
-        graft.functions.VectorFunctions.longPairsGt(col("ks"))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .agg(collect_set(col("k")).as("ks"))
+      .select(graft.functions.VectorFunctions.longPairs(col("ks")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val adj = e.select(col("a").as("z"), col("b").as("n"))
@@ -918,12 +908,11 @@ object GraphOps {
     // wedges; their per-wedge weight is the exact micro-int 1e9 div d
     // (d = size(ns) > 0, so trunc-vs-floor cannot diverge vs DuckDB)
     val cand = adj.groupBy(col("z"))
-      .agg(sort_array(collect_set(col("n"))).as("ns"))
+      .agg(collect_set(col("n")).as("ns"))
       .filter(size(col("ns")).between(2, maxDeg))
       .select(expr("1000000000L div size(ns)").as("w"),
-              explode(
-                graft.functions.VectorFunctions.longPairsGt(col("ns"))).as("p"))
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+              graft.functions.VectorFunctions.longPairs(col("ns")))
+      .groupBy(col("a"), col("b"))
       .agg(sum(col("w")).as("ra_micro"), count(lit(1)).as("common"))
     cand.join(e, Seq("a", "b"), "left_anti")
       .orderBy(col("ra_micro").desc, col("a"), col("b"))
@@ -969,15 +958,15 @@ object GraphOps {
     * Scale shape — the reason item-based CF (and not user-based) is
     * the industry default: the model is the item-item matrix, whose
     * size is bounded by the CATALOG (≤ items² entries, sparser in
-    * practice), not by users. It is computed once — one self-join of
-    * the distinct (user, item) click relation on user, C(basket,2)
-    * pairs per user, map-side-combined into counts — and BROADCAST;
-    * scoring is then a broadcast hash join against each cohort
-    * user's basket plus one (user, item) aggregation: no shuffle
-    * ever carries anything user-quadratic. Per-user baskets bound
-    * the pair generation (the fixture's are ≤ catalog = 100; a
-    * 100 TB deployment caps baskets at ~10³ — the standard move —
-    * or feeds the matrix from a count-min sketch). Top-5 per user
+    * practice), not by users. It is computed once — each user's
+    * click basket streams its C(basket,2) item pairs through the
+    * codegen'd LongPairs generator, map-side-combined into counts —
+    * and BROADCAST; scoring is then a broadcast hash join against
+    * each cohort user's basket plus one (user, item) aggregation: no
+    * shuffle ever carries anything user-quadratic. Baskets are
+    * uncapped (the fixture's are ≤ catalog = 100): the generator
+    * holds one basket, not its pairs, so a whale user costs time
+    * quadratic in its basket but memory linear in it. Top-5 per user
     * rides the bounded [[graft.functions.TopK]] aggregator:
     * map-side partials, ≤ 5 rows per user cross the shuffle, no
     * per-user window sort (the q26/q43 pattern). */
@@ -994,7 +983,7 @@ object GraphOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // item-item co-occurrence matrix, from per-user baskets instead
     // of the clicks×clicks self-join (r15, the q249 move): one
-    // user-keyed collect_set + codegen'd ascending-pair explode
+    // user-keyed collect_set + the codegen'd LongPairs generator
     // counts each unordered pair once — HALF the pre-aggregation pair
     // stream of the j≠i join — and the matrix is symmetric, so the
     // ordered form is the aggregated frame unioned with its mirror.
@@ -1002,10 +991,9 @@ object GraphOps {
     // Null users form no basket (the oracle's self-join never matches them).
     val pairCnt = clicks
       .filter(col("user_id").isNotNull)
-      .groupBy(col("user_id")).agg(sort_array(collect_set(col("k"))).as("ks"))
-      .select(explode(
-        graft.functions.VectorFunctions.longPairsGt(col("ks"))).as("p"))
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+      .groupBy(col("user_id")).agg(collect_set(col("k")).as("ks"))
+      .select(graft.functions.VectorFunctions.longPairs(col("ks")))
+      .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("cnt"))
     val cooc = broadcast(
       pairCnt.select(col("a").as("j"), col("b").as("i"), col("cnt"))

@@ -683,15 +683,14 @@ object TextOps {
         .orderBy(col("df").desc, col("token")).limit(v))
     val inVocab = docTok.join(vocab, Seq("token"))
     // pair generation: codegen'd doc_id-keyed SELF-JOIN of the
-    // v-bounded incidence, ≤ v(v−1)/2 output pairs per doc. The
-    // q91-style map-side HOF expansion (groupBy(doc) + collect_list
-    // + nested transform/filter) was tried r9 and measured 1.8×
-    // SLOWER here: higher-order functions evaluate interpreted, and
-    // with v=32 the per-doc pair loop is v²-interpreted work, while
-    // the join's probe side is whole-stage-codegen. q91 keeps the
-    // HOF form because its lists are df-capped (≤ 20) AND the join
-    // alternative there would shuffle a postings table far larger
-    // than its pair output — neither holds for this v-bounded frame.
+    // v-bounded incidence, ≤ v(v−1)/2 output pairs per doc. A
+    // map-side expansion (groupBy(doc) + collect_list + nested
+    // transform/filter) was tried r9 and measured 1.8× SLOWER here:
+    // its lambdas evaluated interpreted, v² work per doc with v=32,
+    // while the join's probe side is whole-stage-codegen. The
+    // codegen'd LongPairs generator that q91 streams its pairs
+    // through takes long ids only; these pairs are string tokens, so
+    // the self-join stays.
     val pairs = inVocab.toDF("token_a", "doc_id", "df_a")
       .join(inVocab.toDF("token_b", "doc_id", "df_b"), Seq("doc_id"))
       .filter(col("token_a") < col("token_b"))

@@ -1262,15 +1262,14 @@ object Relational {
     * persisted because three consumers read it (supports, basket
     * count, pruned pair expansion). Pairs expand by collecting each
     * order's surviving items into one (basket-sized, ≈7-element)
-    * sorted array and exploding the i<j combinations map-side — ONE
-    * shuffle on the order key, versus the self-join formulation's
-    * two sort exchanges + merge that the first cut measured 2×
-    * slower on (the per-order HOF touches ≤ basket² tiny elements,
-    * the q113 interpreted-HOF concern doesn't bite at this group
-    * size). The item support table is |parts|-sized, so both metric
-    * lookups are broadcast joins; the 1-row stats and basket-count
-    * frames ride broadcast cross-joins. The final top-50 by lift
-    * plans as TakeOrderedAndProject (no global sort). */
+    * array and streaming its pa < pb pairs map-side through the
+    * codegen'd LongPairs generator — ONE shuffle on the order key,
+    * versus the self-join formulation's two sort exchanges + merge
+    * that the first cut measured 2× slower on. The item support
+    * table is |parts|-sized, so both metric lookups are broadcast
+    * joins; the 1-row stats and basket-count frames ride broadcast
+    * cross-joins. The final top-50 by lift plans as
+    * TakeOrderedAndProject (no global sort). */
   def q200MarketBasket(s: SparkSession, dir: String): DataFrame = {
     // widenBy on the distinct key itself: the exchange this inserts
     // IS the distinct's required distribution, so the dedup runs as
@@ -1292,13 +1291,9 @@ object Relational {
     val bp = b.join(broadcast(keep.select(col("p"))), Seq("p"))
       .select(col("o"), col("p"))
     val pairs = bp.groupBy(col("o"))
-      .agg(array_sort(collect_list(col("p"))).as("ps"))
-      // codegen'd pair expansion (r15): on the sorted-distinct basket
-      // LongPairsGt's y>x enumeration is element-for-element the
-      // slice-based i<j HOF it replaces (spec-pinned)
-      .select(explode(
-        graft.functions.VectorFunctions.longPairsGt(col("ps"))).as("pr"))
-      .select(col("pr.a").as("pa"), col("pr.b").as("pb"))
+      .agg(collect_list(col("p")).as("ps"))
+      .select(graft.functions.VectorFunctions.longPairs(col("ps"))
+        .as(Seq("pa", "pb")))
       .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("sab"))
       .filter(col("sab") >= 2)
     pairs

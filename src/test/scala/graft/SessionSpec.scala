@@ -3,7 +3,8 @@ package graft
 /** `Session.local` is the only place the local-session policy is set
   * (the forked test JVM passes no `-Dspark.*` flags), so each setting
   * is read back from the conf the shared session's context started
-  * with. */
+  * with. The mains that call it reject bad arguments with a usage
+  * message before building a session. */
 class SessionSpec extends SparkSpec {
 
   test("Session.local(\"4\"): local[4], 4 shuffle partitions, UTC, no UI") {
@@ -14,5 +15,23 @@ class SessionSpec extends SparkSpec {
     assert(conf.getOption("spark.sql.session.timeZone").contains("UTC"))
     assert(conf.getOption("spark.ui.enabled").contains("false"))
     assert(sc.uiWebUrl.isEmpty)
+  }
+
+  test("Verify: a wrong argument count raises the usage error") {
+    Seq(Array.empty[String], Array("sf"), Array("sf", "out", "extra")).foreach { args =>
+      val e = intercept[RuntimeException](Verify.main(args))
+      assert(e.getMessage == s"expected 2 arguments, got ${args.length} " +
+        "(usage: graft.Verify <sfDir> <outDir>)")
+    }
+  }
+
+  test("Explain: a missing or unknown query name raises the usage error") {
+    val usage = "(usage: graft.Explain <sfDir> <queryName> [queryName ...])"
+    Seq(Array.empty[String], Array("sf")).foreach { args =>
+      val e = intercept[RuntimeException](Explain.main(args))
+      assert(e.getMessage == s"expected an sf directory and at least one query name $usage")
+    }
+    val e = intercept[RuntimeException](Explain.main(Array("sf", "q01_pricing_summary", "q0")))
+    assert(e.getMessage == s"unknown query: q0 $usage")
   }
 }

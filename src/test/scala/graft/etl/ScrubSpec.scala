@@ -26,23 +26,6 @@ class ScrubSpec extends SparkSpec {
     trim(collapse.foldLeft(ascii) { case (acc, (p, r)) => regexp_replace(acc, p, r) })
   }
 
-  /** Runs `body` once with whole-stage codegen (no silent fallback) and
-    * once fully interpreted, as `BoatCli` runs inputs ≤ 64 MB. */
-  private def inBothModes(body: Boolean => Unit): Unit =
-    Seq(true, false).foreach { codegen =>
-      val confs = Seq(
-        "spark.sql.codegen.wholeStage" -> codegen.toString,
-        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"),
-        "spark.sql.codegen.fallback" -> (!codegen).toString)
-      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body(codegen)
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-
   /** Kernel vs chain on column `s` of `lines`, in both modes. An RDD
     * source keeps the optimizer from folding the projection into a
     * local relation, so the codegen mode really compiles the kernel. */

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 
 /** DotF32: interpreted eval == codegen == the HOF reference
@@ -136,42 +137,49 @@ class VectorExpressionsSpec extends SparkSpec {
     }
   }
 
-  test("long_pairs_gt equals both HOF pair expansions it replaces") {
-    val rows = Seq(
+  test("long_pairs rows equal posexplode of both HOF pair expansions") {
+    val inputs = Seq(
       (1L, Seq(5L, 2L, 9L)),                  // unsorted (q91/q216 shape)
       (2L, Seq(1L, 2L, 3L, 4L)),              // sorted distinct (q200/q249)
       (3L, Seq(7L)),                          // single: no pairs
       (4L, Seq.empty[Long]),
       (5L, Seq(3L, 3L, 1L)),                  // duplicates never pair equal
-      (6L, (1L to 20L).toSeq)                 // the dfCap shape, C(20,2)
-    ).toDF("id", "xs")
-    // the q91/q216 formulation: value-filtered nested transforms
-    val hofGt = expr(
-      """flatten(transform(xs,
+      (6L, (1L to 20L).toSeq))                // the dfCap shape, C(20,2)
+    // the value-filtered y > x expansion, and the index-sliced i < j
+    // expansion, which agrees with it on sorted-distinct arrays only
+    val hofGt = """flatten(transform(xs,
            x -> transform(filter(xs, y -> y > x),
-                          y -> struct(x AS a, y AS b))))""")
-    val got = rows.select($"id",
-        VectorFunctions.longPairsGt($"xs").as("fast"), hofGt.as("ref"))
-      .collect()
-    got.foreach { r =>
-      assert(r.getSeq[org.apache.spark.sql.Row](1) ==
-             r.getSeq[org.apache.spark.sql.Row](2),
-        s"id ${r.getLong(0)} diverged from the y>x HOF")
-    }
-    // the q200 formulation: index-sliced expansion — identical on the
-    // sorted-distinct arrays it is applied to
-    val sortedRows = rows.filter($"id".isin(2L, 3L, 4L, 6L))
-    val hofSlice = expr(
-      """flatten(transform(xs,
+                          y -> struct(x AS a, y AS b))))"""
+    val hofSlice = """flatten(transform(xs,
            (x, i) -> transform(slice(xs, i + 2, size(xs)),
-                               y -> struct(x AS a, y AS b))))""")
-    val got2 = sortedRows.select($"id",
-        VectorFunctions.longPairsGt($"xs").as("fast"), hofSlice.as("ref"))
-      .collect()
-    got2.foreach { r =>
-      assert(r.getSeq[org.apache.spark.sql.Row](1) ==
-             r.getSeq[org.apache.spark.sql.Row](2),
-        s"id ${r.getLong(0)} diverged from the slice HOF")
+                               y -> struct(x AS a, y AS b))))"""
+    inBothModes { codegen =>
+      // an RDD source keeps the generator out of a folded local relation
+      val rows = spark.sparkContext.parallelize(inputs, 4).toDF("id", "xs")
+      val gen = rows.select($"id", VectorFunctions.longPairs($"xs"))
+      val plan = gen.queryExecution.executedPlan
+      val inCodegen = plan.exists {
+        case w: WholeStageCodegenExec => w.child.exists(_.isInstanceOf[GenerateExec])
+        case _ => false
+      }
+      assert(inCodegen == codegen, plan.toString)
+      // rows of one id leave its partition in emission order
+      val got = gen.collect().toSeq
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+      def pairsOf(id: Long) = got.filter(_._1 == id).map(_._2)
+      Seq(hofGt -> Seq(1L, 2L, 3L, 4L, 5L, 6L), hofSlice -> Seq(2L, 3L, 4L, 6L))
+        .foreach { case (hof, ids) =>
+          val ref = rows.filter($"id".isin(ids: _*))
+            .select($"id", posexplode(expr(hof)))
+            .collect().toSeq
+            .map(r => (r.getLong(0), r.getInt(1),
+                       (r.getStruct(2).getLong(0), r.getStruct(2).getLong(1))))
+          ids.foreach { id =>
+            val want = ref.filter(_._1 == id).sortBy(_._2).map(_._3)
+            assert(pairsOf(id) == want, s"codegen=$codegen id $id vs $hof")
+          }
+        }
+      assert(pairsOf(6L).size == 190)
     }
   }
 

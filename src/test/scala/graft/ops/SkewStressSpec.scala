@@ -18,7 +18,10 @@ import org.apache.spark.sql.functions._
   * (q85/q91/q216) still runs sits BEHIND a LeftSemi df-cap
   * semi-join, so no aggregation buffer can exceed the declared cap
   * regardless of key heat. A revert to collect-then-filter fails
-  * these pins before it can OOM a 100 TB run. */
+  * these pins before it can OOM a 100 TB run. The uncapped per-user
+  * baskets of q249 and q251 are safe another way: the LongPairs
+  * generator streams a basket's pairs, so a whale basket costs O(n)
+  * memory, pinned by the whale-basket cases. */
 class SkewStressSpec extends SparkSpec {
 
   /** Aggregate nodes whose aggregate list contains a collect_list. */
@@ -126,6 +129,38 @@ class SkewStressSpec extends SparkSpec {
     assertCollectsBehindSemiJoin(df, "q216")
     val pairs = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), s"got $pairs")
+  }
+
+  test("whale basket: LongPairs streams past C(n,2) > Int.MaxValue") {
+    // 46,342 elements: n * (n - 1) overflows Int, and C(n,2) ≈ 1.07e9
+    // pairs could never sit in one row; the iterator holds only the
+    // input array and two positions
+    val n = 46342
+    assert(n.toLong * (n - 1) > Int.MaxValue)
+    val it = graft.functions.LongPairs.iterator(
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(Array.tabulate(n)(_.toLong)))
+    var x, y = 0L
+    var k = 0
+    while (k < 1000000) {
+      y += 1
+      if (y == n) { x += 1; y = x + 1 }
+      val r = it.next()
+      assert(r.getLong(0) == x && r.getLong(1) == y, s"pair $k: $r")
+      k += 1
+    }
+    assert(it.hasNext)
+  }
+
+  test("whale basket: a 10k-item collect_set yields C(10k,2) pairs, both modes") {
+    inBothModes { codegen =>
+      val pairs = spark.range(10000)
+        .select(lit(1L).as("user_id"), col("id").as("k"))
+        .groupBy(col("user_id")).agg(collect_set(col("k")).as("ks"))
+        .select(graft.functions.VectorFunctions.longPairs(col("ks")))
+        .count()
+      assert(pairs == 49995000L, s"codegen=$codegen")
+    }
   }
 
   test("salted join on a planted whale key equals the plain join") {

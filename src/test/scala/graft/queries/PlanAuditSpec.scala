@@ -576,7 +576,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"),
       "top-30 must be TakeOrdered, not a global sort")
     assert(!p.contains("CartesianProduct"),
-      "candidates must come from the df-capped HOF expansion")
+      "candidates must come from the long_pairs generator over df-capped posting lists")
     spark.catalog.clearCache()
   }
 
@@ -926,7 +926,7 @@ class PlanAuditSpec extends SparkSpec {
        "neighbor; known edges leave via left-anti") {
     val p = plan("q249_link_predict")
     assert(!p.contains("CartesianProduct"),
-      s"wedge enumeration must be the z-keyed equi self-join:\n${p.take(1200)}")
+      s"wedges must come from the long_pairs generator over per-neighbor adjacency arrays:\n${p.take(1200)}")
     assert(p.contains("LeftAnti"),
       "existing edges must leave via a left-anti join")
     // the oriented edge list feeds projection, adjacency (twice) and

@@ -62,17 +62,28 @@ else
   echo "SKIPPED: QUERIES.md freshness check (python3 not found)"
 fi
 
-# graft.Explain runs one catalog query through Session.local and must
-# print its timed line.
+# graft.Explain runs two catalog queries through Session.local and must
+# print each one's timed line; q249's plan must expand its pairs with
+# the streaming long_pairs generator.
 SF_DIR=/root/testdata/sf0.001
 if [ -d "$SF_DIR" ]; then
-  EXPLAIN_OUT="$(sbt -batch "runMain graft.Explain $SF_DIR q01_pricing_summary" 2>&1)" || true
-  if ! grep -q '\[explain\] q01_pricing_summary timed:' <<<"$EXPLAIN_OUT"; then
-    echo "$EXPLAIN_OUT" | tail -n 20 >&2
-    echo "ERROR: graft.Explain printed no timed line for q01_pricing_summary" >&2
+  EXPLAIN_OUT="$(sbt -batch "runMain graft.Explain $SF_DIR q01_pricing_summary q249_link_predict" 2>&1)" || true
+  for Q in q01_pricing_summary q249_link_predict; do
+    if ! grep -q "\[explain\] $Q timed:" <<<"$EXPLAIN_OUT"; then
+      echo "$EXPLAIN_OUT" | tail -n 20 >&2
+      echo "ERROR: graft.Explain printed no timed line for $Q" >&2
+      exit 1
+    fi
+  done
+  Q249_PLAN="$(sed -n '/===== q249_link_predict =====/,$p' <<<"$EXPLAIN_OUT")"
+  # every long_pairs* name in the plan must be the generator itself
+  if ! grep -q 'long_pairs(' <<<"$Q249_PLAN" || grep -o 'long_pairs.' <<<"$Q249_PLAN" | grep -qv 'long_pairs('; then
+    echo "$Q249_PLAN" | head -n 60 >&2
+    echo "ERROR: the q249 plan does not expand its pairs with long_pairs" >&2
     exit 1
   fi
-  echo "==> graft.Explain: $(grep -o '\[explain\] q01_pricing_summary timed:.*' <<<"$EXPLAIN_OUT")"
+  echo "==> graft.Explain: $(grep -o '\[explain\] .* timed:.*' <<<"$EXPLAIN_OUT" | tr '\n' ' ')"
+  echo "==> q249 plan: pairs from the long_pairs generator"
 else
   echo "SKIPPED: graft.Explain check ($SF_DIR not found)"
 fi
