@@ -5,7 +5,7 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -77,19 +77,28 @@ object Tables {
     * TIMESTAMP_NTZ — cast to the session-zone timestamp, a numeric
     * no-op under the UTC session both engines run with). Normalizing
     * here keeps every downstream query and oracle schema-stable across
-    * fixture regenerations. The conf is set BEFORE the load, so the
-    * footer schema already carries `ts` as a long for the NANOS
-    * generation and the choice below costs no job. */
+    * fixture regenerations. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t(s, d, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
+    val raw = rawEvents(s, d)
+    raw.withColumn("ts", eventTs(raw.schema))
   }
+
+  /** `events` as stored: `ts` still in its fixture encoding. The conf
+    * is set BEFORE the load, so the footer schema already carries `ts`
+    * as a long for the NANOS generation; the streaming gate reads its
+    * feed with this schema and normalizes with [[eventTs]]. */
+  private[graft] def rawEvents(s: SparkSession, d: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    t(s, d, "events")
+  }
+
+  /** The session-zone timestamp of the raw `ts` column of a frame with
+    * schema `raw`; chosen from the schema, so it costs no job. */
+  private[graft] def eventTs(raw: StructType): Column =
+    raw("ts").dataType match {
+      case LongType => expr("timestamp_micros(ts div 1000)")
+      case _        => col("ts").cast("timestamp")
+    }
   def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 

@@ -36,9 +36,7 @@ object Verify {
       spark.catalog.clearCache()
     }
     def q(s: String): String = JsonUtil.esc(s)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(selected.keySet))
     // failed queries, as machine-readable evidence (ADVICE r1: never
     // swallow — a missing result parquet alone is ambiguous)
     val errJson = failures
@@ -48,4 +46,12 @@ object Verify {
       System.err.println(s"[verify] ${failures.size} queries failed")
     spark.stop()
   }
+
+  /** oracle_sql.json for the queries `names`: their oracles only, so a
+    * partial dump is checked on what it ran — a selected query that
+    * threw still has its oracle, and fails as a missing result. */
+  private[graft] def oracleJson(names: Set[String]): String =
+    SparkEntry.oracleSql.filter { case (k, _) => names(k) }
+      .map { case (k, v) => s"${JsonUtil.esc(k)}: ${JsonUtil.esc(v)}" }
+      .mkString("{", ",", "}")
 }

@@ -1,72 +1,43 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
+
+import graft.Tables
 
 /** Oracle-gated streaming queries (VERDICT r1 #5): each runs a REAL
   * Structured Streaming query — file source, watermarked operator from
   * [[EventStreams]], foreachBatch parquet sink — over the full events
   * table, then reads the sink files back as the finalized output for
   * the DuckDB compare against the SAME oracle SQL as the batch twin
-  * (q29/q30). Far-future sentinel file drops advance the watermark so
-  * every real window/session finalizes; sentinels are filtered from
-  * the result. The sink is the production shape (VERDICT r2 #6):
+  * (q29/q30). Far-future sentinel rows advance the watermark so every
+  * real window/session finalizes; sentinels are filtered from the
+  * result. The sink is the production shape (VERDICT r2 #6):
   * per-batch idempotent appends to files, nothing driver-resident —
   * the same foreachBatch writer works unchanged against any
   * cluster-visible path.
   *
   * The file-source feed keeps the whole pipeline distributed — no
-  * driver-side collect, no per-row encoder loop; the events parquet is
-  * hard-linked (copied on failure) into a temp stream directory and the
-  * sentinels arrive as later file drops, exactly how a production file
-  * stream ingests. State partitions are set per query (1 for
-  * commit-bound light aggregates, 4 for compute-bound joins/sessions
-  * — the r13 sweep; see runStream): state-store commit overhead is
-  * per-partition per batch and dominates at bench scale, but the
-  * stateful operator's own CPU work parallelizes with partitions
-  * (the conf is restored after start — streaming captures its own
-  * session clone).
+  * driver-side collect, no per-row encoder loop: every micro-batch is
+  * one parquet file staged in a temp stream directory, exactly how a
+  * production file stream ingests. State partitions are set per query
+  * (1 for commit-bound light aggregates, 4 for compute-bound
+  * joins/sessions — the r13 sweep; see runStream): state-store commit
+  * overhead is per-partition per batch and dominates at bench scale,
+  * but the stateful operator's own CPU work parallelizes with
+  * partitions (the conf is restored after start — streaming captures
+  * its own session clone).
   */
 object StreamQueries {
 
   private val runId = new java.util.concurrent.atomic.AtomicLong(0)
 
   private val sentinelType = "zz_sentinel"
-
-  /** Raw physical ts type of the events parquet — the fixture has
-    * shipped as both TIMESTAMP(NANOS) (read as a long via
-    * spark.sql.legacy.parquet.nanosAsLong, like graft.Tables.events)
-    * and plain TIMESTAMP(MICROS) without UTC adjustment (reads as
-    * TIMESTAMP_NTZ). readStream needs the schema up front, so sniff
-    * it once per sf dir from the parquet footer and build the stream
-    * schema, the ts-normalizing projection, and the sentinel-row
-    * writer from the same answer. */
-  private val tsPhysicalCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataType]()
-  private def rawTsType(s: SparkSession, dir: String): DataType =
-    tsPhysicalCache.computeIfAbsent(dir, _ => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-    })
-
-  private def rawEventSchema(tsType: DataType): StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("user_id", LongType),
-    StructField("ts", tsType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType)))
-
-  /** Session-zone timestamp from the raw ts column; numeric no-op for
-    * the NTZ generation under the UTC session both engines use. */
-  private def tsToTimestamp(tsType: DataType): org.apache.spark.sql.Column =
-    tsType match {
-      case LongType => expr("timestamp_micros(ts div 1000)")
-      case _        => col("ts").cast("timestamp")
-    }
 
   private val streamDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   sys.addShutdownHook {
@@ -75,205 +46,152 @@ object StreamQueries {
     }
   }
 
-  /** Hard-link `src` as `dst`; cross-filesystem (e.g. /tmp-cached
-    * phase files into a /dev/shm stream dir) falls back to copy —
-    * via a temp name + ATOMIC_MOVE, never a direct copy to `dst`:
-    * the stream's trigger thread lists the source directory
-    * continuously, so a file must appear in it complete-or-not-at-all
-    * (a direct Files.copy exposes a half-written parquet and the
-    * batch dies with FAILED_READ_FILE — first seen on the sf1
-    * fixture, where the bigger phase files widen the race window). */
-  private def linkOrCopy(src: Path, dst: Path): Unit =
-    try Files.createLink(dst, src)
-    catch { case _: Exception =>
-      // dot-prefixed: Spark's file listing ignores hidden files, so
-      // the in-flight copy is invisible until the atomic rename
-      val tmp = dst.resolveSibling("." + dst.getFileName.toString)
-      Files.copy(src, tmp, StandardCopyOption.REPLACE_EXISTING)
-      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
-                 StandardCopyOption.REPLACE_EXISTING)
-    }
+  /** Source dir, sink dir and checkpoints all live on tmpfs when
+    * available: every micro-batch pays a parquet-committer commit on
+    * the sink plus WAL fsyncs, which is pure harness overhead here (a
+    * production deployment points these at durable storage instead). */
+  private val tmpBase: Path =
+    if (Files.isDirectory(Paths.get("/dev/shm"))) Paths.get("/dev/shm")
+    else Paths.get(System.getProperty("java.io.tmpdir"))
 
-  /** The two sentinel rows as single parquet part-files, built ONCE
-    * per sf dir (their content depends only on the dir's max event
-    * time) and hard-linked into each run's stream directory — repeat
-    * runs skip three Spark jobs (max-ts agg + two one-row writes). */
-  private case class Sentinels(s0: java.nio.file.Path,
-                               s1: java.nio.file.Path,
-                               s2: java.nio.file.Path,
-                               s3: java.nio.file.Path)
+  /** `df` as ONE parquet part-file under the new directory `dir`. */
+  private def writeFile(df: DataFrame, dir: Path): Path = {
+    df.coalesce(1).write.parquet(dir.toString)
+    Files.list(dir).toArray.map(_.toString)
+      .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
+      .map(Paths.get(_)).head
+  }
+
+  /** The sentinel rows as one-row parquet files, built ONCE per sf dir
+    * (their content depends only on the dir's max event time) and
+    * copied into each run's stream directory — repeat runs skip the
+    * max-ts agg and the one-row writes. Indexed by sentinel number:
+    *   - s0 is the HOLD sentinel: its ts sits ~90 days BEFORE the data,
+    *     so its batch runs without moving the watermark — the bridge
+    *     batch a phased feed needs between an on-time and a late phase
+    *     (SPARK-24588: the late filter of a stateful operator uses the
+    *     PREVIOUS batch's watermark, so one batch must pass for a
+    *     phase's watermark to become filterable);
+    *   - s1/s2/s3 sit 3 h / 30 h / 60 h past the data and lift the
+    *     watermark past every real window/session end. */
   private val sentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Sentinels]()
-  private val phaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[java.nio.file.Path]]()
-  // the dev trace listener is installed once per JVM — one listener
-  // per runStream call re-printed every progress line N times
-  private val traceInstalled = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def sentinels(s: SparkSession, dir: String): Sentinels =
+    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[Path]]()
+  private def sentinelFiles(s: SparkSession, dir: String): IndexedSeq[Path] =
     sentinelCache.computeIfAbsent(dir, _ => {
       import s.implicits._
-      val maxMs = graft.Tables.events(s, dir)
+      val maxMs = Tables.events(s, dir)
         .agg(max(col("ts"))).first().getTimestamp(0).getTime
       val base = Files.createTempDirectory("graft_sentinels")
       streamDirs.add(base.toString)
-      // The sentinel part-file must be byte-compatible with the feed
+      // The sentinel file must be byte-compatible with the feed
       // schema, so mirror the fixture's physical ts encoding.
-      val tsType = rawTsType(s, dir)
-      def write(tag: String, tsMs: Long): java.nio.file.Path = {
+      val tsType = Tables.rawEvents(s, dir).schema("ts").dataType
+      Seq(-90L * 24, 3L, 30L, 60L).zipWithIndex.map { case (hours, i) =>
+        val tsMs = maxMs + hours * 3600 * 1000
         val tsCol = tsType match {
           case LongType => lit(tsMs * 1000000L)
           case t => timestamp_micros(lit(tsMs * 1000L)).cast(t)
         }
-        Seq((-1L, -1L, sentinelType, 0.0))
+        writeFile(Seq((-1L, -1L, sentinelType, 0.0))
           .toDF("event_id", "user_id", "event_type", "value")
           .select(col("event_id"), col("user_id"), tsCol.as("ts"),
-                  col("event_type"), col("value"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$base/$tag")
-        val found = Files.list(base.resolve(tag)).toArray.map(_.toString)
-          .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
-        Paths.get(found.head)
-      }
-      // s0 is the HOLD sentinel: its ts sits ~90 days BEFORE the data,
-      // so dropping it schedules a micro-batch without moving the
-      // watermark — the bridge batch a phased feed needs between an
-      // on-time and a late phase (SPARK-24588: the late filter of a
-      // stateful operator uses the PREVIOUS batch's watermark, so one
-      // batch must pass for a phase's watermark to become filterable)
-      // when the query does NOT want no-data flushing's trailing batch.
-      Sentinels(write("s0", maxMs - 90L * 24 * 3600 * 1000),
-                write("s1", maxMs + 3L * 3600 * 1000),
-                write("s2", maxMs + 30L * 3600 * 1000),
-                write("s3", maxMs + 60L * 3600 * 1000))
+                  col("event_type"), col("value")), base.resolve(s"s$i"))
+      }.toIndexedSeq
     })
 
-  /** Stream the events table + `drops` watermark-advancing sentinel
-    * drops through `transform`, return the memory-sink table.
+  /** The feed's data files: one file of raw events per phase predicate,
+    * the first sentinel (`carry`) written into the LAST one. Built ONCE
+    * per (sf dir, predicates, carry) — repeat runs pay no filter+write
+    * job — and shared by every query with the same feed: the snapshot
+    * feed is the single phase `lit(true)`. */
+  private val feedCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[Path]]()
+  private def feedFiles(s: SparkSession, dir: String, phases: Seq[Column],
+                        carry: Option[Path]): Seq[Path] =
+    feedCache.computeIfAbsent(s"$dir|${phases.mkString("|")}|$carry", _ => {
+      val raw = Tables.rawEvents(s, dir)
+      val base = Files.createTempDirectory("graft_feed")
+      streamDirs.add(base.toString)
+      phases.zipWithIndex.map { case (pred, i) =>
+        val rows = raw.filter(pred)
+        val withCarry =
+          if (i < phases.size - 1) rows
+          else carry.fold(rows)(c => rows.unionByName(
+            s.read.schema(raw.schema).parquet(c.toString)))
+        writeFile(withCarry, base.resolve(s"phase$i"))
+      }
+    })
+
+  /** Stream the events table through `transform` and return what the
+    * sink finalized. The feed is a list of micro-batches, one file
+    * each, built by one rule:
+    *   - the data: the whole events table as one snapshot, or one file
+    *     per `phases` predicate — their arrival ORDER is the
+    *     experiment (late-data semantics are order-defined), so the
+    *     hold sentinel s0 bridges every pair of phases;
+    *   - `sentinels` (by number, see [[sentinelFiles]]): the first
+    *     rides the last data file, each later one is its own batch.
+    * During the batch that carries it the watermark has not moved yet
+    * (it only advances AFTER a batch), so the carried sentinel can
+    * never drop data or trigger emissions early — it just means the
+    * next batch already runs under the lifted watermark.
     *
-    * Micro-batch economics (measured via the SPARK_GRAFT_STREAM_TRACE
-    * listener, r3/r6): every micro-batch — even a 0-row one — costs a
-    * full commit cycle (~0.4-0.6 s at bench scale: incremental
-    * planning, state-store commit per partition, sink-append commit,
-    * offset/commit WAL). Spark's default no-data micro-batches double
-    * the batch count: after each watermark advance it schedules an
-    * extra empty batch to perform the append-mode emissions. We turn
-    * them OFF (`flushViaNoData=false`) and make the emission batches
-    * explicit instead: each sentinel drop is itself the batch that
-    * emits everything the PREVIOUS batch's watermark released, so
-    *   - stateful aggs/timeouts (q51/q94/q52/q101) take 2 drops: s1
-    *     (+3 h) lifts the watermark past every real window/session
-    *     end; s2's batch performs those emissions under s1's
-    *     watermark. 3 batches total, down from 4.
-    *   - eager emitters — stream-stream INNER join (q57), stateless
-    *     enrich (q98), dropDuplicates (q67) — emit in the data batch
-    *     itself: 0 drops, 1 batch, down from 2.
-    * The one exception is the phased late-data gate (q156), which
-    * keeps Spark's default no-data flushing (`flushViaNoData=true`):
-    * the LATE-event filter of a stateful operator uses the PREVIOUS
-    * batch's watermark (only eviction/emission uses the current one —
-    * SPARK-24588 semantics, re-measured r6 via the trace listener),
-    * so the no-data batch between the on-time and late phases is
-    * load-bearing — it ages the watermark by one batch so the late
-    * phase is actually filtered. Single-snapshot queries never hit
-    * this: all their data arrives in batch 0 under watermark 0. */
-  private def runStream(s: SparkSession, dir: String, prefix: String,
-                        drops: Int = 1,
-                        phases: Seq[org.apache.spark.sql.Column] = Nil,
-                        flushViaNoData: Boolean = false,
-                        sentinelPicks: Seq[Int] = Nil,
-                        outputMode: OutputMode = OutputMode.Append,
-                        stateParts: Int = 1,
-                        bridgeBetweenPhases: Boolean = false)
-                       (transform: DataFrame => DataFrame): DataFrame = {
-    // dev-only phase timer (SPARK_GRAFT_STREAM_TRACE=1): attributes the
-    // gate's per-query wall time to setup / start / drain / stop so the
-    // fixed-cost floor work aims at the right component
-    val tr0 = System.nanoTime()
-    var trLast = tr0
-    val doTrace = sys.env.contains("SPARK_GRAFT_STREAM_TRACE")
-    def mark(stage: String): Unit = if (doTrace) {
-      val now = System.nanoTime()
-      System.err.println(f"[phase] $prefix $stage ${(now - trLast) / 1e9}%.3f")
-      trLast = now
-    }
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val sent = sentinels(s, dir)
-    // Source dir, sink dir and checkpoints all live on tmpfs when
-    // available: every micro-batch pays a parquet-committer commit on
-    // the sink plus WAL fsyncs, which is pure harness overhead here (a
-    // production deployment points these at durable storage instead).
-    // Hard-linking the events parquet fails across filesystems and
-    // falls back to a one-time copy — fine, it's one file per run.
-    val tmpBase =
-      if (Files.isDirectory(Paths.get("/dev/shm"))) Paths.get("/dev/shm")
-      else Paths.get(System.getProperty("java.io.tmpdir"))
+    * Micro-batch economics (r3/r6): every micro-batch — even a 0-row
+    * one — costs a full commit cycle (~0.4-0.6 s at bench scale:
+    * incremental planning, state-store commit per partition,
+    * sink-append commit, offset/commit WAL). Spark's default no-data
+    * micro-batches would add one such batch after each watermark
+    * advance to perform the append-mode emissions; they are OFF, and
+    * each emission batch is an explicit sentinel instead: the batch
+    * after a watermark lift emits everything it released. So
+    *   - stateful aggs/timeouts/outer joins (q52/q101/q226/q231/q239)
+    *     take `Seq(1, 2)`: data+s1, then s2 emits — 2 batches;
+    *   - eager emitters and update-mode snapshots take no sentinel:
+    *     1 batch;
+    *   - the phased TTL dedup (q236) emits eagerly: A, s0, B —
+    *     3 batches; the phased late-data gate (q156) takes
+    *     `Seq(2, 3)`: A, s0, B+s2, s3 — 4 batches.
+    * The batch counts are pinned by EventStreamsSpec.
+    *
+    * Every file is staged BEFORE start with strictly increasing mtimes
+    * and run under `Trigger.AvailableNow` with one file per trigger:
+    * the file source orders by modification time, so the engine
+    * replays the list batch for batch and terminates after the last
+    * commit (r9: ~0.15-0.2 s faster per query than a
+    * start/processAllAvailable/stop handshake). Staged files are
+    * COPIES, never hard links: retiming a link would mutate the shared
+    * cache inode under a concurrently staging run (ADVICE r9). */
+  private[graft] def runStream(s: SparkSession, dir: String, prefix: String,
+                               sentinels: Seq[Int] = Nil,
+                               phases: Seq[Column] = Nil,
+                               outputMode: OutputMode = OutputMode.Append,
+                               stateParts: Int = 1)
+                              (transform: DataFrame => DataFrame): DataFrame = {
+    lazy val sent = sentinelFiles(s, dir)
+    val data = feedFiles(s, dir, if (phases.isEmpty) Seq(lit(true)) else phases,
+                         sentinels.headOption.map(sent(_)))
+    val batches = data.init.flatMap(Seq(_, sent(0))) ++
+      (data.last +: sentinels.drop(1).map(sent(_)))
     val tmp = Files.createTempDirectory(tmpBase, s"graft_$prefix")
     streamDirs.add(tmp.toString)
-    // Default feed: the whole events file as one initial snapshot.
-    // Phased feed: one filtered copy of the file per predicate,
-    // dropped sequentially (each its own micro-batch) — the arrival
-    // ORDER is the experiment (late-data semantics are order-defined).
-    // Phase files are built ONCE per (sf dir, query) and hard-linked
-    // into each run's stream directory, the same once-per-dir
-    // economics as the sentinel cache: the predicates are fixed per
-    // query, so repeat runs were paying two filter+write Spark jobs
-    // for byte-identical files (r8 streaming-floor cut).
-    val phaseFiles: Seq[java.nio.file.Path] =
-      if (phases.isEmpty) Nil
-      else phaseCache.computeIfAbsent(s"$dir/$prefix", _ => {
-        val raw = s.read.schema(rawEventSchema(rawTsType(s, dir)))
-          .parquet(s"$dir/events.parquet")
-        val base = Files.createTempDirectory(s"graft_phases_$prefix")
-        streamDirs.add(base.toString)
-        phases.zipWithIndex.map { case (pred, i) =>
-          val stage = base.resolve(s"stage$i")
-          raw.filter(pred).coalesce(1).write.parquet(stage.toString)
-          Files.list(stage).toArray.map(_.toString)
-            .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
-            .map(Paths.get(_)).head
-        }
-      })
-    if (phases.isEmpty)
-      linkOrCopy(Paths.get(s"$dir/events.parquet"), tmp.resolve("batch0.parquet"))
-    else
-      linkOrCopy(phaseFiles.head, tmp.resolve("batch0.parquet"))
-    var sentinelNo = 0
-    def dropSentinel(src: java.nio.file.Path): Unit = {
-      sentinelNo += 1
-      linkOrCopy(src, tmp.resolve(s"sentinel$sentinelNo.parquet"))
+    val in = Files.createDirectories(tmp.resolve("in"))
+    val t0 = System.currentTimeMillis()
+    batches.zipWithIndex.foreach { case (f, i) =>
+      val dst = Files.copy(f, in.resolve(f"batch$i%02d.parquet"))
+      Files.setLastModifiedTime(dst, FileTime.fromMillis(t0 + 1000L * i))
     }
-    val name = s"${prefix}_${runId.incrementAndGet()}"
-    // Non-phased, non-noData queries run under Trigger.AvailableNow
-    // (r9, VERDICT r8 #4): every input file is staged BEFORE start,
-    // the engine plans the batch sequence itself and terminates after
-    // the last commit — measured ~0.15-0.2 s faster per query than
-    // the start/processAllAvailable/stop handshake, with identical
-    // batch composition: maxFilesPerTrigger=2 makes batch 0 the two
-    // OLDEST files (snapshot + folded seed sentinel, exactly the
-    // seedFirst semantics) and each later sentinel — staged with a
-    // strictly later mtime — its own watermark-advancing batch.
-    // Phased feeds (q156) keep the explicit handshake: their arrival
-    // ORDER is the semantics under test, and their emissions ride
-    // no-data batches the engine schedules between drops — neither is
-    // expressible as a pre-staged AvailableNow file set. The
-    // SPARK_GRAFT_STREAM_SENTINELS_<q> debug knob also forces the
-    // explicit path: its whole point is sweeping sentinel counts,
-    // which the 2-file batch window cannot stage faithfully.
-    val availableNow = phases.isEmpty && !flushViaNoData &&
-      !sys.env.contains(s"SPARK_GRAFT_STREAM_SENTINELS_$prefix")
-    val srcReader = s.readStream.schema(rawEventSchema(rawTsType(s, dir)))
-    val src = (if (availableNow) srcReader.option("maxFilesPerTrigger", 2)
-               else srcReader)
-      .parquet(tmp.toString)
-      .select(col("event_id"), col("user_id"),
-              tsToTimestamp(rawTsType(s, dir)).as("ts"),
-              col("event_type"), col("value"))
-    // Checkpoints for the gate queries live on tmpfs when available:
-    // the per-batch commit fsync is pure harness overhead here (a
-    // production deployment points checkpointLocation at durable
-    // storage instead).
-    val ckptBase =
-      if (Files.isDirectory(Paths.get("/dev/shm"))) Paths.get("/dev/shm")
-      else Paths.get(System.getProperty("java.io.tmpdir"))
+    val raw = Tables.rawEvents(s, dir).schema
+    val src = s.readStream.schema(raw).option("maxFilesPerTrigger", 1)
+      .parquet(in.toString)
+      .withColumn("ts", Tables.eventTs(raw))
+    // Production sink shape: each micro-batch appends its finalized
+    // rows to a parquet directory (executor-side writes, nothing
+    // driver-resident). The gate then reads the files back — the
+    // verified path and a deployable path are the same code.
+    val transformed = transform(src)
+    val outDir = Files.createDirectories(tmp.resolve("out")).toString // a zero-emission run must still read back
+    val ckpt = Files.createTempDirectory(tmpBase, s"graft_ckpt_$prefix")
+    streamDirs.add(ckpt.toString)
     // State partitions are PER QUERY since r13: the r9 global sweep
     // read 1 best overall, but it averaged two regimes. Light
     // aggregates (tumbling/sliding counts, dedup, enrich) are
@@ -285,230 +203,40 @@ object StreamQueries {
     // core while 31 idle. The r13 re-sweep (1/4/8/16, min-of-4, heavy
     // six) reads 4 ahead of 1 by ~15-20% and ahead of 8/16, so those
     // queries pass stateParts = 4. A real cluster deployment sizes
-    // this to executor count instead. The env knob stays as a global
-    // override for sweeps.
-    val statePartsEff = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS",
-                                          stateParts.toString)
-    // Debug knob, scoped per query (e.g. SPARK_GRAFT_STREAM_SENTINELS_q51):
-    // a uniform override would silently strip another query's required
-    // watermark-advancing sentinel while iterating on this one.
-    val sentinelDrops = sys.env
-      .get(s"SPARK_GRAFT_STREAM_SENTINELS_$prefix")
-      .map(_.toInt).getOrElse(drops)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.getOption(
-      "spark.sql.streaming.noDataMicroBatches.enabled")
-    val prevFmtVal = s.conf.getOption(
-      "spark.sql.streaming.stateStore.formatValidation.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", statePartsEff)
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-               flushViaNoData.toString)
+    // this to executor count instead.
     // Per-batch state-store format validation re-checks every loaded
     // row's schema against the state schema on each commit cycle —
     // useful when resuming a checkpoint written by other code, pure
     // overhead for gate queries whose checkpoint is created and
     // consumed by this one run (correctness is carried by the DuckDB
     // oracle compare on the emitted rows, not by the in-flight check).
-    s.conf.set("spark.sql.streaming.stateStore.formatValidation.enabled",
-               "false")
-    val prevMaxPart = s.conf.get("spark.sql.files.maxPartitionBytes")
-    // The snapshot feed is ONE small parquet file, so batch 0's scan +
-    // watermark projection of 100-200k rows runs as a single task
-    // under the default 128 MB split size while 31 cores idle. Split
-    // the file scan so the pre-shuffle half of the heavy batch
-    // parallelizes (a production feed has many files per batch and
-    // gets this for free).
-    s.conf.set("spark.sql.files.maxPartitionBytes", (256 * 1024).toString)
-    val ckpt = Files.createTempDirectory(ckptBase, s"graft_ckpt_$prefix")
-    streamDirs.add(ckpt.toString)
-    // Production sink shape: each micro-batch appends its finalized
-    // rows to a parquet directory (executor-side writes, nothing
-    // driver-resident). The gate then reads the files back — the
-    // verified path and a deployable path are the same code.
-    val transformed = transform(src)
-    val outSchema = transformed.schema
-    val outDir = tmp.resolve("out").toString
-    Files.createDirectories(tmp.resolve("out")) // a zero-emission run must still read back
-    // dev knob: SPARK_GRAFT_STREAM_TRACE=1 prints each micro-batch's
-    // durationMs breakdown (triggerExecution / addBatch / walCommit /
-    // stateStore commit) — the evidence behind the gate's fixed-cost
-    // tuning (VERDICT r5 #3)
-    if (sys.env.contains("SPARK_GRAFT_STREAM_TRACE") &&
-        traceInstalled.compareAndSet(false, true))
-      s.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit =
-          System.err.println(s"[trace] ${e.progress.name} batch=${e.progress.batchId} " +
-            s"rows=${e.progress.numInputRows} eventTime=${e.progress.eventTime} " +
-            s"durations=${e.progress.durationMs}")
-      })
-    // Which sentinel files to drop: default the first `drops` of
-    // (s1 +3h, s2 +30h, s3 +60h); a query whose watermark delay
-    // makes the early sentinel useless picks explicitly (q156's
-    // 24 h delay: s1 only reaches max−21h, so it pays a full
-    // batch+no-data cycle to close nothing — jump straight to s2).
-    // The env override stays count-based and wins for debugging.
-    val pickSeq =
-      if (sys.env.contains(s"SPARK_GRAFT_STREAM_SENTINELS_$prefix"))
-        Seq(1, 2, 3).take(sentinelDrops)
-      else if (sentinelPicks.nonEmpty) sentinelPicks
-      else Seq(1, 2, 3).take(sentinelDrops)
-    val sentFile: Int => java.nio.file.Path = {
-      case 1 => sent.s1
-      case 2 => sent.s2
-      case _ => sent.s3
-    }
-    // Single-snapshot queries fold the first watermark-LIFTING
-    // sentinel into batch 0 itself: during batch 0 the watermark is
-    // still the epoch (it only advances AFTER a batch), so the extra
-    // row can never drop data or trigger emissions early — it just
-    // means batch 1 already runs under the lifted watermark, saving
-    // one full micro-batch commit cycle per query (r7: the gate's
-    // per-trigger floor is ~0.45 s; q51/q94/q52/q101 go 3 → 2
-    // triggers). Linked BEFORE start() so the source's first listing
-    // is guaranteed to see it. Phased feeds keep the sentinel
-    // sequence explicit — their arrival order IS the semantics under
-    // test — as do flushViaNoData queries (their emissions ride
-    // no-data batches).
-    val seedFirst = availableNow && pickSeq.nonEmpty
-    if (seedFirst)
-      linkOrCopy(sentFile(pickSeq.head), tmp.resolve("seed_sentinel.parquet"))
-    val remainingPicks = if (seedFirst) pickSeq.tail else pickSeq
-    if (availableNow) {
-      // stage the post-batch-0 sentinels NOW with strictly increasing
-      // mtimes: the file source orders by modification time, so under
-      // maxFilesPerTrigger=2 the snapshot+seed pair is batch 0 and
-      // each of these becomes its own later batch, exactly like the
-      // explicit drop loop it replaces. The retimed file is a COPY,
-      // never a hard link: setLastModifiedTime on a link mutates the
-      // shared per-dir cache inode, and a concurrently staging run
-      // (parallel suites) could then see its own seed/sentinel links
-      // retimed into the future and silently co-batch a watermark
-      // advance (ADVICE r9).
-      // Guard: with ≥2 post-seed sentinels the 2-file batch window
-      // would CO-BATCH them, silently collapsing two watermark
-      // advances into one — no current query does this; one that
-      // needs to must use the explicit-handshake path.
-      require(remainingPicks.size <= 1,
-        s"$prefix: AvailableNow path supports at most 1 post-seed sentinel, " +
-          s"got ${remainingPicks.size}")
-      val now = System.currentTimeMillis()
-      remainingPicks.zipWithIndex.foreach { case (pick, idx) =>
-        sentinelNo += 1
-        val dst = tmp.resolve(s"sentinel$sentinelNo.parquet")
-        Files.copy(sentFile(pick), dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(now + 5000L * (idx + 1)))
-      }
-    }
-    mark("setup")
-    val writer = transformed.writeStream.queryName(name)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one task + one file per micro-batch: the emitted rows are
-        // output-sized (finalized windows/sessions/join rows), so a
-        // per-state-partition fan-out only multiplies task-launch and
-        // commit-protocol overhead (~0.1-0.2 s per batch at gate
-        // scale, measured r14) and leaves more files for the readback
-        // to list. A production deployment with large per-batch
-        // output drops the coalesce — the writer is otherwise the
-        // same executor-side append.
-        batch.coalesce(1).write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode(outputMode)
-    val q = try {
-      (if (availableNow)
-         writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-       else writer).start()
-    }
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevNoData match {
-        case Some(v) =>
-          s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None =>
-          s.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-      prevFmtVal match {
-        case Some(v) => s.conf.set(
-          "spark.sql.streaming.stateStore.formatValidation.enabled", v)
-        case None => s.conf.unset(
-          "spark.sql.streaming.stateStore.formatValidation.enabled")
-      }
-      s.conf.set("spark.sql.files.maxPartitionBytes", prevMaxPart)
-    }
-    // Phased feeds under no-data flushing can co-drop the first
-    // sentinel WITH the final phase file: both land in one
-    // micro-batch, and the late-event filter applied during that
-    // batch uses the watermark aged by the preceding no-data batch —
-    // the co-arriving sentinel only lifts the watermark AFTER the
-    // batch, exactly as a separate drop would, so the no-data batch
-    // that follows performs the same emissions one full commit cycle
-    // earlier (q156: 6 triggers → 4).
-    val mergeIntoLastPhase =
-      phases.nonEmpty && flushViaNoData && remainingPicks.nonEmpty
-    val tailPicks =
-      if (mergeIntoLastPhase) remainingPicks.tail else remainingPicks
-    mark("start")
-    try {
-      if (availableNow) {
-        // the engine drains the pre-staged batch sequence and
-        // terminates itself after the last commit
-        q.awaitTermination()
-        mark("drain0")
-      } else {
-        q.processAllAvailable()
-        mark("drain0")
-        phaseFiles.drop(1).zipWithIndex.foreach { case (f, i) =>
-          if (bridgeBetweenPhases) {
-            // Explicit bridge batch (replaces no-data flushing for a
-            // query with no flush EMISSIONS, e.g. eager-emitting
-            // dedup): the hold sentinel s0 schedules one micro-batch
-            // without advancing the watermark, so the NEXT phase's
-            // late filter sees the previous phase's watermark
-            // (SPARK-24588 lag) — same aging as the no-data batch,
-            // minus the trailing no-data flush batch the noData path
-            // schedules after the final phase (one full commit cycle
-            // per run).
-            dropSentinel(sent.s0)
-            q.processAllAvailable()
-            mark(s"bridge${i + 1}")
-          }
-          linkOrCopy(f, tmp.resolve(s"phase${i + 1}.parquet"))
-          if (mergeIntoLastPhase && i == phaseFiles.length - 2)
-            dropSentinel(sentFile(remainingPicks.head))
-          q.processAllAvailable()
-          mark(s"phase${i + 1}")
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" -> stateParts.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+      "spark.sql.streaming.stateStore.formatValidation.enabled" -> "false")
+    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    val q = try transformed.writeStream.queryName(s"${prefix}_${runId.incrementAndGet()}")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // one task + one file per micro-batch: the emitted rows are
+          // output-sized (finalized windows/sessions/join rows), so a
+          // per-state-partition fan-out only multiplies task-launch and
+          // commit-protocol overhead (~0.1-0.2 s per batch at gate
+          // scale, measured r14) and leaves more files for the readback
+          // to list. A production deployment with large per-batch
+          // output drops the coalesce — the writer is otherwise the
+          // same executor-side append.
+          batch.coalesce(1).write.mode("append").parquet(outDir)
         }
-        tailPicks.foreach { i =>
-          dropSentinel(sentFile(i))
-          q.processAllAvailable()
-          mark(s"drop$i")
-        }
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode(outputMode)
+        .trigger(Trigger.AvailableNow)
+        .start()
+      finally saved.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
       }
-    } finally {
-      // floor decomposition (trace mode): the engine's own per-batch
-      // duration breakdown, BEFORE stop() clears progress
-      if (doTrace) q.recentProgress.foreach { p =>
-        val dm = p.durationMs
-        val keys = Seq("triggerExecution", "queryPlanning", "getBatch",
-                       "addBatch", "walCommit", "commitOffsets")
-        val parts = keys.flatMap(k => Option(dm.get(k)).map(v => s"$k=$v"))
-        System.err.println(
-          s"[batch] $prefix b${p.batchId} rows=${p.numInputRows} ${parts.mkString(" ")}")
-        p.stateOperators.foreach { so =>
-          System.err.println(
-            s"[state] $prefix b${p.batchId} op=${so.operatorName} " +
-            s"rowsTotal=${so.numRowsTotal} updated=${so.numRowsUpdated} " +
-            s"updMs=${so.allUpdatesTimeMs} rmMs=${so.allRemovalsTimeMs} " +
-            s"commitMs=${so.commitTimeMs} mem=${so.memoryUsedBytes}")
-        }
-      }
-      q.stop()
-    }
-    mark("stop")
+    try q.awaitTermination() finally q.stop()
     // explicit schema: a zero-emission run leaves no files to infer from.
     // The readback is gate machinery (in production the sink files ARE
     // the output); its content is output-sized — finalized windows,
@@ -516,7 +244,7 @@ object StreamQueries {
     // the per-query cosmetic orderBy/row_number that follows then runs
     // as a single local sort instead of a range-exchange (whose
     // sampling pass is a whole extra Spark job per streaming query).
-    s.read.schema(outSchema).parquet(outDir).coalesce(1)
+    s.read.schema(transformed.schema).parquet(outDir).coalesce(1)
   }
 
   /** q51 — streaming tumbling windows over the whole events table;
@@ -531,7 +259,7 @@ object StreamQueries {
     * watermark passes its end) remains pinned by q156, whose late-data
     * oracle depends on it batch-exactly. */
   def q51StreamTumbling(s: SparkSession, dir: String): DataFrame =
-    runStream(s, dir, "q51", drops = 0,
+    runStream(s, dir, "q51",
               outputMode = OutputMode.Update)(
       EventStreams.tumblingCounts(_, "1 hour", "1 hour"))
       .filter(col("event_type") =!= sentinelType)
@@ -546,7 +274,7 @@ object StreamQueries {
     * q44. Update mode over the single-snapshot feed — one trigger, no
     * sentinels; see q51 for the argument. */
   def q94StreamSliding(s: SparkSession, dir: String): DataFrame =
-    runStream(s, dir, "q94", drops = 0,
+    runStream(s, dir, "q94",
               outputMode = OutputMode.Update)(
       EventStreams.slidingCounts(_, "1 hour", "30 minutes", "1 hour"))
       .filter(col("event_type") =!= sentinelType)
@@ -561,7 +289,7 @@ object StreamQueries {
     * watermark nodes to advance the join's watermark) and are dropped
     * from the result by user_id. Oracle: the plain batch self-join. */
   def q57StreamJoin(s: SparkSession, dir: String): DataFrame =
-    runStream(s, dir, "q57", drops = 0, stateParts = 4) { src =>
+    runStream(s, dir, "q57", stateParts = 4) { src =>
       EventStreams.attributionJoin(
         src.filter(col("event_type").isin("view", sentinelType)),
         src.filter(col("event_type").isin("purchase", sentinelType)))
@@ -578,13 +306,13 @@ object StreamQueries {
     * within the gap ALSO emit (with null purchase columns) — the
     * shape that needs the watermark for output, not just eviction:
     * an unmatched left row can only finalize once the watermark
-    * proves no future right row can match. The sentinel drop
-    * advances both side watermarks past every real view's horizon,
-    * so the no-data batch emits all null-matched rows; the
-    * sentinel's own pairing (user −1) is dropped from the result.
+    * proves no future right row can match. Sentinel s1, riding the
+    * snapshot, advances both side watermarks past every real view's
+    * horizon, so s2's batch emits all null-matched rows; the
+    * sentinels' own pairings (user −1) are dropped from the result.
     * Oracle: the plain batch LEFT JOIN. */
   def q101StreamJoinOuter(s: SparkSession, dir: String): DataFrame =
-    runStream(s, dir, "q101", drops = 2, stateParts = 4) { src =>
+    runStream(s, dir, "q101", sentinels = Seq(1, 2), stateParts = 4) { src =>
       EventStreams.attributionJoin(
         src.filter(col("event_type").isin("view", sentinelType)),
         src.filter(col("event_type").isin("purchase", sentinelType)),
@@ -613,7 +341,7 @@ object StreamQueries {
     * purchase rows never mix, so no other tie is engine-sensitive.
     * Oracle: the identical batch FULL JOIN. */
   def q239StreamJoinFullOuter(s: SparkSession, dir: String): DataFrame =
-    runStream(s, dir, "q239", drops = 2, stateParts = 4) { src =>
+    runStream(s, dir, "q239", sentinels = Seq(1, 2), stateParts = 4) { src =>
       EventStreams.attributionJoin(
         src.filter(col("event_type").isin("view", sentinelType)),
         src.filter(col("event_type").isin("purchase", sentinelType)),
@@ -652,7 +380,7 @@ object StreamQueries {
     * when keys can recur beyond the horizon). Needs zero sentinel
     * drops. */
   def q67StreamDedup(s: SparkSession, dir: String): DataFrame =
-    runStream(s, dir, "q67", drops = 0) { src =>
+    runStream(s, dir, "q67") { src =>
       src.select(col("user_id"), col("event_type"))
         .dropDuplicates(Seq("user_id", "event_type"))
     }
@@ -682,24 +410,22 @@ object StreamQueries {
     * whichever occurrence is processed first, never enough to flip a
     * late/live verdict, and the emitted row is projected to the key
     * columns (the q67 argument). The batch between the phases is the
-    * HOLD-sentinel bridge (not a no-data flush batch): dedup emits
-    * eagerly, so the only job between phases is aging the watermark by
-    * one batch (SPARK-24588) — the s0 bridge does that in one commit
-    * cycle and skips the trailing no-data batch the flush path
-    * schedules after phase B (3 triggers, down from 4; r13
-    * streaming-floor cut). Oracle: the distinct keys of days
+    * hold-sentinel bridge s0: dedup emits eagerly, so the only job
+    * between phases is aging the watermark by one batch (SPARK-24588),
+    * and no sentinel follows phase B — 3 triggers. Oracle: the
+    * distinct keys of days
     * 2–30. Eviction, re-admission and no-expiry-extension semantics —
     * unreachable deterministically from a batch oracle — are pinned
     * by EventStreamsSpec with a state-metrics bound. */
   def q236StreamDedupTtl(s: SparkSession, dir: String): DataFrame = {
-    val t = tsToTimestamp(rawTsType(s, dir))
+    val t = Tables.eventTs(Tables.rawEvents(s, dir).schema)
     val dLate = lit("2024-01-02").cast("timestamp")
     val dSplit = lit("2024-01-22").cast("timestamp")
     val phaseA = t >= dLate && t < dSplit
     val phaseB = t >= dSplit || t < dLate ||
       (pmod(col("event_id"), lit(7L)) === 0 && t >= dLate && t < dSplit)
-    runStream(s, dir, "q236", drops = 0, phases = Seq(phaseA, phaseB),
-              bridgeBetweenPhases = true, stateParts = 4) { src =>
+    runStream(s, dir, "q236", phases = Seq(phaseA, phaseB),
+              stateParts = 4) { src =>
       EventStreams.dedupStream(
           src.withColumn("day", date_trunc("DAY", col("ts"))),
           Seq("user_id", "event_type", "day"), watermark = "48 hours")
@@ -751,7 +477,7 @@ object StreamQueries {
     })
     val profile = s.createDataFrame(
       new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), schema)
-    runStream(s, dir, "q98", drops = 0) { src =>
+    runStream(s, dir, "q98") { src =>
       src.join(broadcast(profile), Seq("user_id"))
         .select(col("event_id"), col("user_id"), col("event_type"),
                 col("u_first_type"), col("u_n_events"))
@@ -765,7 +491,7 @@ object StreamQueries {
     * running-sum numbering). */
   def q52StreamSessions(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sessions = runStream(s, dir, "q52", drops = 2, stateParts = 4) { df =>
+    val sessions = runStream(s, dir, "q52", sentinels = Seq(1, 2), stateParts = 4) { df =>
       import df.sparkSession.implicits._
       EventStreams.sessionize(df.as[EventRow]).toDF()
     }
@@ -790,13 +516,14 @@ object StreamQueries {
     * defining late-data behavior — while stragglers in still-open
     * tail windows are absorbed. Because the arrival order and both
     * batch boundaries are deterministic (one file each), the exact
-    * drop set is closed-form, and the DuckDB oracle replays it
-    * (two sentinel drops with default no-data flushing — the no-data
-    * batch between the phases ages the watermark so the late filter
-    * sees max−24 h, and with a 24 h delay the first sentinel only
-    * lifts the watermark to max−21 h; the +30 h second one is what
-    * flushes the tail windows):
-    * count events where on-time OR window end > wm. The tumbling
+    * drop set is closed-form, and the DuckDB oracle replays it:
+    * count events where on-time OR window end > wm. Four batches, the
+    * same sentinel policy as every other gate query: A; the hold
+    * sentinel s0, which ages the watermark by one batch so B's late
+    * filter sees max−24 h (SPARK-24588); B with s2 riding it (+30 h —
+    * with a 24 h delay s1's max−21 h would close nothing), which lifts
+    * the watermark past every real window; and s3, whose batch emits
+    * the tail windows. The tumbling
     * count per (hour, type) is otherwise q51's shape.
     *
     * This pins the semantics every production watermark config
@@ -804,10 +531,8 @@ object StreamQueries {
     * closed windows (or drop on-time rows), the count diff flags it
     * row-exactly. */
   def q156StreamLateData(s: SparkSession, dir: String): DataFrame = {
-    val onTime = pmod(col("event_id"), lit(20L)) =!= 0 || col("event_id") < 0
-    val late = pmod(col("event_id"), lit(20L)) === 0 && col("event_id") >= 0
-    runStream(s, dir, "q156", drops = 1, phases = Seq(onTime, late),
-              flushViaNoData = true, sentinelPicks = Seq(2),
+    val late = pmod(col("event_id"), lit(20L)) === 0
+    runStream(s, dir, "q156", sentinels = Seq(2, 3), phases = Seq(!late, late),
               stateParts = 4)(
       EventStreams.tumblingCounts(_, "1 hour", "24 hours"))
       .filter(col("event_type") =!= sentinelType)
@@ -830,7 +555,7 @@ object StreamQueries {
     * the documented active-user-set bound, not a history bound.
     * Oracle: the plain batch per-user aggregate. */
   def q175StreamLifetime(s: SparkSession, dir: String): DataFrame =
-    runStream(s, dir, "q175", drops = 0,
+    runStream(s, dir, "q175",
               outputMode = OutputMode.Update) { src =>
       import src.sparkSession.implicits._
       EventStreams.userStatsMicro(
@@ -853,7 +578,7 @@ object StreamQueries {
     * (type, rank, user, n) rows after the sink. Oracle: the batch
     * per-type top-3. */
   def q218StreamTopUsers(s: SparkSession, dir: String): DataFrame = {
-    val sunk = runStream(s, dir, "q218", drops = 0,
+    val sunk = runStream(s, dir, "q218",
               outputMode = OutputMode.Update) { src =>
       import src.sparkSession.implicits._
       EventStreams.typeTopUsers(
@@ -895,7 +620,7 @@ object StreamQueries {
     * on finalized rows. */
   def q226StreamSessionWindow(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sessions = runStream(s, dir, "q226", drops = 2, stateParts = 4) { df =>
+    val sessions = runStream(s, dir, "q226", sentinels = Seq(1, 2), stateParts = 4) { df =>
       df.withWatermark("ts", "1 hour")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"), min(col("ts")).as("t_start"),
@@ -959,8 +684,8 @@ object StreamQueries {
     * Emission timing: both layers finalize in the SAME micro-batch
     * once the watermark passes a window's end (downstream sees
     * upstream's append output inside the batch), so the standard
-    * snapshot + seeded-sentinel + one-late-sentinel feed (q226's
-    * drops = 2) closes every real window; the sentinels' own far-
+    * snapshot+s1, s2 feed (q226's `sentinels = Seq(1, 2)`) closes
+    * every real window; the sentinels' own far-
     * future windows never finalize and so never emit, so no
     * post-sink row filter is needed. Oracle: the identical per-hour
     * register construction in batch SQL (the q214 replay,
@@ -969,7 +694,7 @@ object StreamQueries {
     val two45 = Hll45
     val m = HllM
     val alpha = 0.7182725932495458 // 0.7213/(1 + 1.079/256)
-    val est = runStream(s, dir, "q231", drops = 2, stateParts = 4)(q231Transform)
+    val est = runStream(s, dir, "q231", sentinels = Seq(1, 2), stateParts = 4)(q231Transform)
     est
       .withColumn("hll_raw",
         round(lit(alpha) * lit(m.toDouble * m.toDouble) * lit(two45.toDouble) /

@@ -25,6 +25,16 @@ class SessionSpec extends SparkSpec {
     }
   }
 
+  test("Verify: oracle_sql.json holds the selected oracles; a full run holds all, unchanged") {
+    val all = SparkEntry.oracleSql
+      .map { case (k, v) => s"${JsonUtil.esc(k)}: ${JsonUtil.esc(v)}" }.mkString("{", ",", "}")
+    assert(Verify.oracleJson(SparkEntry.queries.keySet) == all)
+    val names = Set("q156_stream_late_data", "q236_stream_dedup_ttl")
+    val partial = Verify.oracleJson(names)
+    assert("\"(q\\d+_\\w+)\": ".r.findAllMatchIn(partial).map(_.group(1)).toSet == names)
+    assert(names.forall(n => partial.contains(JsonUtil.esc(SparkEntry.oracleSql(n)))))
+  }
+
   test("Explain: a missing or unknown query name raises the usage error") {
     val usage = "(usage: graft.Explain <sfDir> <queryName> [queryName ...])"
     Seq(Array.empty[String], Array("sf")).foreach { args =>

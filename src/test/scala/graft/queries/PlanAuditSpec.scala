@@ -922,8 +922,7 @@ class PlanAuditSpec extends SparkSpec {
       "expected partial+final ObjectHashAggregate pair for the TopK aggregator")
   }
 
-  test("q249 link prediction: wedge join stays equi on the common " +
-       "neighbor; known edges leave via left-anti") {
+  test("q249 link prediction: long_pairs wedges; known edges go via left-anti") {
     val p = plan("q249_link_predict")
     assert(!p.contains("CartesianProduct"),
       s"wedges must come from the long_pairs generator over per-neighbor adjacency arrays:\n${p.take(1200)}")

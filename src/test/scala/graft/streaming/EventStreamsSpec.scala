@@ -369,6 +369,49 @@ class EventStreamsSpec extends SparkSpec {
     val total = ev.count()
     assert(got.map(_._3).sum < total)
   }
+
+  /** The gate's batch shapes (see `StreamQueries.runStream`): the
+    * progress events of each query, read after the listener bus
+    * drains — before the listener is added too, so no earlier
+    * query's events reach it. No-data batches are off everywhere, so
+    * no batch may have 0 input rows. */
+  test("streaming gate batch shapes: q51 1, q52 2, q236 3, q156 4 batches, none empty") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        rows.add((e.progress.name, e.progress.numInputRows))
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.streams.addListener(listener)
+    try {
+      StreamQueries.q51StreamTumbling(spark, sf0001).collect()
+      StreamQueries.q52StreamSessions(spark, sf0001).collect()
+      StreamQueries.q236StreamDedupTtl(spark, sf0001).collect()
+      StreamQueries.q156StreamLateData(spark, sf0001).collect()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    val byQuery = rows.asScala.toSeq.groupBy(_._1.takeWhile(_ != '_'))
+    assert(byQuery.map { case (q, b) => q -> b.size } ==
+      Map("q51" -> 1, "q52" -> 2, "q236" -> 3, "q156" -> 4), byQuery)
+    assert(byQuery.values.flatten.forall(_._2 > 0), byQuery)
+  }
+
+  test("stream source normalizes every events.ts generation like Tables.events") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_ts").toString
+    for (g <- Seq("TIMESTAMP(NANOS,true)", "TIMESTAMP(MICROS,false)")) {
+      val dir = s"$tmp/${g.filter(_.isLetter)}"
+      graft.TablesSpec.writeEvents(dir, g)
+      def ts(df: org.apache.spark.sql.DataFrame) =
+        df.select($"event_id", $"ts").collect().map(r => (r.getLong(0), r.getTimestamp(1))).toSeq
+      val streamed = ts(StreamQueries.runStream(spark, dir, "ts_gen")(identity))
+      assert(streamed.nonEmpty && streamed == ts(graft.Tables.events(spark, dir)), g)
+    }
+  }
   test("typeTopUsers: counter-map state accumulates across batches, ties by user id") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[EventRow]

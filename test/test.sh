@@ -87,3 +87,32 @@ if [ -d "$SF_DIR" ]; then
 else
   echo "SKIPPED: graft.Explain check ($SF_DIR not found)"
 fi
+
+# The streaming gate end to end: graft.Verify dumps the streaming
+# queries (SparkEntry.streamingQueries) on sf0.001 and tools/check.py
+# compares each with its DuckDB oracle. oracle_sql.json holds only the
+# selected queries' oracles, so every one of them must pass.
+if [ ! -d "$SF_DIR" ]; then
+  echo "SKIPPED: streaming oracle check ($SF_DIR not found)"
+elif ! command -v python3 >/dev/null; then
+  echo "SKIPPED: streaming oracle check (python3 not found)"
+elif ! python3 -c 'import duckdb, pandas' 2>/dev/null; then
+  echo "SKIPPED: streaming oracle check (python3 cannot import duckdb and pandas)"
+else
+  STREAMING="$(sed -n '/val streamingQueries/,/)$/p' src/main/scala/graft/SparkEntry.scala \
+    | grep -o '"q[0-9a-z_]*"' | tr -d '"' | paste -sd, -)"
+  if [ -z "$STREAMING" ]; then
+    echo "ERROR: no query names found in SparkEntry.streamingQueries" >&2
+    exit 1
+  fi
+  VERIFY_DIR="$(mktemp -d)"
+  trap 'rm -rf "$SPLIT_DIR" "$VERIFY_DIR"' EXIT
+  SPARK_GRAFT_ONLY="$STREAMING" sbt -batch "runMain graft.Verify $SF_DIR $VERIFY_DIR"
+  CHECK_OUT="$(python3 tools/check.py "$SF_DIR" "$VERIFY_DIR" 2>&1)" || true
+  if ! grep -qx "== 14 pass / 0 fail ==" <<<"$CHECK_OUT"; then
+    echo "$CHECK_OUT" | grep -v '^PASS ' >&2
+    echo "ERROR: the streaming queries do not all match their oracles on $SF_DIR" >&2
+    exit 1
+  fi
+  echo "==> streaming oracle check: $(tail -n 1 <<<"$CHECK_OUT")"
+fi
