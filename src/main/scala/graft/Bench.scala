@@ -40,22 +40,20 @@ object Bench {
     // elapsed time (ADVICE r1).
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     // The streaming family runs a HIGHER floor of per-run samples
-    // (default 3, VERDICT r12 #6): its per-query times are dominated
+    // (at least 3, VERDICT r12 #6): its per-query times are dominated
     // by a ~0.5 s/trigger session fixed cost whose round-over-round
     // deltas are sub-second — exactly the scale of this box's noise
     // bursts — so two samples cannot adjudicate a streaming
     // regression claim. One extra sample on 14 queries costs ~20 s
     // and makes the min a real steady-state estimate.
-    val streamRuns = sys.env.get("SPARK_GRAFT_BENCH_STREAM_RUNS")
-      .map(_.toInt).getOrElse(math.max(runs, 3))
+    val streamRuns = math.max(runs, 3)
     // Crosstalk guards (VERDICT r6 #4): per-query GC-time deltas make
     // allocation-storm inflation visible next to the wall time, and
     // the full GC between queries stops one query's garbage taxing
-    // its lexicographic successors. The barrier is ON by default
-    // since r9 (VERDICT r8 #2 — the r8 gate run regressed 1.43×
-    // driver-side while a min-of-2 re-run read flat; the unarmed
-    // barrier was half that ambiguity): SPARK_GRAFT_BENCH_GC=0
-    // disables it for raw-throughput experiments.
+    // its lexicographic successors. The barrier always runs (the
+    // default since r9, VERDICT r8 #2 — the r8 gate run regressed
+    // 1.43× driver-side while a min-of-2 re-run read flat; the
+    // unarmed barrier was half that ambiguity).
     // Calibration probe (VERDICT r13 #1): a fixed, data-independent
     // CPU + shuffle micro-bench run BEFORE the board, emitted into the
     // bench JSON as `calib`. Round-over-round comparisons divide by
@@ -107,7 +105,6 @@ object Bench {
       val lat = (1 to 3).map(_ => timed(latencyLeg())).min
       (cpu, sh, lat)
     }
-    val calibOn = !sys.env.get("SPARK_GRAFT_BENCH_CALIB").contains("0")
     // Probe seconds on the round-14 build box: min across 3 fresh JVMs
     // of the per-JVM min-of-3 (cpu 0.566 + shuffle 1.540; latency
     // measured separately). `factor` is this run's cpu+shuffle probe
@@ -128,9 +125,8 @@ object Bench {
     // is invisible to a single pre-board probe but moves the post
     // reading. Both raw readings are emitted so a pre/post gap flags
     // an unstable measurement window outright.
-    val (calibCpu, calibShuffle, calibLat) =
-      if (calibOn) calibProbe() else (-1.0, -1.0, -1.0)
-    val calibSec = if (calibOn) calibCpu + calibShuffle else -1.0
+    val (calibCpu, calibShuffle, calibLat) = calibProbe()
+    val calibSec = calibCpu + calibShuffle
     val gcBeans = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans()
     def gcMillis(): Long = {
@@ -138,7 +134,6 @@ object Bench {
       gcBeans.forEach(b => s += math.max(0L, b.getCollectionTime))
       s
     }
-    val forceGc = !sys.env.get("SPARK_GRAFT_BENCH_GC").contains("0")
     val gcTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
     // a query whose ADAPTIVE extra run failed keeps its N valid base
     // timings (the sample could only have tightened the min) but the
@@ -163,7 +158,7 @@ object Bench {
       }
       group.map { case (name, fn) =>
         var err: Option[String] = None
-        if (forceGc) System.gc()
+        System.gc()
         val gc0 = gcMillis()
         def timedRun(): Option[Double] = {
           val t0 = System.nanoTime()
@@ -208,13 +203,10 @@ object Bench {
     val batchResults = timeGroup(batchQs, runs)
     val streamResults = timeGroup(streamingQs, streamRuns)
     // closing probe — same legs, same mins; see the calib comment above
-    val (postCpu, postShuffle, postLat) =
-      if (calibOn) calibProbe() else (-1.0, -1.0, -1.0)
-    val postSec = if (calibOn) postCpu + postShuffle else -1.0
-    val calibFactor =
-      if (calibOn) (calibSec + postSec) / 2.0 / CalibRef else -1.0
-    val calibLatFactor =
-      if (calibOn) (calibLat + postLat) / 2.0 / CalibLatRef else -1.0
+    val (postCpu, postShuffle, postLat) = calibProbe()
+    val postSec = postCpu + postShuffle
+    val calibFactor = (calibSec + postSec) / 2.0 / CalibRef
+    val calibLatFactor = (calibLat + postLat) / 2.0 / CalibLatRef
     val results = (batchResults ++ streamResults).sortBy(_._1)
     // per-family min/max subtotals: the spread WITHIN a family is the
     // adjudication evidence the per-round regression reads need
@@ -261,10 +253,7 @@ object Bench {
     // `value` stays the raw sum-of-mins.
     val batchLo = batchResults.map(_._2).filter(_ >= 0).sum
     val streamLo = streamResults.map(_._2).filter(_ >= 0).sum
-    val valueNorm =
-      if (calibOn && calibFactor > 0 && calibLatFactor > 0)
-        batchLo / calibFactor + streamLo / calibLatFactor
-      else -1.0
+    val valueNorm = batchLo / calibFactor + streamLo / calibLatFactor
     val calib =
       s"""{"cpu_sec":${r3(calibCpu)},"shuffle_sec":${r3(calibShuffle)},"sec":${r3(calibSec)},"post_sec":${r3(postSec)},"ref_sec":$CalibRef,"factor":${r3(calibFactor)},"lat_sec":${r3(calibLat)},"post_lat_sec":${r3(postLat)},"lat_ref_sec":$CalibLatRef,"lat_factor":${r3(calibLatFactor)}}"""
     val line =

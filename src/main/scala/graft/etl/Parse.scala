@@ -61,13 +61,10 @@ object Parse {
     * (/root/reference/src/pipeline_pyspark.py:196-199). The
     * single-partition write keeps multi-line records contiguous;
     * Spark's own multiLine CSV reader is equally non-splittable per
-    * file, so this fallback concedes nothing Spark itself could win.
-    * Pass `multiLine = Some(...)` to skip the detection scan when the
-    * corpus shape is known. */
-  def load(spark: SparkSession, path: String,
-           multiLine: Option[Boolean] = None): DataFrame = {
+    * file, so this fallback concedes nothing Spark itself could win. */
+  def load(spark: SparkSession, path: String): DataFrame = {
     val scrubbed = scrubbedLines(spark, path)
-    if (multiLine.getOrElse(hasMultiLineRecords(spark, path)))
+    if (hasMultiLineRecords(spark, path))
       loadViaRoundTrip(spark, scrubbed, path)
     else
       scrubbed
@@ -103,11 +100,12 @@ object Parse {
 
   /** A physical line with an odd number of `"` characters opens (or
     * closes) a quoted region that continues past the line break, i.e.
-    * the file has multi-line records. Early-exits on the first such
-    * line (`isEmpty` plans a CollectLimit(1)); result cached per
-    * input version so repeated loads (bench loops) scan once. The
-    * distributed branch tests each line with [[OddQuotes]], a byte
-    * count with no decode or regex. */
+    * the file has multi-line records. Both branches split lines as
+    * `spark.read.text` does (`\n`, `\r` or `\r\n`), test each with
+    * [[OddQuotes]], a byte count with no decode or regex, and
+    * early-exit on the first odd line (`isEmpty` plans a
+    * CollectLimit(1)); result cached per input version so repeated
+    * loads (bench loops) scan once. */
   private val multiLineCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   private val driverScanLimit = 64L << 20
@@ -124,26 +122,16 @@ object Parse {
         val p = java.nio.file.Paths.get(path)
         if (java.nio.file.Files.isRegularFile(p) &&
             java.nio.file.Files.size(p) <= driverScanLimit) {
-          val in = java.nio.file.Files.newInputStream(p)
+          // Hadoop's LineReader is the splitter behind spark.read.text
+          val in = new org.apache.hadoop.util.LineReader(
+            java.nio.file.Files.newInputStream(p))
           try {
-            val buf = new Array[Byte](1 << 16)
-            var odd = false
+            val line = new org.apache.hadoop.io.Text()
             var found = false
-            var n = in.read(buf)
-            while (n > 0 && !found) {
-              var i = 0
-              while (i < n && !found) {
-                buf(i) match {
-                  case '"'  => odd = !odd
-                  case '\n' => if (odd) found = true else ()
-                  case _    => ()
-                }
-                i += 1
-              }
-              if (!found) n = in.read(buf)
-            }
-            // quoted region still open at EOF counts too
-            Some(java.lang.Boolean.valueOf(found || odd))
+            while (!found && in.readLine(line) > 0)
+              found = OddQuotes.odd(
+                UTF8String.fromBytes(line.getBytes, 0, line.getLength))
+            Some(java.lang.Boolean.valueOf(found))
           } finally in.close()
         } else None
       } catch { case _: Exception => None }

@@ -160,90 +160,18 @@ case class SqDistL64(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** MinHash signature sketch as ONE codegen'd pass: slot i of the
-  * signature is min over shingle hashes h of
-  * XXH64(a_i ^ h, seed=42) — the identical hash family the
-  * relational formulation (`min(xxhash64(lit(a_i).bitwiseXOR(h)))`)
-  * computes, so results are bit-equal, but evaluated as a k×n
-  * primitive loop per row: no explode, no aggregation, no shuffle.
-  * At 100 TB this turns MinHash signatures into a pure map-side
-  * operation whose output is k longs per document.
-  */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
-  require(k > 0, "minhash_sig needs k > 0")
-
-  /** Per-slot XOR constants (same family as graft.ops.Dedup). */
-  private lazy val slotAs: Array[Long] =
-    (0 until k).map(i => 0x9E3779B97F4A7C15L ^ (i.toLong * 0x94D049BB133111EBL)).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires array<bigint>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val acc = Array.fill(k)(Long.MaxValue)
-    var j = 0
-    while (j < n) {
-      val h = arr.getLong(j)
-      var i = 0
-      while (i < k) {
-        val x = XXH64.hashLong(slotAs(i) ^ h, 42L)
-        if (x < acc(i)) acc(i) = x
-        i += 1
-      }
-      j += 1
-    }
-    new GenericArrayData(acc)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val asRef = ctx.addReferenceObj("minhashAs", slotAs, "long[]")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val x = ctx.freshName("x")
-      s"""
-         |int $n = $in.numElements();
-         |long[] $acc = new long[$k];
-         |java.util.Arrays.fill($acc, Long.MAX_VALUE);
-         |for (int $j = 0; $j < $n; $j++) {
-         |  long $h = $in.getLong($j);
-         |  for (int $i = 0; $i < $k; $i++) {
-         |    long $x = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong($asRef[$i] ^ $h, 42L);
-         |    if ($x < $acc[$i]) $acc[$i] = $x;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($acc);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** MinHash signature from an AFFINE permutation family, as ONE
   * codegen'd pass: slot j of the signature is
-  * min over element hashes h of ((as(j)·h + bs(j)) mod p) — the
-  * oracle-REPLAYABLE sibling of [[MinHashSig]] (whose XXH64 slots no
-  * SQL engine can rebuild). With p prime and as(j) in [1, p−1] every
+  * min over element hashes h of ((as(j)·h + bs(j)) mod p), which any
+  * SQL engine can replay. With p prime and as(j) in [1, p−1] every
   * slot map is a bijection of Z_p, so the family has the standard
   * MinHash collision property; all inputs must already be reduced
   * mod p (h < p keeps as(j)·h + bs(j) < p² + p ≈ 1e18, inside a
   * long for p = 1e9+7).
   *
-  * Same scale shape as MinHashSig: a k×n primitive loop per row, no
-  * explode, no aggregation — signatures are a pure map-side pass
-  * whose output is k longs per document. The equivalent Column
+  * A k×n primitive loop per row, no explode, no aggregation —
+  * signatures are a pure map-side pass whose output is k longs per
+  * document. The equivalent Column
   * formulation (k separate `array_min(transform(...))` calls) walks
   * the hash array k times through interpreted HOF lambdas.
   */
@@ -1464,10 +1392,6 @@ object VectorFunctions {
     ColumnBridge.column(
       SqDistL64(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** k-slot MinHash signature over an array<long> of element hashes. */
-  def minhashSig(hashes: Column, k: Int): Column =
-    ColumnBridge.column(MinHashSig(ColumnBridge.expression(hashes), k))
-
   /** Oracle-replayable affine MinHash signature: slot j =
     * min((as(j)·h + bs(j)) mod p) over the array<long> of mod-p
     * element fingerprints. */
@@ -1578,8 +1502,8 @@ object VectorFunctions {
 
   /** One-buffer-per-task scatter matrix (outer products + linear
     * sums + count) over an array<bigint> column — see
-    * [[ScatterMatrixAgg]]. Column-only, like [[minhashSig]]: d is a
-    * constructor parameter. */
+    * [[ScatterMatrixAgg]]. d is a constructor parameter (SQL callers
+    * pass it as a foldable INT). */
   def scatterMatrixAgg(q: Column, d: Int): Column =
     ColumnBridge.column(
       ScatterMatrixAgg(ColumnBridge.expression(q), d).toAggregateExpression())
@@ -1671,9 +1595,9 @@ object VectorFunctions {
 
   /** Register every custom expression into an existing session's
     * function registry (same builders the SparkSessionExtensions
-    * path injects). MinHashSig/PqEncode stay Column-only: their
-    * k/codebook parameters are constructor arguments, not child
-    * expressions, so they have no direct SQL-call shape. */
+    * path injects). PqEncode stays Column-only: its
+    * codebook parameter is a constructor argument, not a child
+    * expression, so it has no direct SQL-call shape. */
   def register(spark: SparkSession): Unit =
     allFunctionInfos.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)

@@ -85,23 +85,13 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), jac.as("jac_exact"))
   }
 
-  /** MinHash signature over string shingles: hash each shingle once,
-    * then the codegen'd MinHashSig expression (graft.functions)
-    * computes all k slots in one primitive loop — slot i = min of
-    * XXH64(a_i ^ xxhash64(shingle)). XOR + rehash instead of
-    * multiply-add because wrapping multiplication trips ANSI-mode
-    * overflow checks (Spark 4 default). */
-  def minhashSignature(sh: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
-    graft.functions.VectorFunctions.minhashSig(transform(sh, t => xxhash64(t)), k)
-
   /** q24 — MinHash + LSH banding near-dup pass (the 100 TB path),
     * FULLY oracle-gated since r12 (closing the rows-only set,
     * VERDICT r11 #3): 32-slot signatures from the affine permutation
     * family — slot j = min((A_j·h + B_j) mod P) over the doc's
     * shingle fingerprints, the q184 replay device — computed by the
     * codegen'd [[graft.functions.AffineMinHashSig]] as ONE fused
-    * k×n primitive loop (the XXH64 [[graft.functions.MinHashSig]]
-    * it replaces had the same loop shape but no SQL twin). 8 bands ×
+    * k×n primitive loop. 8 bands ×
     * 4 rows; docs sharing a band key become candidates via a shuffle
     * on (band, key); candidates verify with exact Jaccard ≥ 0.5 over
     * the DISTINCT fingerprint sets (2·inter ≥ union — pure integer,

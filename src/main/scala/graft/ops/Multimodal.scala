@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.Tables
 
 /** Multimodal-column plumbing: media (image/audio/video) payloads are
@@ -28,31 +27,11 @@ object Multimodal {
               (lit(64) + (col("n_chars") * 7) % 1016).cast("long").as("fake_height"))
       .orderBy(col("doc_id"))
 
-  /** Output schema of the decode stage (primitive fields are
-    * non-nullable — the product encoder guarantees it). */
-  val decodedSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("mean_luma", DoubleType, nullable = false)))
-
   /** Typed decode-stage record (keeps [[decodeImages]] in Tungsten via
-    * the product encoder; field order matches [[decodedSchema]]). */
+    * the product encoder, which makes every field non-nullable). */
   final case class DecodedImage(doc_id: Long, n_bytes: Long, width: Int,
                                 height: Int, mean_luma: Double)
 
-  /** Partition-parallel "decode" over binary payloads: the real
-    * engine shape (mapPartitions over an iterator of rows, batch-
-    * friendly, no driver collect).
-    *
-    * ===== STUB =====
-    * A real deployment would decode image/audio bytes here (e.g. via
-    * a JNI codec); this container has no media libraries, so the
-    * decode is a deterministic fake derived from the payload bytes.
-    * The Spark plumbing (schema, signature, partitioning) is real and
-    * tested.
-    */
   /** Resize planning over decoded image metadata: target dimensions
     * preserving aspect ratio with a max-edge bound — pure column
     * arithmetic over the (width, height) metadata the decode stage
@@ -188,6 +167,17 @@ object Multimodal {
       .orderBy(col("doc_id"))
   }
 
+  /** Partition-parallel "decode" over binary payloads: the real
+    * engine shape (mapPartitions over an iterator of rows, batch-
+    * friendly, no driver collect).
+    *
+    * ===== STUB =====
+    * A real deployment would decode image/audio bytes here (e.g. via
+    * a JNI codec); this container has no media libraries, so the
+    * decode is a deterministic fake derived from the payload bytes.
+    * The Spark plumbing (schema, signature, partitioning) is real and
+    * tested.
+    */
   def decodeImages(df: DataFrame, payloadCol: String, idCol: String): DataFrame = {
     val session = df.sparkSession
     import session.implicits._

@@ -20,10 +20,6 @@ object Sampling {
   def hashBucket16(c: Column): Column =
     conv(substring(md5(c), 32, 1), 16, 10).cast("int")
 
-  /** Deterministic content-hash sample of ~k/16 of the rows. */
-  def hashSample(df: DataFrame, contentCol: String, k16: Int): DataFrame =
-    df.filter(hashBucket16(col(contentCol)) < k16)
-
   /** q56 — stratified sample accounting per source: total vs sampled
     * (2/16 ≈ 12.5% content-hash sample) with the realized rate. One
     * aggregation pass (conditional count), no second scan. */

@@ -52,13 +52,6 @@ object SkewJoin {
       .drop(saltedDim(key)).drop("__salt")
   }
 
-  /** Diagnostic: rows per key on the would-be shuffle, to decide
-    * whether salting (or a broadcast) is warranted. */
-  def keyHistogram(df: DataFrame, key: String, topN: Int = 20): DataFrame =
-    df.groupBy(col(key)).agg(count(lit(1)).as("rows"))
-      .orderBy(col("rows").desc, col(key))
-      .limit(topN)
-
   /** q232 — the salted skew join as a GATED query (VERDICT r11 #2 —
     * [[saltedJoin]] was the one SURVEY §8 capability verified only by
     * spec): lineitem is given a PLANTED hot key — three quarters of

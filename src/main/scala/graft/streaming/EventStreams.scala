@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** A typed event, as the streaming operators see it. */
 case class EventRow(event_id: Long, user_id: Long, ts: Timestamp,
@@ -17,10 +16,6 @@ case class SessionState(start: Timestamp, last: Timestamp, n: Long, total: Doubl
 /** A closed session. */
 case class SessionOut(user_id: Long, t_start: Timestamp, t_end: Timestamp,
                       n_events: Long, total_value: Double)
-
-/** Running lifetime stats per user (mapGroupsWithState output). */
-case class UserStats(user_id: Long, n_events: Long, total_value: Double,
-                     last_seen: Option[Timestamp])
 
 /** Order-independent lifetime stats (integer micros; q175 output). */
 case class UserStatsMicro(user_id: Long, n_events: Long, total_micro: Long,
@@ -54,20 +49,6 @@ case class TypeCounts(counts: Map[Long, Long],
   */
 object EventStreams {
 
-  /** Schema for streaming file sources (streams never infer). */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("user_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** File-source stream over a directory of event parquet/json drops. */
-  def readEventStream(spark: SparkSession, dir: String,
-                      format: String = "parquet"): DataFrame =
-    spark.readStream.schema(eventSchema).format(format).load(dir)
-
   /** Tumbling 1-hour windows per event type with a 1-hour watermark:
     * append-mode compatible (a window only emits once the watermark
     * passes its end — deterministic, late events within the watermark
@@ -97,36 +78,14 @@ object EventStreams {
       .select(col("window.start").as("w_start"), col("event_type"),
               col("n_events"), col("total_value"))
 
-  /** Running per-user lifetime stats via mapGroupsWithState (exactly
-    * one output row per user per batch, Update mode): the
-    * monotonically-accumulating counterpart to the session operator.
-    * State is one fixed-size record per user — bounded by the active
-    * user set. */
-  def userStats(events: Dataset[EventRow]): Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[UserStats, UserStats](GroupStateTimeout.NoTimeout) {
-        (uid, rows, state) =>
-          val prev = state.getOption.getOrElse(UserStats(uid, 0L, 0.0, None))
-          val batch = rows.toSeq
-          val next = UserStats(
-            uid,
-            prev.n_events + batch.size,
-            prev.total_value + batch.map(_.value).sum,
-            (prev.last_seen ++ batch.map(_.ts))
-              .reduceOption((a, b) => if (a.after(b)) a else b))
-          state.update(next)
-          next
-      }
-  }
-
-  /** Integer-micro lifetime stats per user — the oracle-gated twin of
-    * [[userStats]] (q175): value totals accumulate as exact long
-    * micros (`floor(v·10⁶ + 0.5)` per event), so the result is
-    * independent of the order rows reach the group iterator — the
-    * property a cross-engine hash compare needs and double
-    * accumulation can't give. One fixed-size state record per user;
-    * one output row per user per batch (Update mode). */
+  /** Running per-user lifetime stats via mapGroupsWithState (q175):
+    * value totals accumulate as exact long micros
+    * (`floor(v·10⁶ + 0.5)` per event), so the result is independent
+    * of the order rows reach the group iterator — the property a
+    * cross-engine hash compare needs and double accumulation can't
+    * give. One fixed-size state record per user, bounded by the
+    * active user set; one output row per user per batch (Update
+    * mode). */
   def userStatsMicro(events: Dataset[EventRow]): Dataset[UserStatsMicro] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)

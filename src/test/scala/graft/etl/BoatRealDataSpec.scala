@@ -6,15 +6,20 @@ import graft.SparkSpec
   * reference's real 9,888-row CSV must reproduce the reference's own
   * committed summary (output/data_summary.csv) — every country group,
   * exact counts, averages to double precision (tolerance only for
-  * partial-sum reassociation). Skipped gracefully if the reference
-  * checkout is absent. */
+  * partial-sum reassociation). Canceled, naming the missing files,
+  * if the reference checkout is absent. */
 class BoatRealDataSpec extends SparkSpec {
 
   private val realCsv = "/root/reference/data/boat_data.csv"
   private val golden = "/root/reference/output/data_summary.csv"
 
+  private def assumeFiles(paths: String*): Unit = {
+    val missing = paths.filterNot(p => new java.io.File(p).exists)
+    assume(missing.isEmpty, s"reference files missing: ${missing.mkString(", ")}")
+  }
+
   test("pipeline reproduces the reference's committed 51-row summary") {
-    assume(new java.io.File(realCsv).exists && new java.io.File(golden).exists)
+    assumeFiles(realCsv, golden)
 
     val cleaned = BoatPipeline.clean(Parse.load(spark, realCsv))
     assert(cleaned.count() == 9888)
@@ -44,7 +49,7 @@ class BoatRealDataSpec extends SparkSpec {
 
   test("cleaned frame matches the reference's committed parquet row for row") {
     val refParquet = "/root/reference/output/data.parquet/data.parquet"
-    assume(new java.io.File(realCsv).exists && new java.io.File(refParquet).exists)
+    assumeFiles(realCsv, refParquet)
     import org.apache.spark.sql.functions._
 
     // pandas stores missing price_eur as NaN; the engine uses null

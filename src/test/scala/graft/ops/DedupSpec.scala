@@ -39,7 +39,10 @@ class DedupSpec extends SparkSpec {
       (2L, Seq("c d e", "a b c", "b c d")), // same set, different order
       (3L, Seq("x y z"))
     ).toDF("id", "sh")
-    val sigs = df.select($"id", Dedup.minhashSignature($"sh", 16).as("sig"))
+    val fp = transform($"sh", t => graft.functions.VectorFunctions.rollingHash31(t))
+    val sigs = df.select($"id", graft.functions.VectorFunctions
+        .affineMinhashSig(fp, Dedup.MhA.take(16), Dedup.MhB.take(16), Dedup.MhP)
+        .as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) != sigs(3L))

@@ -19,7 +19,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("decodeImages: deterministic fake decode, correct schema") {
     val out = Multimodal.decodeImages(docs, "payload", "doc_id")
-    assert(out.schema == Multimodal.decodedSchema)
+    assert(out.schema ==
+      org.apache.spark.sql.Encoders.product[Multimodal.DecodedImage].schema)
     val rows = out.collect().map(r => r.getLong(0) ->
       (r.getLong(1), r.getInt(2), r.getInt(3), r.getDouble(4))).toMap
     assert(rows(1L)._1 == 4096L)

@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
 class SamplingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("hashSample is layout-independent and deterministic") {
+  test("hashBucket16 sample is layout-independent and deterministic") {
     val docs = graft.Tables.documents(spark, sf0001)
-    val a = Sampling.hashSample(docs, "text", 2)
+    val keep = Sampling.hashBucket16($"text") < 2
+    val a = docs.filter(keep)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val b = Sampling.hashSample(docs.repartition(7), "text", 2)
+    val b = docs.repartition(7).filter(keep)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(a == b, "sample must not depend on partitioning")
     assert(a.nonEmpty && a.size < 500)

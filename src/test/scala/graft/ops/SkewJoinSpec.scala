@@ -28,11 +28,4 @@ class SkewJoinSpec extends SparkSpec {
     val buckets = fact.withColumn("s", salt).select("s").distinct().count()
     assert(buckets >= 6) // ~uniform over 8 buckets
   }
-
-  test("keyHistogram surfaces the hot keys") {
-    val fact = ((1 to 90).map(_ => 7L) ++ (1 to 10).map(i => i.toLong))
-      .toDF("k")
-    val top = SkewJoin.keyHistogram(fact, "k", 1).collect().head
-    assert(top.getLong(0) == 7L && top.getLong(1) == 91L) // 90 hot + the i=7 row
-  }
 }

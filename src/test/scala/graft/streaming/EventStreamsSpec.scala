@@ -241,26 +241,6 @@ class EventStreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("userStats: mapGroupsWithState accumulates across batches") {
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[EventRow]
-    val q = EventStreams.userStats(in.toDS())
-      .writeStream.format("memory").queryName("user_stats")
-      .outputMode(OutputMode.Update).start()
-    try {
-      in.addData(ev(1, 1, "10:00", v = 1.0), ev(2, 1, "10:05", v = 2.0))
-      q.processAllAvailable()
-      in.addData(ev(3, 1, "11:00", v = 4.0))
-      q.processAllAvailable()
-      // Update mode: latest row per user wins
-      val latest = spark.table("user_stats").as[UserStats].collect()
-        .groupBy(_.user_id).map { case (_, v) => v.maxBy(_.n_events) }
-      val u1 = latest.find(_.user_id == 1L).get
-      assert(u1.n_events == 3 && u1.total_value == 7.0)
-      assert(u1.last_seen.contains(ts("11:00")))
-    } finally q.stop()
-  }
-
   test("userStatsMicro: integer totals accumulate across batches") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[EventRow]
@@ -289,8 +269,9 @@ class EventStreamsSpec extends SparkSpec {
         .toDF("event_id", "user_id", "ts", "event_type", "value", "props")
         .write.mode("append").parquet(dir)
     drop((1L, 1L, "10:05", 1.0), (2L, 1L, "10:40", 2.0))
-    val q = EventStreams.tumblingCounts(
-        EventStreams.readEventStream(spark, dir), "1 hour", "1 hour")
+    val stream = spark.readStream.schema("event_id BIGINT, user_id BIGINT, " +
+        "ts TIMESTAMP, event_type STRING, value DOUBLE, props STRING").parquet(dir)
+    val q = EventStreams.tumblingCounts(stream, "1 hour", "1 hour")
       .writeStream.format("memory").queryName("filetumble")
       .outputMode(OutputMode.Append).start()
     try {

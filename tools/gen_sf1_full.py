@@ -2,7 +2,7 @@
 """Generate a FULL sf1 table set (10x sf0.1) for the one-off
 whole-board bench datapoint (VERDICT r11 #6).
 
-Driver-side tooling only (like check.py / gen_sf1.py) — the Scala
+Driver-side tooling only (like check.py) — the Scala
 library never reads this script. Each table mimics the driver
 generator's OBSERVABLE distributions at sf0.1 (inspected via DuckDB,
 not copied): key ranges scale 10x, value domains / category mixes /
@@ -12,8 +12,8 @@ ENGINE's scaling, not a distribution shift. This is a BENCH fixture
 (timings), not a correctness fixture — the oracle gate runs on the
 driver's own parquet at sf0.001/0.01/0.1.
 
-documents draws from the ~50,000-type Zipf(1.07) vocabulary (same
-draw as tools/gen_sf1.py, VERDICT r12 #2): the r12 cut kept the
+documents draws from the ~50,000-type Zipf(1.07) vocabulary (VERDICT
+r12 #2): the r12 cut kept the
 driver's 31-word uniform vocab for comparability, but that vocabulary
 is DEGENERATE for fingerprint operators — every shingle collides, so
 the sf1 growth numbers for q59/q78/q220 measured the fixture's
@@ -142,7 +142,7 @@ def main() -> None:
         "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)]),
     }))
 
-    # documents: Zipf(1.07) over 50k types (same draw as gen_sf1.py),
+    # documents: Zipf(1.07) over 50k types,
     # U(8,100) words, 20 sources, 5 langs, 5% appended-dup
     vocab_types = 50000
     vocab = [f"w{i}" for i in range(1, vocab_types + 1)]
