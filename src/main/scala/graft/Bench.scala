@@ -12,28 +12,19 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
-    // Optional subset filter for local iteration:
-    //   SPARK_GRAFT_BENCH_ONLY=q51,q57 times just those queries.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // exclusion twin of the ONLY filter (mirrors Verify's
-    // SPARK_GRAFT_SKIP): for fixtures where a query's OUTPUT is
-    // adjudicated infeasible (q59 on a Zipf corpus emits ~1.6e8
-    // pairs — SCALE.md round 13)
-    val skip = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        only.forall(o => o.exists(name.startsWith)) &&
-          !skip.exists(name.startsWith) }
+    // Optional subset filters for local iteration, by name prefix:
+    //   SPARK_GRAFT_BENCH_ONLY=q51,q57 times just those queries;
+    //   SPARK_GRAFT_BENCH_SKIP=q59 drops queries whose OUTPUT is
+    //   adjudicated infeasible on a fixture (q59 on a Zipf corpus
+    //   emits ~1.6e8 pairs — SCALE.md round 13).
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"),
+                                     sys.env.get("SPARK_GRAFT_BENCH_SKIP")).sortBy(_.name)
     // Batch queries are warmed AND timed before any streaming query
     // runs: a started streaming query leaves state-store maintenance
     // threads and state memory in the JVM, which is cross-talk the
     // batch timings must not absorb (VERDICT r2 #2 — the suspected
     // mechanism behind the driver-side r2 drift).
-    val (streamingQs, batchQs) =
-      selected.partition(q => SparkEntry.streamingQueries(q._1))
+    val (streamingQs, batchQs) = selected.partition(_.streaming)
     // min of N runs per query: steady-state timing, robust to GC /
     // scheduler noise in a 32-thread local JVM. A query that throws
     // reports -1 (sentinel) and its error — never the fast-failure
@@ -140,14 +131,13 @@ object Bench {
     // failure must stay visible — silently publishing it as cleanly
     // measured hides flaky queries from the board (ADVICE r9)
     val retriedErrors = scala.collection.mutable.LinkedHashMap[String, String]()
-    def timeGroup(group: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-                  groupRuns: Int)
+    def timeGroup(group: Seq[Query], groupRuns: Int)
         : Seq[(String, Double, Double, Option[String])] = {
       // JVM/Spark warmup outside the timed region (codegen compilation,
       // parquet footer reads, first-shuffle setup) so timings reflect
       // steady-state execution, not session bring-up.
-      group.foreach { case (_, fn) =>
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      group.foreach { q =>
+        try q.build(spark, sfDir).write.mode("overwrite").format("noop").save()
         catch { case _: Throwable => }
         // several operators persist an intra-query scan (q24's shingle
         // table, q35's corpus) that the CacheManager keeps alive after
@@ -156,7 +146,7 @@ object Bench {
         // r2 bench drift). Isolate: every query starts cache-cold.
         spark.catalog.clearCache()
       }
-      group.map { case (name, fn) =>
+      group.map { case Query(name, fn, _, _) =>
         var err: Option[String] = None
         System.gc()
         val gc0 = gcMillis()

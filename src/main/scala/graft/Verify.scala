@@ -10,20 +10,13 @@ object Verify {
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    // local-iteration filters: SPARK_GRAFT_ONLY=q73,q74 limits the
-    // dump; SPARK_GRAFT_SKIP=q59 excludes queries whose OUTPUT is
-    // adjudicated infeasible on a given fixture (e.g. q59's pair set
-    // is output-quadratic on a Zipf corpus — SCALE.md round 13).
-    // The driver sets neither → full run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(f => f.exists(name.startsWith)) &&
-        !skip.exists(name.startsWith) }
-    selected.foreach { case (name, fn) =>
+    // local-iteration filters, by name prefix: SPARK_GRAFT_ONLY=q73,q74
+    // limits the dump; SPARK_GRAFT_SKIP=q59 excludes queries whose
+    // OUTPUT is adjudicated infeasible on a given fixture (e.g. q59's
+    // pair set is output-quadratic on a Zipf corpus — SCALE.md round
+    // 13). Neither set → full run.
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"), sys.env.get("SPARK_GRAFT_SKIP"))
+    selected.foreach { case Query(name, fn, _, _) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -36,7 +29,7 @@ object Verify {
       spark.catalog.clearCache()
     }
     def q(s: String): String = JsonUtil.esc(s)
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(selected.keySet))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(selected.map(_.name).toSet))
     // failed queries, as machine-readable evidence (ADVICE r1: never
     // swallow — a missing result parquet alone is ambiguous)
     val errJson = failures

@@ -39,6 +39,9 @@ object Dedup {
               floor(col("n_chars") / 64).as("bucket"),
               TextOps.shingleHashes(col("toks")).as("sh"))
 
+  /** Most documents one block of the q23, q60, q78 and q138 pair scans holds. */
+  private val MaxBlock = 1024
+
   /** q23 — top-20 most similar doc pairs by exact shingle Jaccard,
     * within (source, length-bucket) blocks. The ORDER uses the exact
     * rational similarity (intsize/intsize — bit-identical across
@@ -54,9 +57,8 @@ object Dedup {
     * the DuckDB oracle replays it exactly at every scale factor. At
     * the bench SFs no block reaches the default bound, so the exact
     * top-20 is unchanged while the guarantee holds structurally. */
-  def q23JaccardTopPairs(s: SparkSession, dir: String,
-                         maxBlock: Int = 1024): DataFrame =
-    boundedJaccardPairs(blockedShingles(s, dir), maxBlock)
+  def q23JaccardTopPairs(s: SparkSession, dir: String): DataFrame =
+    boundedJaccardPairs(blockedShingles(s, dir), MaxBlock)
       .orderBy(col("jac_exact").desc, col("doc_a"), col("doc_b"))
       .limit(20)
       .select(col("doc_a"), col("doc_b"), round(col("jac_exact"), 6).as("jaccard"))
@@ -85,6 +87,9 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), jac.as("jac_exact"))
   }
 
+  private val Q24Bands = 8
+  private val Q24Rows = 4
+
   /** q24 — MinHash + LSH banding near-dup pass (the 100 TB path),
     * FULLY oracle-gated since r12 (closing the rows-only set,
     * VERDICT r11 #3): 32-slot signatures from the affine permutation
@@ -107,9 +112,7 @@ object Dedup {
     * longs per row); fingerprint sets joined back ONLY for the
     * candidate pairs, so the quadratic step touches no text. */
   def q24MinHashLsh(s: SparkSession, dir: String): DataFrame = {
-    val bands = 8
-    val rows = 4
-    val k = bands * rows
+    val k = Q24Bands * Q24Rows
     require(MhA.length >= k && MhB.length >= k)
     // persist: docSh feeds the signature pass AND both candidate
     // join-backs — without the cache the scan→tokenize→shingle work
@@ -130,9 +133,9 @@ object Dedup {
         .affineMinhashSig(col("sh"), MhA.take(k), MhB.take(k), MhP).as("sig"))
     // band key folded (·31 + slot) like q184 — slots < P ≈ 1e9 keep
     // the 4-row fold < 3.1e13, far inside a long
-    val bandCols = (0 until bands).map(b =>
+    val bandCols = (0 until Q24Bands).map(b =>
       struct(lit(b).as("band"),
-             (0 until rows).map(r => element_at(col("sig"), b * rows + r + 1))
+             (0 until Q24Rows).map(r => element_at(col("sig"), b * Q24Rows + r + 1))
                .reduce((acc, v) => acc * lit(31L) + v).as("key")))
     val banded = sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band"), col("bk.key"))
@@ -160,13 +163,13 @@ object Dedup {
     * production pass: identical shingle fingerprints, 32 affine
     * slots, 8×4 band keys, candidates, and the 2·inter ≥ union
     * verify, collapsed to the same one-row summary. */
-  def q24OracleSql(bands: Int = 8, rows: Int = 4): String = {
-    val k = bands * rows
+  def q24OracleSql: String = {
+    val k = Q24Bands * Q24Rows
     val params = (0 until k)
       .map(j => s"(${j}, ${MhA(j)}, ${MhB(j)})").mkString(", ")
-    val bList = (0 until bands).mkString("[", ",", "]")
-    val bkeyFold = (2 to rows).foldLeft(s"sl[$rows*b + 1]")(
-      (acc, r) => s"($acc * 31 + sl[$rows*b + $r])")
+    val bList = (0 until Q24Bands).mkString("[", ",", "]")
+    val bkeyFold = (2 to Q24Rows).foldLeft(s"sl[$Q24Rows*b + 1]")(
+      (acc, r) => s"($acc * 31 + sl[$Q24Rows*b + $r])")
     s"""WITH td AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        sh0 AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3 THEN
            list_transform(generate_series(1, len(toks) - 2),
@@ -344,7 +347,7 @@ object Dedup {
         min(col("doc_id")).over(Window.partitionBy(md5(col("text")))))
     val exactEdges = withMin.filter(col("doc_id") =!= col("min_id"))
       .select(col("min_id").as("doc_a"), col("doc_id").as("doc_b"))
-    val jacEdges = boundedJaccardPairs(blockedShingles(s, dir), 1024)
+    val jacEdges = boundedJaccardPairs(blockedShingles(s, dir), MaxBlock)
       .filter(col("jac_exact") >= 0.5)
       .select(col("doc_a"), col("doc_b"))
     val comp = connectedComponents(exactEdges.unionByName(jacEdges))
@@ -401,6 +404,8 @@ object Dedup {
        FROM hv, unnest(generate_series(0, 59)) AS t(b)
        GROUP BY doc_id ORDER BY doc_id"""
 
+  private val Q59MaxDist = 3
+
   /** q59 — SimHash near-dup PAIRS via pigeonhole chunk banding: two
     * 64-bit fingerprints within hamming distance k<4 must agree on at
     * least one of 4 disjoint 16-bit chunks, so candidates come from a
@@ -441,7 +446,7 @@ object Dedup {
     * degenerate-regime adjudication into a runtime guarantee: a user
     * pointing q59 at Zipfian text gets a diagnosis, not a
     * 1.77e9-candidate join. */
-  def q59SimHashPairs(s: SparkSession, dir: String, maxDist: Int = 3,
+  def q59SimHashPairs(s: SparkSession, dir: String, maxDist: Int = Q59MaxDist,
                       maxCandidates: Long = -1L): DataFrame = {
     // completeness bound, same argument as q185's 15-bit chunks
     require(maxDist <= 3,
@@ -481,9 +486,7 @@ object Dedup {
   /** DuckDB oracle for q59 — the q25 fingerprints joined ALL-PAIRS
     * on hamming ≤ maxDist (equal to the Spark side's banded join by
     * the pigeonhole completeness argument). */
-  def q59OracleSql(maxDist: Int = 3): String = {
-    require(maxDist <= 3,
-      s"q59 chunk banding is complete only for maxDist <= 3, got $maxDist")
+  def q59OracleSql: String = {
     s"""WITH t0 AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        hv AS (SELECT doc_id, list_transform(toks, t ->
            list_reduce(list_prepend(0, list_transform(string_split(t, ''),
@@ -501,7 +504,7 @@ object Dedup {
        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          bit_count(xor(a.fp, b.fp))::BIGINT AS hamming
        FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       WHERE bit_count(xor(a.fp, b.fp)) <= $maxDist
+       WHERE bit_count(xor(a.fp, b.fp)) <= $Q59MaxDist
        ORDER BY doc_a, doc_b"""
   }
 
@@ -530,6 +533,11 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
+  /** Shingle length and shared-shingle count at which q70, q168 and
+    * q228 flag a document as contaminated. */
+  private val DecontamN = 5
+  private val DecontamThreshold = 3
+
   /** q70 — benchmark decontamination: flag training docs that share
     * word 5-grams with a held-out evaluation set, the standard
     * pre-training hygiene pass (eval answers leaking into the corpus
@@ -549,12 +557,11 @@ object Dedup {
     * harness drops the cache after the query. At real scale the
     * benchmark side would come from its own table and the corpus
     * branch would stay a single streamed pass. */
-  def q70Decontaminate(s: SparkSession, dir: String,
-                       n: Int = 5, threshold: Int = 3): DataFrame = {
+  def q70Decontaminate(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"),
               Sampling.hashBucket16(col("text")).as("nib"),
-              TextOps.shingles(TextOps.tokens(col("text")), n).as("grams"))
+              TextOps.shingles(TextOps.tokens(col("text")), DecontamN).as("grams"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val benchGrams = docs.filter(col("nib") === 0)
       .select(explode(col("grams")).as("gram")).distinct()
@@ -570,10 +577,12 @@ object Dedup {
       .join(overlap, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
               coalesce(col("shared"), lit(0L)).as("n_shared"),
-              (coalesce(col("shared"), lit(0L)) >= threshold)
+              (coalesce(col("shared"), lit(0L)) >= DecontamThreshold)
                 .cast("long").as("contaminated"))
       .orderBy(col("doc_id"))
   }
+
+  private val Q168Bits = 1L << 20
 
   /** q168 — BLOOM-FILTER decontamination: [[q70Decontaminate]]'s
     * 100 TB twin. The exact broadcast-join probe ships the benchmark
@@ -597,18 +606,16 @@ object Dedup {
     * The built filter is collected to the driver and re-shipped as a
     * literal — one bounded binary scalar (numBits/8 ≈ 128 KB), the
     * same driver round-trip every broadcast runtime filter makes. */
-  def q168BloomDecontaminate(s: SparkSession, dir: String,
-                             n: Int = 5, threshold: Int = 3,
-                             numBits: Long = 1L << 20): DataFrame = {
+  def q168BloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.{bloomAgg, bloomCountContains}
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"),
               Sampling.hashBucket16(col("text")).as("nib"),
-              TextOps.shingles(TextOps.tokens(col("text")), n).as("grams"))
+              TextOps.shingles(TextOps.tokens(col("text")), DecontamN).as("grams"))
     val bloomBytes = docs.filter(col("nib") === 0)
       .select(explode(col("grams")).as("gram"))
       .select(xxhash64(col("gram")).as("h")).distinct()
-      .agg(bloomAgg(col("h"), numBits / 16, numBits).as("bf"))
+      .agg(bloomAgg(col("h"), Q168Bits / 16, Q168Bits).as("bf"))
       .first().getAs[Array[Byte]]("bf")
     // Probe is ONE codegen'd map pass: BloomCountContains hashes each
     // gram and tests the (plan-constant, deserialized-once) filter in
@@ -622,7 +629,7 @@ object Dedup {
               bloomCountContains(col("grams"), lit(bloomBytes))
                 .as("n_maybe_shared"))
       .select(col("doc_id"), col("n_grams"), col("n_maybe_shared"),
-              (col("n_maybe_shared") >= threshold).cast("long").as("flagged"))
+              (col("n_maybe_shared") >= DecontamThreshold).cast("long").as("flagged"))
       .orderBy(col("doc_id"))
   }
 
@@ -649,15 +656,14 @@ object Dedup {
     * no join against the gram set) into a per-doc count aggregate;
     * the exact-audit branch reuses q70's broadcast probe. At 100 TB
     * drop the audit branch and the corpus never joins anything. */
-  def q228BloomReplay(s: SparkSession, dir: String,
-                      n: Int = 5, threshold: Int = 3): DataFrame = {
+  def q228BloomReplay(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.rollingHash31
     val mBits = 1L << 20
     val kH = 4
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"),
               Sampling.hashBucket16(col("text")).as("nib"),
-              TextOps.shingles(TextOps.tokens(col("text")), n).as("grams"))
+              TextOps.shingles(TextOps.tokens(col("text")), DecontamN).as("grams"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val benchGrams = docs.filter(col("nib") === 0)
       .select(explode(col("grams")).as("gram")).distinct()
@@ -707,7 +713,7 @@ object Dedup {
               coalesce(col("n_maybe"), lit(0L)).as("n_maybe_shared"),
               (coalesce(col("n_maybe"), lit(0L)) -
                coalesce(col("shared"), lit(0L))).as("fp_grams"),
-              (coalesce(col("n_maybe"), lit(0L)) >= threshold)
+              (coalesce(col("n_maybe"), lit(0L)) >= DecontamThreshold)
                 .cast("long").as("flagged"))
       .orderBy(col("doc_id"))
   }
@@ -715,16 +721,16 @@ object Dedup {
   /** DuckDB oracle for q228 — identical rolling gram hashes, affine
     * probe positions, bit_or word build, bit tests, and exact-audit
     * counts. */
-  def q228OracleSql(n: Int = 5, threshold: Int = 3): String = {
+  def q228OracleSql: String = {
     val kH = 4
     val params = (0 until kH)
       .map(j => s"(${MhA(j)}, ${MhB(j)})").mkString(", ")
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks,
            ('0x' || substr(md5(text), 32, 1))::BIGINT AS nib
            FROM documents),
-       g AS (SELECT doc_id, nib, CASE WHEN len(toks) >= $n THEN
-           list_distinct(list_transform(generate_series(1, len(toks) - ${n - 1}),
-             i -> array_to_string(toks[i:i+${n - 1}], ' ')))
+       g AS (SELECT doc_id, nib, CASE WHEN len(toks) >= $DecontamN THEN
+           list_distinct(list_transform(generate_series(1, len(toks) - ${DecontamN - 1}),
+             i -> array_to_string(toks[i:i+${DecontamN - 1}], ' ')))
          ELSE [] END AS grams FROM t),
        bg AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE nib = 0),
        prm(a, b) AS (VALUES $params),
@@ -763,11 +769,13 @@ object Dedup {
          coalesce(nm.n_maybe, 0)::BIGINT AS n_maybe_shared,
          (coalesce(nm.n_maybe, 0) - coalesce(ov.shared, 0))::BIGINT
            AS fp_grams,
-         (coalesce(nm.n_maybe, 0) >= $threshold)::BIGINT AS flagged
+         (coalesce(nm.n_maybe, 0) >= $DecontamThreshold)::BIGINT AS flagged
        FROM g LEFT JOIN nm ON g.doc_id = nm.doc_id
        LEFT JOIN ov ON g.doc_id = ov.doc_id
        WHERE g.nib <> 0 ORDER BY g.doc_id"""
   }
+
+  private val Q74N = 3
 
   /** q74 — duplicate n-gram coverage (the Gopher "fraction of the
     * document made of repeated n-grams" signal): for each doc, the
@@ -786,8 +794,7 @@ object Dedup {
     * gram — AQE plans it without a broadcast dependency on corpus
     * size). No all-pairs stage anywhere; at 100 TB the gram-total
     * aggregate is the canonical word-count shape. */
-  def q74DupNgramCoverage(s: SparkSession, dir: String,
-                          n: Int = 3): DataFrame = {
+  def q74DupNgramCoverage(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     // persist: the (doc, gram) counts feed BOTH the corpus-wide gram
     // totals and the join back — without the cache the scan→tokenize→
@@ -797,7 +804,7 @@ object Dedup {
     val perDocGram = docs
       .select(col("doc_id"),
               TextOps.shinglePositions(
-                TextOps.tokens(col("text")), n).as("grams"))
+                TextOps.tokens(col("text")), Q74N).as("grams"))
       .select(col("doc_id"), explode(col("grams")).as("gram"))
       .groupBy(col("doc_id"), col("gram"))
       .agg(count(lit(1)).as("c"))
@@ -835,6 +842,8 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
+  private val Q78MaxDist = 16
+
   /** q78 — blocked, THRESHOLDED edit-distance near-dup: doc pairs
     * whose Levenshtein distance over the first 128 characters is
     * ≤ 16, within the same (source × length-bucket × sub-split)
@@ -857,9 +866,7 @@ object Dedup {
     * classic compute-bound-not-byte-bound stage where bytes are the
     * wrong load metric. Then a global top-20 (TakeOrdered, no full
     * sort). */
-  def q78EditDistancePairs(s: SparkSession, dir: String,
-                           maxBlock: Int = 1024,
-                           maxDist: Int = 16): DataFrame = {
+  def q78EditDistancePairs(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
@@ -868,11 +875,11 @@ object Dedup {
       .withColumn("cnt",
         count(lit(1)).over(Window.partitionBy(col("source"), col("bucket"))))
       .withColumn("sub",
-        pmod(col("doc_id"), ceil(col("cnt") / lit(maxBlock.toDouble))))
+        pmod(col("doc_id"), ceil(col("cnt") / lit(MaxBlock.toDouble))))
       .select(col("doc_id"), col("source"), col("bucket"), col("sub"), col("pfx"))
     val a = d.toDF("doc_a", "source_a", "bucket_a", "sub_a", "pfx_a")
     val b = d.toDF("doc_b", "source_b", "bucket_b", "sub_b", "pfx_b")
-    val lev = levenshtein(col("pfx_a"), col("pfx_b"), maxDist)
+    val lev = levenshtein(col("pfx_a"), col("pfx_b"), Q78MaxDist)
     a.join(b, col("source_a") === col("source_b") &&
               col("bucket_a") === col("bucket_b") &&
               col("sub_a") === col("sub_b") &&
@@ -898,6 +905,8 @@ object Dedup {
       .filter(col("sim_micro") >= 0)
   }
 
+  private val Q88SegLen = 16
+
   /** q88 — segment-level exact dedup with reassembly (the C4/RefinedWeb
     * "remove repeated passages, keep the rest of the document" shape,
     * at sub-document granularity): each doc is cut into consecutive
@@ -916,7 +925,7 @@ object Dedup {
     * quadratic, no windows over the full corpus; at 100 TB the segment
     * table is the word-count shape and the heaviest key (a boilerplate
     * segment repeated millions of times) still reduces map-side. */
-  def q88SegmentDedup(s: SparkSession, dir: String, segLen: Int = 16): DataFrame = {
+  def q88SegmentDedup(s: SparkSession, dir: String, segLen: Int = Q88SegLen): DataFrame = {
     val docs = Tables.documents(s, dir)
     val segs = docs
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
@@ -961,6 +970,9 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
+  private val Q91DfCap = 20
+  private val Q91TopK = 20
+
   /** q91 — sparse-cosine near-dup pairs driven through an inverted
     * index (the scale path for feature-weighted similarity): each doc
     * is a binary vector over its distinct 3-gram shingles, but only
@@ -981,7 +993,7 @@ object Dedup {
     * broadcast into the score, and the final top-k is a TakeOrdered,
     * no global sort. */
   def q91SparseCosinePairs(s: SparkSession, dir: String,
-                           dfCap: Int = 20, k: Int = 20): DataFrame = {
+                           dfCap: Int = Q91DfCap, k: Int = Q91TopK): DataFrame = {
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"),
               explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("gram"))
@@ -1034,6 +1046,9 @@ object Dedup {
       .limit(k)
   }
 
+  /** Leading tokens that fingerprint a document in q95 and q107. */
+  private val PrefixTokens = 8
+
   /** q95 — cross-source duplication matrix (corpus-governance report):
     * for every pair of sources, how many shared PREFIX fingerprints
     * (md5 of the first 8 tokens — the coarse head-dedup key crawls
@@ -1048,11 +1063,10 @@ object Dedup {
     * collapsed fingerprint table (tiny vs the corpus), keyed by
     * fingerprint. Per-fingerprint fan-out is (#sources sharing it)²,
     * bounded by the source count, not the corpus. */
-  def q95CrossSourceDups(s: SparkSession, dir: String,
-                         prefixTokens: Int = 8): DataFrame = {
+  def q95CrossSourceDups(s: SparkSession, dir: String): DataFrame = {
     val g = Tables.documents(s, dir)
       .select(md5(concat_ws(" ",
-                slice(TextOps.tokens(col("text")), 1, prefixTokens))).as("fp"),
+                slice(TextOps.tokens(col("text")), 1, PrefixTokens))).as("fp"),
               col("source"))
       .groupBy(col("fp"), col("source")).agg(count(lit(1)).as("cnt"))
     val a = g.toDF("fp", "source_a", "cnt_a")
@@ -1119,14 +1133,13 @@ object Dedup {
     *
     * Scale shape: inherits q23's bounded blocks (≤ maxBlock pairs
     * per sub-block); the rollup is 11 buckets. */
-  def q138SimilarityHistogram(s: SparkSession, dir: String,
-                              maxBlock: Int = 1024): DataFrame = {
+  def q138SimilarityHistogram(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = blockedShingles(s, dir)
       .withColumn("cnt",
         count(lit(1)).over(Window.partitionBy(col("source"), col("bucket"))))
       .withColumn("sub",
-        pmod(col("doc_id"), ceil(col("cnt") / lit(maxBlock.toDouble))))
+        pmod(col("doc_id"), ceil(col("cnt") / lit(MaxBlock.toDouble))))
       .select(col("doc_id"), col("source"), col("bucket"), col("sub"), col("sh"))
     val a = d.toDF("doc_a", "source_a", "bucket_a", "sub_a", "sh_a")
     val b = d.toDF("doc_b", "source_b", "bucket_b", "sub_b", "sh_b")
@@ -1246,13 +1259,12 @@ object Dedup {
     * frames persist as bucketed tables and the daily screen becomes
     * a co-located join — cf. the bucketing lever measured in
     * SCALE.md's layout bullet (commit d2071d8). */
-  def q107IncrementalDedup(s: SparkSession, dir: String,
-                           prefixTokens: Int = 8): DataFrame = {
+  def q107IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     def fps(df: org.apache.spark.sql.DataFrame) =
       df.select(col("doc_id"), md5(col("text")).as("fp_exact"),
                 md5(concat_ws(" ",
-                  slice(TextOps.tokens(col("text")), 1, prefixTokens)))
+                  slice(TextOps.tokens(col("text")), 1, PrefixTokens)))
                   .as("fp_prefix"))
     val existing = fps(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0))
     val incoming = fps(docs.filter(pmod(col("doc_id"), lit(5)) === 0))
@@ -1269,6 +1281,9 @@ object Dedup {
                 .otherwise("new").as("status"))
       .orderBy(col("doc_id"))
   }
+
+  private val Q144Window = 3
+  private val Q144MinMicro = 200000L
 
   /** q144 — sorted-neighborhood near-dup pass (Hernández–Stolfo): sort
     * the corpus by a cheap surrogate key (the first 24 characters),
@@ -1288,8 +1303,7 @@ object Dedup {
     * arrays cross the wire exactly twice, hash-partitioned, never
     * sorted. The similarity is exact shingle-hash Jaccard as an
     * integer rational (inter·1e6 div union) — bit-stable. */
-  def q144SortedNeighborhood(s: SparkSession, dir: String,
-                             w: Int = 3, minMicro: Long = 200000L): DataFrame = {
+  def q144SortedNeighborhood(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
               substring(col("text"), 1, 24).as("sortkey"),
@@ -1303,7 +1317,7 @@ object Dedup {
       .select(col("source"), col("doc_id"), col("rn"))
     val a = withRn
       .select(col("source"), col("doc_id").as("doc_a"),
-              explode(array((1 to w).map(i => col("rn") + lit(i.toLong)): _*))
+              explode(array((1 to Q144Window).map(i => col("rn") + lit(i.toLong)): _*))
                 .as("rn_b"))
     val b = withRn
       .select(col("source"), col("doc_id").as("doc_b"),
@@ -1321,7 +1335,7 @@ object Dedup {
       .filter(col("ma") + col("mb") > col("i")) // union > 0
       .select(col("doc_a"), col("doc_b"),
               expr("(i * 1000000L) div (ma + mb - i)").as("sim_micro"))
-      .filter(col("sim_micro") >= minMicro)
+      .filter(col("sim_micro") >= Q144MinMicro)
     pairs
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
               greatest(col("doc_a"), col("doc_b")).as("doc_b"),
@@ -1329,6 +1343,8 @@ object Dedup {
       .orderBy(col("sim_micro").desc, col("doc_a"), col("doc_b"))
       .limit(20)
   }
+
+  private val Q145TMicro = 500000L
 
   /** q145 — prefix-filtered EXACT Jaccard similarity join (the
     * AllPairs/PPJoin family, Bayardo et al. WWW'07 / Xiao et al.
@@ -1356,7 +1372,7 @@ object Dedup {
     * shuffles). Pair count is output-sized + false candidates, which
     * the rarest-first prefix keeps near-linear on real corpora. */
   def q145PrefixJaccard(s: SparkSession, dir: String,
-                        tMicro: Long = 500000L): DataFrame = {
+                        tMicro: Long = Q145TMicro): DataFrame = {
     val (docs, cands) = q145Parts(s, dir, tMicro)
     // Verification WITHOUT array payloads crossing an exchange (the
     // r7 shape joined the full shingle arrays onto every candidate
@@ -1525,6 +1541,10 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
+  /** Span length, in tokens, of q176 and q178. */
+  private val SpanN = 8
+  private val Q176TopK = 20
+
   /** q176 — duplicated-SPAN extraction: the top-k n-token windows
     * that appear in two or more documents, with their occurrence and
     * document counts and the smallest containing doc — the actionable
@@ -1540,12 +1560,11 @@ object Dedup {
     * only corpus-sized exchange carries those collapsed pairs — then
     * a span-keyed rollup (no Expand: the distinct-doc count is the
     * second-level count(*)) into a TakeOrderedAndProject. */
-  def q176DupSpans(s: SparkSession, dir: String,
-                   n: Int = 8, k: Int = 20): DataFrame = {
+  def q176DupSpans(s: SparkSession, dir: String): DataFrame = {
     val perDoc = Tables.documents(s, dir)
       .select(col("doc_id"),
               explode(TextOps.shinglePositions(
-                TextOps.tokens(col("text")), n)).as("span"))
+                TextOps.tokens(col("text")), SpanN)).as("span"))
       .groupBy(col("span"), col("doc_id"))
       .agg(count(lit(1)).as("c"))
     perDoc.groupBy(col("span"))
@@ -1554,7 +1573,7 @@ object Dedup {
            min(col("doc_id")).as("first_doc"))
       .filter(col("n_docs") >= 2)
       .orderBy(col("n_occurrences").desc, col("span"))
-      .limit(k)
+      .limit(Q176TopK)
   }
 
   /** q178 — MAXIMAL duplicated-span reconstruction: the downstream
@@ -1575,12 +1594,12 @@ object Dedup {
     * (pos − row_number) then runs per-doc over DUPLICATED positions
     * only — output-sized, and a 100 TB corpus with little boilerplate
     * pays almost nothing for it. */
-  def q178MaxSpans(s: SparkSession, dir: String, n: Int = 8): DataFrame = {
+  def q178MaxSpans(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wins = Tables.documents(s, dir)
       .select(col("doc_id"),
               posexplode(TextOps.shinglePositions(
-                TextOps.tokens(col("text")), n)).as(Seq("p0", "span")))
+                TextOps.tokens(col("text")), SpanN)).as(Seq("p0", "span")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"),
               md5(col("span")).as("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1596,7 +1615,7 @@ object Dedup {
       .agg(min(col("pos")).cast("long").as("start_pos"),
            max(col("pos")).cast("long").as("end_pos"),
            count(lit(1)).cast("long").as("n_windows"),
-           (max(col("pos")) - min(col("pos")) + lit(n)).cast("long")
+           (max(col("pos")) - min(col("pos")) + lit(SpanN)).cast("long")
              .as("span_tokens"))
       .select(col("doc_id"), col("start_pos"), col("end_pos"),
               col("n_windows"), col("span_tokens"))
@@ -1678,6 +1697,10 @@ object Dedup {
     (docs, cands)
   }
 
+  /** LSH banding of q184, q223 and q233. */
+  private val MinhashBands = 4
+  private val MinhashRows = 4
+
   /** q184 — MinHash + LSH, FULLY oracle-gated (the q179 move applied
     * to the dedup family's estimator): q24's MinHash is rows-only
     * because its XXH64 signatures can't be replayed in SQL — this
@@ -1696,10 +1719,9 @@ object Dedup {
     * population is near-dup-group-sized by construction (the LSH
     * guarantee); the exact-Jaccard verify joins shingle arrays for
     * CANDIDATE pairs only — the all-pairs stage never exists. */
-  def q184MinhashJaccard(s: SparkSession, dir: String,
-                         bands: Int = 4, rows: Int = 4): DataFrame = {
-    val k = bands * rows
-    val (docs, cands) = minhashDocsAndCands(s, dir, bands, rows)
+  def q184MinhashJaccard(s: SparkSession, dir: String): DataFrame = {
+    val k = MinhashBands * MinhashRows
+    val (docs, cands) = minhashDocsAndCands(s, dir, MinhashBands, MinhashRows)
     val a = docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
                         col("sig").as("sig_a"))
     val b = docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"),
@@ -1718,6 +1740,9 @@ object Dedup {
       .filter(col("est_micro") >= 500000L)
       .orderBy(col("doc_a"), col("doc_b"))
   }
+
+  /** SimHash Hamming radius of q185 and q223; q185 bands completely only up to 3. */
+  private val SimhashMaxHamming = 3
 
   /** q185 — SimHash near-dup pairs, FULLY oracle-gated: completes
     * the replayable-sketch trilogy (q179 CMS, q184 MinHash). q25's
@@ -1738,7 +1763,7 @@ object Dedup {
     * population = near-identical groups); the verify compares two
     * longs per candidate. */
   def q185SimhashPairs(s: SparkSession, dir: String,
-                       maxHamming: Int = 3): DataFrame = {
+                       maxHamming: Int = SimhashMaxHamming): DataFrame = {
     // the 4×15-bit chunk banding below is pigeonhole-COMPLETE only
     // for hamming ≤ 3 (4 chunks, so ≤3 flipped bits leave one chunk
     // untouched); a larger maxHamming would silently under-report
@@ -1784,9 +1809,7 @@ object Dedup {
     * identical ≥0-tie majority vote over 60 lanes (lanes 60-63 vote
     * all-negative for any non-empty doc, so both engines leave them
     * clear), the identical chunk banding and hamming verify. */
-  def q185OracleSql(maxHamming: Int = 3): String = {
-    require(maxHamming <= 3,
-      s"q185 chunk banding is complete only for maxHamming <= 3, got $maxHamming")
+  def q185OracleSql: String = {
     s"""WITH t0 AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        sh0 AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3 THEN
            list_transform(generate_series(1, len(toks) - 2),
@@ -1816,23 +1839,23 @@ object Dedup {
        FROM cand c
        JOIN fp fa ON fa.doc_id = c.doc_a
        JOIN fp fb ON fb.doc_id = c.doc_b
-       WHERE bit_count(xor(fa.fp, fb.fp)) <= $maxHamming
+       WHERE bit_count(xor(fa.fp, fb.fp)) <= $SimhashMaxHamming
        ORDER BY c.doc_a, c.doc_b"""
   }
 
   /** DuckDB oracle for q184 — identical shingles, base-31
     * fingerprints, affine permutations, band keys, candidates and
     * Jaccards, replayed with list functions. */
-  def q184OracleSql(bands: Int = 4, rows: Int = 4): String = {
-    val k = bands * rows
+  def q184OracleSql: String = {
+    val k = MinhashBands * MinhashRows
     val params = (0 until k)
       .map(j => s"(${j}, ${MhA(j)}, ${MhB(j)})").mkString(", ")
-    val bList = (0 until bands).mkString("[", ",", "]")
-    // band key folded from the rows parameter exactly as the Scala
-    // side folds it (left fold, *31 + next) — a hardcoded rows=4
-    // index list would silently diverge for any other rows (ADVICE r8)
-    val bkeyFold = (2 to rows).foldLeft(s"sl[$rows*b + 1]")(
-      (acc, r) => s"($acc * 31 + sl[$rows*b + $r])")
+    val bList = (0 until MinhashBands).mkString("[", ",", "]")
+    // band key folded from MinhashRows exactly as the Scala side
+    // folds it (left fold, *31 + next) — a hardcoded index list would
+    // silently diverge for any other row count (ADVICE r8)
+    val bkeyFold = (2 to MinhashRows).foldLeft(s"sl[$MinhashRows*b + 1]")(
+      (acc, r) => s"($acc * 31 + sl[$MinhashRows*b + $r])")
     s"""WITH td AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        sh0 AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3 THEN
            list_transform(generate_series(1, len(toks) - 2),
@@ -1894,15 +1917,14 @@ object Dedup {
     * a corpus×corpus self-join, never a cartesian (plan-pinned).
     * The exact-Jaccard verify touches candidate pairs only; the
     * best-match window runs on the candidate frame, not the corpus. */
-  def q233IngestDedup(s: SparkSession, dir: String,
-                      bands: Int = 4, rows: Int = 4): DataFrame = {
+  def q233IngestDedup(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = minhashDocFrame(Tables.documents(s, dir), bands * rows)
+    val docs = minhashDocFrame(Tables.documents(s, dir), MinhashBands * MinhashRows)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val corpus = docs.filter(pmod(col("doc_id"), lit(10L)) =!= 0L)
     val batch = docs.filter(pmod(col("doc_id"), lit(10L)) === 0L)
-    val corpusBands = minhashBandKeys(corpus, bands, rows)
-    val batchBands = minhashBandKeys(batch, bands, rows)
+    val corpusBands = minhashBandKeys(corpus, MinhashBands, MinhashRows)
+    val batchBands = minhashBandKeys(batch, MinhashBands, MinhashRows)
     val cand = batchBands.as("b").join(corpusBands.as("c"),
         col("b.band") === col("c.band") && col("b.bkey") === col("c.bkey"))
       .select(col("b.doc_id").as("batch_doc"), col("c.doc_id").as("corpus_doc"))
@@ -1934,13 +1956,13 @@ object Dedup {
 
   /** DuckDB oracle for q233 — the q184 replay with the batch/corpus
     * split, best-match selection and verdict CASE. */
-  def q233OracleSql(bands: Int = 4, rows: Int = 4): String = {
-    val k = bands * rows
+  def q233OracleSql: String = {
+    val k = MinhashBands * MinhashRows
     val params = (0 until k)
       .map(j => s"(${j}, ${MhA(j)}, ${MhB(j)})").mkString(", ")
-    val bList = (0 until bands).mkString("[", ",", "]")
-    val bkeyFold = (2 to rows).foldLeft(s"sl[$rows*b + 1]")(
-      (acc, r) => s"($acc * 31 + sl[$rows*b + $r])")
+    val bList = (0 until MinhashBands).mkString("[", ",", "]")
+    val bkeyFold = (2 to MinhashRows).foldLeft(s"sl[$MinhashRows*b + 1]")(
+      (acc, r) => s"($acc * 31 + sl[$MinhashRows*b + $r])")
     s"""WITH td AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        sh0 AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3 THEN
            list_transform(generate_series(1, len(toks) - 2),
@@ -2237,6 +2259,10 @@ object Dedup {
          (sum(novel) * 1000000 // sum(n_grams))::BIGINT AS novelty_micro
        FROM pd GROUP BY decile ORDER BY decile"""
 
+  private val Q216DfCap = 20
+  private val Q216Tau = 600000L
+  private val Q216TopK = 30
+
   /** q216 — one-sided CONTAINMENT near-dup pairs over 3-gram shingle
     * sets: C(A,B) = |sh(A) ∩ sh(B)| / |sh(A)| — the asymmetric
     * overlap measure that catches QUOTE/SUBSET duplication (a short
@@ -2268,8 +2294,8 @@ object Dedup {
     * (documented, same as q91): a qualifying pair sharing ONLY
     * df > dfCap shingles is not generated — in both engines alike,
     * so the gate stays exact. */
-  def q216Containment(s: SparkSession, dir: String, dfCap: Int = 20,
-                      tau: Long = 600000L, k: Int = 30): DataFrame = {
+  def q216Containment(s: SparkSession, dir: String, dfCap: Int = Q216DfCap,
+                      tau: Long = Q216Tau, k: Int = Q216TopK): DataFrame = {
     val td = Tables.documents(s, dir)
       .select(col("doc_id"),
               array_sort(TextOps.shingles(TextOps.tokens(col("text")), 3))
@@ -2340,7 +2366,7 @@ object Dedup {
 
   /** DuckDB oracle for q216 — identical distinct-shingle sets, rare-
     * shingle candidate blocking, and exact integer containment. */
-  def q216OracleSql(dfCap: Int = 20, tau: Long = 600000L, k: Int = 30): String =
+  def q216OracleSql: String =
     s"""WITH t0 AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
        td AS (SELECT doc_id, toks FROM (
          SELECT doc_id, list_sort(list_distinct(CASE WHEN len(tk) >= 3 THEN
@@ -2350,7 +2376,7 @@ object Dedup {
          WHERE len(toks) > 0),
        dt AS (SELECT doc_id, unnest(toks) AS w FROM td),
        rare AS (SELECT w FROM dt GROUP BY w
-         HAVING count(*) <= $dfCap AND count(*) >= 2),
+         HAVING count(*) <= $Q216DfCap AND count(*) >= 2),
        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          FROM dt a JOIN dt b ON a.w = b.w AND a.doc_id < b.doc_id
          JOIN rare r ON r.w = a.w),
@@ -2363,9 +2389,9 @@ object Dedup {
          inter * 1000000 // n_a AS cont_ab_micro,
          inter * 1000000 // n_b AS cont_ba_micro
        FROM v
-       WHERE greatest(inter * 1000000 // n_a, inter * 1000000 // n_b) >= $tau
+       WHERE greatest(inter * 1000000 // n_a, inter * 1000000 // n_b) >= $Q216Tau
        ORDER BY greatest(cont_ab_micro, cont_ba_micro) DESC, doc_a, doc_b
-       LIMIT $k"""
+       LIMIT $Q216TopK"""
 
   /** q223 — BLOCKING-RECALL EVAL for the MinHash banding: of the
     * hamming ≤ 3 SimHash near-dup pairs — a COMPLETE truth set by
@@ -2383,13 +2409,11 @@ object Dedup {
     * left-semi join of the truth pairs against the candidate pairs
     * on (a, b), then three 1-row aggregates broadcast-crossed into
     * the audit row. */
-  def q223LshRecall(s: SparkSession, dir: String,
-                    bands: Int = 4, rows: Int = 4,
-                    maxHamming: Int = 3): DataFrame = {
-    val truth = q185SimhashPairs(s, dir, maxHamming)
+  def q223LshRecall(s: SparkSession, dir: String): DataFrame = {
+    val truth = q185SimhashPairs(s, dir, SimhashMaxHamming)
       .select(col("doc_a"), col("doc_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (_, cands) = minhashDocsAndCands(s, dir, bands, rows)
+    val (_, cands) = minhashDocsAndCands(s, dir, MinhashBands, MinhashRows)
     val cand = cands
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val hits = truth.join(cand, Seq("doc_a", "doc_b"), "left_semi")
@@ -2404,14 +2428,13 @@ object Dedup {
 
   /** DuckDB oracle for q223 — q185's fingerprint/banding truth chain
     * and q184's signature/band-key candidate chain, joined. */
-  def q223OracleSql(bands: Int = 4, rows: Int = 4,
-                    maxHamming: Int = 3): String = {
-    val k = bands * rows
+  def q223OracleSql: String = {
+    val k = MinhashBands * MinhashRows
     val params = (0 until k)
       .map(j => s"(${j}, ${MhA(j)}, ${MhB(j)})").mkString(", ")
-    val bList = (0 until bands).mkString("[", ",", "]")
-    val bkeyFold = (2 to rows).foldLeft(s"sl[$rows*b + 1]")(
-      (acc, r) => s"($acc * 31 + sl[$rows*b + $r])")
+    val bList = (0 until MinhashBands).mkString("[", ",", "]")
+    val bkeyFold = (2 to MinhashRows).foldLeft(s"sl[$MinhashRows*b + 1]")(
+      (acc, r) => s"($acc * 31 + sl[$MinhashRows*b + $r])")
     s"""WITH t0 AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        sh0 AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3 THEN
            list_transform(generate_series(1, len(toks) - 2),
@@ -2438,7 +2461,7 @@ object Dedup {
            AND x.doc_id < y.doc_id
          JOIN hfp fa ON fa.doc_id = x.doc_id
          JOIN hfp fb ON fb.doc_id = y.doc_id
-         WHERE bit_count(xor(fa.fp, fb.fp)) <= $maxHamming),
+         WHERE bit_count(xor(fa.fp, fb.fp)) <= $SimhashMaxHamming),
        mhv AS (SELECT doc_id, list_transform(gs, g ->
            list_reduce(list_prepend(0, list_transform(string_split(g, ''),
              ch -> ascii(ch)::BIGINT)), (acc, c) -> (acc * 31 + c) % $MhP))
@@ -2468,6 +2491,9 @@ object Dedup {
        FROM agg"""
   }
 
+  private val Q225Window = 4
+  private val Q225MinJw = 0.9
+
   /** q225 — FUZZY RECORD LINKAGE over part names: multi-pass
     * sorted-neighborhood blocking [Hernández & Stolfo, SIGMOD 1995]
     * scored by the codegen'd [[graft.functions.JaroWinkler]]
@@ -2491,8 +2517,7 @@ object Dedup {
     * never a single-task global window); candidates are 2·w per
     * name, scored map-side by the codegen'd expression. The
     * corpus-linear stage is exactly one groupBy(p_name). */
-  def q225FuzzyParts(s: SparkSession, dir: String,
-                     w: Int = 4, minJw: Double = 0.9): DataFrame = {
+  def q225FuzzyParts(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions
     val names = Tables.part(s, dir)
       .groupBy(col("p_name")).agg(count(lit(1)).as("n_parts"))
@@ -2505,7 +2530,7 @@ object Dedup {
           withSum = false)
         .select(col("p_name"), col("rn"))
       val a = ranked.select(col("p_name").as("name_a"),
-        explode(array((1 to w).map(i => col("rn") + lit(i.toLong)): _*))
+        explode(array((1 to Q225Window).map(i => col("rn") + lit(i.toLong)): _*))
           .as("rn_b"))
       val b = ranked.select(col("p_name").as("name_b"), col("rn").as("rn_b"))
       a.join(b, Seq("rn_b")).select(col("name_a"), col("name_b"))
@@ -2518,7 +2543,7 @@ object Dedup {
     cands
       .withColumn("jw",
         round(VectorFunctions.jaroWinkler(col("name_a"), col("name_b")), 4))
-      .filter(col("jw") >= minJw)
+      .filter(col("jw") >= Q225MinJw)
       .join(names.select(col("p_name").as("name_a"), col("n_parts").as("n_a")),
             Seq("name_a"))
       .join(names.select(col("p_name").as("name_b"), col("n_parts").as("n_b")),
@@ -2529,7 +2554,7 @@ object Dedup {
 
   /** DuckDB oracle for q225 — identical two-pass neighborhood and
     * counts, scored by DuckDB's BUILT-IN jaro_winkler_similarity. */
-  def q225OracleSql(w: Int = 4, minJw: Double = 0.9): String =
+  def q225OracleSql: String =
     s"""WITH names AS (SELECT p_name, count(*)::BIGINT AS n_parts
          FROM part GROUP BY p_name),
        fwd AS (SELECT p_name, row_number() OVER (ORDER BY p_name) AS rn
@@ -2537,9 +2562,9 @@ object Dedup {
        rev AS (SELECT p_name, row_number()
            OVER (ORDER BY reverse(p_name), p_name) AS rn FROM names),
        pf AS (SELECT a.p_name AS name_a, b.p_name AS name_b
-         FROM fwd a JOIN fwd b ON b.rn > a.rn AND b.rn <= a.rn + $w),
+         FROM fwd a JOIN fwd b ON b.rn > a.rn AND b.rn <= a.rn + $Q225Window),
        pr AS (SELECT a.p_name AS name_a, b.p_name AS name_b
-         FROM rev a JOIN rev b ON b.rn > a.rn AND b.rn <= a.rn + $w),
+         FROM rev a JOIN rev b ON b.rn > a.rn AND b.rn <= a.rn + $Q225Window),
        cand AS (SELECT DISTINCT least(name_a, name_b) AS name_a,
            greatest(name_a, name_b) AS name_b
          FROM (SELECT * FROM pf UNION ALL SELECT * FROM pr)),
@@ -2549,6 +2574,6 @@ object Dedup {
        SELECT name_a, name_b, na.n_parts AS n_a, nb.n_parts AS n_b, jw
        FROM sc JOIN names na ON na.p_name = name_a
                JOIN names nb ON nb.p_name = name_b
-       WHERE jw >= $minJw
+       WHERE jw >= $Q225MinJw
        ORDER BY jw DESC, name_a, name_b"""
 }

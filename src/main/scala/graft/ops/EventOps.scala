@@ -507,6 +507,9 @@ object EventOps {
       .orderBy(col("user_id"), col("ts"), col("event_id"))
   }
 
+  /** q118 flags days more than this many standard deviations out. */
+  private val Q118Sigmas = 2L
+
   /** q118 — daily volume anomalies per event type: a day is anomalous
     * for a type iff its count sits more than k = 2 standard
     * deviations from the type's daily mean — decided by q92's
@@ -518,7 +521,7 @@ object EventOps {
     * Scale shape: daily counts are one (type, day) aggregation;
     * (S, Q, n) per type is a second tiny rollup broadcast back as a
     * window-free join; the flag is a map-side comparison. */
-  def q118DailyAnomalies(s: SparkSession, dir: String, k: Long = 2): DataFrame = {
+  def q118DailyAnomalies(s: SparkSession, dir: String): DataFrame = {
     val daily = Tables.events(s, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("c"))
@@ -531,7 +534,7 @@ object EventOps {
               date_format(col("day"), "yyyy-MM-dd").as("day"),
               col("c").as("n_events"),
               ((col("n") * col("c") - col("ss")) * (col("n") * col("c") - col("ss")) >
-               lit(k * k) * (col("n") * col("qq") - col("ss") * col("ss")))
+               lit(Q118Sigmas * Q118Sigmas) * (col("n") * col("qq") - col("ss") * col("ss")))
                 .as("is_anomaly"))
       .orderBy(col("event_type"), col("day"))
   }
@@ -689,7 +692,7 @@ object EventOps {
 
   /** DuckDB oracle for q183 — the same range join, rank window and
     * integer U-shape credit schedule. */
-  def q183OracleSql(): String =
+  def q183OracleSql: String =
     """WITH v AS (SELECT event_id AS view_id, user_id, ts AS v_ts
          FROM events WHERE event_type = 'view'),
        p AS (SELECT event_id AS purchase_id, user_id AS p_user, ts AS p_ts,
@@ -841,7 +844,7 @@ object EventOps {
     * single-reference CTEs, and a 25-deep inlined join chain
     * explodes planning exponentially — materialization keeps each
     * step a 5-row hash join. */
-  def q234OracleSql(): String = {
+  def q234OracleSql: String = {
     val stateVals = ("START" +: MarkovChannels)
       .map(s => s"('$s')").mkString(", ")
     def chain(v: String, removed: Option[String]): String = {
@@ -990,7 +993,7 @@ object EventOps {
   /** DuckDB oracle for q235 — identical masks, v(S) table over all
     * 16 subsets, and the statically unrolled 32-term Shapley sum in
     * exact 1/24 units. */
-  def q235OracleSql(): String = {
+  def q235OracleSql: String = {
     val n = MarkovChannels.length
     val full = (1 << n) - 1
     val codeCase = MarkovChannels.zipWithIndex
@@ -1038,6 +1041,8 @@ object EventOps {
        FROM shap ORDER BY channel"""
   }
 
+  private val Q110K = 20
+
   /** q110 — session path mining: the most common event-type
     * sequences (first 5 events per session, joined with ">") across
     * all q30-style gap sessions — the navigation-pattern report a
@@ -1053,7 +1058,7 @@ object EventOps {
     * Array order inside a group is forced by sorting on the
     * in-session rank (array_sort over (rn, type) structs) — never by
     * collect order, which Spark does not define. */
-  def q110SessionPaths(s: SparkSession, dir: String, k: Int = 20): DataFrame = {
+  def q110SessionPaths(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val newSession = when(
@@ -1075,7 +1080,7 @@ object EventOps {
     // TakeOrdered the k survivors FIRST; the rank window then runs
     // over k rows, not a single-partition sort of every distinct path
     val wTop = Window.orderBy(col("n_sessions").desc, col("path"))
-    counts.orderBy(col("n_sessions").desc, col("path")).limit(k)
+    counts.orderBy(col("n_sessions").desc, col("path")).limit(Q110K)
       .withColumn("rk", row_number().over(wTop).cast("long"))
       .select(col("rk"), col("path"), col("n_sessions"))
       .orderBy(col("rk"))
@@ -1163,6 +1168,8 @@ object EventOps {
       .orderBy(col("user_id"))
   }
 
+  private val Q154TolSec = 300L
+
   /** q154 — as-of join WITH TOLERANCE (pandas merge_asof's `tolerance`
     * semantics): each click is matched to the SAME USER's most recent
     * view at most `tolSec` seconds earlier; staler views don't count.
@@ -1173,8 +1180,7 @@ object EventOps {
     * post-filter on the carried timestamp — it cannot resurrect a
     * wrong match because carry-forward always holds the NEAREST
     * preceding view. */
-  def q154AsofTolerance(s: SparkSession, dir: String,
-                        tolSec: Long = 300L): DataFrame = {
+  def q154AsofTolerance(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(s, dir)
     val views = ev.filter(col("event_type") === "view")
@@ -1195,12 +1201,12 @@ object EventOps {
               date_format(col("t"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("click_ts"),
               when(col("asof_view").isNotNull &&
                    unix_timestamp(col("t")) - unix_timestamp(col("asof_view"))
-                     <= tolSec,
+                     <= Q154TolSec,
                    date_format(col("asof_view"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
                 .as("view_ts"),
               when(col("asof_view").isNotNull &&
                    unix_timestamp(col("t")) - unix_timestamp(col("asof_view"))
-                     <= tolSec,
+                     <= Q154TolSec,
                    unix_timestamp(col("t")) - unix_timestamp(col("asof_view")))
                 .as("gap_sec"))
       .orderBy(col("click_id"))
@@ -1448,7 +1454,7 @@ object EventOps {
   /** DuckDB oracle for q180 — q30's session CTE, the ±1 delta union,
     * one global running-sum window (the oracle may afford the
     * single-partition window the engine must not), max per day. */
-  def q180OracleSql(): String =
+  def q180OracleSql: String =
     """WITH x AS (SELECT user_id, event_id, ts,
          CASE WHEN lag(ts) OVER w IS NULL
                    OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
@@ -1572,6 +1578,9 @@ object EventOps {
        FROM g WHERE rn >= 17 GROUP BY event_type ORDER BY event_type"""
   }
 
+  private val Q211Cap = 20
+  private val Q211K = 25
+
   /** q211 — length-3 SEQUENTIAL pattern mining (the PrefixSpan /
     * SPAM problem family [Pei et al., ICDE 2001]): which ordered
     * event-type triples a>b>c (order preserved, gaps allowed) occur
@@ -1597,7 +1606,7 @@ object EventOps {
     * pattern stream. At 100 TB only (pattern, user) pairs cross the
     * shuffle, capped at 1,140 per user. */
   def q211SeqPatterns(s: SparkSession, dir: String,
-                      cap: Int = 20, k: Int = 25): DataFrame = {
+                      cap: Int = Q211Cap, k: Int = Q211K): DataFrame = {
     val ev = Tables.events(s, dir)
     import ev.sparkSession.implicits._
     import graft.functions.FirstK
@@ -1632,11 +1641,11 @@ object EventOps {
   /** DuckDB oracle for q211 — the same capped streams, with the
     * HOF enumeration expressed as the classic positional triple
     * self-join and per-user DISTINCT. */
-  def q211OracleSql(cap: Int = 20, k: Int = 25): String =
+  def q211OracleSql: String =
     s"""WITH ev AS (SELECT user_id AS u, event_type AS t,
          row_number() OVER (PARTITION BY user_id
                             ORDER BY ts, event_id) AS rn FROM events),
-       sq AS (SELECT u, rn, t FROM ev WHERE rn <= $cap),
+       sq AS (SELECT u, rn, t FROM ev WHERE rn <= $Q211Cap),
        pat AS (SELECT DISTINCT a.u,
            a.t || '>' || b.t || '>' || c.t AS pattern
          FROM sq a
@@ -1644,7 +1653,7 @@ object EventOps {
          JOIN sq c ON b.u = c.u AND c.rn > b.rn)
        SELECT pattern, count(*)::BIGINT AS n_users
        FROM pat GROUP BY pattern
-       ORDER BY n_users DESC, pattern LIMIT $k"""
+       ORDER BY n_users DESC, pattern LIMIT $Q211K"""
 
   /** q219 — MARKOV NEXT-EVENT PREDICTION EVAL: train a first-order
     * transition model on the hash-split train users (q76's
@@ -2031,6 +2040,8 @@ object EventOps {
        (l + b)::BIGINT AS forecast_next_micro
      FROM rec ORDER BY event_type, day"""
 
+  private val Q244Bins = 4096
+
   /** q244 — two-sample KOLMOGOROV–SMIRNOV drift test [Kolmogorov
     * 1933; Smirnov 1939] per event type: did the VALUE DISTRIBUTION
     * shift between the first and second half of the month? D =
@@ -2055,7 +2066,7 @@ object EventOps {
     * class, so the widening is not deferred and EventOpsSpec pins it
     * at planted large counts. Ties on the arg-max bin break to the
     * smallest bin. */
-  def q244KsDrift(s: SparkSession, dir: String, bins: Int = 4096): DataFrame = {
+  def q244KsDrift(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(s, dir)
       .select(col("event_type"),
@@ -2068,7 +2079,7 @@ object EventOps {
     val wC = Window.partitionBy(col("event_type")).orderBy(col("bin"))
     val dev = ev
       .select(col("event_type"), col("is_a"),
-              expr(s"((v - ${vMin}L) * $bins) div ${width}L").as("bin"))
+              expr(s"((v - ${vMin}L) * $Q244Bins) div ${width}L").as("bin"))
       .groupBy(col("event_type"), col("bin"))
       .agg(sum(col("is_a")).as("a"), sum(lit(1L) - col("is_a")).as("b"))
       .withColumn("na", sum(col("a")).over(wT))
@@ -2091,12 +2102,12 @@ object EventOps {
 
   /** DuckDB oracle for q244 — identical binning, cross-multiplied
     * deviations and tie rule. */
-  def q244OracleSql(bins: Int = 4096): String =
+  def q244OracleSql: String =
     s"""WITH ev AS (SELECT event_type,
          CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS v,
          (ts < TIMESTAMP '2024-01-16')::BIGINT AS is_a FROM events),
        mm AS (SELECT min(v) AS vmin, max(v) - min(v) + 1 AS width FROM ev),
-       b AS (SELECT event_type, ((v - vmin) * $bins) // width AS bin,
+       b AS (SELECT event_type, ((v - vmin) * $Q244Bins) // width AS bin,
            sum(is_a)::BIGINT AS a, sum(1 - is_a)::BIGINT AS bb
          FROM ev, mm GROUP BY 1, 2),
        c AS (SELECT event_type, bin,

@@ -50,7 +50,10 @@ object GraphOps {
                 concat(lit("u"), col("user_id")).as("dst")))
   }
 
-  def q82PageRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
+  /** Fixed-point rounds of q82, q99, q126 and q209. */
+  private val Iters = 3
+
+  def q82PageRank(s: SparkSession, dir: String, iters: Int = Iters): DataFrame = {
     val edges = clickEdges(s, dir)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
     // (src, dst, src-out-degree): joined once, reused every round
@@ -73,8 +76,8 @@ object GraphOps {
   /** DuckDB oracle for q82 — the same fixed-point rounds unrolled
     * into CTEs; HUGEINT-widening sums are cast back to BIGINT so the
     * value representation matches Spark's longs (the q63 lesson). */
-  def q82OracleSql(iters: Int = 3): String = {
-    val rounds = (1 to iters).map { i =>
+  def q82OracleSql: String = {
+    val rounds = (1 to Iters).map { i =>
       s"""r$i AS (SELECT dst AS node,
            CAST(150000 + (850 * sum(r // d)) // 1000 AS BIGINT) AS r
            FROM ed JOIN r${i - 1} ON r${i - 1}.node = ed.src
@@ -90,7 +93,7 @@ object GraphOps {
          ed AS (SELECT e.src, e.dst, d.d FROM edges e JOIN deg d USING (src)),
          r0 AS (SELECT src AS node, 1000000::BIGINT AS r FROM deg),
          $rounds
-         SELECT node, r AS rank_micro FROM r$iters ORDER BY node"""
+         SELECT node, r AS rank_micro FROM r$Iters ORDER BY node"""
   }
 
   /** q99 — synchronized label propagation (community detection) over
@@ -106,7 +109,7 @@ object GraphOps {
     * window over label-count rows (partition size = a node's distinct
     * neighbor labels, shrinking every round). Same bucketable-by-src
     * posture as q82. */
-  def q99LabelProp(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
+  def q99LabelProp(s: SparkSession, dir: String, iters: Int = Iters): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val edges = clickEdges(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -130,8 +133,8 @@ object GraphOps {
   }
 
   /** DuckDB oracle for q99 — the same synchronized rounds unrolled. */
-  def q99OracleSql(iters: Int = 3): String = {
-    val rounds = (1 to iters).map { i =>
+  def q99OracleSql: String = {
+    val rounds = (1 to Iters).map { i =>
       s"""c$i AS (SELECT e.dst, l.label, count(*)::BIGINT AS cnt
            FROM edges e JOIN l${i - 1} l ON l.node = e.src
            GROUP BY 1, 2),
@@ -148,7 +151,7 @@ object GraphOps {
                    SELECT 'i' || k, 'u' || user_id FROM clicks),
          l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
          $rounds
-         SELECT node, label FROM l$iters ORDER BY node"""
+         SELECT node, label FROM l$Iters ORDER BY node"""
   }
 
   /** q126 — WEIGHTED fixed-point PageRank: q82 with edge weights =
@@ -195,7 +198,7 @@ object GraphOps {
     }.mkString(",\n         ")
 
   def q126WeightedPageRank(s: SparkSession, dir: String,
-                           iters: Int = 3): DataFrame = {
+                           iters: Int = Iters): DataFrame = {
     val clicks = Tables.events(s, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id"),
@@ -214,8 +217,8 @@ object GraphOps {
   }
 
   /** DuckDB oracle for q126 — the weighted rounds unrolled. */
-  def q126OracleSql(iters: Int = 3): String = {
-    val rounds = weightedPageRankRoundsSql(iters)
+  def q126OracleSql: String = {
+    val rounds = weightedPageRankRoundsSql(Iters)
     s"""WITH wc AS (SELECT user_id,
            CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k,
            count(*)::BIGINT AS w
@@ -229,7 +232,7 @@ object GraphOps {
                 JOIN sw s USING (src)),
          r0 AS (SELECT src AS node, 1000000::BIGINT AS r FROM sw),
          $rounds
-         SELECT node, r AS rank_micro FROM r$iters ORDER BY node"""
+         SELECT node, r AS rank_micro FROM r$Iters ORDER BY node"""
   }
 
   /** q116 — triangle counting on the item co-click projection: items
@@ -270,7 +273,7 @@ object GraphOps {
   }
 
   /** DuckDB oracle for q116 — the same oriented enumeration. */
-  def q116OracleSql(): String =
+  def q116OracleSql: String =
     s"""WITH c AS (SELECT DISTINCT user_id,
            CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
            FROM events WHERE event_type = 'click'),
@@ -285,6 +288,9 @@ object GraphOps {
              UNION ALL SELECT c2 FROM t)
        SELECT item, count(*) AS n_triangles FROM u
        GROUP BY item ORDER BY item"""
+  private val Q157Seed = 0L
+  private val Q157MaxHops = 4
+
   /** q157 — bounded k-hop BFS (reachability with distance) over the
     * DIRECTED click-transition graph: an edge a→b for every pair of
     * consecutive clicks per user (by time, event_id tiebreak). From
@@ -302,8 +308,8 @@ object GraphOps {
     * (visited-set anti-join), and every join is keyed on the item id
     * — at warehouse scale the edge frame would be bucketed by src so
     * every hop is a co-located join. */
-  def q157KHopBfs(s: SparkSession, dir: String, seed: Long = 0L,
-                  maxHops: Int = 4): DataFrame = {
+  def q157KHopBfs(s: SparkSession, dir: String, seed: Long = Q157Seed,
+                  maxHops: Int = Q157MaxHops): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val clicks = Tables.events(s, dir)
@@ -351,7 +357,7 @@ object GraphOps {
 
   /** DuckDB oracle for q157 — recursive CTE with the hop bound; the
     * UNION ALL path expansion is collapsed to min(dist) per node. */
-  def q157OracleSql(seed: Long = 0L, maxHops: Int = 4): String =
+  def q157OracleSql: String =
     s"""WITH RECURSIVE c AS (SELECT user_id, ts, event_id,
            CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
            FROM events WHERE event_type = 'click'),
@@ -361,10 +367,10 @@ object GraphOps {
        e AS (SELECT DISTINCT k AS src, nxt AS dst FROM o
              WHERE nxt IS NOT NULL AND nxt <> k),
        bfs AS (
-         SELECT CAST($seed AS BIGINT) AS item, 0 AS dist
+         SELECT CAST($Q157Seed AS BIGINT) AS item, 0 AS dist
          UNION ALL
          SELECT e.dst, bfs.dist + 1 FROM bfs JOIN e ON e.src = bfs.item
-         WHERE bfs.dist < $maxHops)
+         WHERE bfs.dist < $Q157MaxHops)
        SELECT item, CAST(min(dist) AS BIGINT) AS dist
        FROM bfs GROUP BY item ORDER BY item"""
 
@@ -393,7 +399,7 @@ object GraphOps {
     * round's plan is constant-depth over a materialized leaf. The
     * last hub and auth cuts stay alive (the returned frame reads
     * them); older generations are released as the loop advances. */
-  def q209Hits(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
+  def q209Hits(s: SparkSession, dir: String, iters: Int = Iters): DataFrame = {
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id").as("u"),
@@ -449,8 +455,8 @@ object GraphOps {
 
   /** DuckDB oracle for q209 — identical unrolled half-steps with the
     * L∞ rescale as a scalar subquery per round. */
-  def q209OracleSql(iters: Int = 3): String = {
-    val rounds = (1 to iters).map { i =>
+  def q209OracleSql: String = {
+    val rounds = (1 to Iters).map { i =>
       s"""a${i}r AS (SELECT e.i, CAST(sum(h) AS BIGINT) AS a
            FROM e JOIN h${i - 1} USING (u) GROUP BY e.i),
          a$i AS (SELECT i, CAST(a * 1000000 // (SELECT max(a) FROM a${i}r)
@@ -465,11 +471,14 @@ object GraphOps {
            FROM events WHERE event_type = 'click'),
          h0 AS (SELECT DISTINCT u, 1000000::BIGINT AS h FROM e),
          $rounds
-         SELECT 'u' || u AS node, 'hub' AS kind, h AS score_micro FROM h$iters
+         SELECT 'u' || u AS node, 'hub' AS kind, h AS score_micro FROM h$Iters
          UNION ALL
-         SELECT 'i' || i, 'authority', a FROM a$iters
+         SELECT 'i' || i, 'authority', a FROM a$Iters
          ORDER BY kind, node"""
   }
+
+  private val Q215K = 3
+  private val Q215Rounds = 4
 
   /** q215 — k-CORE PEELING CURVE [Seidman, Social Networks 1983;
     * Batagelj & Zaveršnik 2003]: synchronous peeling rounds toward
@@ -492,8 +501,8 @@ object GraphOps {
     * over the cut leaves, so no round is ever recomputed. All
     * round cuts stay alive until the caller's action — they are
     * exactly what the output reads (the q157 hop pattern). */
-  def q215KCore(s: SparkSession, dir: String, k: Int = 3,
-                rounds: Int = 4): DataFrame = {
+  def q215KCore(s: SparkSession, dir: String, k: Int = Q215K,
+                rounds: Int = Q215Rounds): DataFrame = {
     var edges = Checkpoints.cut(clickEdges(s, dir))
     val stats = (1 to rounds).map { r =>
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
@@ -511,14 +520,14 @@ object GraphOps {
   }
 
   /** DuckDB oracle for q215 — identical unrolled peel rounds. */
-  def q215OracleSql(k: Int = 3, rounds: Int = 4): String = {
-    val cte = (1 to rounds).map { r =>
+  def q215OracleSql: String = {
+    val cte = (1 to Q215Rounds).map { r =>
       s"""d$r AS (SELECT src, count(*) AS d FROM e${r - 1} GROUP BY src),
-         k$r AS (SELECT src AS node FROM d$r WHERE d >= $k),
+         k$r AS (SELECT src AS node FROM d$r WHERE d >= $Q215K),
          e$r AS (SELECT e.src, e.dst FROM e${r - 1} e
            JOIN k$r a ON e.src = a.node JOIN k$r b ON e.dst = b.node)"""
     }.mkString(",\n         ")
-    val rows = (1 to rounds).map { r =>
+    val rows = (1 to Q215Rounds).map { r =>
       s"""SELECT $r::BIGINT AS round,
            count(DISTINCT src)::BIGINT AS n_nodes,
            count(*)::BIGINT AS n_edges FROM e$r"""
@@ -844,6 +853,8 @@ object GraphOps {
            AS assortativity
        FROM agg"""
 
+  private val Q249MaxDeg = 256L
+
   /** q249 — LINK PREDICTION by the Resource-Allocation index [Zhou,
     * Lü & Zhang, Eur. Phys. J. B 2009; the exact-rational member of
     * the common-neighbor family of Adamic & Adar 2003]: over the
@@ -882,7 +893,7 @@ object GraphOps {
     * user graphs — see q251's user-side formulation, which never
     * saturates). */
   def q249LinkPredict(s: SparkSession, dir: String,
-                      maxDeg: Long = 256L): DataFrame = {
+                      maxDeg: Long = Q249MaxDeg): DataFrame = {
     // edges and wedges are both array expansions, one exchange each:
     // per-user baskets (collect_set dedups map-side) yield the a<b
     // edge set, and per-neighbor adjacency arrays yield the wedges,
@@ -921,7 +932,7 @@ object GraphOps {
 
   /** DuckDB oracle for q249 — identical projection, hub-suppressed
     * wedge join, micro-int RA sum, anti-join and top-50. */
-  def q249OracleSql(maxDeg: Long = 256L): String =
+  def q249OracleSql: String =
     s"""WITH c AS (SELECT DISTINCT user_id,
          CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
          FROM events WHERE event_type = 'click'),
@@ -931,7 +942,7 @@ object GraphOps {
                UNION ALL SELECT b, a FROM e),
        deg AS (SELECT z, count(*)::BIGINT AS d FROM adj GROUP BY z),
        sz AS (SELECT adj.z, adj.n, 1000000000 // d AS w
-              FROM adj JOIN deg ON deg.z = adj.z WHERE d <= $maxDeg),
+              FROM adj JOIN deg ON deg.z = adj.z WHERE d <= $Q249MaxDeg),
        cand AS (SELECT x.n AS a, y.n AS b,
                   sum(x.w)::BIGINT AS ra_micro,
                   count(*)::BIGINT AS common
@@ -941,6 +952,9 @@ object GraphOps {
                 ANTI JOIN e ON e.a = cand.a AND e.b = cand.b)
        SELECT a, b, ra_micro, common FROM pred
        ORDER BY ra_micro DESC, a, b LIMIT 50"""
+
+  private val Q251K = 5
+  private val Q251Cohort = 50L
 
   /** q251 — ITEM-BASED COLLABORATIVE FILTERING [Sarwar, Karypis,
     * Konstan & Riedl, WWW 2001; the workhorse behind "users who
@@ -970,8 +984,7 @@ object GraphOps {
     * rides the bounded [[graft.functions.TopK]] aggregator:
     * map-side partials, ≤ 5 rows per user cross the shuffle, no
     * per-user window sort (the q26/q43 pattern). */
-  def q251ItemCf(s: SparkSession, dir: String, k: Int = 5,
-                 cohort: Long = 50L): DataFrame = {
+  def q251ItemCf(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TopK
     val spark = s
     import spark.implicits._
@@ -999,7 +1012,7 @@ object GraphOps {
       pairCnt.select(col("a").as("j"), col("b").as("i"), col("cnt"))
         .unionByName(
           pairCnt.select(col("b").as("j"), col("a").as("i"), col("cnt"))))
-    val cohortClicks = clicks.filter(col("user_id") < cohort)
+    val cohortClicks = clicks.filter(col("user_id") < Q251Cohort)
       .toDF("user_id", "j")
     val scored = cohortClicks
       .join(cooc, Seq("j"))
@@ -1011,7 +1024,7 @@ object GraphOps {
     scored.as[(Long, Long, Long)]
       .groupByKey(_._1)
       .mapValues { case (_, item, sc) => TopK.Scored(item, sc.toDouble) }
-      .agg(TopK.topK(k).toColumn.name("top"))
+      .agg(TopK.topK(Q251K).toColumn.name("top"))
       .flatMap { case (u, top) =>
         top.zipWithIndex.map { case (t, i) =>
           (u, t.id, t.score.toLong, i + 1) } }
@@ -1021,7 +1034,7 @@ object GraphOps {
 
   /** DuckDB oracle for q251 — same co-occurrence matrix, cohort
     * scoring, clicked-item anti-join, and (score DESC, item) top-5. */
-  def q251OracleSql(k: Int = 5, cohort: Long = 50L): String =
+  def q251OracleSql: String =
     s"""WITH c AS (SELECT DISTINCT user_id,
          CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
          FROM events WHERE event_type = 'click'),
@@ -1031,7 +1044,7 @@ object GraphOps {
                 GROUP BY 1, 2),
        sc AS (SELECT b.user_id, m.i, sum(m.cnt)::BIGINT AS score
               FROM c b JOIN cooc m ON m.j = b.k
-              WHERE b.user_id < $cohort
+              WHERE b.user_id < $Q251Cohort
               GROUP BY 1, 2),
        fresh AS (SELECT sc.* FROM sc
                  ANTI JOIN c ON c.user_id = sc.user_id AND c.k = sc.i),
@@ -1040,5 +1053,5 @@ object GraphOps {
                                   ORDER BY score DESC, i) AS rn
              FROM fresh)
        SELECT user_id, item, score, rn FROM r
-       WHERE rn <= $k ORDER BY user_id, rn"""
+       WHERE rn <= $Q251K ORDER BY user_id, rn"""
 }

@@ -34,6 +34,8 @@ object Inference {
       java.lang.Long.parseLong(hex.take(13), 16) % 1000000L
     }
 
+  private val Q124BatchSize = 64
+
   /** q124 — score every document through the batched-inference path.
     * Output is per-doc and layout-independent (batch boundaries
     * affect only call grouping, never values), which is what makes
@@ -44,7 +46,7 @@ object Inference {
     * before the gate's ORDER BY, memory bounded by one batch of
     * texts per core. */
   def q124BatchScore(s: SparkSession, dir: String,
-                     batchSize: Int = 64): DataFrame = {
+                     batchSize: Int = Q124BatchSize): DataFrame = {
     val docs = Tables.documents(s, dir)
     import docs.sparkSession.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
@@ -183,6 +185,8 @@ object Inference {
          (sum(score + 1000000) // count(*) - 1000000)::BIGINT AS avg_score_micro
        FROM scored GROUP BY bin ORDER BY bin"""
 
+  private val Q196Tau = 450000L
+
   /** q196 — thresholded classification report for the probe scorer:
     * the confusion matrix at τ = 0.45 (q35's near-dup band) plus the
     * derived accuracy, precision, recall, F1 and Cohen's κ — the
@@ -203,14 +207,13 @@ object Inference {
     * Scale shape: one map-side scoring pass into ONE partial+final
     * aggregate of four conditional counts; the metric arithmetic runs
     * on the single aggregate row. */
-  def q196ClassificationReport(s: SparkSession, dir: String,
-                               tau: Long = 450000L): DataFrame = {
+  def q196ClassificationReport(s: SparkSession, dir: String): DataFrame = {
     def cnt(c: Column) = sum(when(c, 1L).otherwise(0L))
     probeScored(s, dir)
-      .agg(cnt(col("y") === 1L && col("score") >= tau).as("tp"),
-           cnt(col("y") === 0L && col("score") >= tau).as("fp"),
-           cnt(col("y") === 1L && col("score") < tau).as("fn"),
-           cnt(col("y") === 0L && col("score") < tau).as("tn"))
+      .agg(cnt(col("y") === 1L && col("score") >= Q196Tau).as("tp"),
+           cnt(col("y") === 0L && col("score") >= Q196Tau).as("fp"),
+           cnt(col("y") === 1L && col("score") < Q196Tau).as("fn"),
+           cnt(col("y") === 0L && col("score") < Q196Tau).as("tn"))
       .select(col("tp"), col("fp"), col("fn"), col("tn"),
         expr("(tp + tn) * 1000000L div (tp + fp + fn + tn)").as("accuracy_micro"),
         expr("tp * 1000000L div greatest(tp + fp, 1)").as("precision_micro"),
@@ -228,13 +231,13 @@ object Inference {
 
   /** DuckDB oracle for q196 — identical counts, guards, and shifted
     * κ algebra. */
-  def q196OracleSql(tau: Long = 450000L): String =
+  def q196OracleSql: String =
     s"""WITH $probeScoredSql,
        m AS (SELECT
-           sum(CASE WHEN y = 1 AND score >= $tau THEN 1 ELSE 0 END)::BIGINT AS tp,
-           sum(CASE WHEN y = 0 AND score >= $tau THEN 1 ELSE 0 END)::BIGINT AS fp,
-           sum(CASE WHEN y = 1 AND score < $tau THEN 1 ELSE 0 END)::BIGINT AS fn,
-           sum(CASE WHEN y = 0 AND score < $tau THEN 1 ELSE 0 END)::BIGINT AS tn
+           sum(CASE WHEN y = 1 AND score >= $Q196Tau THEN 1 ELSE 0 END)::BIGINT AS tp,
+           sum(CASE WHEN y = 0 AND score >= $Q196Tau THEN 1 ELSE 0 END)::BIGINT AS fp,
+           sum(CASE WHEN y = 1 AND score < $Q196Tau THEN 1 ELSE 0 END)::BIGINT AS fn,
+           sum(CASE WHEN y = 0 AND score < $Q196Tau THEN 1 ELSE 0 END)::BIGINT AS tn
          FROM scored)
        SELECT tp, fp, fn, tn,
          (tp + tn) * 1000000 // (tp + fp + fn + tn) AS accuracy_micro,
@@ -250,6 +253,9 @@ object Inference {
              - ((tp + fp) * (tp + fn) + (fn + tn) * (fp + tn)), 1)
           - 1000000 AS kappa_micro
        FROM m"""
+
+  /** Bootstrap replicates of q243. */
+  private val Q243B = 40
 
   /** q243 — POISSON-BOOTSTRAP confidence intervals [Efron 1979;
     * Chamandy, Muralidharan, Najmi & Naidu 2012, "Estimating
@@ -278,8 +284,7 @@ object Inference {
     * partial sums — B·|types| rows cross the wire, not B·n — and the
     * rank-select runs on 40-element arrays. The naive alternative is
     * B shuffled resample passes; this is one pass. */
-  def q243PoissonBootstrap(s: SparkSession, dir: String,
-                           B: Int = 40): DataFrame = {
+  def q243PoissonBootstrap(s: SparkSession, dir: String): DataFrame = {
     val u = conv(substring(md5(concat(col("event_id"), lit(":"), col("b"))),
                            1, 13), 16, 10).cast("long") % 1000000L
     val w = when(u < 367879L, 0L).when(u < 735759L, 1L)
@@ -295,7 +300,7 @@ object Inference {
     // metric for this stage, so spread the rows first
     val reps = ev.repartition(s.sparkContext.defaultParallelism)
       .select(col("event_type"), col("event_id"), col("v"),
-              explode(sequence(lit(0), lit(B - 1))).as("b"))
+              explode(sequence(lit(0), lit(Q243B - 1))).as("b"))
       .select(col("event_type"), col("b"), w.as("w"), col("v"))
       .groupBy(col("event_type"), col("b"))
       .agg(sum(col("w") * col("v")).as("wv"), sum(col("w")).as("wn"))
@@ -304,9 +309,9 @@ object Inference {
     val ci = reps.groupBy(col("event_type"))
       .agg(sort_array(collect_list(col("mean_b"))).as("ms"))
       .select(col("event_type"),
-              element_at(col("ms"), math.ceil(0.025 * B).toInt)
+              element_at(col("ms"), math.ceil(0.025 * Q243B).toInt)
                 .as("ci_lo_micro"),
-              element_at(col("ms"), math.ceil(0.975 * B).toInt)
+              element_at(col("ms"), math.ceil(0.975 * Q243B).toInt)
                 .as("ci_hi_micro"))
     val base = ev.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -316,15 +321,15 @@ object Inference {
 
   /** DuckDB oracle for q243 — identical md5 uniforms, CDF table,
     * replicate means and nearest-rank selection. */
-  def q243OracleSql(B: Int = 40): String = {
-    val lo = math.ceil(0.025 * B).toInt
-    val hi = math.ceil(0.975 * B).toInt
+  def q243OracleSql: String = {
+    val lo = math.ceil(0.025 * Q243B).toInt
+    val hi = math.ceil(0.975 * Q243B).toInt
     s"""WITH ev AS (SELECT event_type, event_id,
          CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS v FROM events),
        rep AS (SELECT event_type, t.b, v,
            ('0x' || substr(md5(event_id || ':' || t.b), 1, 13))::BIGINT
              % 1000000 AS u
-         FROM ev, range(0, $B) t(b)),
+         FROM ev, range(0, $Q243B) t(b)),
        wt AS (SELECT event_type, b, v,
            CASE WHEN u < 367879 THEN 0 WHEN u < 735759 THEN 1
                 WHEN u < 919699 THEN 2 WHEN u < 981012 THEN 3

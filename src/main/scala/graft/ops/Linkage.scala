@@ -87,6 +87,10 @@ object Linkage {
     (p.toLong, m.map(_.toLong), u.map(_.toLong))
   }
 
+  private val Q247MaxBlock = 1024
+  private val Q247TMatch = 10.0
+  private val Q247TPossible = 4.0
+
   /** q247 — FULL Fellegi–Sunter probabilistic record linkage on
     * `documents` [Fellegi & Sunter 1969; Winkler 1988]: multi-pass
     * blocked candidate pairs, an integer-micro EM fit of BOTH the m-
@@ -149,9 +153,9 @@ object Linkage {
     * LITERALS — scoring is a pure projection, no weight join at all.
     * u-init is two rounds of map-side aggregates per field. */
   def q247RecordLinkage(s: SparkSession, dir: String,
-                        maxBlock: Int = 1024,
-                        tMatch: Double = 10.0,
-                        tPossible: Double = 4.0): DataFrame = {
+                        maxBlock: Int = Q247MaxBlock,
+                        tMatch: Double = Q247TMatch,
+                        tPossible: Double = Q247TPossible): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
       .withColumn("toks", split(coalesce(col("text"), lit("")), " "))
@@ -239,9 +243,7 @@ object Linkage {
     * one MATERIALIZED CTE per iteration (the q234 technique) in
     * HUGEINT (products reach 10³⁶), and in-engine ln weights +
     * unrounded threshold compares over bit-equal integers. */
-  def q247OracleSql(maxBlock: Int = 1024,
-                    tMatch: Double = 10.0,
-                    tPossible: Double = 4.0): String = {
+  def q247OracleSql: String = {
     val fields = Seq("ft", "p8", "cb", "wb")
     val clampLo = "GREATEST(1::HUGEINT, LEAST(999999::HUGEINT, "
     def emIter(k: Int): String = {
@@ -303,10 +305,10 @@ object Linkage {
        uwb AS (SELECT coalesce(sum(n * (n - 1)), 0)::BIGINT AS u_wb FROM
          (SELECT count(*)::BIGINT AS n FROM f GROUP BY wb)),
        blka AS (SELECT f.*, doc_id % CAST(ceil(count(*) OVER
-           (PARTITION BY lang, source, lb) / $maxBlock.0) AS BIGINT)
+           (PARTITION BY lang, source, lb) / $Q247MaxBlock.0) AS BIGINT)
            AS sub FROM f),
        blkb AS (SELECT f.*, doc_id % CAST(ceil(count(*) OVER
-           (PARTITION BY p8) / $maxBlock.0) AS BIGINT) AS sub FROM f),
+           (PARTITION BY p8) / $Q247MaxBlock.0) AS BIGINT) AS sub FROM f),
        cand AS MATERIALIZED (
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            (a.ft = b.ft)::BIGINT AS agree_ft,
@@ -337,8 +339,8 @@ object Linkage {
          FROM cand CROSS JOIN w)
        SELECT doc_a, doc_b, agree_ft, agree_p8, agree_cb, agree_wb,
          round(s, 4) AS score,
-         CASE WHEN s >= $tMatch THEN 'match' ELSE 'possible' END AS verdict
-       FROM p WHERE s >= $tPossible
+         CASE WHEN s >= $Q247TMatch THEN 'match' ELSE 'possible' END AS verdict
+       FROM p WHERE s >= $Q247TPossible
        ORDER BY doc_a, doc_b"""
   }
 }

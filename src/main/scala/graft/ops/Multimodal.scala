@@ -95,16 +95,18 @@ object Multimodal {
               round(col("mean_luma"), 6).as("mean_luma"))
       .orderBy(col("doc_id"))
 
+  private val Q65MaxEdge = 512
+
   /** q65 — resize planning under the oracle gate: chain [[resizeMeta]]
     * behind the decode stage and verify the target-dimension
     * arithmetic (aspect-preserving max-edge bound) against DuckDB. */
-  def q65ResizePlan(s: SparkSession, dir: String, maxEdge: Int = 512): DataFrame =
+  def q65ResizePlan(s: SparkSession, dir: String): DataFrame =
     resizeMeta(
         decodeImages(
           Tables.documents(s, dir)
             .select(col("doc_id"), col("text").cast("binary").as("payload")),
           "payload", "doc_id"),
-        maxEdge)
+        Q65MaxEdge)
       .select(col("doc_id"),
               col("width").cast("long").as("width"),
               col("height").cast("long").as("height"),
@@ -201,6 +203,10 @@ object Multimodal {
       }.toDF()
   }
 
+  /** q208's pHash Hamming radius; its 4x15 chunk banding is complete
+    * only up to 3. */
+  private val Q208MaxHamming = 3
+
   /** q208 — perceptual-hash frame NEAR-dup across videos: q97 catches
     * bit-identical frames (md5); this catches re-encoded /
     * slightly-corrupted copies the way image dedup actually does it —
@@ -223,10 +229,7 @@ object Multimodal {
     * signal and would quadratic-blow its bucket); verification is a
     * single XOR+popcount per candidate. Top-30 video pairs plan as
     * TakeOrderedAndProject. */
-  def q208FramePhash(s: SparkSession, dir: String,
-                     maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3,
-      s"4x15 chunk banding is complete only for hamming <= 3, got $maxHamming")
+  def q208FramePhash(s: SparkSession, dir: String): DataFrame = {
     // widen ahead of the frame explode + aHash HOF passes — q220's
     // measured stage-1 bottleneck, same kernel (OPTIMIZATION_r14.md)
     val frames = Tables.widen(Tables.documents(s, dir)
@@ -272,7 +275,7 @@ object Multimodal {
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
               col("p.fp_a").as("fp_a"), col("p.fp_b").as("fp_b"))
       .distinct()
-      .filter(bit_count(expr("fp_a ^ fp_b")) <= maxHamming)
+      .filter(bit_count(expr("fp_a ^ fp_b")) <= Q208MaxHamming)
     cand.groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_pairs"),
            min(bit_count(expr("fp_a ^ fp_b")).cast("long")).as("min_hamming"))
@@ -285,9 +288,7 @@ object Multimodal {
 
   /** DuckDB oracle for q208 — identical frame slices, aHash bits,
     * chunk keys, bucket cap, and XOR/popcount verify. */
-  def q208OracleSql(maxHamming: Int = 3): String = {
-    require(maxHamming <= 3,
-      s"4x15 chunk banding is complete only for hamming <= 3, got $maxHamming")
+  def q208OracleSql: String = {
     s"""WITH fr AS (SELECT doc_id, u AS f FROM (
          SELECT doc_id, unnest(list_transform(
            generate_series(0, (length(text) // 64 - 1) // 2),
@@ -311,12 +312,14 @@ object Multimodal {
            x.fp AS fp_a, y.fp AS fp_b
          FROM rare x JOIN rare y ON x.c = y.c AND x.ckey = y.ckey
            AND x.doc_id < y.doc_id
-         WHERE bit_count(xor(x.fp, y.fp)) <= $maxHamming)
+         WHERE bit_count(xor(x.fp, y.fp)) <= $Q208MaxHamming)
        SELECT doc_a, doc_b, count(*)::BIGINT AS n_pairs,
          min(bit_count(xor(fp_a, fp_b)))::BIGINT AS min_hamming
        FROM cand GROUP BY doc_a, doc_b
        ORDER BY n_pairs DESC, doc_a, doc_b LIMIT 30"""
   }
+
+  private val Q220MinDist = 30
 
   /** q220 — KEYFRAME SELECTION by scene change: within each video
     * (the q208 fake-decode convention: a document's text is the
@@ -335,8 +338,7 @@ object Multimodal {
     * not corpus size) and the per-video rollup that follows it.
     * Swapping the fake decode for a real codec changes only the
     * frame-bytes expression, as with q64/q66/q208. */
-  def q220Keyframes(s: SparkSession, dir: String,
-                    minDist: Int = 30): DataFrame = {
+  def q220Keyframes(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // widen BEFORE the frame explode + per-frame aHash HOFs — the
     // whole fingerprint build is stage-1 map work that a single-
@@ -359,7 +361,7 @@ object Multimodal {
       .withColumn("prev", lag(col("fp"), 1).over(w))
       .withColumn("is_key",
         when(col("prev").isNull ||
-             bit_count(expr("fp ^ prev")) >= minDist, 1L).otherwise(0L))
+             bit_count(expr("fp ^ prev")) >= Q220MinDist, 1L).otherwise(0L))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_frames"), sum(col("is_key")).as("n_key"))
       .select(col("doc_id"), col("n_frames"), col("n_key"),
@@ -369,7 +371,7 @@ object Multimodal {
 
   /** DuckDB oracle for q220 — identical frame slices, aHash bits,
     * lag window, and threshold. */
-  def q220OracleSql(minDist: Int = 30): String =
+  def q220OracleSql: String =
     s"""WITH fr AS (SELECT doc_id, j AS idx,
          substr(text, j * 128 + 1, 64) AS f
          FROM documents,
@@ -386,7 +388,7 @@ object Multimodal {
            lag(fp) OVER (PARTITION BY doc_id ORDER BY idx) AS prev FROM fp),
        k AS (SELECT doc_id,
            CASE WHEN prev IS NULL
-                     OR bit_count(xor(fp, prev)) >= $minDist
+                     OR bit_count(xor(fp, prev)) >= $Q220MinDist
                 THEN 1 ELSE 0 END AS is_key FROM lg)
        SELECT doc_id, count(*)::BIGINT AS n_frames,
          sum(is_key)::BIGINT AS n_key,

@@ -39,6 +39,8 @@ object Sampling {
   def hashRank52(c: Column): Column =
     conv(substring(md5(c), 1, 13), 16, 10).cast("long")
 
+  private val Q72K = 50
+
   /** q72 — balanced corpus sampling (the data-mixing stage): cap
     * every source at `k` docs, chosen as the k smallest content-hash
     * ranks — so the per-source subsample is reproducible across
@@ -52,7 +54,7 @@ object Sampling {
     * disaster), while the aggregator combines map-side and ships at
     * most k rows per source per partition. The oracle replays it as
     * the window formulation, which must agree exactly. */
-  def q72BalancedSample(s: SparkSession, dir: String, k: Int = 50): DataFrame = {
+  def q72BalancedSample(s: SparkSession, dir: String, k: Int = Q72K): DataFrame = {
     val d = Tables.documents(s, dir)
     import d.sparkSession.implicits._
     import graft.functions.TopK
@@ -130,6 +132,8 @@ object Sampling {
       .orderBy(col("source"))
   }
 
+  private val Q85DfCap = 256
+
   /** q85 — inverted-index build: per token, the document frequency,
     * posting-list bounds (first/last doc), and — for tokens with
     * df ≤ dfCap — the full posting list surfaced as md5-of-list so
@@ -148,7 +152,7 @@ object Sampling {
     * assembled ONLY for the df ≤ dfCap survivors via a semi-join, so
     * every collect_list buffer is ≤ dfCap entries by construction. */
   def q85InvertedIndex(s: SparkSession, dir: String,
-                       dfCap: Int = 256): DataFrame = {
+                       dfCap: Int = Q85DfCap): DataFrame = {
     // distinct + one hash exchange on token, PERSISTED: the stats
     // aggregate, the semi-join probe and the capped collect all read
     // the cached token-partitioned frame (InMemoryRelation keeps the
@@ -188,6 +192,8 @@ object Sampling {
     * At 100 TB you'd swap the exact window for approx_percentile
     * fences at a 10⁻³ error budget; the exact form is the oracle-able
     * contract. */
+  private val Q93bAccuracy = 10000
+
   /** q93b — the 100 TB twin of [[q93DecileBins]] (VERDICT r5 #5,
     * following the q42/q53 exact/approx pairing): decile fences from
     * `percentile_approx` (one mergeable-sketch aggregation — map-side
@@ -201,15 +207,14 @@ object Sampling {
     * differs between engines, so there is no cross-engine hash
     * oracle — the error-bound spec is the correctness contract
     * (q41/q53 precedent). */
-  def q93bApproxDecileBins(s: SparkSession, dir: String,
-                           accuracy: Int = 10000): DataFrame = {
+  def q93bApproxDecileBins(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("source"), col("doc_id"), col("n_chars"))
     val fences = docs.groupBy(col("source"))
       .agg(percentile_approx(
              col("n_chars"),
              typedLit((1 to 9).map(_ / 10.0)),
-             lit(accuracy)).as("fences"))
+             lit(Q93bAccuracy)).as("fences"))
     docs.join(broadcast(fences), Seq("source"))
       .withColumn("decile",
         (size(filter(col("fences"), f => f < col("n_chars"))) + 1)
@@ -250,6 +255,8 @@ object Sampling {
     * token), so (source, cum_tokens) is a total order. At 100 TB the
     * per-source sort is the only cost and is exactly the sort a
     * budgeted selection needs; nothing global exists. */
+  private val Q105K = 10
+
   /** q105 — weighted priority sampling per source: the k docs with
     * the smallest `hash52(text) div weight` priorities (weight =
     * n_chars), so heavier docs draw proportionally smaller
@@ -266,8 +273,7 @@ object Sampling {
     * exists (the window formulation the oracle replays would
     * one-partition-per-source collapse at corpus scale). Priorities
     * are ≤ 2^52 so the aggregator's double scores stay exact. */
-  def q105WeightedSample(s: SparkSession, dir: String,
-                         k: Int = 10): DataFrame = {
+  def q105WeightedSample(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
     import d.sparkSession.implicits._
     import graft.functions.TopK
@@ -280,7 +286,7 @@ object Sampling {
       // TopK keeps score DESC with id-asc ties; negate so the k
       // smallest priorities win
       .mapValues { case (_, id, p) => TopK.Scored(id, -p.toDouble) }
-      .agg(TopK.topK(k).toColumn.name("top"))
+      .agg(TopK.topK(Q105K).toColumn.name("top"))
       .flatMap { case (src, top) =>
         top.zipWithIndex.map { case (sc, i) =>
           (src, sc.id, -sc.score.toLong, (i + 1).toLong) } }
@@ -459,8 +465,10 @@ object Sampling {
   private val negLenBucket: Column =
     struct((-col("n_tokens")).as("nl"), expr("doc_id div 256L").as("dr"))
 
+  private val Q103Budget = 1500L
+
   def q103TokenBudget(s: SparkSession, dir: String,
-                      budget: Long = 1500): DataFrame = {
+                      budget: Long = Q103Budget): DataFrame = {
     val sized = Tables.documents(s, dir)
       .select(col("source"), col("doc_id"),
               size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
@@ -470,6 +478,8 @@ object Sampling {
       .select(col("source"), col("doc_id"), col("n_tokens"), col("cum_tokens"))
       .orderBy(col("source"), col("cum_tokens"))
   }
+
+  private val Q151Budget = 4096L
 
   /** q151 — training-shard assignment: docs are packed into contiguous
     * shards of ≤ `budget` tokens by a running token total (a doc whose
@@ -484,14 +494,13 @@ object Sampling {
     * (source, bucket) window partitions, offsets reconciled from the
     * tiny totals frame); the manifest aggregation is a follow-up
     * groupBy. */
-  def q151ShardPack(s: SparkSession, dir: String,
-                    budget: Long = 4096L): DataFrame = {
+  def q151ShardPack(s: SparkSession, dir: String): DataFrame = {
     val sized = Tables.documents(s, dir)
       .select(col("source"), col("doc_id"),
               size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
     distributedPrefix(sized, docIdBucket, Seq(col("doc_id")))
       .withColumn("start_offset", col("cum_before"))
-      .withColumn("shard_id", expr(s"start_offset div ${budget}L"))
+      .withColumn("shard_id", expr(s"start_offset div ${Q151Budget}L"))
       .groupBy(col("source"), col("shard_id"))
       .agg(count(lit(1)).as("n_docs"),
            sum(col("n_tokens")).cast("long").as("shard_tokens"),
@@ -516,6 +525,8 @@ object Sampling {
       .withColumn("b_arr", expr(s"(rn_arr - 1L) div $batchSize"))
   }
 
+  private val Q153BatchSize = 32
+
   /** q153 — length-bucketed batch padding audit: docs sorted by token
     * count DESC within each source and cut into fixed-size batches of
     * `batchSize`; a batch pads every member to its longest doc, so
@@ -528,12 +539,11 @@ object Sampling {
     * [[distributedPrefix]] (length-bucketed and doc_id-bucketed), so
     * neither routes a whole source through one window partition;
     * batch stats are a groupBy over batch ids. */
-  def q153PadBatching(s: SparkSession, dir: String,
-                      batchSize: Int = 32): DataFrame = {
+  def q153PadBatching(s: SparkSession, dir: String): DataFrame = {
     // persist: both waste rollups consume the double-prefix frame —
     // uncached, the scan+tokenize+two-prefix chain runs twice (r7
     // single-planning audit); the cache is |docs| rows of five longs
-    val sized = q153SizedFrame(s, dir, batchSize)
+    val sized = q153SizedFrame(s, dir, Q153BatchSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val lenWaste = sized.groupBy(col("source"), col("b_len"))
       .agg((count(lit(1)) * max(col("n_tokens")) - sum(col("n_tokens")))
@@ -729,7 +739,7 @@ object Sampling {
   /** DuckDB oracle for q182 — q73's rule chain, q177's recursive
     * waterfill level, the per-source (score desc, doc_id) running
     * sum, and the same maximal-prefix predicate. */
-  def q182OracleSql(): String =
+  def q182OracleSql: String =
     """WITH RECURSIVE
        td AS (SELECT source, doc_id, string_split(text, ' ') AS toks,
                 length(text) AS len FROM documents),
@@ -776,6 +786,9 @@ object Sampling {
          (sum(n_tokens) * 1000000 // final_alloc)::BIGINT AS util_micro
        FROM sel GROUP BY source, final_alloc ORDER BY source"""
 
+  private val Q192TargetLang = "en"
+  private val Q192K = 50
+
   /** q192 — DSIR-style importance weighting for data selection (Xie
     * et al., NeurIPS 2023: Data Selection via Importance Resampling):
     * score every document by how much its unigram distribution looks
@@ -804,8 +817,7 @@ object Sampling {
     * vocab-against-doc-words on the word key; and the final top-k is
     * a TakeOrderedAndProject — map-side partial top-k, never a global
     * sort. */
-  def q192DsirWeights(s: SparkSession, dir: String,
-                      targetLang: String = "en", k: Int = 50): DataFrame = {
+  def q192DsirWeights(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val dw = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("lang"),
@@ -816,7 +828,7 @@ object Sampling {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val cnt = dw.groupBy(col("w"))
       .agg(sum(col("c")).as("b"),
-           coalesce(sum(when(col("lang") === targetLang, col("c"))), lit(0L))
+           coalesce(sum(when(col("lang") === Q192TargetLang, col("c"))), lit(0L))
              .as("a"))
     val t = cnt.agg(sum(col("a")), sum(col("b")), count(lit(1))).collect()(0)
     val (nt, nc, v) = (t.getLong(0), t.getLong(1), t.getLong(2))
@@ -829,12 +841,12 @@ object Sampling {
            sum(col("c")).as("n_tokens"))
       .select(col("doc_id"), col("source"), col("lang"), col("n_tokens"),
               expr("num div n_tokens").as("w_micro"))
-      .orderBy(col("w_micro").desc, col("doc_id")).limit(k)
+      .orderBy(col("w_micro").desc, col("doc_id")).limit(Q192K)
   }
 
   /** DuckDB oracle for q192 — identical smoothing, identical integer
     * ratio and mean, identical (weight DESC, doc_id) top-k. */
-  def q192OracleSql(targetLang: String = "en", k: Int = 50): String =
+  def q192OracleSql: String =
     s"""WITH tw AS (SELECT doc_id, source, lang, w FROM (
            SELECT doc_id, source, lang,
              unnest(string_split(text, ' ')) AS w FROM documents)
@@ -842,7 +854,7 @@ object Sampling {
        dw AS (SELECT doc_id, source, lang, w, count(*)::BIGINT AS c
          FROM tw GROUP BY ALL),
        cnt AS (SELECT w, sum(c)::BIGINT AS b,
-           coalesce(sum(CASE WHEN lang = '$targetLang' THEN c END), 0)::BIGINT AS a
+           coalesce(sum(CASE WHEN lang = '$Q192TargetLang' THEN c END), 0)::BIGINT AS a
          FROM dw GROUP BY w),
        t AS (SELECT sum(a)::BIGINT AS nt, sum(b)::BIGINT AS nc,
            count(*)::BIGINT AS v FROM cnt),
@@ -852,7 +864,7 @@ object Sampling {
            sum(c * s_micro)::BIGINT AS num, sum(c)::BIGINT AS n_tokens
          FROM dw JOIN sc USING (w) GROUP BY ALL)
        SELECT doc_id, source, lang, n_tokens, num // n_tokens AS w_micro
-       FROM wts ORDER BY w_micro DESC, doc_id LIMIT $k"""
+       FROM wts ORDER BY w_micro DESC, doc_id LIMIT $Q192K"""
 
   /** q210 — per-cell frequency capping (the RefinedWeb/FineWeb
     * "per-domain cap" move, on the (source, lang) cells this corpus
@@ -927,6 +939,9 @@ object Sampling {
        FROM cells JOIN kept USING (source, lang)
        ORDER BY source, lang"""
 
+  private val Q229M = 4096
+  private val Q229K = 50
+
   /** q229 — DSIR-style importance weights for data selection [Xie et
     * al., NeurIPS 2023]: score each raw-pool document by how much its
     * hashed n-gram distribution looks like a TARGET domain sample,
@@ -950,8 +965,7 @@ object Sampling {
     * map-side probe join and one doc-keyed integer sum; top-k is a
     * TakeOrdered. This is the production DSIR shape: the model IS a
     * fixed-size table, the corpus is touched twice map-side. */
-  def q229DsirWeights(s: SparkSession, dir: String,
-                      m: Int = 4096, k: Int = 50): DataFrame = {
+  def q229DsirWeights(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.rollingHash31
     val feats = Tables.documents(s, dir)
       .select(col("doc_id"),
@@ -963,7 +977,7 @@ object Sampling {
       .select(col("doc_id"), col("nib"),
               explode(col("grams")).as("gram"))
       .select(col("doc_id"), col("nib"),
-              pmod(rollingHash31(col("gram")), lit(m.toLong)).as("b"))
+              pmod(rollingHash31(col("gram")), lit(Q229M.toLong)).as("b"))
     // NOT persisted: g is read twice, but it is the corpus-sized
     // exploded feature stream — caching it would cost more storage
     // than the cheap explode+hash recompute at 100 TB (the opposite
@@ -991,16 +1005,16 @@ object Sampling {
       .select(col("doc_id"), col("n_feats"),
               (col("s_llr") + col("n_feats") *
                  floor(lit(1e6) *
-                       log((col("r_tot") + lit(m.toDouble)) /
-                           (col("t_tot") + lit(m.toDouble)))).cast("long"))
+                       log((col("r_tot") + lit(Q229M.toDouble)) /
+                           (col("t_tot") + lit(Q229M.toDouble)))).cast("long"))
                 .as("weight_micro"))
       .orderBy(col("weight_micro").desc, col("doc_id"))
-      .limit(k)
+      .limit(Q229K)
   }
 
   /** DuckDB oracle for q229 — identical feature stream, bucket hash,
     * micro-quantized LLR table, and integer weight sum. */
-  def q229OracleSql(m: Int = 4096, k: Int = 50): String =
+  def q229OracleSql: String =
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks,
          ('0x' || substr(md5(text), 32, 1))::BIGINT AS nib FROM documents),
        f AS (SELECT doc_id, nib,
@@ -1011,7 +1025,7 @@ object Sampling {
        g AS (SELECT doc_id, nib,
          list_reduce(list_prepend(0, list_transform(string_split(u.gram, ''),
            ch -> ascii(ch)::BIGINT)), (acc, c) -> (acc * 31 + c) % ${graft.ops.Dedup.MhP})
-           % $m AS b
+           % $Q229M AS b
          FROM f, unnest(grams) AS u(gram)),
        counts AS (SELECT b,
          sum(CASE WHEN nib = 0 THEN 1 ELSE 0 END)::BIGINT AS ct,
@@ -1026,8 +1040,8 @@ object Sampling {
          sum(coalesce(llr_micro, 0))::BIGINT AS s_llr
          FROM g LEFT JOIN llr USING (b) WHERE nib <> 0 GROUP BY doc_id)
        SELECT doc_id, n_feats,
-         (s_llr + n_feats * floor(1e6 * ln((r_tot + $m.0) / (t_tot + $m.0)))::BIGINT)
+         (s_llr + n_feats * floor(1e6 * ln((r_tot + $Q229M.0) / (t_tot + $Q229M.0)))::BIGINT)
            AS weight_micro
        FROM sc, tot
-       ORDER BY weight_micro DESC, doc_id LIMIT $k"""
+       ORDER BY weight_micro DESC, doc_id LIMIT $Q229K"""
 }

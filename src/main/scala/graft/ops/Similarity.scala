@@ -39,6 +39,15 @@ object Similarity {
   def l2normD(a: Column): Column =
     sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x))
 
+  /** The IVF index the q27 family learns (q27, q81, q83, q102, q128,
+    * q245, q250): cells, Lloyd rounds, probed cells, the training-sample
+    * bound, and the embedding width. */
+  private val IvfCells = 16
+  private val IvfIters = 2
+  private val IvfProbes = 4
+  private val TrainSample = 65536
+  private val EmbDim = 64
+
   /** Deterministic spherical k-means for the IVF coarse quantizer
     * (VERDICT r1 #2): Lloyd's with a FIXED iteration count, seeded
     * from the first C vectors, centroid components rounded to 6
@@ -63,7 +72,7 @@ object Similarity {
     * (c_id, c_emb: array<double>) — empty cells keep their previous
     * centroid. */
   def learnCentroids(e: DataFrame, C: Int, iters: Int,
-                     trainSample: Int = 65536): DataFrame = {
+                     trainSample: Int = TrainSample): DataFrame = {
     val s = e.sparkSession
     val sample = e.filter(col("vec_id") < trainSample)
       .select(col("vec_id").cast("long"), col("embedding"))
@@ -188,7 +197,8 @@ object Similarity {
     * nprobe/C of the data. */
   /** Learned IVF centroids with norms, broadcast-ready: (c_id, c_emb,
     * c_nrm). Shared by q27 and the partition-by-cell layout demo. */
-  private[graft] def centroidsWithNorm(e: DataFrame, C: Int, iters: Int): DataFrame =
+  private[graft] def centroidsWithNorm(e: DataFrame, C: Int = IvfCells,
+                                       iters: Int = IvfIters): DataFrame =
     broadcast(
       learnCentroids(e, C, iters).withColumn("c_nrm", l2normD(col("c_emb")))
         .toDF("c_id", "c_emb", "c_nrm"))
@@ -209,11 +219,9 @@ object Similarity {
 
   def q27IvfTopK(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val C = 16
-    val nprobe = 4
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
-    val cent = centroidsWithNorm(e, C, iters = 2)
+    val cent = centroidsWithNorm(e)
     // argmax cell per vector: map-side partial agg, tiny shuffle
     val asg = assignCells(e, cent)
     // nprobe best cells per query vector
@@ -224,7 +232,7 @@ object Similarity {
         .select(col("q_id"), col("q_emb"), col("q_nrm"), col("c_id"),
                 (dotFD(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm"))).as("csim"))
         .withColumn("pr", row_number().over(wprobe))
-        .filter(col("pr") <= nprobe)
+        .filter(col("pr") <= IvfProbes)
         .select(col("q_id"), col("q_emb"), col("q_nrm"), col("c_id").as("cell")))
     val sim = dot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm"))
     // bounded top-k over the probed candidates (~nprobe/C of the
@@ -247,12 +255,10 @@ object Similarity {
     * `pred` restricts the INDEXED population (training sample, seed
     * centroids and cell assignment) — q245 learns and assigns on the
     * corpus only, with the ingest batch excluded. */
-  private def ivfLearnAssignCtes(C: Int, iters: Int, dim: Int,
-                                 trainSample: Int,
-                                 pred: String = "TRUE"): String = {
+  private def ivfLearnAssignCtes(pred: String = "TRUE"): String = {
     def withNrm(cte: String) =
       s"(SELECT c_id, c_emb, sqrt(list_sum(list_transform(c_emb, x -> x * x))) AS c_nrm FROM $cte)"
-    val iterCtes = (1 to iters).map { i =>
+    val iterCtes = (1 to IvfIters).map { i =>
       s"""asg_l$i AS (SELECT vec_id, embedding, cell FROM (
            SELECT e.vec_id, e.embedding, c.c_id AS cell,
              row_number() OVER (PARTITION BY e.vec_id ORDER BY
@@ -262,19 +268,19 @@ object Similarity {
            FROM et e CROSS JOIN ${withNrm(s"cent${i - 1}")} c) WHERE rn = 1),
          mean$i AS (SELECT cell AS c_id, list(m ORDER BY i) AS m_emb FROM (
            SELECT cell, i, round(avg(embedding[i + 1]::DOUBLE), 6) AS m
-           FROM asg_l$i, range($dim) t(i) GROUP BY cell, i) GROUP BY cell),
+           FROM asg_l$i, range($EmbDim) t(i) GROUP BY cell, i) GROUP BY cell),
          cent$i AS (SELECT p.c_id, coalesce(m.m_emb, p.c_emb) AS c_emb
            FROM cent${i - 1} p LEFT JOIN mean$i m USING (c_id))"""
     }.mkString(",\n         ")
     s"""e AS (SELECT vec_id, embedding,
          sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) AS nrm
          FROM embeddings),
-       et AS (SELECT * FROM e WHERE vec_id < $trainSample AND $pred),
+       et AS (SELECT * FROM e WHERE vec_id < $TrainSample AND $pred),
        cent0 AS (SELECT vec_id AS c_id,
          list_transform(embedding, x -> x::DOUBLE) AS c_emb
-         FROM embeddings WHERE vec_id < $C AND $pred),
+         FROM embeddings WHERE vec_id < $IvfCells AND $pred),
        $iterCtes,
-       cent AS (SELECT c_id, c_emb, c_nrm FROM ${withNrm(s"cent$iters")}),
+       cent AS (SELECT c_id, c_emb, c_nrm FROM ${withNrm(s"cent$IvfIters")}),
        asg0 AS (SELECT e.vec_id, e.embedding, e.nrm, c.c_id,
          list_sum(list_transform(list_zip(e.embedding, c.c_emb),
            p -> p[1]::DOUBLE * p[2])) / (e.nrm * c.c_nrm) AS csim
@@ -288,9 +294,8 @@ object Similarity {
   /** DuckDB oracle for q27 — replays learn+assign via
     * [[ivfLearnAssignCtes]], then the nprobe probe and exact
     * re-rank. */
-  def q27OracleSql(C: Int = 16, nprobe: Int = 4, iters: Int = 2,
-                   dim: Int = 64, trainSample: Int = 65536): String = {
-    s"""WITH ${ivfLearnAssignCtes(C, iters, dim, trainSample)},
+  def q27OracleSql: String = {
+    s"""WITH ${ivfLearnAssignCtes()},
        probes AS (SELECT q_id, q_emb, q_nrm, c_id AS cell FROM (
          SELECT q.vec_id AS q_id, q.embedding AS q_emb, q.nrm AS q_nrm, c.c_id,
            list_sum(list_transform(list_zip(q.embedding, c.c_emb),
@@ -298,7 +303,7 @@ object Similarity {
            row_number() OVER (PARTITION BY q.vec_id
                               ORDER BY csim DESC, c.c_id) AS pr
          FROM e q CROSS JOIN cent c WHERE q.vec_id < 8)
-         WHERE pr <= $nprobe),
+         WHERE pr <= $IvfProbes),
        scored AS (SELECT p.q_id, a.vec_id AS n_id,
          list_sum(list_transform(list_zip(p.q_emb, a.embedding),
            x -> x[1]::DOUBLE * x[2]::DOUBLE)) / (p.q_nrm * a.nrm) AS sim_exact
@@ -311,6 +316,8 @@ object Similarity {
        SELECT q_id, n_id, round(sim_exact, 6) AS sim, rn FROM r
        WHERE rn <= 5 ORDER BY q_id, rn"""
   }
+
+  private val Q245TopK = 5
 
   /** q245 — INCREMENTAL ANN ingest (VERDICT r12 #5, the embeddings
     * analog of q233's incremental near-dup ingest): a NEW vector
@@ -338,15 +345,14 @@ object Similarity {
     * [[topKPerQuery]] aggregator — map-side partials, ≤ k rows per
     * batch vector cross the shuffle, never a per-query window sort
     * over candidates. */
-  def q245IngestAnn(s: SparkSession, dir: String, C: Int = 16,
-                    nprobe: Int = 4, k: Int = 5): DataFrame = {
+  def q245IngestAnn(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val all = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
               l2norm(col("embedding")).as("nrm"))
     val corpus = all.filter(pmod(col("vec_id"), lit(10L)) =!= 0L)
     val batch = all.filter(pmod(col("vec_id"), lit(10L)) === 0L)
-    val cent = centroidsWithNorm(corpus, C, iters = 2)
+    val cent = centroidsWithNorm(corpus)
     // THE INDEX: corpus cell assignment, persisted — the batch
     // probes it; nothing corpus-sized is recomputed per batch vector
     val index = assignCells(corpus, cent)
@@ -360,7 +366,7 @@ object Similarity {
                 (dotFD(col("q_emb"), col("c_emb")) /
                  (col("q_nrm") * col("c_nrm"))).as("csim"))
         .withColumn("pr", row_number().over(wprobe))
-        .filter(col("pr") <= nprobe)
+        .filter(col("pr") <= IvfProbes)
         .select(col("q_id"), col("q_emb"), col("q_nrm"),
                 col("c_id").as("cell"), col("pr")))
     val ownCell = probes.filter(col("pr") === 1)
@@ -369,7 +375,7 @@ object Similarity {
     topKPerQuery(
         probes.join(index, "cell")
           .select(col("q_id"), col("vec_id").as("n_id"), sim.as("sim_exact")),
-        k)
+        Q245TopK)
       .join(ownCell, Seq("q_id"))
       .select(col("q_id").as("batch_vec"), col("assigned_cell"),
               col("n_id"), round(col("sim_exact"), 6).as("sim"), col("rn"))
@@ -379,11 +385,8 @@ object Similarity {
   /** DuckDB oracle for q245 — [[ivfLearnAssignCtes]] with the corpus
     * predicate, then the batch probe, own-cell pick and exact
     * re-rank. */
-  def q245OracleSql(C: Int = 16, nprobe: Int = 4, k: Int = 5,
-                    iters: Int = 2, dim: Int = 64,
-                    trainSample: Int = 65536): String = {
-    s"""WITH ${ivfLearnAssignCtes(C, iters, dim, trainSample,
-                                  pred = "vec_id % 10 <> 0")},
+  def q245OracleSql: String = {
+    s"""WITH ${ivfLearnAssignCtes(pred = "vec_id % 10 <> 0")},
        q AS (SELECT vec_id, embedding, nrm FROM e WHERE vec_id % 10 = 0),
        pr AS (SELECT q_id, q_emb, q_nrm, c_id AS cell, pr FROM (
          SELECT q.vec_id AS q_id, q.embedding AS q_emb, q.nrm AS q_nrm,
@@ -393,7 +396,7 @@ object Similarity {
            row_number() OVER (PARTITION BY q.vec_id
                               ORDER BY csim DESC, c.c_id) AS pr
          FROM q CROSS JOIN cent c)
-         WHERE pr <= $nprobe),
+         WHERE pr <= $IvfProbes),
        own AS (SELECT q_id, cell AS assigned_cell FROM pr WHERE pr = 1),
        scored AS (SELECT p.q_id, a.vec_id AS n_id,
          list_sum(list_transform(list_zip(p.q_emb, a.embedding),
@@ -407,7 +410,7 @@ object Similarity {
        SELECT r.q_id AS batch_vec, own.assigned_cell, r.n_id,
          round(r.sim_exact, 6) AS sim, r.rn
        FROM r JOIN own ON own.q_id = r.q_id
-       WHERE r.rn <= $k ORDER BY batch_vec, rn"""
+       WHERE r.rn <= $Q245TopK ORDER BY batch_vec, rn"""
   }
 
   /** Sign-bit LSH cell key for one band: bit i of the key is
@@ -418,6 +421,10 @@ object Similarity {
     dims.zipWithIndex.foldLeft(lit(0L)) { case (acc, (d, i)) =>
       acc + when(get(emb, lit(d)) >= 0f, lit(1L << i)).otherwise(lit(0L))
     }
+
+  /** Random-hyperplane LSH banding of q35, q190 and q195. */
+  private val LshBands = 8
+  private val LshBitsPerBand = 8
 
   /** q35 — embedding-cosine near-dup detection, LSH-celled (VERDICT
     * r1 #4): candidates are pairs sharing a sign-bit cell in any of
@@ -431,8 +438,6 @@ object Similarity {
     * The corpus is persisted: it feeds the banding and both candidate
     * join-backs (same single-scan reasoning as q24's docSh). */
   def q35EmbeddingNearDup(s: SparkSession, dir: String): DataFrame = {
-    val bands = 8
-    val bitsPerBand = 8
     val e = Tables.embeddings(s, dir)
       .select(col("label"), col("vec_id"), col("embedding"),
               l2norm(col("embedding")).as("nrm"))
@@ -441,10 +446,10 @@ object Similarity {
     // explode(array(...)): Generate evaluates an inlined computed
     // array far slower than the same expressions in a Project (the
     // round-1 shingle trap), and the sign-test chains are non-trivial
-    val celled = (0 until bands).map { bnd =>
+    val celled = (0 until LshBands).map { bnd =>
       e.select(col("vec_id"), lit(bnd).as("band"),
                signCellKey(col("embedding"),
-                 (bnd * bitsPerBand until (bnd + 1) * bitsPerBand).map(_ % 64))
+                 (bnd * LshBitsPerBand until (bnd + 1) * LshBitsPerBand).map(_ % 64))
                  .as("cell"))
     }.reduce(_ unionByName _)
     val ca = celled.toDF("id_a", "band_a", "cell_a")
@@ -476,10 +481,10 @@ object Similarity {
     * into a cells-UNION mirroring [[q35EmbeddingNearDup]]: same
     * bands, same bit weights, same `>= 0` sign test (exact float
     * comparison — identical in both engines). */
-  def q35OracleSql(bands: Int = 8, bitsPerBand: Int = 8): String = {
-    val bandSelects = (0 until bands).map { bnd =>
-      val key = (0 until bitsPerBand).map { i =>
-        val d = (bnd * bitsPerBand + i) % 64
+  def q35OracleSql: String = {
+    val bandSelects = (0 until LshBands).map { bnd =>
+      val key = (0 until LshBitsPerBand).map { i =>
+        val d = (bnd * LshBitsPerBand + i) % 64
         s"(embedding[${d + 1}] >= 0)::BIGINT * ${1L << i}"
       }.mkString(" + ")
       s"SELECT vec_id, $bnd AS band, $key AS cell FROM e"
@@ -553,7 +558,7 @@ object Similarity {
     * clusters carry forward, L2 argmin ties pick the smaller code.
     * Returns codebooks(m)(k) = the codeword vector. */
   def learnPqCodebooks(e: DataFrame, M: Int, K: Int, subDim: Int,
-                       iters: Int, trainSample: Int = 65536)
+                       iters: Int, trainSample: Int = TrainSample)
       : Array[Array[Array[Double]]] = {
     val sample = e.filter(col("vec_id") < trainSample)
       .select(col("vec_id").cast("long"), col("embedding"))
@@ -599,6 +604,14 @@ object Similarity {
     }
   }
 
+  /** q75's product quantizer: subspaces, codewords each, subspace width,
+    * k-means rounds, and the exact re-rank depth. */
+  private val PqM = 8
+  private val PqK = 16
+  private val PqSubDim = 8
+  private val PqIters = 2
+  private val PqR = 64
+
   /** q75 — product-quantization ANN with exact re-ranking (the
     * IVFADC + re-rank recipe, Jégou et al., TPAMI 2011): learn
     * M=8 × K=16 codebooks ([[learnPqCodebooks]]), encode every
@@ -624,19 +637,18 @@ object Similarity {
     * R/N of the corpus. */
   def q75PqTopK(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val subDim = 8; val iters = 2; val R = 64
     val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val cb = learnPqCodebooks(e, M, K, subDim, iters)
+    val cb = learnPqCodebooks(e, PqM, PqK, PqSubDim, PqIters)
     // queries collected driver-side (tiny, fixed set) → distance table
     val queries = e.filter(col("vec_id") < 8).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
     val dtab: Seq[Seq[Seq[Long]]] = queries.toSeq.map { case (_, q) =>
-      (0 until M).map { m =>
-        (0 until K).map { k =>
+      (0 until PqM).map { m =>
+        (0 until PqK).map { k =>
           var d = 0.0; var i = 0
-          while (i < subDim) {
-            val t = q(m * subDim + i).toDouble - cb(m)(k)(i)
+          while (i < PqSubDim) {
+            val t = q(m * PqSubDim + i).toDouble - cb(m)(k)(i)
             d += t * t; i += 1
           }
           math.floor(d * 1e6 + 0.5).toLong
@@ -649,11 +661,11 @@ object Similarity {
     // bit-identical to the M×K HOF-distance formulation it replaced,
     // which cost a >1 MB task binary and interpreted lambdas)
     val codes = graft.functions.VectorFunctions.pqEncode(
-      col("embedding"), cb, subDim)
+      col("embedding"), cb, PqSubDim)
     val dtabLit = typedLit(dtab)
     val qIdsLit = typedLit(qIds)
     val qEmbLit = typedLit(queries.toSeq.map(_._2.toSeq.map(_.toDouble)))
-    val adc = (0 until M).map(m =>
+    val adc = (0 until PqM).map(m =>
       element_at(element_at(element_at(dtabLit, col("qi") + 1), m + 1),
                  element_at(col("codes"), m + 1) + 1)).reduce(_ + _)
     val wshort = Window.partitionBy(col("q_id"))
@@ -669,7 +681,7 @@ object Similarity {
               col("n_id"), adc.cast("long").as("adc_micro"))
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("rs", row_number().over(wshort))
-      .filter(col("rs") <= R)
+      .filter(col("rs") <= PqR)
       .select(col("qi"), col("q_id"), col("n_id"), col("adc_micro"))
     // exact re-rank: fetch shortlist embeddings, exact L2 vs the
     // query literal
@@ -693,15 +705,13 @@ object Similarity {
     * tie-break, round-6 means, empty-code carry-forward — the
     * [[q27OracleSql]] technique), then encodes, builds the micro-int
     * distance table, and sums BIGINTs. */
-  def q75OracleSql(M: Int = 8, K: Int = 16, subDim: Int = 8,
-                   iters: Int = 2, R: Int = 64,
-                   trainSample: Int = 65536): String = {
+  def q75OracleSql: String = {
     val l2 = "list_sum(list_transform(list_zip(%s, %s), " +
       "p -> (p[1]::DOUBLE - p[2]) * (p[1]::DOUBLE - p[2])))"
     def dist(a: String, b: String) = l2.format(a, b)
-    val perSub = (0 until M).map { m =>
-      val lo = m * subDim + 1; val hi = (m + 1) * subDim
-      val iterCtes = (1 to iters).map { i =>
+    val perSub = (0 until PqM).map { m =>
+      val lo = m * PqSubDim + 1; val hi = (m + 1) * PqSubDim
+      val iterCtes = (1 to PqIters).map { i =>
         s"""asg${m}_$i AS (SELECT vec_id, sub, k FROM (
              SELECT s.vec_id, s.sub, c.k,
                row_number() OVER (PARTITION BY s.vec_id ORDER BY
@@ -709,7 +719,7 @@ object Similarity {
              FROM sub$m s CROSS JOIN cw${m}_${i - 1} c) WHERE rn = 1),
            mean${m}_$i AS (SELECT k, list(v ORDER BY d) AS cw FROM (
              SELECT k, d, round(avg(sub[d + 1]::DOUBLE), 6) AS v
-             FROM asg${m}_$i, range($subDim) t(d) GROUP BY k, d)
+             FROM asg${m}_$i, range($PqSubDim) t(d) GROUP BY k, d)
              GROUP BY k),
            cw${m}_$i AS (SELECT p.k, coalesce(m.cw, p.cw) AS cw
              FROM cw${m}_${i - 1} p LEFT JOIN mean${m}_$i m USING (k))"""
@@ -718,27 +728,27 @@ object Similarity {
              FROM et),
            cw${m}_0 AS (SELECT vec_id::BIGINT AS k,
              list_transform(sub, x -> x::DOUBLE) AS cw
-             FROM sub$m WHERE vec_id < $K),
+             FROM sub$m WHERE vec_id < $PqK),
            $iterCtes"""
     }.mkString(",\n         ")
-    val cbUnion = (0 until M)
-      .map(m => s"SELECT $m AS m, k, cw FROM cw${m}_$iters")
+    val cbUnion = (0 until PqM)
+      .map(m => s"SELECT $m AS m, k, cw FROM cw${m}_$PqIters")
       .mkString(" UNION ALL ")
     s"""WITH et AS (SELECT vec_id, embedding FROM embeddings
-           WHERE vec_id < $trainSample),
+           WHERE vec_id < $TrainSample),
          $perSub,
          cb AS ($cbUnion),
          allsub AS (SELECT vec_id, m,
-             list_slice(embedding, m * $subDim + 1, (m + 1) * $subDim) AS sub
-           FROM embeddings, range($M) t(m)),
+             list_slice(embedding, m * $PqSubDim + 1, (m + 1) * $PqSubDim) AS sub
+           FROM embeddings, range($PqM) t(m)),
          enc AS (SELECT vec_id, m, k AS code FROM (
            SELECT a.vec_id, a.m, c.k,
              row_number() OVER (PARTITION BY a.vec_id, a.m ORDER BY
                ${dist("a.sub", "c.cw")} ASC, c.k) AS rn
            FROM allsub a JOIN cb c USING (m)) WHERE rn = 1),
          qsub AS (SELECT vec_id AS q_id, m,
-             list_slice(embedding, m * $subDim + 1, (m + 1) * $subDim) AS sub
-           FROM embeddings, range($M) t(m) WHERE vec_id < 8),
+             list_slice(embedding, m * $PqSubDim + 1, (m + 1) * $PqSubDim) AS sub
+           FROM embeddings, range($PqM) t(m) WHERE vec_id < 8),
          dtab AS (SELECT s.q_id, s.m, c.k,
              CAST(floor(${dist("s.sub", "c.cw")} * 1000000.0 + 0.5)
                   AS BIGINT) AS d_micro
@@ -751,7 +761,7 @@ object Similarity {
            SELECT q_id, n_id, adc_micro,
              row_number() OVER (PARTITION BY q_id
                ORDER BY adc_micro, n_id) AS rs
-           FROM adc WHERE n_id <> q_id) WHERE rs <= $R),
+           FROM adc WHERE n_id <> q_id) WHERE rs <= $PqR),
          rr AS (SELECT s.q_id, s.n_id, s.adc_micro,
              CAST(floor(list_sum(list_transform(
                list_zip(en.embedding, qe.embedding),
@@ -781,6 +791,8 @@ object Similarity {
            round(avg(col("d0")), 6).as("avg_dim0"))
       .orderBy(col("label"))
 
+  private val Q81Tau = 0.45
+
   /** q81 — SemDeDup (Abbas et al., 2023): semantic deduplication by
     * clustering embeddings with the learned IVF quantizer
     * ([[learnCentroids]], C=16) and dropping, within each cell, every
@@ -799,11 +811,10 @@ object Similarity {
     * it feeds both join sides and the final verdict, and without the
     * cache the crossJoin-against-centroids assignment would run
     * three times. */
-  def q81SemDedup(s: SparkSession, dir: String, tau: Double = 0.45): DataFrame = {
-    val C = 16
+  def q81SemDedup(s: SparkSession, dir: String, tau: Double = Q81Tau): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
-    val cent = centroidsWithNorm(e, C, iters = 2)
+    val cent = centroidsWithNorm(e)
     val asg = assignCells(e, cent)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val aa = asg.select(col("cell").as("cell_a"), col("vec_id").as("id_a"),
@@ -841,7 +852,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
-    val cent = centroidsWithNorm(e, C = 16, iters = 2)
+    val cent = centroidsWithNorm(e)
     val asg = assignCells(e, cent).select(col("vec_id"), col("cell"))
     val docToks = Tables.documents(s, dir)
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
@@ -858,9 +869,8 @@ object Similarity {
 
   /** DuckDB oracle for q83 — learn+assign via [[ivfLearnAssignCtes]],
     * then the doc⋈cell token rollup. */
-  def q83OracleSql(C: Int = 16, iters: Int = 2, dim: Int = 64,
-                   trainSample: Int = 65536): String =
-    s"""WITH ${ivfLearnAssignCtes(C, iters, dim, trainSample)},
+  def q83OracleSql: String =
+    s"""WITH ${ivfLearnAssignCtes()},
        dt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
               FROM documents),
        cnts AS (SELECT a.cell, t.token, count(*)::BIGINT AS cnt
@@ -876,14 +886,13 @@ object Similarity {
   /** DuckDB oracle for q81 — replays learn+assign via
     * [[ivfLearnAssignCtes]], then the within-cell smaller-id
     * neighbor test. */
-  def q81OracleSql(C: Int = 16, iters: Int = 2, dim: Int = 64,
-                   trainSample: Int = 65536, tau: Double = 0.45): String =
-    s"""WITH ${ivfLearnAssignCtes(C, iters, dim, trainSample)},
+  def q81OracleSql: String =
+    s"""WITH ${ivfLearnAssignCtes()},
        drops AS (SELECT DISTINCT b.vec_id
          FROM asg a JOIN asg b
          ON a.cell = b.cell AND a.vec_id < b.vec_id
          WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                 p -> p[1]::DOUBLE * p[2]::DOUBLE)) / (a.nrm * b.nrm) >= $tau)
+                 p -> p[1]::DOUBLE * p[2]::DOUBLE)) / (a.nrm * b.nrm) >= $Q81Tau)
        SELECT g.vec_id, g.cell,
          CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
        FROM asg g LEFT JOIN drops d USING (vec_id)
@@ -942,7 +951,7 @@ object Similarity {
   def q128IvfBalance(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
-    val cent = centroidsWithNorm(e, C = 16, iters = 2)
+    val cent = centroidsWithNorm(e)
     // persist: the C-row cell-population frame feeds both the total
     // and the share projection — uncached, the grand total re-runs
     // the whole assign (a second distance pass over every vector).
@@ -957,9 +966,8 @@ object Similarity {
   }
 
   /** DuckDB oracle for q128 — learn+assign replay, grouped by cell. */
-  def q128OracleSql(C: Int = 16, iters: Int = 2, dim: Int = 64,
-                    trainSample: Int = 65536): String =
-    s"""WITH ${ivfLearnAssignCtes(C, iters, dim, trainSample)},
+  def q128OracleSql: String =
+    s"""WITH ${ivfLearnAssignCtes()},
        sz AS (SELECT cell, count(*) AS n_vecs FROM asg GROUP BY cell),
        t AS (SELECT CAST(sum(n_vecs) AS BIGINT) AS n_total FROM sz)
        SELECT cell, n_vecs,
@@ -1013,14 +1021,14 @@ object Similarity {
   }
 
   /** DuckDB oracle for q125 — the same integer-centroid replay. */
-  def q125OracleSql(dim: Int = 64): String =
+  def q125OracleSql: String =
     s"""WITH e AS (SELECT vec_id, label,
          list_transform(embedding,
            x -> CAST(floor(x * 1e6 + 0.5) AS BIGINT)) AS m
          FROM embeddings),
        s AS (SELECT label, t.d,
                CAST(sum(m[t.d + 1]) AS BIGINT) AS sv, count(*) AS n
-             FROM e, range($dim) t(d) GROUP BY label, t.d),
+             FROM e, range($EmbDim) t(d) GROUP BY label, t.d),
        cent AS (SELECT label, list(sv // n ORDER BY d) AS cent FROM s
                 GROUP BY label),
        coh AS (SELECT e.label,
@@ -1039,9 +1047,8 @@ object Similarity {
   /** DuckDB oracle for q102 — one WITH chain holding both the exact
     * brute-force top-5 (q26's definition) and the IVF top-5 (q27's
     * learn+assign+probe replay), reduced to hits per query. */
-  def q102OracleSql(C: Int = 16, nprobe: Int = 4, iters: Int = 2,
-                    dim: Int = 64, trainSample: Int = 65536): String =
-    s"""WITH ${ivfLearnAssignCtes(C, iters, dim, trainSample)},
+  def q102OracleSql: String =
+    s"""WITH ${ivfLearnAssignCtes()},
        bsims AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
          list_sum(list_transform(list_zip(q.embedding, c.embedding),
            p -> p[1]::DOUBLE * p[2]::DOUBLE)) / (q.nrm * c.nrm) AS sim_exact
@@ -1056,7 +1063,7 @@ object Similarity {
            row_number() OVER (PARTITION BY q.vec_id
                               ORDER BY csim DESC, c.c_id) AS pr
          FROM e q CROSS JOIN cent c WHERE q.vec_id < 8)
-         WHERE pr <= $nprobe),
+         WHERE pr <= $IvfProbes),
        scored AS (SELECT p.q_id, a.vec_id AS n_id,
          list_sum(list_transform(list_zip(p.q_emb, a.embedding),
            x -> x[1]::DOUBLE * x[2]::DOUBLE)) / (p.q_nrm * a.nrm) AS sim_exact
@@ -1170,7 +1177,7 @@ object Similarity {
     * itself is a driver-built literal and carries no plan to audit. */
   private[graft] def q169ScatterTerms(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val d = 64
+    val d = EmbDim
     val shards = 64
     val quant = Tables.embeddings(s, dir).select(
       pmod(xxhash64(col("vec_id")), lit(shards)).as("g"),
@@ -1194,7 +1201,9 @@ object Similarity {
       .agg(sum(col("t").cast(dec)).as("s"))
   }
 
-  def q169PcaPower(s: SparkSession, dir: String, iters: Int = 8): DataFrame = {
+  private val Q169Iters = 8
+
+  def q169PcaPower(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // d²+d+1 rows — bounded collect (4161 for d=64), like the IVF
     // training sample. Everything below is driver-side exact math.
@@ -1212,7 +1221,7 @@ object Similarity {
     for (i <- 0 until d; j <- 0 until d)
       m(i)(j) = (n * m(i)(j) - lin(i) * lin(j)) / n // trunc, both engines
     var v = Array.tabulate(d)(i => BigInt(1000000 - 7001 * i))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to Q169Iters) {
       val w = Array.tabulate(d)(i =>
         (0 until d).foldLeft(BigInt(0))((acc, j) => acc + m(i)(j) * v(j)))
       val mx = w.iterator.map(_.abs).max
@@ -1227,8 +1236,8 @@ object Similarity {
     * positional unnest → micro quantize → exact HUGEINT scatter →
     * `iters` unrolled matvec+renormalize CTE pairs (`//` = trunc
     * division, bit-equal to the engine's BigInt `/`). */
-  def q169OracleSql(iters: Int = 8, d: Int = 64): String = {
-    val its = (1 to iters).map { k =>
+  def q169OracleSql: String = {
+    val its = (1 to Q169Iters).map { k =>
       val pv = if (k == 1) "v0" else s"v${k - 1}"
       s"""w$k AS (SELECT m.i AS i, SUM(m.mv * v.v) AS w
             FROM m JOIN $pv v ON v.i = m.j GROUP BY m.i),
@@ -1239,8 +1248,8 @@ object Similarity {
     s"""WITH q AS (SELECT vec_id, t.i AS i,
            CAST(floor(embedding[t.i]::DOUBLE * 10000 + 0.5) AS BIGINT) AS qv
            FROM embeddings,
-                (SELECT unnest(generate_series(1, $d)) AS i) t),
-       nn AS (SELECT (COUNT(*) // $d)::HUGEINT AS n FROM q),
+                (SELECT unnest(generate_series(1, $EmbDim)) AS i) t),
+       nn AS (SELECT (COUNT(*) // $EmbDim)::HUGEINT AS n FROM q),
        s AS (SELECT i, SUM(qv)::HUGEINT AS s FROM q GROUP BY i),
        p AS (SELECT a.i AS i, b.i AS j, SUM(a.qv * b.qv)::HUGEINT AS p
              FROM q a JOIN q b USING (vec_id) GROUP BY a.i, b.i),
@@ -1250,11 +1259,13 @@ object Similarity {
              JOIN s sa ON sa.i = p.i JOIN s sb ON sb.i = p.j
              CROSS JOIN nn),
        v0 AS (SELECT i, CAST(1000000 - 7001 * (i - 1) AS HUGEINT) AS v
-              FROM (SELECT unnest(generate_series(1, $d)) AS i)),
+              FROM (SELECT unnest(generate_series(1, $EmbDim)) AS i)),
        $its
-       SELECT i AS dim, CAST(v AS BIGINT) AS v_scaled FROM v$iters
+       SELECT i AS dim, CAST(v AS BIGINT) AS v_scaled FROM v$Q169Iters
        ORDER BY dim"""
   }
+
+  private val Q174K = 4
 
   /** q174 — greedy k-center coreset selection (farthest-point
     * traversal, the classic 2-approximation): pick the vector with
@@ -1277,7 +1288,7 @@ object Similarity {
     * scans. Output: one row per selected center in selection order,
     * with the distance that made it the farthest point (the covering
     * radius of the previous set). */
-  def q174KCenterCoreset(s: SparkSession, dir: String, k: Int = 4): DataFrame = {
+  def q174KCenterCoreset(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val q = Tables.embeddings(s, dir)
       .select(col("vec_id").cast("long").as("vec_id"),
@@ -1294,7 +1305,7 @@ object Similarity {
       val seed = q.orderBy(col("vec_id")).limit(1).collect()(0)
       var centers =
         Vector((1L, seed.getLong(0), seed.getSeq[Long](1).toArray, 0L))
-      for (step <- 2 to k) {
+      for (step <- 2 to Q174K) {
         val minDist = centers
           .map { case (_, _, cv, _) => sqDist(col("qv"), typedLit(cv.toSeq)) }
           .reduce(least(_, _))
@@ -1312,8 +1323,8 @@ object Similarity {
   /** DuckDB oracle for q174 — the same greedy traversal unrolled to
     * k CTE pairs (candidate distances, then argmax with the vec_id
     * tie-break) over the identical milli-quantized integer vectors. */
-  def q174OracleSql(k: Int = 4): String = {
-    val steps = (2 to k).map { j =>
+  def q174OracleSql: String = {
+    val steps = (2 to Q174K).map { j =>
       val prev = if (j == 2) "d1" else s"d${j - 1}"
       s"""c$j AS (SELECT vec_id, qv, d FROM $prev
                   ORDER BY d DESC, vec_id LIMIT 1),
@@ -1322,7 +1333,7 @@ object Similarity {
                     t -> (t[1]-t[2])*(t[1]-t[2])))::BIGINT) AS d
                   FROM $prev p, c$j c)"""
     }.mkString(",\n")
-    val sel = (2 to k).map { j =>
+    val sel = (2 to Q174K).map { j =>
       s"UNION ALL SELECT ${j}::BIGINT, vec_id, d FROM c$j"
     }.mkString("\n")
     s"""WITH q AS (SELECT vec_id::BIGINT AS vec_id,
@@ -1341,6 +1352,9 @@ object Similarity {
        ) ORDER BY step"""
   }
 
+  private val Q181K = 20
+  private val Q181KOut = 10
+
   /** q181 — HYBRID retrieval with reciprocal-rank fusion, the
     * standard two-tower serving shape (RAG / search): a lexical
     * ranking (q77's BM25 over the fixed term query) and a dense
@@ -1357,12 +1371,11 @@ object Similarity {
     * join run on k-row frames. The corpus-sized stages are exactly
     * q77's one-scan scoring pass and one broadcast-query cosine
     * pass — nothing quadratic, nothing driver-side. */
-  def q181HybridRrf(s: SparkSession, dir: String,
-                    k: Int = 20, kOut: Int = 10): DataFrame = {
+  def q181HybridRrf(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val lexW = Window.orderBy(col("bm25_micro").desc, col("doc_id"))
     val lex = TextOps.q77Bm25(s, dir)
-      .orderBy(col("bm25_micro").desc, col("doc_id")).limit(k)
+      .orderBy(col("bm25_micro").desc, col("doc_id")).limit(Q181K)
       .withColumn("lex_rank", row_number().over(lexW).cast("long"))
       .select(col("doc_id"), col("lex_rank"))
     val e = Tables.embeddings(s, dir)
@@ -1374,7 +1387,7 @@ object Similarity {
       .select(col("vec_id").as("doc_id"),
               (dot(col("q_emb"), col("embedding")) /
                 (col("nrm") * col("q_nrm"))).as("sim"))
-      .orderBy(col("sim").desc, col("doc_id")).limit(k)
+      .orderBy(col("sim").desc, col("doc_id")).limit(Q181K)
       .withColumn("dense_rank", row_number().over(denseW).cast("long"))
       .select(col("doc_id"), col("dense_rank"))
     lex.join(dense, Seq("doc_id"), "full_outer")
@@ -1384,12 +1397,12 @@ object Similarity {
               (coalesce(expr("1000000L div (60 + lex_rank)"), lit(0L)) +
                coalesce(expr("1000000L div (60 + dense_rank)"), lit(0L)))
                 .as("rrf_micro"))
-      .orderBy(col("rrf_micro").desc, col("doc_id")).limit(kOut)
+      .orderBy(col("rrf_micro").desc, col("doc_id")).limit(Q181KOut)
   }
 
   /** DuckDB oracle for q181 — q77's BM25 CTE and q26's cosine shape
     * restricted to query vector 0, ranked top-k each, RRF-fused. */
-  def q181OracleSql(k: Int = 20, kOut: Int = 10): String =
+  def q181OracleSql: String =
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        d AS (SELECT doc_id, len(toks)::BIGINT AS dl,
          len(list_filter(toks, x -> x = 'spark'))::BIGINT AS tf0,
@@ -1413,7 +1426,7 @@ object Similarity {
          FROM d, c),
        lex AS (SELECT doc_id,
          row_number() OVER (ORDER BY bm25_micro DESC, doc_id) AS lex_rank
-         FROM bm ORDER BY bm25_micro DESC, doc_id LIMIT $k),
+         FROM bm ORDER BY bm25_micro DESC, doc_id LIMIT $Q181K),
        e AS (SELECT vec_id, embedding,
          sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) AS nrm
          FROM embeddings),
@@ -1424,14 +1437,17 @@ object Similarity {
          FROM q, e c WHERE c.vec_id <> 0),
        dense AS (SELECT doc_id,
          row_number() OVER (ORDER BY sim DESC, doc_id) AS dense_rank
-         FROM sims ORDER BY sim DESC, doc_id LIMIT $k)
+         FROM sims ORDER BY sim DESC, doc_id LIMIT $Q181K)
        SELECT coalesce(l.doc_id, de.doc_id) AS doc_id,
          coalesce(l.lex_rank, 0)::BIGINT AS lex_rank,
          coalesce(de.dense_rank, 0)::BIGINT AS dense_rank,
          (coalesce(1000000 // (60 + l.lex_rank), 0)
           + coalesce(1000000 // (60 + de.dense_rank), 0))::BIGINT AS rrf_micro
        FROM lex l FULL OUTER JOIN dense de ON l.doc_id = de.doc_id
-       ORDER BY rrf_micro DESC, doc_id LIMIT $kOut"""
+       ORDER BY rrf_micro DESC, doc_id LIMIT $Q181KOut"""
+
+  private val Q189N = 12
+  private val Q189KOut = 4
 
   /** q189 — MMR (maximal-marginal-relevance) diversified re-rank
     * (Carbonell & Goldstein, SIGIR 1998), the standard RAG answer to
@@ -1454,8 +1470,7 @@ object Similarity {
     * O(n²) state per group by construction, groups distributed across
     * executors. At 100 TB n stays a serving constant (100s), so the
     * re-rank cost never grows with the corpus. */
-  def q189MmrRerank(s: SparkSession, dir: String,
-                    n: Int = 12, kOut: Int = 4): DataFrame = {
+  def q189MmrRerank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
@@ -1465,7 +1480,7 @@ object Similarity {
     val relSim = dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm"))
     val cands = topKPerQuery(
       q.join(c, col("n_id") =!= col("q_id"))
-        .select(col("q_id"), col("n_id"), relSim.as("sim_exact")), n)
+        .select(col("q_id"), col("n_id"), relSim.as("sim_exact")), Q189N)
       .select(col("q_id"), col("n_id"),
               floor(col("sim_exact") * lit(1000000.0) + lit(0.5))
                 .cast("long").as("rel_micro"))
@@ -1507,7 +1522,7 @@ object Similarity {
         val chosen = scala.collection.mutable.LinkedHashSet[Long]()
         val picked = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
         var round = 1
-        while (round <= kOut && chosen.size < cs.length) {
+        while (round <= Q189KOut && chosen.size < cs.length) {
           var bestId = Long.MaxValue; var bestScore = Long.MinValue
           cs.foreach { case (_, id, rel, pm) =>
             if (!chosen.contains(id)) {
@@ -1535,8 +1550,8 @@ object Similarity {
     * not-yet-selected candidate, the max micro-sim to the selected
     * set and the integer MMR score, then takes the per-query
     * (score DESC, n_id) argmax. */
-  def q189OracleSql(n: Int = 12, kOut: Int = 4): String = {
-    val rounds = (2 to kOut).map { j =>
+  def q189OracleSql: String = {
+    val rounds = (2 to Q189KOut).map { j =>
       s"""c$j AS (SELECT c.q_id, c.n_id,
              7 * c.rel - 3 * max(p.pm) AS score
            FROM cand c
@@ -1551,7 +1566,7 @@ object Similarity {
          sel$j AS (SELECT q_id, n_id FROM sel${j - 1}
            UNION ALL SELECT q_id, n_id FROM s$j)"""
     }.mkString(",\n       ")
-    val sel = (2 to kOut)
+    val sel = (2 to Q189KOut)
       .map(j => s"UNION ALL SELECT q_id, pick, n_id, score FROM s$j")
       .mkString("\n         ")
     s"""WITH e AS (SELECT vec_id, embedding,
@@ -1567,7 +1582,7 @@ object Similarity {
          CAST(floor(sim * 1000000.0 + 0.5) AS BIGINT) AS rel
          FROM (SELECT *, row_number() OVER (PARTITION BY q_id
                  ORDER BY sim DESC, n_id) AS rn FROM scored)
-         WHERE rn <= $n),
+         WHERE rn <= $Q189N),
        pm AS (SELECT a.q_id, a.n_id AS a_id, b.n_id AS b_id,
          CAST(floor(list_sum(list_transform(list_zip(ea.embedding, eb.embedding),
            x -> x[1]::DOUBLE * x[2]::DOUBLE)) / (ea.nrm * eb.nrm)
@@ -1586,6 +1601,8 @@ object Similarity {
          $sel
        ) ORDER BY q_id, pick"""
   }
+
+  private val Q190K = 3
 
   /** q190 — margin-based bitext/pair mining (Artetxe & Schwenk, ACL
     * 2019 — the CCMatrix recipe): the corpus splits into two sides
@@ -1613,10 +1630,7 @@ object Similarity {
     * partition cross the shuffle); the margin itself is map-side on
     * the candidate frame; the final best-per-a is a map-side partial
     * `max_by`. No corpus-sized sort, no all-pairs stage. */
-  def q190MarginMining(s: SparkSession, dir: String,
-                       k: Int = 3): DataFrame = {
-    val bands = 8
-    val bitsPerBand = 8
+  def q190MarginMining(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1625,10 +1639,10 @@ object Similarity {
     // 1.50 s min-of-5, same calib) — Generate evaluates the inlined
     // computed sign-chain array slower than 8 cache-scan Projects,
     // exactly the q35 round-1 finding its comment records.
-    val celled = (0 until bands).map { bnd =>
+    val celled = (0 until LshBands).map { bnd =>
       e.select(col("vec_id"), lit(bnd).as("band"),
                signCellKey(col("embedding"),
-                 (bnd * bitsPerBand until (bnd + 1) * bitsPerBand).map(_ % 64))
+                 (bnd * LshBitsPerBand until (bnd + 1) * LshBitsPerBand).map(_ % 64))
                  .as("cell"))
     }.reduce(_ unionByName _)
     val ca = celled.filter(col("vec_id") % 2 === 0).toDF("a_id", "band_a", "cell_a")
@@ -1648,7 +1662,7 @@ object Similarity {
     // aggregator, (micro DESC, id ASC) order matching the oracle
     def nbhd(src: DataFrame, key: String, other: String) =
       topKPerQuery(src.select(col(key), col(other),
-                              col("sim_micro").cast("double")), k)
+                              col("sim_micro").cast("double")), Q190K)
         .groupBy(col("q_id").as(key))
         .agg(sum(col("sim_exact").cast("long")).as(s"${key}_sum"),
              count(lit(1)).as(s"${key}_cnt"))
@@ -1674,11 +1688,10 @@ object Similarity {
     * even×odd pairs, identical micro quantization, rank-k
     * neighborhood (sum, count) per endpoint, and the same exact
     * integer margin division and ≥ 1e6 threshold. */
-  def q190OracleSql(k: Int = 3, bands: Int = 8,
-                    bitsPerBand: Int = 8): String = {
-    val bandSelects = (0 until bands).map { bnd =>
-      val key = (0 until bitsPerBand).map { i =>
-        val d = (bnd * bitsPerBand + i) % 64
+  def q190OracleSql: String = {
+    val bandSelects = (0 until LshBands).map { bnd =>
+      val key = (0 until LshBitsPerBand).map { i =>
+        val d = (bnd * LshBitsPerBand + i) % 64
         s"(embedding[${d + 1}] >= 0)::BIGINT * ${1L << i}"
       }.mkString(" + ")
       s"SELECT vec_id, $bnd AS band, $key AS cell FROM e"
@@ -1702,11 +1715,11 @@ object Similarity {
        fwd AS (SELECT a_id, sum(sim_micro)::BIGINT AS fa, count(*)::BIGINT AS ca
          FROM (SELECT *, row_number() OVER (PARTITION BY a_id
                  ORDER BY sim_micro DESC, b_id) AS rn FROM pp)
-         WHERE rn <= $k GROUP BY a_id),
+         WHERE rn <= $Q190K GROUP BY a_id),
        bwd AS (SELECT b_id, sum(sim_micro)::BIGINT AS fb, count(*)::BIGINT AS cb
          FROM (SELECT *, row_number() OVER (PARTITION BY b_id
                  ORDER BY sim_micro DESC, a_id) AS rn FROM pp)
-         WHERE rn <= $k GROUP BY b_id),
+         WHERE rn <= $Q190K GROUP BY b_id),
        m AS (SELECT pp.a_id, pp.b_id, pp.sim_micro,
          (2 * pp.sim_micro * ca * cb * 1000000) // (fa * cb + fb * ca)
            AS margin_micro
@@ -1717,6 +1730,11 @@ object Similarity {
        SELECT a_id, b_id, sim_micro, margin_micro FROM best
        WHERE margin_micro >= 1000000 ORDER BY a_id"""
   }
+
+  /** q195 pairs at or above Q195TauPos are positives, below
+    * Q195TauNeg negatives (cosine, micro units); the two must not overlap. */
+  private val Q195TauPos = 450000L
+  private val Q195TauNeg = 400000L
 
   /** q195 — contrastive triplet mining, the training-data primitive
     * for embedding/retriever fine-tuning (the DPR / SimCSE hard-
@@ -1737,21 +1755,14 @@ object Similarity {
     * anchor; the pos⋈neg join runs on ≤|anchors| rows. At 100 TB the
     * only corpus-sized stages are the cell build and the blocked
     * candidate join — the same budget q35 already pays. */
-  def q195ContrastivePairs(s: SparkSession, dir: String,
-                           tauPos: Long = 450000L,
-                           tauNeg: Long = 400000L): DataFrame = {
-    require(tauNeg <= tauPos,
-      s"tauNeg ($tauNeg) must not exceed tauPos ($tauPos): a pair in " +
-        "the overlap would be both the positive and the negative")
-    val bands = 8
-    val bitsPerBand = 8
+  def q195ContrastivePairs(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val celled = (0 until bands).map { bnd =>
+    val celled = (0 until LshBands).map { bnd =>
       e.select(col("vec_id"), lit(bnd).as("band"),
                signCellKey(col("embedding"),
-                 (bnd * bitsPerBand until (bnd + 1) * bitsPerBand).map(_ % 64))
+                 (bnd * LshBitsPerBand until (bnd + 1) * LshBitsPerBand).map(_ % 64))
                  .as("cell"))
     }.reduce(_ unionByName _)
     val ca = celled.toDF("a_id", "band_a", "cell_a")
@@ -1771,8 +1782,8 @@ object Similarity {
         .groupBy(col("a_id"))
         .agg(max_by(struct(col("b_id"), col("sim_micro")),
                     struct(col("sim_micro"), -col("b_id"))).as(tag))
-    val pos = bestWhere(col("sim_micro") >= tauPos, "p")
-    val neg = bestWhere(col("sim_micro") < tauNeg, "n")
+    val pos = bestWhere(col("sim_micro") >= Q195TauPos, "p")
+    val neg = bestWhere(col("sim_micro") < Q195TauNeg, "n")
     pos.join(neg, "a_id")
       .select(col("a_id").as("anchor_id"),
               col("p.b_id").as("pos_id"), col("p.sim_micro").as("pos_sim_micro"),
@@ -1783,13 +1794,10 @@ object Similarity {
   /** DuckDB oracle for q195 — q35's cell SQL with both-direction
     * candidates, identical quantization, and the two per-anchor
     * argmaxes replayed as (sim DESC, id) row_number picks. */
-  def q195OracleSql(tauPos: Long = 450000L, tauNeg: Long = 400000L,
-                    bands: Int = 8, bitsPerBand: Int = 8): String = {
-    require(tauNeg <= tauPos,
-      s"tauNeg ($tauNeg) must not exceed tauPos ($tauPos)")
-    val bandSelects = (0 until bands).map { bnd =>
-      val key = (0 until bitsPerBand).map { i =>
-        val d = (bnd * bitsPerBand + i) % 64
+  def q195OracleSql: String = {
+    val bandSelects = (0 until LshBands).map { bnd =>
+      val key = (0 until LshBitsPerBand).map { i =>
+        val d = (bnd * LshBitsPerBand + i) % 64
         s"(embedding[${d + 1}] >= 0)::BIGINT * ${1L << i}"
       }.mkString(" + ")
       s"SELECT vec_id, $bnd AS band, $key AS cell FROM e"
@@ -1811,16 +1819,18 @@ object Similarity {
        pos AS (SELECT a_id, b_id, sim_micro FROM (
            SELECT *, row_number() OVER (PARTITION BY a_id
              ORDER BY sim_micro DESC, b_id) AS rn FROM p
-           WHERE sim_micro >= $tauPos) WHERE rn = 1),
+           WHERE sim_micro >= $Q195TauPos) WHERE rn = 1),
        neg AS (SELECT a_id, b_id, sim_micro FROM (
            SELECT *, row_number() OVER (PARTITION BY a_id
              ORDER BY sim_micro DESC, b_id) AS rn FROM p
-           WHERE sim_micro < $tauNeg) WHERE rn = 1)
+           WHERE sim_micro < $Q195TauNeg) WHERE rn = 1)
        SELECT pos.a_id AS anchor_id,
          pos.b_id AS pos_id, pos.sim_micro AS pos_sim_micro,
          neg.b_id AS neg_id, neg.sim_micro AS neg_sim_micro
        FROM pos JOIN neg USING (a_id) ORDER BY anchor_id"""
   }
+
+  private val Q203Dim = 16
 
   /** q203 — Matryoshka truncation recall [Kusupati et al., NeurIPS
     * 2022]: recall@5 of cosine top-k computed on the embedding's
@@ -1839,8 +1849,7 @@ object Similarity {
     * truncated pass scores `slice(embedding, 1, d)` so its flops are
     * d/64 of the full pass. The comparison join is k-rows-per-query
     * sized regardless of corpus size. */
-  def q203MatryoshkaRecall(s: SparkSession, dir: String,
-                           d: Int = 16): DataFrame = {
+  def q203MatryoshkaRecall(s: SparkSession, dir: String, d: Int = Q203Dim): DataFrame = {
     val full = q26AnnTopK(s, dir).select(col("q_id"), col("n_id"))
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), slice(col("embedding"), 1, d).as("temb"))
@@ -1864,11 +1873,11 @@ object Similarity {
 
   /** DuckDB oracle for q203 — q26's brute-force chain twice (full
     * dims and the [1:d] prefix slice), joined on the top-5 sets. */
-  def q203OracleSql(d: Int = 16): String =
+  def q203OracleSql: String =
     s"""WITH e AS (SELECT vec_id, embedding,
          sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) AS nrm,
-         embedding[1:$d] AS temb,
-         sqrt(list_sum(list_transform(embedding[1:$d], x -> x::DOUBLE * x::DOUBLE))) AS tnrm
+         embedding[1:$Q203Dim] AS temb,
+         sqrt(list_sum(list_transform(embedding[1:$Q203Dim], x -> x::DOUBLE * x::DOUBLE))) AS tnrm
          FROM embeddings),
        q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm,
            temb AS q_temb, tnrm AS q_tnrm FROM e WHERE vec_id < 8),
@@ -1891,6 +1900,8 @@ object Similarity {
        FROM full5 f LEFT JOIN t5 t ON f.q_id = t.q_id AND f.n_id = t.n_id
        GROUP BY f.q_id ORDER BY f.q_id"""
 
+  private val Q212K = 5
+
   /** q212 — ColBERT-style LATE-INTERACTION retrieval scoring
     * [Khattab & Zaharia, SIGIR 2020]: multi-vector documents scored
     * by MaxSim — score(q, d) = Σ_{t∈q} max_{u∈d} cos(t, u) — instead
@@ -1910,7 +1921,7 @@ object Similarity {
     * top-k. No doc-side self-join, no window over the corpus — the
     * same posture as q26 with a 4× row multiplier for the token
     * dimension. */
-  def q212ColbertMaxsim(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def q212ColbertMaxsim(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(expr("vec_id div 4").as("did"), expr("vec_id % 4").as("tok"),
               col("embedding"), l2norm(col("embedding")).as("nrm"))
@@ -1927,7 +1938,7 @@ object Similarity {
       .agg(sum(col("ms")).as("score"))
     topKPerQuery(
       scored.select(col("q_did"), col("c_did"),
-                    col("score").cast("double").as("sd")), k)
+                    col("score").cast("double").as("sd")), Q212K)
       .select(col("q_id").as("q_did"), col("n_id").as("c_did"),
               col("sim_exact").cast("long").as("maxsim_micro"), col("rn"))
       .orderBy(col("q_did"), col("rn"))
@@ -1935,7 +1946,7 @@ object Similarity {
 
   /** DuckDB oracle for q212 — identical grouping, micro quantization,
     * max-then-sum reduction, and (score DESC, id) top-k. */
-  def q212OracleSql(k: Int = 5): String =
+  def q212OracleSql: String =
     s"""WITH t AS (SELECT vec_id // 4 AS did, vec_id % 4 AS tok, embedding,
          sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)))
            AS nrm FROM embeddings),
@@ -1952,7 +1963,9 @@ object Similarity {
          row_number() OVER (PARTITION BY q_did
                             ORDER BY score DESC, c_did) AS rn FROM sc)
        SELECT q_did, c_did, score AS maxsim_micro, CAST(rn AS INT) AS rn
-       FROM rk WHERE rn <= $k ORDER BY q_did, rn"""
+       FROM rk WHERE rn <= $Q212K ORDER BY q_did, rn"""
+
+  private val Q217K = 10
 
   /** q217 — nDCG@10 retrieval evaluation [Järvelin & Kekäläinen,
     * TOIS 2002]: each query's top-10 exact-cosine neighbors are
@@ -1970,7 +1983,7 @@ object Similarity {
     * the |Q|·k-row result to broadcast label lookups; the per-label
     * relevant totals are one tiny aggregate broadcast back. Nothing
     * after the retrieval pass is corpus-sized. */
-  def q217NdcgEval(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
+  def q217NdcgEval(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"),
               col("label"))
@@ -1982,7 +1995,7 @@ object Similarity {
     val sim = dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm"))
     val hits = topKPerQuery(
       q.join(c, col("n_id") =!= col("q_id"))
-        .select(col("q_id"), col("n_id"), sim.as("sim_exact")), k)
+        .select(col("q_id"), col("n_id"), sim.as("sim_exact")), Q217K)
       .join(broadcast(q.select(col("q_id"), col("q_label"))), Seq("q_id"))
       .join(broadcast(e.select(col("vec_id").as("n_id"),
                                col("label").as("c_label"))), Seq("n_id"))
@@ -1997,7 +2010,7 @@ object Similarity {
       .join(broadcast(labelTotals.withColumnRenamed("label", "q_label")),
             Seq("q_label"))
       .withColumn("r_ideal",
-        least(lit(k.toLong), col("n_label") - 1L).cast("long"))
+        least(lit(Q217K.toLong), col("n_label") - 1L).cast("long"))
       // guard like ndcg below (ADVICE r10): at r_ideal = 0 (a query
       // whose label is unique) sequence(1, 0) is the DESCENDING
       // [1, 0] and the i=0 term divides by log2(1) = 0 → +Infinity;
@@ -2019,7 +2032,7 @@ object Similarity {
 
   /** DuckDB oracle for q217 — identical retrieval ranking, label
     * grading, log2 discounts, and ideal-DCG normalization. */
-  def q217OracleSql(k: Int = 10): String =
+  def q217OracleSql: String =
     s"""WITH e AS (SELECT vec_id, embedding, label,
          sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)))
            AS nrm FROM embeddings),
@@ -2034,17 +2047,17 @@ object Similarity {
                             ORDER BY sim_exact DESC, n_id) AS rn FROM sims),
        h AS (SELECT q_id, q_label, rn,
          CASE WHEN c_label = q_label THEN 1 ELSE 0 END AS rel
-         FROM r WHERE rn <= $k),
+         FROM r WHERE rn <= $Q217K),
        lt AS (SELECT label, count(*)::BIGINT AS n_label FROM e GROUP BY label),
        agg AS (SELECT q_id, q_label,
          sum(rel)::BIGINT AS n_rel_ret,
          sum(rel::DOUBLE / log2(rn::DOUBLE + 1.0)) AS dcg_raw
          FROM h GROUP BY q_id, q_label),
        f AS (SELECT q_id, n_rel_ret,
-         least($k::BIGINT, n_label - 1) AS r_ideal, dcg_raw,
-         CASE WHEN least($k::BIGINT, n_label - 1) > 0 THEN
+         least($Q217K::BIGINT, n_label - 1) AS r_ideal, dcg_raw,
+         CASE WHEN least($Q217K::BIGINT, n_label - 1) > 0 THEN
            list_sum(list_transform(
-             generate_series(1, (least($k::BIGINT, n_label - 1))::INT),
+             generate_series(1, (least($Q217K::BIGINT, n_label - 1))::INT),
              i -> 1.0 / log2(i::DOUBLE + 1.0)))
          ELSE 0.0 END AS idcg_raw
          FROM agg JOIN lt ON lt.label = agg.q_label)
@@ -2086,11 +2099,11 @@ object Similarity {
     * carries at most C 16-byte structs and the partial combine keeps
     * the shuffle at O(n) rows; then one C-row aggregate. Nothing
     * quadratic, no window over the corpus. */
-  def q250Silhouette(s: SparkSession, dir: String, C: Int = 16): DataFrame = {
+  def q250Silhouette(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
               l2norm(col("embedding")).as("nrm"))
-    val cent = centroidsWithNorm(e, C, iters = 2)
+    val cent = centroidsWithNorm(e)
     val sc = struct(
       (dotFD(col("embedding"), col("c_emb")) /
         (col("nrm") * col("c_nrm"))).as("csim"),
@@ -2121,9 +2134,8 @@ object Similarity {
     * the full n×C similarity matrix; top-2 via row_number with the
     * identical (csim DESC, c_id) tie-break, then the same micro-int
     * fold and per-cell mean. */
-  def q250OracleSql(C: Int = 16, iters: Int = 2, dim: Int = 64,
-                    trainSample: Int = 65536): String =
-    s"""WITH ${ivfLearnAssignCtes(C, iters, dim, trainSample)},
+  def q250OracleSql: String =
+    s"""WITH ${ivfLearnAssignCtes()},
        r AS (SELECT vec_id, c_id, csim,
            row_number() OVER (PARTITION BY vec_id
                               ORDER BY csim DESC, c_id) AS rn

@@ -52,6 +52,8 @@ object SkewJoin {
       .drop(saltedDim(key)).drop("__salt")
   }
 
+  private val Q232SaltBuckets = 8
+
   /** q232 — the salted skew join as a GATED query (VERDICT r11 #2 —
     * [[saltedJoin]] was the one SURVEY §8 capability verified only by
     * spec): lineitem is given a PLANTED hot key — three quarters of
@@ -80,8 +82,7 @@ object SkewJoin {
     * projected (hot_key, cents) rows were value-identical — the
     * content-hash fallback's documented degeneracy (VERDICT r12
     * #4, pinned by SkewStressSpec's identical-row whale). */
-  def q232SaltedSkewJoin(s: SparkSession, dir: String,
-                         saltBuckets: Int = 8): DataFrame = {
+  def q232SaltedSkewJoin(s: SparkSession, dir: String): DataFrame = {
     val fact = Tables.lineitem(s, dir)
       .select(
         when(pmod(col("l_orderkey"), lit(4L)) =!= 0L, lit(1L))
@@ -91,7 +92,7 @@ object SkewJoin {
         xxhash64(col("l_orderkey"), col("l_linenumber")).as("row_uid"))
     val dim = Tables.supplier(s, dir)
       .select(col("s_suppkey").as("hot_key"), col("s_nationkey"))
-    saltedJoin(fact, dim, "hot_key", saltBuckets,
+    saltedJoin(fact, dim, "hot_key", Q232SaltBuckets,
                uniquenessCol = Some("row_uid"))
       .groupBy(col("hot_key"), col("s_nationkey"))
       .agg(count(lit(1)).as("n_items"), sum(col("cents")).as("revenue_cents"))

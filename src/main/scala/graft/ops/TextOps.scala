@@ -191,6 +191,8 @@ object TextOps {
                 length(t3).cast("long").as("redacted_len"))
   }
 
+  private val Q61ChunkTokens = 64
+
   /** q61 — context-window CHUNKING: split every document into
     * fixed-size token windows (64 tokens, non-overlapping) — the
     * sequence-packing step before LLM training. One map-side pass:
@@ -198,21 +200,22 @@ object TextOps {
     * chunk_no, token count, content md5) move — chunk text never
     * crosses an exchange. Deterministic and fully oracle-replayable
     * (DuckDB list slicing is 1-based inclusive, same as slice()). */
-  def q61ChunkDocs(s: SparkSession, dir: String,
-                   chunkTokens: Int = 64): DataFrame =
+  def q61ChunkDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("toks"),
               explode(sequence(lit(0),
-                (ceil(size(col("toks")) / lit(chunkTokens.toDouble)) - 1)
+                (ceil(size(col("toks")) / lit(Q61ChunkTokens.toDouble)) - 1)
                   .cast("int"))).as("chunk_no"))
       .select(col("doc_id"), col("chunk_no"),
-              slice(col("toks"), col("chunk_no") * chunkTokens + 1,
-                    lit(chunkTokens)).as("ct"))
+              slice(col("toks"), col("chunk_no") * Q61ChunkTokens + 1,
+                    lit(Q61ChunkTokens)).as("ct"))
       .select(col("doc_id"), col("chunk_no").cast("long").as("chunk_no"),
               size(col("ct")).cast("long").as("n_chunk_tokens"),
               md5(concat_ws(" ", col("ct"))).as("chunk_md5"))
       .orderBy(col("doc_id"), col("chunk_no"))
+
+  private val Q62Capacity = 128
 
   /** q62 — sequence PACKING: assign q61's chunks to fixed-capacity
     * training windows (128 tokens) by cumulative token count, packed
@@ -221,8 +224,7 @@ object TextOps {
     * bin packing is inherently sequential; the cumsum form is one
     * windowed scan and deterministic). Partitioning by source keeps
     * the window bounded per shard — no single-partition WindowExec. */
-  def q62PackChunks(s: SparkSession, dir: String,
-                    capacity: Int = 128): DataFrame = {
+  def q62PackChunks(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val chunkTokens = 64
     val chunks = Tables.documents(s, dir)
@@ -245,9 +247,11 @@ object TextOps {
         expr("doc_id div 256L"), Seq(col("doc_id"), col("chunk_no")))
       .select(col("source"), col("doc_id"), col("chunk_no"),
               col("n_tokens").as("n_chunk_tokens"),
-              floor(col("cum_before") / capacity).as("bin_id"))
+              floor(col("cum_before") / Q62Capacity).as("bin_id"))
       .orderBy(col("source"), col("doc_id"), col("chunk_no"))
   }
+
+  private val Q58Width = 2048
 
   /** q58 — heavy-hitter estimation with a count-min sketch (the
     * bounded-memory answer to "which tokens dominate the corpus" —
@@ -272,16 +276,15 @@ object TextOps {
     * Everything after the first aggregate is vocabulary-sized — a
     * d-way explode, a d×w counter aggregate broadcast back onto the
     * per-token frame, a TakeOrdered top-25. */
-  def q58HeavyHitters(s: SparkSession, dir: String,
-                      d: Int = 4, w: Int = 2048, k: Int = 25): DataFrame = {
+  def q58HeavyHitters(s: SparkSession, dir: String): DataFrame = {
     val counts = Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("freq"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rows = (0 until d).map { i =>
+    val rows = (0 until CmsDepth).map { i =>
       struct(lit(i).as("row_i"),
              pmod(pmod(lit(CmsA(i)) * col("h") + lit(CmsB(i)), lit(CmsP)),
-                  lit(w.toLong)).as("bucket"))
+                  lit(Q58Width.toLong)).as("bucket"))
     }
     val hashed = counts
       .withColumn("h", graft.functions.VectorFunctions.rollingHash31(col("token")))
@@ -295,16 +298,16 @@ object TextOps {
       .agg(min(col("freq")).cast("long").as("freq"),
            min(col("counter")).as("cms_est"))
       .orderBy(col("freq").desc, col("token"))
-      .limit(k)
+      .limit(CmsTopK)
       .select(col("token"), col("freq"), col("cms_est"))
   }
 
   /** DuckDB oracle for q58 — the q179 sketch replay, ranked by the
     * exact count instead of the estimate. */
-  def q58OracleSql(d: Int = 4, w: Int = 2048, k: Int = 25): String = {
-    val aList = CmsA.take(d).mkString("[", ",", "]")
-    val bList = CmsB.take(d).mkString("[", ",", "]")
-    val iList = (0 until d).mkString("[", ",", "]")
+  def q58OracleSql: String = {
+    val aList = CmsA.take(CmsDepth).mkString("[", ",", "]")
+    val bList = CmsB.take(CmsDepth).mkString("[", ",", "]")
+    val iList = (0 until CmsDepth).mkString("[", ",", "]")
     s"""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
        counts AS (SELECT token, count(*)::BIGINT AS freq FROM tok GROUP BY token),
        fp AS (SELECT token, freq,
@@ -312,7 +315,7 @@ object TextOps {
            ch -> ascii(ch)::BIGINT)), (acc, ch) -> (acc * 31 + ch) % $CmsP) AS h
          FROM counts),
        rows_ AS (SELECT token, freq, i,
-         ((($aList[i + 1]) * h + ($bList[i + 1])) % $CmsP) % $w AS bucket
+         ((($aList[i + 1]) * h + ($bList[i + 1])) % $CmsP) % $Q58Width AS bucket
          FROM fp, unnest($iList) AS t(i)),
        sketch AS (SELECT i, bucket, sum(freq)::BIGINT AS counter
          FROM rows_ GROUP BY i, bucket),
@@ -321,7 +324,7 @@ object TextOps {
          FROM rows_ r JOIN sketch s ON r.i = s.i AND r.bucket = s.bucket
          GROUP BY r.token)
        SELECT token, freq, cms_est
-       FROM est ORDER BY freq DESC, token LIMIT $k"""
+       FROM est ORDER BY freq DESC, token LIMIT $CmsTopK"""
   }
 
   private val markers: Seq[(String, Seq[String])] = Seq(
@@ -475,6 +478,8 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
+  private val Q79Vocab = 64
+
   /** q79 — unigram-LM quality proxy (the CCNet-style "does this text
     * look like the corpus" signal, rationalized): per document, the
     * fraction of total corpus-token mass its tokens account for —
@@ -495,7 +500,7 @@ object TextOps {
     * canonical plan. Overflow headroom: sum_freq·1e6 needs
     * sum_freq < 9.2e12 — at larger corpora, scale the micro factor
     * down or widen to DECIMAL. */
-  def q79LmQuality(s: SparkSession, dir: String, v: Int = 64): DataFrame = {
+  def q79LmQuality(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     // Two tokenize passes, ONE tiny cache — the same shape at every
     // scale (replaces the r7 size-gated persist of the corpus-sized
@@ -514,7 +519,7 @@ object TextOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val vocab = tokCounts
       .orderBy(col("freq").desc, col("token"))
-      .limit(v)
+      .limit(Q79Vocab)
     val ntok = tokCounts.agg(sum(col("freq")).cast("long").as("n_corpus"))
     // per-doc pass: partial aggregation collapses the explode to one
     // row per (doc, partition) map-side, so the only shuffle carries
@@ -650,6 +655,8 @@ object TextOps {
                 .as("intercept_micro"))
       .orderBy(col("source"))
 
+  private val Q113Vocab = 32
+
   /** q113 — token co-occurrence lift over the top-V vocabulary:
     * for vocab tokens a < b, how much more often they share a
     * document than independence predicts —
@@ -666,8 +673,7 @@ object TextOps {
     * counts reduce map-side into a ≤ V² final rollup; document
     * frequencies are a broadcast side agg.
     * Scalars (n_docs) ride a 1-row broadcast, never a collect. */
-  def q113CooccurrenceLift(s: SparkSession, dir: String,
-                           v: Int = 32): DataFrame = {
+  def q113CooccurrenceLift(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     // persist: the distinct (doc, token) incidence feeds the df-vocab
     // ranking AND both sides of the pair self-join — uncached, the
@@ -680,7 +686,7 @@ object TextOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val vocab = broadcast(
       docTok.groupBy(col("token")).agg(count(lit(1)).as("df"))
-        .orderBy(col("df").desc, col("token")).limit(v))
+        .orderBy(col("df").desc, col("token")).limit(Q113Vocab))
     val inVocab = docTok.join(vocab, Seq("token"))
     // pair generation: codegen'd doc_id-keyed SELF-JOIN of the
     // v-bounded incidence, ≤ v(v−1)/2 output pairs per doc. A
@@ -733,6 +739,8 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
+  private val Q109Vocab = 32
+
   /** q109 — token-distribution drift per source: how far each
     * source's top-V token frequencies sit from the corpus-wide
     * distribution — the composition-monitoring statistic a corpus
@@ -749,7 +757,7 @@ object TextOps {
     * counts on the vocab-filtered stream only, and an S×V grid
     * rollup — nothing global but two scalar aggs. Overflow: ratio
     * diffs ≤ 1e6, squared ≤ 1e12, summed over V ≪ long range. */
-  def q109TokenDrift(s: SparkSession, dir: String, v: Int = 32): DataFrame = {
+  def q109TokenDrift(s: SparkSession, dir: String): DataFrame = {
     // ONE scan+tokenize pass, collapsed immediately to (source, token)
     // counts and persisted — corpus totals, per-source totals, the
     // top-v vocab, and the observed-vocab counts are all rollups of
@@ -760,7 +768,7 @@ object TextOps {
       .groupBy(col("source"), col("token")).agg(count(lit(1)).as("stc"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val corpus = st.groupBy(col("token")).agg(sum(col("stc")).as("c"))
-    val vocab = broadcast(corpus.orderBy(col("c").desc, col("token")).limit(v))
+    val vocab = broadcast(corpus.orderBy(col("c").desc, col("token")).limit(Q109Vocab))
     val perSrc = st.groupBy(col("source")).agg(sum(col("stc")).as("n_s"))
     val tot = st.agg(sum(col("stc")).as("n_corpus"))
     val obs = st.join(vocab.select(col("token")), Seq("token"))
@@ -778,6 +786,9 @@ object TextOps {
              .cast("long").as("drift_micro"))
       .orderBy(col("source"))
   }
+
+  /** q92 flags lengths more than this many standard deviations out. */
+  private val Q92Sigmas = 2
 
   /** q90 — log2-bucketed length histogram per source (the corpus
     * shape report every pipeline run prints: how document sizes are
@@ -805,7 +816,7 @@ object TextOps {
     * for the year clamp. Overflow headroom: (n·x)² needs n·x_max
     * < 3e9, fine here; a 100 TB corpus widens S/Q to DECIMAL(38,0)
     * with the same comparison. */
-  def q92OutlierLengths(s: SparkSession, dir: String, k: Int = 2): DataFrame = {
+  def q92OutlierLengths(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("source"), col("doc_id"), col("n_chars"))
     val stats = docs.groupBy(col("source"))
@@ -816,7 +827,7 @@ object TextOps {
       .withColumn("dev", col("n") * col("n_chars") - col("s"))
       .withColumn("is_outlier",
         (col("dev") * col("dev") >
-         lit(k.toLong * k) * (col("n") * col("q") - col("s") * col("s")))
+         lit(Q92Sigmas.toLong * Q92Sigmas) * (col("n") * col("q") - col("s") * col("s")))
           .cast("long"))
     flagged.groupBy(col("source"))
       .agg(min(col("n")).as("n_docs"),
@@ -871,6 +882,10 @@ object TextOps {
       .orderBy(col("source"))
   }
 
+  /** q148 searches for the phrase "fast table". */
+  private val Q148First = "fast"
+  private val Q148Second = "table"
+
   /** q148 — phrase search through a POSITIONAL inverted index: the
     * index is (token, doc, position) postings; a 2-token phrase query
     * is a self-join of the two tokens' posting lists on
@@ -884,15 +899,14 @@ object TextOps {
     * BEFORE the join (predicate pushdown into the exploded frame —
     * at warehouse scale, partitioning the index by token makes this
     * partition pruning), and the join keys are (doc_id, pos) longs. */
-  def q148PhraseSearch(s: SparkSession, dir: String,
-                       w1: String = "fast", w2: String = "table"): DataFrame = {
+  def q148PhraseSearch(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val postings = docs
       .select(col("doc_id"), posexplode(tokens(col("text"))))
       .select(col("doc_id"), col("pos"), col("col").as("tok"))
-    val p1 = postings.filter(col("tok") === w1)
+    val p1 = postings.filter(col("tok") === Q148First)
       .select(col("doc_id"), col("pos"))
-    val p2 = postings.filter(col("tok") === w2)
+    val p2 = postings.filter(col("tok") === Q148Second)
       .select(col("doc_id"), (col("pos") - 1).as("pos"))
     p1.join(p2, Seq("doc_id", "pos"))
       .groupBy(col("doc_id"))
@@ -971,6 +985,8 @@ object TextOps {
       .orderBy(col("lang"), col("source"))
   }
 
+  private val Q170TopK = 20
+
   /** q170 — BPE merge-candidate counting: the corpus-wide frequency
     * of adjacent character pairs inside words, i.e. the statistic the
     * FIRST byte-pair-encoding merge step maximizes. Running this over
@@ -987,7 +1003,7 @@ object TextOps {
     * domain-bounded no matter how many tokens flow through, the same
     * tree-reduce shape as q169's scatter matrix. Ties break on the
     * pair string so the top-k is a total order. */
-  def q170BpePairs(s: SparkSession, dir: String, k: Int = 20): DataFrame =
+  def q170BpePairs(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 2)
@@ -996,7 +1012,7 @@ object TextOps {
         .as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("pair"))
-      .limit(k)
+      .limit(Q170TopK)
 
   /** q173 — lexical-richness audit per source: type-token ratio and
     * hapax-legomenon share (tokens occurring exactly once in the
@@ -1033,6 +1049,12 @@ object TextOps {
   private[graft] val CmsP = 1000000007L
   private[graft] val CmsA = Seq(31L, 131L, 1031L, 10007L)
   private[graft] val CmsB = Seq(7L, 101L, 997L, 10009L)
+  /** Rows of every count-min sketch here (q58, q179, q224), and the
+    * heavy-hitter top-k of q58 and q179. */
+  private val CmsDepth = 4
+  private val CmsTopK = 25
+
+  private val Q179Width = 512
 
   /** q179 — Count-Min-sketch heavy hitters, FULLY oracle-gated (the
     * deterministic-sketch move that q168's bloom twin could not make:
@@ -1057,8 +1079,7 @@ object TextOps {
     * frame, and a TakeOrdered top-k. The counter matrix is ~2 KB —
     * the same "tiny state, corpus-linear single pass" contract as
     * q41's HLL and q168's bloom. */
-  def q179CmsHeavyHitters(s: SparkSession, dir: String,
-                          d: Int = 4, w: Int = 512, k: Int = 25): DataFrame = {
+  def q179CmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     // per-token exact counts: the one corpus-linear stage, persisted —
     // it feeds the counter build AND the estimate probe (caller owns
     // cache cleanup per the documented lifecycle contract)
@@ -1066,10 +1087,10 @@ object TextOps {
       .select(explode(tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rows = (0 until d).map { i =>
+    val rows = (0 until CmsDepth).map { i =>
       struct(lit(i).as("row_i"),
              pmod(pmod(lit(CmsA(i)) * col("h") + lit(CmsB(i)), lit(CmsP)),
-                  lit(w.toLong)).as("bucket"))
+                  lit(Q179Width.toLong)).as("bucket"))
     }
     val hashed = counts
       .withColumn("h", graft.functions.VectorFunctions.rollingHash31(col("token")))
@@ -1084,7 +1105,7 @@ object TextOps {
       .agg(min(col("counter")).as("cms_est"),
            min(col("c")).cast("long").as("exact_c"))
       .orderBy(col("cms_est").desc, col("token"))
-      .limit(k)
+      .limit(CmsTopK)
       .select(col("token"), col("cms_est"), col("exact_c"),
               (col("cms_est") - col("exact_c")).as("overcount"))
   }
@@ -1092,10 +1113,10 @@ object TextOps {
   /** DuckDB oracle for q179 — the identical sketch, replayed: same
     * base-31 fingerprint, same (A·H+B) mod P mod W row hashes, same
     * min-over-rows estimate. */
-  def q179OracleSql(d: Int = 4, w: Int = 512, k: Int = 25): String = {
-    val aList = CmsA.take(d).mkString("[", ",", "]")
-    val bList = CmsB.take(d).mkString("[", ",", "]")
-    val iList = (0 until d).mkString("[", ",", "]")
+  def q179OracleSql: String = {
+    val aList = CmsA.take(CmsDepth).mkString("[", ",", "]")
+    val bList = CmsB.take(CmsDepth).mkString("[", ",", "]")
+    val iList = (0 until CmsDepth).mkString("[", ",", "]")
     s"""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
        counts AS (SELECT token, count(*)::BIGINT AS c FROM tok GROUP BY token),
        fp AS (SELECT token, c,
@@ -1103,7 +1124,7 @@ object TextOps {
            ch -> ascii(ch)::BIGINT)), (acc, ch) -> (acc * 31 + ch) % $CmsP) AS h
          FROM counts),
        rows_ AS (SELECT token, c, i,
-         ((($aList[i + 1]) * h + ($bList[i + 1])) % $CmsP) % $w AS bucket
+         ((($aList[i + 1]) * h + ($bList[i + 1])) % $CmsP) % $Q179Width AS bucket
          FROM fp, unnest($iList) AS t(i)),
        sketch AS (SELECT i, bucket, sum(c)::BIGINT AS counter
          FROM rows_ GROUP BY i, bucket),
@@ -1112,8 +1133,11 @@ object TextOps {
          FROM rows_ r JOIN sketch s ON r.i = s.i AND r.bucket = s.bucket
          GROUP BY r.token)
        SELECT token, cms_est, exact_c, cms_est - exact_c AS overcount
-       FROM est ORDER BY cms_est DESC, token LIMIT $k"""
+       FROM est ORDER BY cms_est DESC, token LIMIT $CmsTopK"""
   }
+
+  /** BPE merge rounds of q188 and q191. */
+  private val BpeMerges = 6
 
   /** q188 — deterministic BPE merge training (Sennrich et al., ACL
     * 2016): learn the first `merges` byte-pair-encoding merges from
@@ -1152,8 +1176,7 @@ object TextOps {
     * of trillions of tokens, which is exactly why production BPE
     * trainers (GPT-2's, SentencePiece) work from word counts too
     * (sizes measured at sf0.1 in SCALE.md). */
-  def q188BpeMerges(s: SparkSession, dir: String,
-                    merges: Int = 6): DataFrame = {
+  def q188BpeMerges(s: SparkSession, dir: String, merges: Int = BpeMerges): DataFrame = {
     val words = Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
@@ -1227,8 +1250,8 @@ object TextOps {
     * unrolled: same word counts, same symbol-string representation,
     * same (count desc, pair asc) argmax, same double literal
     * replacement. */
-  def q188OracleSql(merges: Int = 6): String = {
-    val rounds = (1 to merges).map { i =>
+  def q188OracleSql: String = {
+    val rounds = (1 to BpeMerges).map { i =>
       s"""p$i AS (SELECT l, r, sum(cnt)::BIGINT AS pc FROM (
            SELECT a[i] AS l, a[i + 1] AS r, cnt FROM (
              SELECT string_split(trim(sym), ' ') AS a, cnt FROM v${i - 1})
@@ -1241,7 +1264,7 @@ object TextOps {
          FROM v${i - 1}, (SELECT ' ' || l || ' ' || r || ' ' AS pat,
                             ' ' || l || r || ' ' AS rep FROM m$i) m)"""
     }.mkString(",\n       ")
-    val rows = (1 to merges).map(i =>
+    val rows = (1 to BpeMerges).map(i =>
       s"SELECT $i::BIGINT AS step, l AS sym_l, r AS sym_r, " +
         s"l || r AS merged, pc AS pair_cnt FROM m$i")
       .mkString("\n       UNION ALL ")
@@ -1274,8 +1297,7 @@ object TextOps {
     * corpus tokens, so the join-back is the only corpus-sized stage
     * and it is shuffle-free. Integer-exact end to end (counts,
     * lengths, one exact integer division), so fully oracle-gated. */
-  def q191BpeEncode(s: SparkSession, dir: String,
-                    merges: Int = 6): DataFrame = {
+  def q191BpeEncode(s: SparkSession, dir: String, merges: Int = BpeMerges): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val sw = Tables.documents(s, dir)
       .select(col("source"), explode(tokens(col("text"))).as("w"))
@@ -1312,8 +1334,8 @@ object TextOps {
     * CTEs, carrying the raw word through every rewrite so the final
     * vocabulary doubles as the encoder table), then the same
     * per-source rollup and exact integer division. */
-  def q191OracleSql(merges: Int = 6): String = {
-    val rounds = (1 to merges).map { i =>
+  def q191OracleSql: String = {
+    val rounds = (1 to BpeMerges).map { i =>
       s"""p$i AS (SELECT l, r, sum(cnt)::BIGINT AS pc FROM (
            SELECT a[i] AS l, a[i + 1] AS r, cnt FROM (
              SELECT string_split(trim(sym), ' ') AS a, cnt FROM v${i - 1})
@@ -1334,7 +1356,7 @@ object TextOps {
                 cnt FROM wc),
        $rounds,
        enc AS (SELECT w, len(string_split(trim(sym), ' '))::BIGINT AS tl
-         FROM v$merges),
+         FROM v$BpeMerges),
        agg AS (SELECT source, sum(n)::BIGINT AS n_words,
            sum(n * len(w))::BIGINT AS n_chars,
            sum(n * tl)::BIGINT AS n_bpe_tokens
@@ -1411,6 +1433,8 @@ object TextOps {
        FROM pd GROUP BY source ORDER BY source"""
   }
 
+  private val Q204MaxPhraseLen = 4
+
   /** q204 — RAKE keyword extraction [Rose, Engel, Cramer & Cowley,
     * "Automatic Keyword Extraction from Individual Documents", 2010]:
     * candidate phrases are maximal stopword-free token runs (capped
@@ -1433,8 +1457,7 @@ object TextOps {
     * corpus-partitioned, never global. The non-stop token frame and
     * the phrase frame persist for their two consumers each. The
     * final top-25 plans as TakeOrderedAndProject. */
-  def q204RakeKeywords(s: SparkSession, dir: String,
-                       maxPhraseLen: Int = 4): DataFrame = {
+  def q204RakeKeywords(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // r15 restructure (guide §2.4 — share one exchange): the r14
     // shape persisted ns/ph, and because AQE-planned cached relations
@@ -1465,7 +1488,7 @@ object TextOps {
       .filter(length(col("w")) > 0 && !col("w").isin(stopwords: _*))
       .withColumn("island", col("pos") - row_number().over(w))
       .withColumn("plen", count(lit(1)).over(wIsl))
-      .filter(col("plen") <= maxPhraseLen)
+      .filter(col("plen") <= Q204MaxPhraseLen)
     val ws = nsf.groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("freq"), sum(col("plen")).as("deg"))
     val fl = nsf.select(col("doc_id"), col("island"), col("pos"), col("w"))
@@ -1487,7 +1510,7 @@ object TextOps {
 
   /** DuckDB oracle for q204 — identical islands, cap, deg/freq
     * ratios, and max-then-min tie resolution. */
-  def q204OracleSql(maxPhraseLen: Int = 4): String = {
+  def q204OracleSql: String = {
     val stop = stopwords.map(sw => s"'$sw'").mkString("(", ",", ")")
     s"""WITH td AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        tok AS (SELECT doc_id, u.pos, u.w FROM (
@@ -1498,7 +1521,7 @@ object TextOps {
          FROM tok WHERE w NOT IN $stop AND len(w) > 0),
        ph AS (SELECT doc_id, island, count(*)::BIGINT AS plen,
            string_agg(w, ' ' ORDER BY pos) AS phrase
-         FROM ns GROUP BY doc_id, island HAVING count(*) <= $maxPhraseLen),
+         FROM ns GROUP BY doc_id, island HAVING count(*) <= $Q204MaxPhraseLen),
        wl AS (SELECT n.doc_id, n.island, n.w, p.plen
          FROM ns n JOIN ph p ON p.doc_id = n.doc_id AND p.island = n.island),
        ws AS (SELECT doc_id, w, count(*)::BIGINT AS freq,
@@ -1564,6 +1587,9 @@ object TextOps {
          sum(1000000 // d)::BIGINT AS wsum_micro
        FROM pr GROUP BY wa, wb ORDER BY wsum_micro DESC, wa, wb LIMIT 40"""
 
+  /** q221 calls a quasi-identifier class risky below this size. */
+  private val Q221K = 5
+
   /** q221 — k-ANONYMITY AUDIT [Sweeney, IJUFKS 2002] over the
     * corpus's quasi-identifier lattice cell (source, lang,
     * log2-length bucket): a document whose QI combination is shared
@@ -1579,7 +1605,7 @@ object TextOps {
     * (map-side combined — class count is bounded by the QI domain,
     * not the corpus), one tiny rollup over classes. Nothing else
     * moves. */
-  def q221KAnonAudit(s: SparkSession, dir: String, k: Int = 5): DataFrame =
+  def q221KAnonAudit(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("source"), col("lang"),
               (length(bin(col("n_chars"))) - 1).cast("long").as("len_bucket"))
@@ -1587,8 +1613,8 @@ object TextOps {
       .agg(count(lit(1)).as("n"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_classes"),
-           sum(when(col("n") < k, 1L).otherwise(0L)).as("risky_classes"),
-           sum(when(col("n") < k, col("n")).otherwise(0L)).as("risky_docs"),
+           sum(when(col("n") < Q221K, 1L).otherwise(0L)).as("risky_classes"),
+           sum(when(col("n") < Q221K, col("n")).otherwise(0L)).as("risky_docs"),
            sum(col("n")).as("n_docs"),
            min(col("n")).as("effective_k"))
       .select(col("source"), col("n_classes"), col("risky_classes"),
@@ -1598,20 +1624,22 @@ object TextOps {
       .orderBy(col("source"))
 
   /** DuckDB oracle for q221 — identical QI bucketing and rollup. */
-  def q221OracleSql(k: Int = 5): String =
+  def q221OracleSql: String =
     s"""WITH qi AS (SELECT source, lang,
          (length(bin(n_chars)) - 1)::BIGINT AS len_bucket
          FROM documents),
        cls AS (SELECT source, lang, len_bucket, count(*)::BIGINT AS n
          FROM qi GROUP BY source, lang, len_bucket)
        SELECT source, count(*)::BIGINT AS n_classes,
-         sum(CASE WHEN n < $k THEN 1 ELSE 0 END)::BIGINT AS risky_classes,
-         sum(CASE WHEN n < $k THEN n ELSE 0 END)::BIGINT AS risky_docs,
+         sum(CASE WHEN n < $Q221K THEN 1 ELSE 0 END)::BIGINT AS risky_classes,
+         sum(CASE WHEN n < $Q221K THEN n ELSE 0 END)::BIGINT AS risky_docs,
          sum(n)::BIGINT AS n_docs,
-         CAST(sum(CASE WHEN n < $k THEN n ELSE 0 END) * 1000000
+         CAST(sum(CASE WHEN n < $Q221K THEN n ELSE 0 END) * 1000000
               // sum(n) AS BIGINT) AS risk_micro,
          min(n)::BIGINT AS effective_k
        FROM cls GROUP BY source ORDER BY source"""
+
+  private val Q224Widths = Seq(128, 512, 2048)
 
   /** q224 — CMS WIDTH SWEEP: the sketch-tuning curve for q179's
     * Count-Min — for widths w ∈ {128, 512, 2048} (d = 4 rows each),
@@ -1629,9 +1657,7 @@ object TextOps {
     * d×w-bounded counter aggregation + broadcast probe over the
     * collapsed vocabulary frame. The result is a 3-row union of
     * 1-row aggregates. */
-  def q224CmsWidthSweep(s: SparkSession, dir: String,
-                        widths: Seq[Int] = Seq(128, 512, 2048),
-                        d: Int = 4): DataFrame = {
+  def q224CmsWidthSweep(s: SparkSession, dir: String): DataFrame = {
     // sketch the 3-gram SHINGLE frequencies, not unigram tokens: this
     // corpus has a ~31-word vocabulary (no CMS collisions at any
     // tested width — a vacuous sweep), while its shingle vocabulary
@@ -1651,8 +1677,8 @@ object TextOps {
     // per-token aggregate and ONE per-width rollup. Per width the
     // (w, row_i, bucket) keys partition exactly as before, so every
     // counter, estimate and audit row is bit-identical.
-    val rows = widths.flatMap { w =>
-      (0 until d).map { i =>
+    val rows = Q224Widths.flatMap { w =>
+      (0 until CmsDepth).map { i =>
         struct(lit(w.toLong).as("w"), lit(i).as("row_i"),
                pmod(pmod(lit(CmsA(i)) * col("h") + lit(CmsB(i)), lit(CmsP)),
                     lit(w.toLong)).as("bucket"))
@@ -1680,12 +1706,11 @@ object TextOps {
 
   /** DuckDB oracle for q224 — q179's replayable sketch at each width,
     * rolled up to the same audit row. */
-  def q224OracleSql(widths: Seq[Int] = Seq(128, 512, 2048),
-                    d: Int = 4): String = {
-    val aList = CmsA.take(d).mkString("[", ",", "]")
-    val bList = CmsB.take(d).mkString("[", ",", "]")
-    val iList = (0 until d).mkString("[", ",", "]")
-    val per = widths.map { w =>
+  def q224OracleSql: String = {
+    val aList = CmsA.take(CmsDepth).mkString("[", ",", "]")
+    val bList = CmsB.take(CmsDepth).mkString("[", ",", "]")
+    val iList = (0 until CmsDepth).mkString("[", ",", "]")
+    val per = Q224Widths.map { w =>
       s"""r$w AS (SELECT token, c, i,
            ((($aList[i + 1]) * h + ($bList[i + 1])) % $CmsP) % $w AS bucket
            FROM fp, unnest($iList) AS t(i)),
@@ -1702,7 +1727,7 @@ object TextOps {
              AS avg_overcount_micro
            FROM e$w)"""
     }.mkString(",\n       ")
-    val sel = widths.map(w => s"SELECT * FROM a$w").mkString("\n       UNION ALL ")
+    val sel = Q224Widths.map(w => s"SELECT * FROM a$w").mkString("\n       UNION ALL ")
     s"""WITH t0 AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        sh AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3 THEN
            list_transform(generate_series(1, len(toks) - 2),
@@ -1717,6 +1742,9 @@ object TextOps {
        $sel
        ORDER BY w"""
   }
+
+  private val Q241Iters = 5
+  private val Q241TopK = 25
 
   /** q241 — TEXTRANK keyword extraction [Mihalcea & Tarau, EMNLP
     * 2004]: weighted PageRank over the word co-occurrence graph —
@@ -1738,7 +1766,7 @@ object TextOps {
     * plan size per round, the q82/q126/q209 discipline), and the
     * final top-k is a TakeOrderedAndProject. */
   def q241TextRank(s: SparkSession, dir: String,
-                   iters: Int = 5, k: Int = 25): DataFrame = {
+                   iters: Int = Q241Iters, k: Int = Q241TopK): DataFrame = {
     val pairs = Tables.documents(s, dir)
       .select(filter(tokens(col("text")),
         t => length(t) > 0 && !t.isin(stopwords: _*)).as("toks"))
@@ -1761,9 +1789,9 @@ object TextOps {
 
   /** DuckDB oracle for q241 — the q206 pair explode (stopwords and
     * self-pairs dropped) with the q126 rounds unrolled. */
-  def q241OracleSql(iters: Int = 5, k: Int = 25): String = {
+  def q241OracleSql: String = {
     val stop = stopwords.map(w => s"'$w'").mkString(", ")
-    val rounds = GraphOps.weightedPageRankRoundsSql(iters)
+    val rounds = GraphOps.weightedPageRankRoundsSql(Q241Iters)
     s"""WITH td AS (SELECT doc_id,
          list_filter(string_split(text, ' '),
            t -> len(t) > 0 AND t NOT IN ($stop)) AS toks
@@ -1784,7 +1812,7 @@ object TextOps {
               JOIN sw s USING (src)),
        r0 AS (SELECT src AS node, 1000000::BIGINT AS r FROM sw),
        $rounds
-       SELECT node AS word, r AS rank_micro FROM r$iters
-       ORDER BY rank_micro DESC, word LIMIT $k"""
+       SELECT node AS word, r AS rank_micro FROM r$Q241Iters
+       ORDER BY rank_micro DESC, word LIMIT $Q241TopK"""
   }
 }

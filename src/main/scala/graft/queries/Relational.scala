@@ -335,6 +335,9 @@ object Relational {
            r4(stddev_samp(col("o_totalprice"))).as("sd"))
       .orderBy(col("o_orderpriority"))
 
+  /** q53's KMV sketch size. */
+  private val Q53K = 4096
+
   /** q53 — approximate percentiles twin of q42, FULLY oracle-gated
     * (r10 verdict #8 — the q187 KMV replay applied to the production
     * alias itself): the sketch the exact sort-based percentile must
@@ -350,8 +353,7 @@ object Relational {
     * side-by-side error check. At k = 4096 the expected rank error
     * is ~1/√k ≈ 1.6%; groups smaller than k are sampled whole, so
     * the estimate degrades to near-exact rank selection. */
-  def q53ApproxPercentiles(s: SparkSession, dir: String,
-                           k: Int = 4096): DataFrame = {
+  def q53ApproxPercentiles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     import graft.functions.TopK
@@ -362,7 +364,7 @@ object Relational {
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .mapValues { case (_, oid, hv) => TopK.Scored(oid, -hv.toDouble) }
-      .agg(TopK.topK(k).toColumn.name("top"))
+      .agg(TopK.topK(Q53K).toColumn.name("top"))
       .flatMap { case (pri, top) => top.map(sc => (pri, sc.id)) }
       .toDF("pri", "oid")
     val samp = o
@@ -389,13 +391,13 @@ object Relational {
 
   /** DuckDB oracle for q53 — identical affine key hash, bottom-k
     * window, and integer rank selection at k = 4096. */
-  def q53OracleSql(k: Int = 4096): String =
+  def q53OracleSql: String =
     s"""WITH h AS (SELECT o_orderpriority AS pri, o_orderkey AS oid,
          o_totalprice AS v,
          ($LcA * o_orderkey + $LcB) % $LcP AS hv FROM orders),
        s AS (SELECT *, row_number() OVER (PARTITION BY pri
            ORDER BY hv, oid) AS rs FROM h),
-       samp AS (SELECT pri, oid, v FROM s WHERE rs <= $k),
+       samp AS (SELECT pri, oid, v FROM s WHERE rs <= $Q53K),
        r AS (SELECT pri, v,
          row_number() OVER (PARTITION BY pri ORDER BY v, oid) AS rv,
          count(*) OVER (PARTITION BY pri) AS kn FROM samp),
@@ -672,10 +674,13 @@ object Relational {
                 .zorder2(col("l_partkey"), col("l_suppkey")).as("z_key"))
       .orderBy(col("l_orderkey"), col("l_linenumber"))
 
+  /** Low bits of each key that [[graft.functions.ZOrder2]] interleaves. */
+  private val ZOrderBits = 16
+
   /** DuckDB oracle for q104 — the Morton interleave as unrolled
     * shift/AND arithmetic (bits are disjoint, so OR == sum). */
-  def q104OracleSql(bits: Int = 16): String = {
-    val terms = (0 until bits).flatMap { i =>
+  def q104OracleSql: String = {
+    val terms = (0 until ZOrderBits).flatMap { i =>
       Seq(s"(((l_partkey >> $i) & 1) << ${2 * i})",
           s"(((l_suppkey >> $i) & 1) << ${2 * i + 1})")
     }.mkString(" + ")
@@ -760,7 +765,7 @@ object Relational {
 
   /** DuckDB oracle for q146 — identical integer sums (HUGEINT exact)
     * and the identical floor/sqrt assembly, unrolled per pair. */
-  def q146OracleSql(): String = {
+  def q146OracleSql: String = {
     val cols = Seq("q", "p", "d", "t")
     val sumExprs =
       cols.map(c => s"SUM(${c}::HUGEINT) AS s_$c") ++
@@ -1020,6 +1025,8 @@ object Relational {
   private[graft] val LcA = 100003L
   private[graft] val LcB = 998244353L
 
+  private val Q186M = 65536
+
   /** q186 — linear-counting distinct estimation, FULLY oracle-gated:
     * the deterministic exact-replay twin of q41's HLL (the q179/q184/
     * q185 move — VERDICT r8 #5). Each o_custkey maps through the
@@ -1040,10 +1047,9 @@ object Relational {
     * values). The exact count rides along only as the gate's
     * reference column — a production deployment drops it, which is
     * the entire point of the sketch. */
-  def q186LinearCountDistinct(s: SparkSession, dir: String,
-                              m: Int = 65536): DataFrame = {
+  def q186LinearCountDistinct(s: SparkSession, dir: String): DataFrame = {
     val bucket = pmod(pmod(lit(LcA) * col("o_custkey") + lit(LcB), lit(LcP)),
-                      lit(m.toLong))
+                      lit(Q186M.toLong))
     Tables.orders(s, dir)
       .select(col("o_orderstatus"), col("o_custkey"), bucket.as("bucket"))
       .groupBy(col("o_orderstatus"))
@@ -1051,10 +1057,10 @@ object Relational {
            countDistinct(col("o_custkey")).as("exact_customers"),
            count(lit(1)).as("n_orders"))
       .select(col("o_orderstatus"), col("occupied"),
-              when(col("occupied") < m,
-                r4(lit(m.toDouble) *
-                   log(lit(m.toDouble) /
-                       (lit(m.toLong) - col("occupied")).cast("double"))))
+              when(col("occupied") < Q186M,
+                r4(lit(Q186M.toDouble) *
+                   log(lit(Q186M.toDouble) /
+                       (lit(Q186M.toLong) - col("occupied")).cast("double"))))
                 .as("lc_est"),
               col("exact_customers"), col("n_orders"))
       .orderBy(col("o_orderstatus"))
@@ -1062,20 +1068,22 @@ object Relational {
 
   /** DuckDB oracle for q186 — identical affine bucket hash, occupied
     * count, and m·ln(m/V) estimator. */
-  def q186OracleSql(m: Int = 65536): String =
+  def q186OracleSql: String =
     s"""WITH b AS (SELECT o_orderstatus, o_custkey,
-         (($LcA * o_custkey + $LcB) % $LcP) % $m AS bucket FROM orders),
+         (($LcA * o_custkey + $LcB) % $LcP) % $Q186M AS bucket FROM orders),
        g AS (SELECT o_orderstatus,
          count(DISTINCT bucket) AS occupied,
          count(DISTINCT o_custkey) AS exact_customers,
          count(*) AS n_orders
          FROM b GROUP BY o_orderstatus)
        SELECT o_orderstatus, CAST(occupied AS BIGINT) AS occupied,
-         CASE WHEN occupied < $m THEN
-           round($m.0 * ln($m.0 / ($m - occupied)), 4) END AS lc_est,
+         CASE WHEN occupied < $Q186M THEN
+           round($Q186M.0 * ln($Q186M.0 / ($Q186M - occupied)), 4) END AS lc_est,
          CAST(exact_customers AS BIGINT) AS exact_customers,
          CAST(n_orders AS BIGINT) AS n_orders
        FROM g ORDER BY o_orderstatus"""
+
+  private val Q187K = 256
 
   /** q187 — bottom-k-by-hash (KMV-style) sampled quantiles, FULLY
     * oracle-gated: the deterministic exact-replay twin of q53's GK
@@ -1096,8 +1104,7 @@ object Relational {
     * is a broadcast id-lookup (the q75 re-rank shape — bloom/DPP
     * prunable at warehouse scale); ranking happens on the bounded
     * sample only. Nothing sorts more than k rows per group. */
-  def q187SampledQuantiles(s: SparkSession, dir: String,
-                           k: Int = 256): DataFrame = {
+  def q187SampledQuantiles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     import graft.functions.TopK
@@ -1109,7 +1116,7 @@ object Relational {
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .mapValues { case (_, oid, hv) => TopK.Scored(oid, -hv.toDouble) }
-      .agg(TopK.topK(k).toColumn.name("top"))
+      .agg(TopK.topK(Q187K).toColumn.name("top"))
       .flatMap { case (pri, top) => top.map(sc => (pri, sc.id)) }
       .toDF("pri", "oid")
     val samp = o
@@ -1134,13 +1141,13 @@ object Relational {
 
   /** DuckDB oracle for q187 — identical affine key hash, bottom-k
     * window, and integer rank selection. */
-  def q187OracleSql(k: Int = 256): String =
+  def q187OracleSql: String =
     s"""WITH h AS (SELECT o_orderpriority AS pri, o_orderkey AS oid,
          o_totalprice AS v,
          ($LcA * o_orderkey + $LcB) % $LcP AS hv FROM orders),
        s AS (SELECT *, row_number() OVER (PARTITION BY pri
            ORDER BY hv, oid) AS rs FROM h),
-       samp AS (SELECT pri, oid, v FROM s WHERE rs <= $k),
+       samp AS (SELECT pri, oid, v FROM s WHERE rs <= $Q187K),
        r AS (SELECT pri, v,
          row_number() OVER (PARTITION BY pri ORDER BY v, oid) AS rv,
          count(*) OVER (PARTITION BY pri) AS kn FROM samp)
@@ -1149,6 +1156,8 @@ object Relational {
          max(CASE WHEN rv = (kn + 1) // 2 THEN v END) AS p50_est,
          max(CASE WHEN rv = (kn * 9 + 9) // 10 THEN v END) AS p90_est
        FROM r GROUP BY pri ORDER BY o_orderpriority"""
+
+  private val Q199M = 4096
 
   /** q199 — mergeable sketch ROLLUP, fully oracle-gated: the property
     * that makes q186's linear-count sketch operationally valuable at
@@ -1183,13 +1192,12 @@ object Relational {
     * assumes Poisson collisions it never observes). The gate
     * certifies the MERGE ALGEBRA and sketch mechanics; q41's HLL
     * remains the production estimator. */
-  def q199SketchRollup(s: SparkSession, dir: String,
-                       m: Int = 4096): DataFrame = {
+  def q199SketchRollup(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"),
               col("user_id"),
               pmod(pmod(lit(LcA) * col("user_id") + lit(LcB), lit(LcP)),
-                   lit(m.toLong)).as("bucket"))
+                   lit(Q199M.toLong)).as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val daily = e.groupBy(col("event_type"), col("day"))
       .agg(collect_set(col("bucket")).as("bs"))
@@ -1208,10 +1216,10 @@ object Relational {
               col("occ_direct"), col("occ_merged"),
               (col("occ_direct") === col("occ_merged")).as("merge_exact"),
               col("naive_sum_occ"),
-              when(col("occ_merged") < m,
-                r4(lit(m.toDouble) *
-                   log(lit(m.toDouble) /
-                       (lit(m.toLong) - col("occ_merged")).cast("double"))))
+              when(col("occ_merged") < Q199M,
+                r4(lit(Q199M.toDouble) *
+                   log(lit(Q199M.toDouble) /
+                       (lit(Q199M.toLong) - col("occ_merged")).cast("double"))))
                 .as("lc_est"),
               col("exact_users"))
       .orderBy(col("event_type"))
@@ -1219,9 +1227,9 @@ object Relational {
 
   /** DuckDB oracle for q199 — identical affine bucket hash, per-day
     * partial sets, list-union merge, and m·ln(m/V) estimator. */
-  def q199OracleSql(m: Int = 4096): String =
+  def q199OracleSql: String =
     s"""WITH e AS (SELECT event_type, CAST(ts AS DATE) AS day, user_id,
-         (($LcA * user_id + $LcB) % $LcP) % $m AS bucket FROM events),
+         (($LcA * user_id + $LcB) % $LcP) % $Q199M AS bucket FROM events),
        daily AS (SELECT event_type, day,
            list_distinct(list(bucket)) AS bs,
            count(DISTINCT bucket) AS day_occ
@@ -1238,8 +1246,8 @@ object Relational {
          CAST(occ_merged AS BIGINT) AS occ_merged,
          occ_direct = occ_merged AS merge_exact,
          CAST(naive_sum_occ AS BIGINT) AS naive_sum_occ,
-         CASE WHEN occ_merged < $m THEN
-           round($m.0 * ln($m.0 / ($m - occ_merged)), 4) END AS lc_est,
+         CASE WHEN occ_merged < $Q199M THEN
+           round($Q199M.0 * ln($Q199M.0 / ($Q199M - occ_merged)), 4) END AS lc_est,
          CAST(exact_users AS BIGINT) AS exact_users
        FROM mg JOIN dr USING (event_type) ORDER BY mg.event_type"""
 
@@ -1329,6 +1337,8 @@ object Relational {
        FROM pairs JOIN keep ka ON ka.p = pa JOIN keep kb ON kb.p = pb
        ORDER BY lift_micro DESC, pa, pb LIMIT 50"""
 
+  private val Q213K = 64
+
   /** q213 — KMV (k-minimum-values) SET OPERATIONS [Beyer et al.,
     * SIGMOD 2007]: per event-type pair, estimate |A∪B| and |A∩B| of
     * the two types' user sets from 64-value bottom-k sketches, next
@@ -1350,7 +1360,7 @@ object Relational {
     * list HOFs — corpus size never enters the pair stage. Exact
     * baselines are one user-keyed aggregation + a broadcast of the
     * tiny type-pair list. */
-  def q213KmvSetOps(s: SparkSession, dir: String, k: Int = 64): DataFrame = {
+  def q213KmvSetOps(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.TopK
     val ev = Tables.events(s, dir)
@@ -1361,7 +1371,7 @@ object Relational {
       .as[(String, Long)]
       .groupByKey(_._1)
       .mapValues { case (_, hv) => TopK.Scored(hv, -hv.toDouble) }
-      .agg(TopK.topK(k).toColumn.name("top"))
+      .agg(TopK.topK(Q213K).toColumn.name("top"))
       .map { case (t, top) => (t, top.map(_.id).sorted.toArray) }
       .toDF("t", "sk")
     // exact pairwise counts: one user-keyed type-set aggregation,
@@ -1383,18 +1393,18 @@ object Relational {
     val p = sk.toDF("ta", "ska")
       .join(sk.toDF("tb", "skb"), col("ta") < col("tb"))
       .withColumn("uk", slice(array_sort(array_union(col("ska"), col("skb"))),
-                              1, k))
-      .withColumn("small", size(col("uk")) < k)
+                              1, Q213K))
+      .withColumn("small", size(col("uk")) < Q213K)
       .withColumn("est_union",
         when(col("small"), size(col("uk")).cast("long"))
-          .otherwise(expr(s"(${k - 1}L * $LcP) div element_at(uk, $k)")))
+          .otherwise(expr(s"(${Q213K - 1}L * $LcP) div element_at(uk, $Q213K)")))
       .withColumn("rho",
         size(filter(col("uk"), h =>
           array_contains(col("ska"), h) && array_contains(col("skb"), h)))
           .cast("long"))
       .withColumn("est_inter",
         when(col("small"), col("rho"))
-          .otherwise(expr(s"(rho * est_union) div $k")))
+          .otherwise(expr(s"(rho * est_union) div $Q213K")))
     p.join(exact, Seq("ta", "tb"))
       .select(col("ta"), col("tb"), col("est_union"), col("est_inter"),
               col("exact_union"), col("exact_inter"))
@@ -1404,22 +1414,22 @@ object Relational {
   /** DuckDB oracle for q213 — identical affine hash, bottom-k via
     * ranked window, identical list-HOF union/intersection estimates,
     * and exact baselines from a user-type contingency join. */
-  def q213OracleSql(k: Int = 64): String =
+  def q213OracleSql: String =
     s"""WITH ev AS (SELECT DISTINCT event_type AS t, user_id AS u FROM events),
        h AS (SELECT t, ($LcA * u + $LcB) % $LcP AS hv FROM ev),
        rk AS (SELECT t, hv, row_number() OVER (PARTITION BY t ORDER BY hv)
            AS r FROM h),
        sk AS (SELECT t, list(hv ORDER BY hv) AS sk FROM rk
-           WHERE r <= $k GROUP BY t),
+           WHERE r <= $Q213K GROUP BY t),
        pr AS (SELECT a.t AS ta, b.t AS tb, a.sk AS ska, b.sk AS skb
            FROM sk a JOIN sk b ON a.t < b.t),
        est AS (SELECT ta, tb,
-           list_sort(list_distinct(list_concat(ska, skb)))[:$k] AS uk,
+           list_sort(list_distinct(list_concat(ska, skb)))[:$Q213K] AS uk,
            ska, skb FROM pr),
        e2 AS (SELECT ta, tb,
-           len(uk) < $k AS small,
-           CASE WHEN len(uk) < $k THEN len(uk)::BIGINT
-                ELSE (${k - 1}::BIGINT * $LcP) // uk[$k] END AS est_union,
+           len(uk) < $Q213K AS small,
+           CASE WHEN len(uk) < $Q213K THEN len(uk)::BIGINT
+                ELSE (${Q213K - 1}::BIGINT * $LcP) // uk[$Q213K] END AS est_union,
            len(list_filter(uk, x -> list_contains(ska, x)
                AND list_contains(skb, x)))::BIGINT AS rho
            FROM est),
@@ -1434,7 +1444,7 @@ object Relational {
            FROM ut JOIN pairs ON list_contains(ts, ta) OR list_contains(ts, tb)
            GROUP BY ta, tb)
        SELECT e2.ta, e2.tb, est_union,
-         CASE WHEN small THEN rho ELSE (rho * est_union) // $k END AS est_inter,
+         CASE WHEN small THEN rho ELSE (rho * est_union) // $Q213K END AS est_inter,
          exact_union, exact_inter
        FROM e2 JOIN ex ON e2.ta = ex.ta AND e2.tb = ex.tb
        ORDER BY e2.ta, e2.tb"""

@@ -47,7 +47,7 @@ fi
 echo "==> Two-part-file input: summary identical to the single-file run"
 
 # QUERIES.md freshness (VERDICT r8 #7): regenerate and diff — a drift
-# between SparkEntry.queries/scaladoc and the committed doc fails here.
+# between SparkEntry.catalog/scaladoc and the committed doc fails here.
 # (QueriesDocSpec pins the name/gate invariants inside `sbt test`;
 # this catches doc-text drift too, since python is available here.)
 if command -v python3 >/dev/null; then
@@ -89,9 +89,10 @@ else
 fi
 
 # The streaming gate end to end: graft.Verify dumps the streaming
-# queries (SparkEntry.streamingQueries) on sf0.001 and tools/check.py
-# compares each with its DuckDB oracle. oracle_sql.json holds only the
-# selected queries' oracles, so every one of them must pass.
+# queries (QUERIES.md's Structured Streaming section, regenerated from
+# SparkEntry.catalog above) on sf0.001 and tools/check.py compares each
+# with its DuckDB oracle. oracle_sql.json holds only the selected
+# queries' oracles, so every one of them must pass.
 if [ ! -d "$SF_DIR" ]; then
   echo "SKIPPED: streaming oracle check ($SF_DIR not found)"
 elif ! command -v python3 >/dev/null; then
@@ -99,10 +100,10 @@ elif ! command -v python3 >/dev/null; then
 elif ! python3 -c 'import duckdb, pandas' 2>/dev/null; then
   echo "SKIPPED: streaming oracle check (python3 cannot import duckdb and pandas)"
 else
-  STREAMING="$(sed -n '/val streamingQueries/,/)$/p' src/main/scala/graft/SparkEntry.scala \
-    | grep -o '"q[0-9a-z_]*"' | tr -d '"' | paste -sd, -)"
+  STREAMING="$(sed -n '/^## Structured Streaming/,/^## /p' QUERIES.md \
+    | grep -o '^| `q[0-9a-z_]*`' | tr -d '|` ' | paste -sd, -)"
   if [ -z "$STREAMING" ]; then
-    echo "ERROR: no query names found in SparkEntry.streamingQueries" >&2
+    echo "ERROR: no query names found in QUERIES.md's Structured Streaming section" >&2
     exit 1
   fi
   VERIFY_DIR="$(mktemp -d)"

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Regenerate QUERIES.md from SparkEntry.queries + module scaladoc.
+"""Regenerate QUERIES.md from the SparkEntry.catalog entries + module scaladoc.
 
 One row per gated query: name, gate kind (hash vs rows-only), and the
 first sentence of the implementing function's scaladoc. Run from the
@@ -14,11 +14,12 @@ import os
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 QNAME = r'q[0-9]+[a-z0-9_]*'
 
+# Each catalog entry opens `Query("<name>", <builder>, ...`; a fence's
+# oracle is `None` (`[^"]` keeps the match inside one entry).
 src = open(f'{ROOT}/src/main/scala/graft/SparkEntry.scala').read()
-qsec = src[src.index('def queries'):src.index('def oracleSql')]
-osec = src[src.index('def oracleSql'):]
-raw = re.findall(rf'"({QNAME})"\s*->\s*(.+)', qsec)
-oracle_names = set(re.findall(rf'"({QNAME})"\s*->', osec))
+raw = re.findall(rf'Query\("({QNAME})",\s*(.+)', src)
+fences = set(re.findall(rf'Query\("({QNAME})",[^"]*?,\s*None\)', src))
+oracle_names = {n for n, _ in raw} - fences
 
 entries = []
 for name, rhs in raw:
