@@ -59,6 +59,51 @@ object SparkEntry {
            SELECT e.t2, r.lbl FROM reach r JOIN edges e ON e.s = r.doc),
          comp AS (SELECT doc, min(lbl) AS cluster_id FROM reach GROUP BY doc)"""
 
+  /** Oracle of the batch hourly tumbling window (q29; its streaming twin q51). */
+  private val tumblingWindowSql: String =
+    """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour, event_type,
+         count(*) AS n_events, round(sum(value), 4) AS total_value
+         FROM events GROUP BY 1, 2 ORDER BY hour, event_type"""
+
+  /** Oracle of the batch 30-minute-gap sessionization (q30; its streaming
+    * twins q52 and q226). */
+  private val sessionizeSql: String =
+    """WITH x AS (SELECT user_id, event_id, ts, value,
+           CASE WHEN lag(ts) OVER w IS NULL
+                     OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
+                THEN 1 ELSE 0 END AS new_s
+           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         y AS (SELECT user_id, ts, value,
+           CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+           FROM x)
+         SELECT user_id, session_id, count(*) AS n_events,
+           strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS t_start,
+           strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS t_end,
+           round(sum(value), 4) AS total_value
+         FROM y GROUP BY user_id, session_id ORDER BY user_id, session_id"""
+
+  /** Oracle of the top 3 orders per customer (q04 and q43). */
+  private val topOrdersPerCustomerSql: String =
+    """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
+           SELECT o_custkey, o_orderkey, o_totalprice,
+                  row_number() OVER (PARTITION BY o_custkey
+                                     ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
+           FROM orders)
+         WHERE rn <= 3
+         ORDER BY o_custkey, rn"""
+
+  /** Oracle of the batch 30-minute sliding window (q44; its streaming twin q94). */
+  private val slidingWindowSql: String =
+    """WITH b AS (
+           SELECT time_bucket(INTERVAL 30 MINUTE, ts) AS w_start, event_type, value FROM events
+           UNION ALL
+           SELECT time_bucket(INTERVAL 30 MINUTE, ts) - INTERVAL 30 MINUTE, event_type, value FROM events)
+         SELECT strftime(w_start, '%Y-%m-%d %H:%M') AS w_start, event_type,
+                count(*) AS n_events, round(sum(value), 4) AS total_value
+         FROM b GROUP BY b.w_start, event_type
+         ORDER BY w_start, event_type"""
+
   /** Every query, once, in number order; names are unique (QueryCatalogSpec). */
   val catalog: Seq[Query] = Seq(
     Query("q01_pricing_summary", Relational.q01PricingSummary, Some(
@@ -91,14 +136,7 @@ object SparkEntry {
          FROM orders
          ORDER BY o_totalprice DESC, o_orderkey ASC
          LIMIT 10""")),
-    Query("q04_window_rank", Relational.q04TopOrdersPerCustomer, Some(
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-                  row_number() OVER (PARTITION BY o_custkey
-                                     ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-           FROM orders)
-         WHERE rn <= 3
-         ORDER BY o_custkey, rn""")),
+    Query("q04_window_rank", Relational.q04TopOrdersPerCustomer, Some(topOrdersPerCustomerSql)),
     Query("q05_distinct", Relational.q05DistinctSegments, Some(
       """SELECT DISTINCT c_mktsegment, c_nationkey FROM customer
          ORDER BY c_mktsegment, c_nationkey""")),
@@ -276,25 +314,8 @@ object SparkEntry {
          SELECT label, count(*) AS cnt, round(avg(nrm), 6) AS avg_norm,
                 round(avg(d0), 6) AS avg_dim0
          FROM e GROUP BY label ORDER BY label""")),
-    Query("q29_tumbling_window", EventOps.q29TumblingWindow, Some(
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour, event_type,
-         count(*) AS n_events, round(sum(value), 4) AS total_value
-         FROM events GROUP BY 1, 2 ORDER BY hour, event_type""")),
-    Query("q30_sessionize", EventOps.q30Sessionize, Some(
-      """WITH x AS (SELECT user_id, event_id, ts, value,
-           CASE WHEN lag(ts) OVER w IS NULL
-                     OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
-                THEN 1 ELSE 0 END AS new_s
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         y AS (SELECT user_id, ts, value,
-           CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-           FROM x)
-         SELECT user_id, session_id, count(*) AS n_events,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS t_start,
-           strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS t_end,
-           round(sum(value), 4) AS total_value
-         FROM y GROUP BY user_id, session_id ORDER BY user_id, session_id""")),
+    Query("q29_tumbling_window", EventOps.q29TumblingWindow, Some(tumblingWindowSql)),
+    Query("q30_sessionize", EventOps.q30Sessionize, Some(sessionizeSql)),
     Query("q31_json_extract", EventOps.q31JsonExtract, Some(
       """SELECT event_type, count(*) AS n_events,
          round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 6) AS avg_k,
@@ -487,23 +508,8 @@ object SparkEntry {
          round(stddev_samp(o_totalprice), 4) AS sd
          FROM orders GROUP BY o_orderpriority
          ORDER BY o_orderpriority""")),
-    Query("q43_topk_agg", Relational.q43TopKAgg, Some(
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-                  row_number() OVER (PARTITION BY o_custkey
-                                     ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-           FROM orders)
-         WHERE rn <= 3
-         ORDER BY o_custkey, rn""")),
-    Query("q44_sliding_window", EventOps.q44SlidingWindow, Some(
-      """WITH b AS (
-           SELECT time_bucket(INTERVAL 30 MINUTE, ts) AS w_start, event_type, value FROM events
-           UNION ALL
-           SELECT time_bucket(INTERVAL 30 MINUTE, ts) - INTERVAL 30 MINUTE, event_type, value FROM events)
-         SELECT strftime(w_start, '%Y-%m-%d %H:%M') AS w_start, event_type,
-                count(*) AS n_events, round(sum(value), 4) AS total_value
-         FROM b GROUP BY b.w_start, event_type
-         ORDER BY w_start, event_type""")),
+    Query("q43_topk_agg", Relational.q43TopKAgg, Some(topOrdersPerCustomerSql)),
+    Query("q44_sliding_window", EventOps.q44SlidingWindow, Some(slidingWindowSql)),
     Query("q45_token_freq", TextOps.q45TokenFreq, Some(
       """SELECT token, count(*) AS freq
          FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
@@ -565,25 +571,10 @@ object SparkEntry {
     // q51/q52: the streaming twins finalize EVERY window/session (the
     // sentinel feed pushes the watermark past all real data), so their
     // oracles are the batch twins' SQL verbatim
-    Query("q51_stream_tumbling", StreamQueries.q51StreamTumbling, Some(
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour, event_type,
-         count(*) AS n_events, round(sum(value), 4) AS total_value
-         FROM events GROUP BY 1, 2 ORDER BY hour, event_type"""), streaming = true),
-    Query("q52_stream_sessions", StreamQueries.q52StreamSessions, Some(
-      """WITH x AS (SELECT user_id, event_id, ts, value,
-           CASE WHEN lag(ts) OVER w IS NULL
-                     OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
-                THEN 1 ELSE 0 END AS new_s
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         y AS (SELECT user_id, ts, value,
-           CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-           FROM x)
-         SELECT user_id, session_id, count(*) AS n_events,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS t_start,
-           strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS t_end,
-           round(sum(value), 4) AS total_value
-         FROM y GROUP BY user_id, session_id ORDER BY user_id, session_id"""), streaming = true),
+    Query("q51_stream_tumbling", StreamQueries.q51StreamTumbling, Some(tumblingWindowSql),
+      streaming = true),
+    Query("q52_stream_sessions", StreamQueries.q52StreamSessions, Some(sessionizeSql),
+      streaming = true),
     Query("q53_approx_percentiles", Relational.q53ApproxPercentiles, Some(Relational.q53OracleSql)),
     // q54: rational idf (N+1)/(df+1) — integer ratios through IEEE
     // division are bit-stable cross-engine, unlike ln
@@ -1067,15 +1058,8 @@ object SparkEntry {
     Query("q93b_approx_deciles", Sampling.q93bApproxDecileBins, None),
     // q94's oracle is q44's batch SQL verbatim — the streaming twin must
     // finalize to exactly the batch sliding-window result
-    Query("q94_stream_sliding", StreamQueries.q94StreamSliding, Some(
-      """WITH b AS (
-           SELECT time_bucket(INTERVAL 30 MINUTE, ts) AS w_start, event_type, value FROM events
-           UNION ALL
-           SELECT time_bucket(INTERVAL 30 MINUTE, ts) - INTERVAL 30 MINUTE, event_type, value FROM events)
-         SELECT strftime(w_start, '%Y-%m-%d %H:%M') AS w_start, event_type,
-                count(*) AS n_events, round(sum(value), 4) AS total_value
-         FROM b GROUP BY b.w_start, event_type
-         ORDER BY w_start, event_type"""), streaming = true),
+    Query("q94_stream_sliding", StreamQueries.q94StreamSliding, Some(slidingWindowSql),
+      streaming = true),
     Query("q95_cross_source_dups", Dedup.q95CrossSourceDups, Some(
       """WITH g AS (SELECT md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS fp,
                       source, count(*)::BIGINT AS cnt
@@ -2241,21 +2225,8 @@ object SparkEntry {
     // event landing exactly at last+gap (sessions combine when
     // start_B <= end_A, inclusive; MemoryStream-verified in
     // EventStreamsSpec), so the oracle splits only on strict >
-    Query("q226_stream_session_window", StreamQueries.q226StreamSessionWindow, Some(
-      """WITH x AS (SELECT user_id, event_id, ts, value,
-           CASE WHEN lag(ts) OVER w IS NULL
-                     OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
-                THEN 1 ELSE 0 END AS new_s
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         y AS (SELECT user_id, ts, value,
-           CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-           FROM x)
-         SELECT user_id, session_id, count(*) AS n_events,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS t_start,
-           strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS t_end,
-           round(sum(value), 4) AS total_value
-         FROM y GROUP BY user_id, session_id ORDER BY user_id, session_id"""), streaming = true),
+    Query("q226_stream_session_window", StreamQueries.q226StreamSessionWindow,
+      Some(sessionizeSql), streaming = true),
     Query("q227_assortativity", GraphOps.q227Assortativity, Some(GraphOps.q227OracleSql)),
     Query("q228_bloom_replay", Dedup.q228BloomReplay, Some(Dedup.q228OracleSql)),
     Query("q229_dsir_weights", Sampling.q229DsirWeights, Some(Sampling.q229OracleSql)),

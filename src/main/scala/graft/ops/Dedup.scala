@@ -2512,31 +2512,38 @@ object Dedup {
     * float edition).
     *
     * Scale shape: blocking runs on the collapsed name DICTIONARY
-    * (distinct names + counts — tiny vs the part table), ranked by
-    * [[Sampling.distributedPrefix]] (bucketed by leading character,
-    * never a single-task global window); candidates are 2·w per
-    * name, scored map-side by the codegen'd expression. The
-    * corpus-linear stage is exactly one groupBy(p_name). */
+    * (distinct names + counts — tiny vs the part table). Both passes
+    * are ONE [[Sampling.distributedPrefix]] call: each name is keyed
+    * twice, as source "fwd" (the name) and source "rev" (its
+    * reversal), so the two orderings are two real values of the
+    * helper's `source` — bucketed by leading character, never a
+    * single-task global window, and with no constant-source
+    * re-exchange. One rank self-join on (source, rn) then yields
+    * 2·w candidates per name, scored map-side by the codegen'd
+    * expression. The dictionary is not persisted: its lineage is
+    * one groupBy(p_name), the only corpus-linear stage. Both join
+    * legs reuse the helper's one (source, bucket) exchange, and the
+    * two count join-backs share one broadcast dictionary. One
+    * constant-source call per pass, each planned under both join
+    * legs, launched 43 jobs at sf0.001; this shape launches 11
+    * (BuildJobsSpec pins ≤ 12). */
   def q225FuzzyParts(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions
     val names = Tables.part(s, dir)
       .groupBy(col("p_name")).agg(count(lit(1)).as("n_parts"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def pass(key: org.apache.spark.sql.Column): DataFrame = {
-      val ranked = Sampling.distributedPrefix(
-          names.select(col("p_name"), lit("all").as("source"),
-                       lit(0L).as("n_tokens"), key.as("sk")),
-          substring(col("sk"), 1, 1), Seq(col("sk"), col("p_name")),
-          withSum = false)
-        .select(col("p_name"), col("rn"))
-      val a = ranked.select(col("p_name").as("name_a"),
-        explode(array((1 to Q225Window).map(i => col("rn") + lit(i.toLong)): _*))
-          .as("rn_b"))
-      val b = ranked.select(col("p_name").as("name_b"), col("rn").as("rn_b"))
-      a.join(b, Seq("rn_b")).select(col("name_a"), col("name_b"))
-    }
-    val cands = pass(col("p_name"))
-      .unionByName(pass(reverse(col("p_name"))))
+    val keyed = names.select(col("p_name"), explode(
+      map(lit("fwd"), col("p_name"), lit("rev"), reverse(col("p_name"))))
+        .as(Seq("source", "sk")))
+    val ranked = Sampling.distributedPrefix(keyed,
+        substring(col("sk"), 1, 1), Seq(col("sk"), col("p_name")),
+        withSum = false)
+      .select(col("source"), col("p_name"), col("rn"))
+    val a = ranked.select(col("source"), col("p_name").as("name_a"),
+      explode(array((1 to Q225Window).map(i => col("rn") + lit(i.toLong)): _*))
+        .as("rn_b"))
+    val b = ranked.select(col("source"), col("p_name").as("name_b"),
+      col("rn").as("rn_b"))
+    val cands = a.join(b, Seq("source", "rn_b"))
       .select(least(col("name_a"), col("name_b")).as("name_a"),
               greatest(col("name_a"), col("name_b")).as("name_b"))
       .distinct()

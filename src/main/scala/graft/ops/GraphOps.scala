@@ -12,8 +12,27 @@ import graft.Tables
   */
 object GraphOps {
 
-  /** q82 — PageRank in 64-bit FIXED-POINT arithmetic over the
-    * user↔item click graph (nodes = users ∪ items from
+  /** Bidirectional user↔item click edge list (shared by q82/q99). */
+  private def clickEdges(s: SparkSession, dir: String): DataFrame = {
+    val clicks = Tables.events(s, dir)
+      .filter(col("event_type") === "click")
+      .select(col("user_id"),
+              get_json_object(col("props"), "$.k").cast("long").as("k"))
+      .distinct()
+    clicks
+      .select(concat(lit("u"), col("user_id")).as("src"),
+              concat(lit("i"), col("k")).as("dst"))
+      .unionByName(clicks
+        .select(concat(lit("i"), col("k")).as("src"),
+                concat(lit("u"), col("user_id")).as("dst")))
+  }
+
+  /** Fixed-point rounds of q82, q99, q126 and q209. */
+  private val Iters = 3
+
+  /** q82 — fixed-point PageRank over the user↔item click graph,
+    * integer micro-arithmetic, persisted edges across rounds. It runs
+    * in 64-bit FIXED-POINT arithmetic (nodes = users ∪ items from
     * `events.props.k`, edges both directions so every node has
     * out-degree ≥ 1 and no rank dangles). Ranks live as micro-ints:
     * r₀ = 1,000,000 per node, and each of the `iters` rounds computes
@@ -35,24 +54,6 @@ object GraphOps {
     * list would be bucketed by src so the per-round join is
     * co-located; the rank vector reshuffles each round regardless
     * (it is the data that changes). */
-  /** Bidirectional user↔item click edge list (shared by q82/q99). */
-  private def clickEdges(s: SparkSession, dir: String): DataFrame = {
-    val clicks = Tables.events(s, dir)
-      .filter(col("event_type") === "click")
-      .select(col("user_id"),
-              get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .distinct()
-    clicks
-      .select(concat(lit("u"), col("user_id")).as("src"),
-              concat(lit("i"), col("k")).as("dst"))
-      .unionByName(clicks
-        .select(concat(lit("i"), col("k")).as("src"),
-                concat(lit("u"), col("user_id")).as("dst")))
-  }
-
-  /** Fixed-point rounds of q82, q99, q126 and q209. */
-  private val Iters = 3
-
   def q82PageRank(s: SparkSession, dir: String, iters: Int = Iters): DataFrame = {
     val edges = clickEdges(s, dir)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
@@ -154,13 +155,6 @@ object GraphOps {
          SELECT node, label FROM l$Iters ORDER BY node"""
   }
 
-  /** q126 — WEIGHTED fixed-point PageRank: q82 with edge weights =
-    * click multiplicity (how many times the user clicked the item),
-    * so heavy engagement carries proportionally more rank —
-    * contrib = (r·w) div Σw instead of r div deg. Same integer
-    * micro-rank arithmetic, same unrolled-rounds plan shape, same
-    * oracle replayability; only the edge frame gains a weight
-    * column (one extra long through the per-round shuffle). */
   /** The weighted-PageRank fold shared by q126 (click graph) and
     * q241 (TextRank word graph): `edges` is the DIRECTED (src, dst,
     * w) frame — callers union both directions for undirected
@@ -197,6 +191,13 @@ object GraphOps {
            GROUP BY dst)"""
     }.mkString(",\n         ")
 
+  /** q126 — WEIGHTED fixed-point PageRank: q82 with edge weights =
+    * click multiplicity (how many times the user clicked the item),
+    * so heavy engagement carries proportionally more rank —
+    * contrib = (r·w) div Σw instead of r div deg. Same integer
+    * micro-rank arithmetic, same unrolled-rounds plan shape, same
+    * oracle replayability; only the edge frame gains a weight
+    * column (one extra long through the per-round shuffle). */
   def q126WeightedPageRank(s: SparkSession, dir: String,
                            iters: Int = Iters): DataFrame = {
     val clicks = Tables.events(s, dir)

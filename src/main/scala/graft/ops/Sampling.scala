@@ -180,18 +180,6 @@ object Sampling {
       .orderBy(col("token"))
   }
 
-  /** q93 — equi-depth decile binning per source (the feature-binning
-    * pass before stratified splits or curriculum bucketing): ntile(10)
-    * over a TOTAL order (n_chars, then doc_id — the tiebreak makes
-    * bin membership deterministic, not layout-dependent), reported as
-    * per-bin occupancy and bounds. ntile is SQL-standard and agrees
-    * bit-for-bit across engines once the order is total.
-    *
-    * Scale shape: one range-partitioned sort per source partition —
-    * the same machinery as a global orderBy — then a tiny aggregate.
-    * At 100 TB you'd swap the exact window for approx_percentile
-    * fences at a 10⁻³ error budget; the exact form is the oracle-able
-    * contract. */
   private val Q93bAccuracy = 10000
 
   /** q93b — the 100 TB twin of [[q93DecileBins]] (VERDICT r5 #5,
@@ -227,6 +215,20 @@ object Sampling {
       .orderBy(col("source"), col("decile"))
   }
 
+  /** q93 — exact per-source decile bins of doc length (distributed
+    * sort-based order statistics; q93b is the sketch twin). The
+    * equi-depth binning is the feature-binning pass before stratified
+    * splits or curriculum bucketing: ntile(10) over a TOTAL order
+    * (n_chars, then doc_id — the tiebreak makes bin membership
+    * deterministic, not layout-dependent), reported as
+    * per-bin occupancy and bounds. ntile is SQL-standard and agrees
+    * bit-for-bit across engines once the order is total.
+    *
+    * Scale shape: one range-partitioned sort per source partition —
+    * the same machinery as a global orderBy — then a tiny aggregate.
+    * At 100 TB you'd swap the exact window for approx_percentile
+    * fences at a 10⁻³ error budget; the exact form is the oracle-able
+    * contract. */
   def q93DecileBins(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("source"))
@@ -242,19 +244,6 @@ object Sampling {
       .orderBy(col("source"), col("decile"))
   }
 
-  /** q103 — greedy token-budget selection per source: order each
-    * source's docs by a quality proxy (longest first, doc_id
-    * tiebreak) and keep the prefix whose cumulative whitespace-token
-    * count fits the budget — the "fill the training mix to N tokens
-    * per source" step that follows dedup/quality filtering in a
-    * corpus build.
-    *
-    * Scale shape: one shuffle (hash by source), one running-sum
-    * window per source partition, all-integer arithmetic. cum_tokens
-    * is strictly increasing within a source (every doc has ≥ 1
-    * token), so (source, cum_tokens) is a total order. At 100 TB the
-    * per-source sort is the only cost and is exactly the sort a
-    * budgeted selection needs; nothing global exists. */
   private val Q105K = 10
 
   /** q105 — weighted priority sampling per source: the k docs with
@@ -396,7 +385,12 @@ object Sampling {
     // (per-user counts, per-token counts), never the corpus; callers
     // whose prefix input IS corpus-sized all carry a real source
     // column. q180, which needed neither rn output nor a real source,
-    // left this helper for a tailored hourly rollup instead.
+    // left this helper for a tailored hourly rollup instead. q172, q131
+    // and q193 are the remaining constant-source callers. A caller that
+    // needs several orderings ranks them as sources of ONE call
+    // instead of one call per ordering: q225 keys each name twice
+    // (source "fwd" on the name, "rev" on its reversal), which drops
+    // the extra exchange and plans the helper's lineage once.
     val in = df.withColumn("pb", bucket)
       .filter(col("source").isNotNull && col("pb").isNotNull)
       .repartition(col("source"), col("pb"))
@@ -467,6 +461,19 @@ object Sampling {
 
   private val Q103Budget = 1500L
 
+  /** q103 — greedy token-budget selection per source on the
+    * two-phase distributed prefix sum (longest-first until the
+    * budget). Each source's docs are ordered by a quality proxy
+    * (longest first, doc_id tiebreak), keeping the prefix whose
+    * cumulative whitespace-token count fits the budget — the "fill
+    * the training mix to N tokens per source" step that follows
+    * dedup/quality filtering in a corpus build.
+    *
+    * Scale shape: the running sum is [[distributedPrefix]] over
+    * [[negLenBucket]] buckets, so no source runs through one window
+    * partition; all-integer arithmetic. cum_tokens is strictly
+    * increasing within a source (every doc has ≥ 1 token), so
+    * (source, cum_tokens) is a total order. */
   def q103TokenBudget(s: SparkSession, dir: String,
                       budget: Long = Q103Budget): DataFrame = {
     val sized = Tables.documents(s, dir)

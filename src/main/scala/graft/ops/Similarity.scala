@@ -182,19 +182,6 @@ object Similarity {
       .orderBy(col("q_id"), col("rn"))
   }
 
-  /** q27 — IVF ANN (the scale path): k-means-learned coarse quantizer
-    * ([[learnCentroids]], C=16, 2 Lloyd iterations), every vector
-    * assigned to its nearest centroid by cosine, then search only the
-    * query's nprobe=4 best cells. Exact and deterministic given the
-    * learn procedure, so fully oracle-checkable — the DuckDB oracle
-    * replays the identical learn+assign+probe pipeline.
-    *
-    * Scale shape: assignment is a broadcast cross-join against the
-    * tiny centroid set reduced by a map-side partial max_by agg (the
-    * shuffle carries (vec_id, cell, emb) once, not C times); probing
-    * joins the small (query × cell) set broadcast against the
-    * cell-assigned corpus, so the quadratic scoring touches only
-    * nprobe/C of the data. */
   /** Learned IVF centroids with norms, broadcast-ready: (c_id, c_emb,
     * c_nrm). Shared by q27 and the partition-by-cell layout demo. */
   private[graft] def centroidsWithNorm(e: DataFrame, C: Int = IvfCells,
@@ -217,6 +204,21 @@ object Similarity {
            first(col("embedding")).as("embedding"), first(col("nrm")).as("nrm"))
   }
 
+  /** q27 — IVF approximate top-k: coarse k-means cells prune the
+    * candidate set before exact cosine scoring (partition-by-cell
+    * layout). The ANN scale path: a k-means-learned coarse quantizer
+    * ([[learnCentroids]], C=16, 2 Lloyd iterations), every vector
+    * assigned to its nearest centroid by cosine, then search only the
+    * query's nprobe=4 best cells. Exact and deterministic given the
+    * learn procedure, so fully oracle-checkable — the DuckDB oracle
+    * replays the identical learn+assign+probe pipeline.
+    *
+    * Scale shape: assignment is a broadcast cross-join against the
+    * tiny centroid set reduced by a map-side partial max_by agg (the
+    * shuffle carries (vec_id, cell, emb) once, not C times); probing
+    * joins the small (query × cell) set broadcast against the
+    * cell-assigned corpus, so the quadratic scoring touches only
+    * nprobe/C of the data. */
   def q27IvfTopK(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, dir)
@@ -1134,42 +1136,6 @@ object Similarity {
       .orderBy(col("dim"), col("decile"))
   }
 
-  /** q169 — TOP PRINCIPAL COMPONENT of the embedding corpus via a
-    * one-pass integer scatter matrix + deterministic integer power
-    * iteration: the distributed-PCA primitive behind whitening,
-    * anisotropy audits ("is the embedding space collapsing?"), and
-    * dominant-direction removal (the all-but-the-top postprocessing
-    * trick common for sentence embeddings).
-    *
-    * Determinism contract (why this is hash-checkable when PCA
-    * usually isn't): values quantize to 1e4 micros, the scatter
-    * matrix M = (n·Σqᵢqⱼ − Σqᵢ·Σqⱼ) div n is exact integer
-    * arithmetic, and the power iteration renormalizes by
-    * trunc-toward-zero division (v′ = w·1e6 div max|w|), which
-    * Scala BigInt, Spark `div`, and DuckDB `//` all agree on.
-    * Fixed start vector (1e6 − 7001·dim, asymmetric so it cannot be
-    * orthogonal to a planted direction by symmetry) and a fixed
-    * iteration count replace the usual convergence test, mirroring
-    * the q27 fixed-Lloyd's recipe. Sign is pinned by the start
-    * vector, not by convention.
-    *
-    * Scale shape — the heavy part is ONE ObjectHashAggregate over
-    * [[graft.functions.ScatterMatrixAgg]]: each task folds its rows
-    * into a single flat long[d²+d+1] buffer (outer products + linear
-    * sums + count), so the shuffle carries one ~33 KB buffer per
-    * task — the minimal communication for an exact scatter matrix,
-    * with none of the d²-structs-per-row amplification the explode
-    * formulation paid (4,161 structs/row; 10× the aggregate's cost
-    * at sf0.1). The aggregation shards by hash(vec_id) into 64
-    * groups whose long partials are re-summed in decimal(38,0):
-    * exact to 64·9·10¹⁰ rows, with addExact failing loudly beyond
-    * (see the ScatterMatrixAgg overflow contract). The driver then
-    * iterates on a d×d integer matrix — O(T·d²) BigInt flops
-    * independent of N (the same bounded-driver-work argument as the
-    * IVF quantizer: FAISS trains PCA on one node for the same
-    * reason). Dividing M by n keeps matvec magnitudes ≤
-    * ~N·3.3e7·1e6·d, inside HUGEINT even at 10¹⁰ rows; BigInt on
-    * the engine side is unbounded anyway. */
   /** The distributed half of q169: the (i, j) → Σterm scatter frame.
     * Exposed so PlanAuditSpec can pin the shape (buffers aggregated
     * before the explode — the Generate must consume aggregate
@@ -1203,6 +1169,43 @@ object Similarity {
 
   private val Q169Iters = 8
 
+  /** q169 — top principal component by integer power iteration
+    * over the ScatterMatrixAgg scatter matrix (d²+d+1-row tree
+    * reduce). A one-pass integer scatter matrix + deterministic
+    * integer power iteration is the distributed-PCA primitive behind
+    * whitening, anisotropy audits ("is the embedding space collapsing?"), and
+    * dominant-direction removal (the all-but-the-top postprocessing
+    * trick common for sentence embeddings).
+    *
+    * Determinism contract (why this is hash-checkable when PCA
+    * usually isn't): values quantize to 1e4 micros, the scatter
+    * matrix M = (n·Σqᵢqⱼ − Σqᵢ·Σqⱼ) div n is exact integer
+    * arithmetic, and the power iteration renormalizes by
+    * trunc-toward-zero division (v′ = w·1e6 div max|w|), which
+    * Scala BigInt, Spark `div`, and DuckDB `//` all agree on.
+    * Fixed start vector (1e6 − 7001·dim, asymmetric so it cannot be
+    * orthogonal to a planted direction by symmetry) and a fixed
+    * iteration count replace the usual convergence test, mirroring
+    * the q27 fixed-Lloyd's recipe. Sign is pinned by the start
+    * vector, not by convention.
+    *
+    * Scale shape — the heavy part is ONE ObjectHashAggregate over
+    * [[graft.functions.ScatterMatrixAgg]]: each task folds its rows
+    * into a single flat long[d²+d+1] buffer (outer products + linear
+    * sums + count), so the shuffle carries one ~33 KB buffer per
+    * task — the minimal communication for an exact scatter matrix,
+    * with none of the d²-structs-per-row amplification the explode
+    * formulation paid (4,161 structs/row; 10× the aggregate's cost
+    * at sf0.1). The aggregation shards by hash(vec_id) into 64
+    * groups whose long partials are re-summed in decimal(38,0):
+    * exact to 64·9·10¹⁰ rows, with addExact failing loudly beyond
+    * (see the ScatterMatrixAgg overflow contract). The driver then
+    * iterates on a d×d integer matrix — O(T·d²) BigInt flops
+    * independent of N (the same bounded-driver-work argument as the
+    * IVF quantizer: FAISS trains PCA on one node for the same
+    * reason). Dividing M by n keeps matvec magnitudes ≤
+    * ~N·3.3e7·1e6·d, inside HUGEINT even at 10¹⁰ rows; BigInt on
+    * the engine side is unbounded anyway. */
   def q169PcaPower(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // d²+d+1 rows — bounded collect (4161 for d=64), like the IVF

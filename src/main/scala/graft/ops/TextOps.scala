@@ -790,17 +790,6 @@ object TextOps {
   /** q92 flags lengths more than this many standard deviations out. */
   private val Q92Sigmas = 2
 
-  /** q90 — log2-bucketed length histogram per source (the corpus
-    * shape report every pipeline run prints: how document sizes are
-    * distributed, per provenance). The bucket is floor(log2(n_chars))
-    * computed INTEGER-exactly as the bit length of the value —
-    * `length(bin(x)) - 1` — identical in Spark and DuckDB, with none
-    * of the float-log boundary instability at exact powers of two
-    * (the q63 cross-engine lesson applied to logarithms).
-    *
-    * Scale shape: pure map pass + one partial/final aggregation on
-    * (source, bucket) — cardinality is tiny (sources × ~60 buckets)
-    * so the final reduce is trivial no matter the corpus size. */
   /** q92 — z-score outlier detection with ALL-INTEGER algebra: a doc
     * is a length outlier in its source iff |x − μ| > k·σ. Both sides
     * squared and cleared of denominators: (n·x − S)² > k²·(n·Q − S²)
@@ -838,6 +827,19 @@ object TextOps {
       .orderBy(col("source"))
   }
 
+  /** q90 — log2-bucketed length histogram per source (bucket =
+    * integer bit length, no float log at power-of-two edges). It is
+    * the corpus shape report every pipeline run prints: how document
+    * sizes are distributed, per provenance. The bucket is
+    * floor(log2(n_chars)) computed INTEGER-exactly as the bit length
+    * of the value —
+    * `length(bin(x)) - 1` — identical in Spark and DuckDB, with none
+    * of the float-log boundary instability at exact powers of two
+    * (the q63 cross-engine lesson applied to logarithms).
+    *
+    * Scale shape: pure map pass + one partial/final aggregation on
+    * (source, bucket) — cardinality is tiny (sources × ~60 buckets)
+    * so the final reduce is trivial no matter the corpus size. */
   def q90LengthHistogram(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("source"),

@@ -445,15 +445,6 @@ object StreamQueries {
        FROM events WHERE ts >= TIMESTAMP '2024-01-02'
        ORDER BY user_id, event_type, day"""
 
-  /** q98 — stream-static enrichment join: the streaming events feed
-    * joined against a STATIC per-user profile dimension (computed
-    * batch-side before the stream starts — first event type by time,
-    * lifetime event count). The standard "enrich the firehose with the
-    * dimension table" deployment: the join is STATELESS (each
-    * micro-batch hash-joins against the static relation, typically
-    * broadcast), needs no watermark and no sentinels, and the
-    * sentinel rows drop out through the inner join (user −1 has no
-    * profile). Oracle: the identical batch join. */
   /** The static profile dimension is computed ONCE per sf dir and
     * cached as local rows (one row per user — bounded by the user
     * domain, not the event count): in the deployment this models,
@@ -464,6 +455,15 @@ object StreamQueries {
   private val profileCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Array[org.apache.spark.sql.Row], StructType)]()
 
+  /** q98 — stream-static enrichment join: the event feed hash-joins
+    * a broadcast per-user profile dimension, stateless. The profile
+    * is STATIC (computed batch-side before the stream starts — first
+    * event type by time, lifetime event count). The standard "enrich the firehose with the
+    * dimension table" deployment: the join is STATELESS (each
+    * micro-batch hash-joins against the static relation, typically
+    * broadcast), needs no watermark and no sentinels, and the
+    * sentinel rows drop out through the inner join (user −1 has no
+    * profile). Oracle: the identical batch join. */
   def q98StreamEnrich(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (rows, schema) = profileCache.computeIfAbsent(dir, _ => {

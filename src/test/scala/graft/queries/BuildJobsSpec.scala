@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 /** Building a query — the DataFrame, before any action — launches no
   * Spark job: table schemas come from driver-side footer reads, and
   * the BPE trainer collects its vocabulary once instead of running
-  * jobs per merge round. */
+  * jobs per merge round. Executing q225 stays within its job budget. */
 class BuildJobsSpec extends SparkSpec {
 
   /** Jobs started while `body` runs, counted once the listener bus
@@ -34,6 +34,15 @@ class BuildJobsSpec extends SparkSpec {
       assert(jobs == 0, s"building $q launched $jobs jobs")
       spark.catalog.clearCache()
     }
+  }
+
+  test("executing q225 launches at most 12 jobs") {
+    // both sorted-neighborhood passes rank in one distributedPrefix
+    // call with two real sources: 11 jobs at sf0.001
+    val jobs = jobsDuring(SparkEntry.queries("q225_fuzzy_parts")(spark, sf0001)
+      .write.format("noop").mode("overwrite").save())
+    spark.catalog.clearCache()
+    assert(jobs <= 12, s"executing q225 launched $jobs jobs")
   }
 
   test("both events.ts fixture generations load with no job") {

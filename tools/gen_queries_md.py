@@ -42,30 +42,6 @@ for f in glob.glob(f'{ROOT}/src/main/scala/graft/**/*.scala', recursive=True):
         first = doc.split('. ')[0].rstrip('.')
         docs[(mod, m.group(2))] = ' '.join(first.split())
 
-# Functions whose scaladoc is not directly adjacent to the def (shared
-# doc on a sibling helper, or doc above a preceding val): hand-kept
-# one-liners, checked by the orphan assert below.
-FALLBACK = {
-    'q27_ivf_topk': 'IVF approximate top-k: coarse k-means cells prune the '
-        'candidate set before exact cosine scoring (partition-by-cell layout)',
-    'q82_pagerank': 'fixed-point PageRank over the user/type bipartite event '
-        'graph, integer micro-arithmetic, persisted edges across rounds',
-    'q90_length_histogram': 'log2-bucketed length histogram per source '
-        '(bucket = integer bit length, no float log at power-of-two edges)',
-    'q93_decile_bins': 'exact global decile bins of doc length (distributed '
-        'sort-based order statistics; q93b is the sketch twin)',
-    'q98_stream_enrich': 'stream-static enrichment join: the event feed '
-        'hash-joins a broadcast per-user profile dimension, stateless',
-    'q126_weighted_pagerank': 'WEIGHTED fixed-point PageRank: q82 with edge '
-        'weights = click multiplicity (how many times the user clicked the '
-        'item), so heavy engagement carries proportionally more rank — '
-        'contrib = (r·w) div Σw instead of r div deg',
-    'q103_token_budget': 'greedy token-budget selection per source on the '
-        'two-phase distributed prefix sum (longest-first until the budget)',
-    'q169_pca_power': 'top principal component by integer power iteration '
-        'over the ScatterMatrixAgg scatter matrix (d²+d+1-row tree reduce)',
-}
-
 # Declared fence paths: the ONLY queries allowed to stay rows-only.
 # Each rides an engine-internal sketch with no cross-engine replay BY
 # DESIGN and has a hash-gated twin on the board (VERDICT r11 #3).
@@ -121,9 +97,9 @@ for title, mods in SECTIONS:
     lines.append('| query | gate | what it computes |')
     lines.append('|---|---|---|')
     for n, mod, fn in rows:
-        d = docs.get((mod, fn)) or FALLBACK.get(n, '')
+        d = docs.get((mod, fn), '')
         d = re.sub(r'^q[0-9]+b? — ', '', d)
-        assert d, f'no description for {n} ({mod}.{fn}) — add to FALLBACK'
+        assert d, f'no scaladoc directly above {mod}.{fn} (for {n})'
         if n in oracle_names:
             gate = 'hash'
         else:
