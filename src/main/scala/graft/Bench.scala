@@ -12,7 +12,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
-    // Optional subset filters for local iteration, by name prefix:
+    // Optional subset filters for local iteration (`SparkEntry.select`):
     //   SPARK_GRAFT_BENCH_ONLY=q51,q57 times just those queries;
     //   SPARK_GRAFT_BENCH_SKIP=q59 drops queries whose OUTPUT is
     //   adjudicated infeasible on a fixture (q59 on a Zipf corpus

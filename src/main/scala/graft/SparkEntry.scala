@@ -2267,12 +2267,15 @@ object SparkEntry {
   /** Each oracle-gated query's DuckDB SQL by name. */
   def oracleSql: Map[String, String] = catalog.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
-  /** The catalog queries whose name starts with one of the
-    * comma-separated prefixes in `only` (every query when None) and
-    * with none of those in `skip`. */
+  /** The catalog queries named by a comma-separated token in `only`
+    * (every query when None) and by none in `skip`. A token ending in a
+    * digit is one query number (`q24`, not q240–q249); others are name
+    * prefixes. */
   def select(only: Option[String], skip: Option[String]): Seq[Query] = {
-    def prefixes(list: Option[String]) = list.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val (in, out) = (prefixes(only), prefixes(skip).getOrElse(Nil))
-    catalog.filter(q => in.forall(_.exists(q.name.startsWith)) && !out.exists(q.name.startsWith))
+    def tokens(list: Option[String]) = list.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    def names(name: String)(t: String) =
+      if (t.last.isDigit) name == t || name.startsWith(t + "_") else name.startsWith(t)
+    val (in, out) = (tokens(only), tokens(skip).getOrElse(Nil))
+    catalog.filter(q => in.forall(_.exists(names(q.name))) && !out.exists(names(q.name)))
   }
 }

@@ -10,7 +10,7 @@ object Verify {
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    // local-iteration filters, by name prefix: SPARK_GRAFT_ONLY=q73,q74
+    // local-iteration filters (`SparkEntry.select`): SPARK_GRAFT_ONLY=q73,q74
     // limits the dump; SPARK_GRAFT_SKIP=q59 excludes queries whose
     // OUTPUT is adjudicated infeasible on a given fixture (e.g. q59's
     // pair set is output-quadratic on a Zipf corpus — SCALE.md round

@@ -986,12 +986,13 @@ object Dedup {
     * Scale shape: the postings table (gram → docs) is the q85
     * inverted index restricted to rare grams, so the pair volume is
     * Σ_g df(g)² ≤ dfCap · Σ_g df(g) — LINEAR in corpus size with the
-    * cap as the constant, never all-pairs. Pairs are expanded
-    * MAP-SIDE from each posting list (streamed by the codegen'd
-    * LongPairs generator, no self-join shuffle of the postings), the
-    * dot is one pair-keyed count with map-side combine, norms
-    * broadcast into the score, and the final top-k is a TakeOrdered,
-    * no global sort. */
+    * cap as the constant, never all-pairs. The corpus is scanned ONCE:
+    * one gram exchange, reused by every consumer, instead of a cache.
+    * Pairs are expanded MAP-SIDE from each posting list (streamed by
+    * the codegen'd LongPairs generator, no self-join shuffle of the
+    * postings), the dot is one pair-keyed count with map-side combine,
+    * norms broadcast into the score, and the final top-k is a
+    * TakeOrdered, no global sort. */
   def q91SparseCosinePairs(s: SparkSession, dir: String,
                            dfCap: Int = Q91DfCap, k: Int = Q91TopK): DataFrame = {
     val grams = Tables.documents(s, dir)
@@ -999,32 +1000,25 @@ object Dedup {
               explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("gram"))
     // df-cap BEFORE any collect (r10 verdict #2): a count aggregate —
     // longs only, map-side combine, safe on a stopword-class gram with
-    // df ≈ n_docs — picks the rare grams, a semi-join restricts the
+    // df ≈ n_docs — picks the rare grams, a join restricts the
     // (gram, doc) stream to them, and only THEN are posting lists
     // assembled, so every collect_list buffer is ≤ dfCap entries by
-    // construction (never a corpus-sized array on a hot key). The
-    // semi-join and the collect shuffle on the same key, so the second
-    // aggregate reuses the join's partitioning — one extra keyed
-    // count, no extra full-stream shuffle. Candidate pairs are then
-    // generated MAP-SIDE from each ≤ dfCap list (LongPairs
-    // expansion, ≤ dfCap²/2 rows per gram) instead of a gram-keyed
-    // self-join.
-    // one explicit hash exchange on gram, REUSED by the df-count
-    // aggregate, the semi-join (both sides end up gram-partitioned —
-    // no broadcast dependency on the rare-set size) and the capped
-    // collect: Spark's ReusedExchange collapses the three consumers
-    // onto a single shuffle of the gram stream, so the skew-safe
-    // shape costs the same one exchange the unsafe collect did
+    // construction (never a corpus-sized array on a hot key).
+    // One hash exchange on gram feeds the df count, both join legs and
+    // the collect, and both readers of `postings` reuse it. It stays
+    // shareable because the df count reads doc_id (count(1) lets
+    // pruning drop it) and the join is INNER (a left_semi is pushed
+    // below the repartition onto a second scan); `rare` has one row per
+    // gram, so the inner join keeps exactly the semi-join's rows.
     val gramsP = grams.repartition(col("gram"))
     val rare = gramsP.groupBy(col("gram"))
-      .agg(count(lit(1)).as("df"))
+      .agg(count(col("doc_id")).as("df"))
       .filter(col("df") <= dfCap)
       .select(col("gram"))
-    val postings = gramsP.join(rare, Seq("gram"), "left_semi")
+    val postings = gramsP.join(rare, Seq("gram"))
       .groupBy(col("gram"))
       .agg(collect_list(col("doc_id")).as("docs"))
       .select(col("docs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val norms = postings
       .select(explode(col("docs")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))

@@ -883,7 +883,9 @@ object GraphOps {
     * Existing edges leave via one left-anti join against the
     * (a < b)-oriented edge list; top-50 is a deterministic global
     * sort on (score desc, pair asc) over the already-aggregated
-    * candidate frame.
+    * candidate frame. The edge list is not cached: its three readers
+    * (both adjacency legs and the anti-join) reuse its one exchange,
+    * so `events` is scanned once.
     *
     * Degenerate regime, stated: a CLOSED catalog saturates — once
     * every item pair has been co-clicked (the driver fixture reaches
@@ -913,7 +915,6 @@ object GraphOps {
       .agg(collect_set(col("k")).as("ks"))
       .select(graft.functions.VectorFunctions.longPairs(col("ks")))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val adj = e.select(col("a").as("z"), col("b").as("n"))
       .unionByName(e.select(col("b").as("z"), col("a").as("n")))
     // hub suppression: only small-degree common neighbors generate

@@ -3,8 +3,9 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectList}
-import org.apache.spark.sql.catalyst.plans.LeftSemi
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.LessThanOrEqual
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 /** Aggregation-state skew guardrail (r10 verdict #3 — the skew
@@ -15,13 +16,14 @@ import org.apache.spark.sql.functions._
   * hand-computable answer, and (b) the PLAN is state-bounded: q211
   * carries NO collect_list at all (the bounded FirstK aggregator
   * replaces it), and every collect_list the posting-list family
-  * (q85/q91/q216) still runs sits BEHIND a LeftSemi df-cap
-  * semi-join, so no aggregation buffer can exceed the declared cap
-  * regardless of key heat. A revert to collect-then-filter fails
-  * these pins before it can OOM a 100 TB run. The uncapped per-user
-  * baskets of q249 and q251 are safe another way: the LongPairs
-  * generator streams a basket's pairs, so a whale basket costs O(n)
-  * memory, pinned by the whale-basket cases. */
+  * (q85/q91/q216) still runs reads a stream joined (semi or inner)
+  * to the df <= cap set, so no aggregation buffer can exceed the
+  * declared cap regardless of key heat. A revert to
+  * collect-then-filter fails these pins before it can OOM a 100 TB
+  * run. The uncapped per-user baskets of q249 and q251 are safe
+  * another way: the LongPairs generator streams a basket's pairs, so
+  * a whale basket costs O(n) memory, pinned by the whale-basket
+  * cases. */
 class SkewStressSpec extends SparkSpec {
 
   /** Aggregate nodes whose aggregate list contains a collect_list. */
@@ -35,17 +37,30 @@ class SkewStressSpec extends SparkSpec {
         }.isDefined) => a
     }
 
+  /** A filter that keeps only `df <= cap` rows (q216's `between`
+    * counts: its upper bound is such a comparison). */
+  private def capsDf(lp: LogicalPlan): Boolean =
+    lp.find {
+      case f: Filter => f.condition.find {
+        case le: LessThanOrEqual => le.left.references.exists(_.name == "df")
+        case _ => false
+      }.isDefined
+      case _ => false
+    }.isDefined
+
   // NOTE: assertions run on the ANALYZED plan — a persist() inside an
   // operator replaces its subtree with InMemoryRelation in the
   // optimized plan, which would hide the collect_list from the audit
-  private def assertCollectsBehindSemiJoin(df: DataFrame, who: String): Unit = {
+  private def assertCollectsBehindCapJoin(df: DataFrame, who: String): Unit = {
     val aggs = collectListAggs(df.queryExecution.analyzed)
     assert(aggs.nonEmpty, s"$who: expected a df-capped collect_list")
     aggs.foreach { a =>
-      assert(a.collectFirst {
-          case j: Join if j.joinType == LeftSemi => j }.isDefined,
-        s"$who: collect_list aggregates a stream with NO df-cap " +
-        s"semi-join below it — unbounded buffer on a hot key:\n" +
+      assert(a.child.find {
+          case j: Join => (j.joinType == LeftSemi || j.joinType == Inner) && capsDf(j.right)
+          case _ => false
+        }.isDefined,
+        s"$who: collect_list aggregates a stream with NO join to the " +
+        s"df <= cap set below it — unbounded buffer on a hot key:\n" +
         a.toString.take(600))
     }
   }
@@ -115,7 +130,7 @@ class SkewStressSpec extends SparkSpec {
 
   test("q91 stopword shingle: collects only behind the df-cap semi-join") {
     val df = Dedup.q91SparseCosinePairs(spark, tmp, dfCap = 20, k = 10)
-    assertCollectsBehindSemiJoin(df, "q91")
+    assertCollectsBehindCapJoin(df, "q91")
     val rows = df.collect()
     // docs 1,2 share the rare p-grams -> top pair; the df=300
     // stopword grams are pruned before any list is built
@@ -126,7 +141,7 @@ class SkewStressSpec extends SparkSpec {
 
   test("q216 stopword shingle: collects only behind the df-cap semi-join") {
     val df = Dedup.q216Containment(spark, tmp, dfCap = 20, tau = 1L, k = 10)
-    assertCollectsBehindSemiJoin(df, "q216")
+    assertCollectsBehindCapJoin(df, "q216")
     val pairs = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), s"got $pairs")
   }
@@ -218,7 +233,7 @@ class SkewStressSpec extends SparkSpec {
 
   test("q85 stopword token: df-capped postings, hot token carries no list") {
     val df = Sampling.q85InvertedIndex(spark, tmp, dfCap = 20)
-    assertCollectsBehindSemiJoin(df, "q85")
+    assertCollectsBehindCapJoin(df, "q85")
     val got = df.collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), Option(r.getString(4))))).toMap

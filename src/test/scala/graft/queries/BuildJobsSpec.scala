@@ -8,7 +8,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 /** Building a query — the DataFrame, before any action — launches no
   * Spark job: table schemas come from driver-side footer reads, and
   * the BPE trainer collects its vocabulary once instead of running
-  * jobs per merge round. Executing q225 stays within its job budget. */
+  * jobs per merge round. Executing q225, q91 and q249 stays within
+  * each one's job budget. */
 class BuildJobsSpec extends SparkSpec {
 
   /** Jobs started while `body` runs, counted once the listener bus
@@ -43,6 +44,16 @@ class BuildJobsSpec extends SparkSpec {
       .write.format("noop").mode("overwrite").save())
     spark.catalog.clearCache()
     assert(jobs <= 12, s"executing q225 launched $jobs jobs")
+  }
+
+  test("executing q91 and q249 launches at most 6 jobs each") {
+    // one scan each, its exchange reused by every consumer, no cache
+    for (q <- Seq("q91_sparse_cosine", "q249_link_predict")) {
+      val jobs = jobsDuring(SparkEntry.queries(q)(spark, sf0001)
+        .write.format("noop").mode("overwrite").save())
+      spark.catalog.clearCache()
+      assert(jobs <= 6, s"executing $q launched $jobs jobs")
+    }
   }
 
   test("both events.ts fixture generations load with no job") {

@@ -7,7 +7,9 @@ import graft.SparkSpec
   * the same explicit (source, bucket) exchange, so the executed plan
   * reuses one shuffle stage instead of re-deriving the scan+tokenize
   * lineage per branch (at corpus scale the second derivation is a
-  * second full scan of the fact table). */
+  * second full scan of the fact table). q91 and q249 go further:
+  * every consumer reads one reused exchange, so each scans its table
+  * once with no cache. */
 class ScanReuseSpec extends SparkSpec {
 
   private def finalPlan(name: String): String = {
@@ -51,6 +53,19 @@ class ScanReuseSpec extends SparkSpec {
       val scans = "InMemoryTableScan".r.findAllIn(p).length
       assert(scans >= n,
         s"$name: expected >= $n cached-scan consumers, found $scans:\n${p.take(1200)}")
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("q91 and q249 scan their table once and share it through exchange reuse, no cache") {
+    for ((name, table) <- Seq("q91_sparse_cosine" -> "documents",
+                              "q249_link_predict" -> "events")) {
+      val p = finalPlan(name)
+      val fin = p.split("== Initial Plan ==").head
+      // each query reads only its one table
+      val scans = "FileScan".r.findAllIn(fin).length
+      assert(scans == 1, s"$name: expected one $table scan, found $scans:\n$fin")
+      assert(!p.contains("InMemoryTableScan"), s"$name: unexpected cache scan:\n$fin")
       spark.catalog.clearCache()
     }
   }
