@@ -1508,6 +1508,11 @@ object VectorFunctions {
     ColumnBridge.column(
       ScatterMatrixAgg(ColumnBridge.expression(q), d).toAggregateExpression())
 
+  /** The `k` smallest values of a struct column per group, as an
+    * ascending array<struct> — see [[BottomK]]. */
+  def bottomK(c: Column, k: Int): Column =
+    ColumnBridge.column(BottomK(ColumnBridge.expression(c), k).toAggregateExpression())
+
   private[functions] val dotF32Info =
     (new FunctionIdentifier("dot_f32"),
      new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
@@ -1582,7 +1587,10 @@ object VectorFunctions {
     (new FunctionIdentifier("scatter_matrix_agg"),
      new ExpressionInfo(classOf[ScatterMatrixAgg].getName, "scatter_matrix_agg"),
      (c: Seq[Expression]) =>
-       ScatterMatrixAgg(c(0), litInt(c(1), "scatter_matrix_agg")): Expression))
+       ScatterMatrixAgg(c(0), litInt(c(1), "scatter_matrix_agg")): Expression),
+    (new FunctionIdentifier("bottom_k"),
+     new ExpressionInfo(classOf[BottomK].getName, "bottom_k"),
+     (c: Seq[Expression]) => BottomK(c(0), litInt(c(1), "bottom_k")): Expression))
 
   private def litInt(e: Expression, fn: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v

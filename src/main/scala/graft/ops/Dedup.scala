@@ -2273,8 +2273,11 @@ object Dedup {
     * set arithmetic on the carried distinct-shingle arrays, integer
     * micro both directions.
     *
-    * Scale shape: one per-doc shingle projection feeds the posting
-    * lists and both verify sides (persisted); pair generation is
+    * Scale shape: no cache. One hash exchange on the shingle feeds
+    * the df count, the posting lists and the per-doc sizes (reused
+    * exchanges, so the corpus is shingled once for all three), and the
+    * two array join-backs read one reused exchange of the per-doc
+    * shingle arrays — two corpus passes in all; pair generation is
     * q91's map-side LongPairs expansion (≤ dfCap²/2 pairs per rare
     * shingle, never a shingle-keyed self-join of the corpus). The
     * million-scale raw pair stream carries ONLY (a, b) longs into a
@@ -2294,46 +2297,44 @@ object Dedup {
       .select(col("doc_id"),
               array_sort(TextOps.shingles(TextOps.tokens(col("text")), 3))
                 .as("toks"))
-      .filter(size(col("toks")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(size(col("toks")) > 0 && col("doc_id").isNotNull)
     // one explicit hash exchange on w, reused by the df classifier,
-    // both semi-joins and the rare collect (the q91 ReusedExchange
-    // move — no broadcast dependency on the rare-set size)
+    // the rare collect and the per-doc sizes (the q91 move: the df
+    // count reads doc_id, so pruning keeps it; the joins are INNER on
+    // the one-row-per-w df frame, where a left_semi would be pushed
+    // below the exchange; and td drops null doc_ids itself, so the
+    // isnotnull the doc-keyed joins infer adds no branch-only filter)
     val wpairs = td.select(explode(col("toks")).as("w"), col("doc_id"))
       .repartition(col("w"))
     // df-cap BEFORE any collect (r10 verdict #2): one count aggregate
     // — longs only, map-side combine, safe on a stopword-class
     // shingle with df ≈ n_docs — classifies every shingle as rare
     // (2..dfCap) or common (> dfCap); posting lists are assembled
-    // ONLY for the rare survivors via a semi-join, so every
+    // ONLY for the rare survivors via a join on them, so every
     // collect_list buffer is ≤ dfCap entries by construction, and the
     // common side never needs lists at all (it was only ever counted).
-    val wdf = wpairs.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val wdf = wpairs.groupBy(col("w")).agg(count(col("doc_id")).as("df"))
     // rare-shared count per pair, LONGS ONLY across the shuffle: the
     // 1M+ raw pair expansions never carry the shingle arrays (the
     // array join-back below runs on the pruned survivors, dozens of
     // rows). rs = |A∩B ∩ rare| is a LOWER bound on the intersection.
     val rs = wpairs
       .join(wdf.filter(col("df").between(2L, dfCap.toLong)).select(col("w")),
-            Seq("w"), "left_semi")
+            Seq("w"))
       .groupBy(col("w")).agg(collect_list(col("doc_id")).as("docs"))
       .select(graft.functions.VectorFunctions.longPairs(col("docs"))
         .as(Seq("doc_a", "doc_b")))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("rs"))
-    // per-doc totals and the doc's COMMON-shingle count (df > dfCap):
+    // per-doc totals and the doc's COMMON-shingle count (df > dfCap),
+    // one doc-keyed count over the classified (w, doc) stream (toks is
+    // distinct, so a doc's rows number |toks|):
     // inter ≤ rs + min(common_a, common_b), a sound upper bound, so
     // the prune below can never drop a qualifying pair — the oracle
     // verifies the unpruned definition and still matches exactly.
-    val common = wpairs
-      .join(wdf.filter(col("df") > dfCap).select(col("w")), Seq("w"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_common"))
-    val sizes = td
-      .select(col("doc_id"), size(col("toks")).cast("long").as("n"))
-      .join(common, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n"),
-              coalesce(col("n_common"), lit(0L)).as("nc"))
+    val sizes = wpairs.join(wdf, Seq("w"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n"), count(when(col("df") > dfCap, 1)).as("nc"))
     val pruned = rs
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a"),
                          col("nc").as("nc_a")), Seq("doc_a"))
@@ -2342,13 +2343,15 @@ object Dedup {
       .filter(expr(
         s"(rs + least(nc_a, nc_b)) * 1000000L >= $tau * least(n_a, n_b)"))
       .select(col("doc_a"), col("doc_b"))
+    // both array join-backs read one td exchange (same subtree, so
+    // the second is a reused exchange)
     pruned
-      .join(td.select(col("doc_id").as("doc_a"), col("toks").as("ta")), Seq("doc_a"))
-      .join(td.select(col("doc_id").as("doc_b"), col("toks").as("tb")), Seq("doc_b"))
+      .join(td.as("a"), col("doc_a") === col("a.doc_id"))
+      .join(td.as("b"), col("doc_b") === col("b.doc_id"))
       .select(col("doc_a"), col("doc_b"),
-              size(array_intersect(col("ta"), col("tb"))).cast("long").as("inter"),
-              size(col("ta")).cast("long").as("n_a"),
-              size(col("tb")).cast("long").as("n_b"))
+              size(array_intersect(col("a.toks"), col("b.toks"))).cast("long").as("inter"),
+              size(col("a.toks")).cast("long").as("n_a"),
+              size(col("b.toks")).cast("long").as("n_b"))
       .select(col("doc_a"), col("doc_b"), col("inter"), col("n_a"), col("n_b"),
               expr("inter * 1000000L div n_a").as("cont_ab_micro"),
               expr("inter * 1000000L div n_b").as("cont_ba_micro"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorFunctions.bottomK
 
 /** Event-stream operators over the `events` table, batch form (the
   * Structured Streaming twins live in graft.streaming): tumbling
@@ -1591,9 +1592,9 @@ object EventOps {
     * ties) so the per-user candidate fan-out is bounded at
     * C(20,3) = 1,140 regardless of how heavy the user is.
     *
-    * Scale shape: the stream cap runs as a BOUNDED first-K
-    * aggregator ([[graft.functions.FirstK]] — the min-k twin of the
-    * TopK component): the per-user aggregation buffer is ≤ cap
+    * Scale shape: the stream cap runs as the BOUNDED
+    * [[graft.functions.BottomK]] aggregate over (ts, event_id,
+    * event_type): the per-user aggregation buffer is ≤ cap
     * structs at every moment, combines map-side (≤ cap rows per user
     * per partition cross the shuffle), and rejects a past-the-head
     * row with one comparison — so a whale user with 10⁸ events costs
@@ -1607,23 +1608,14 @@ object EventOps {
     * shuffle, capped at 1,140 per user. */
   def q211SeqPatterns(s: SparkSession, dir: String,
                       cap: Int = Q211Cap, k: Int = Q211K): DataFrame = {
-    val ev = Tables.events(s, dir)
-    import ev.sparkSession.implicits._
-    import graft.functions.FirstK
     // single user-keyed BOUNDED aggregation: first `cap` events by
     // (ts, event_id) — event_id unique ⇒ ties impossible; buffer
     // never exceeds `cap` structs however hot the user is
-    val seqs = ev
-      .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-              col("event_type"), col("user_id"))
-      .as[(Long, Long, String, Long)]
-      .groupByKey(_._4)
-      .mapValues { case (t, id, tp, _) => FirstK.Ev(t, id, tp) }
-      .agg(FirstK.firstK(cap).toColumn.name("seq"))
-      // re-encode kryo Seq[String] → a real array<string> column for
-      // the SQL HOF enumeration below
-      .map { case (u, sq) => (u, sq) }
-      .toDF("user_id", "sq")
+    val seqs = Tables.events(s, dir)
+      .groupBy(col("user_id"))
+      .agg(bottomK(struct(col("ts"), col("event_id"), col("event_type")), cap)
+             .as("seq"))
+      .select(col("user_id"), col("seq.event_type").as("sq"))
     // codegen'd triple enumeration ([[graft.functions.SeqTriples]] —
     // bit-identical to the former array_distinct(flatten(flatten(
     // nested transforms))) chain, without 3 levels of interpreted

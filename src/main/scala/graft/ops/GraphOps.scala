@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.functions.VectorFunctions.bottomK
 
 /** Iterative graph computation over the events click graph — the
   * operator class (alongside Dedup.connectedComponents) that a
@@ -983,13 +984,10 @@ object GraphOps {
     * uncapped (the fixture's are ≤ catalog = 100): the generator
     * holds one basket, not its pairs, so a whale user costs time
     * quadratic in its basket but memory linear in it. Top-5 per user
-    * rides the bounded [[graft.functions.TopK]] aggregator:
+    * rides the bounded [[graft.functions.BottomK]] aggregate:
     * map-side partials, ≤ 5 rows per user cross the shuffle, no
     * per-user window sort (the q26/q43 pattern). */
   def q251ItemCf(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TopK
-    val spark = s
-    import spark.implicits._
     val clicks = Tables.events(s, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id"),
@@ -1023,14 +1021,11 @@ object GraphOps {
       // drop items the user already clicked — only genuine
       // recommendations rank
       .join(clicks.toDF("user_id", "i"), Seq("user_id", "i"), "left_anti")
-    scored.as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues { case (_, item, sc) => TopK.Scored(item, sc.toDouble) }
-      .agg(TopK.topK(Q251K).toColumn.name("top"))
-      .flatMap { case (u, top) =>
-        top.zipWithIndex.map { case (t, i) =>
-          (u, t.id, t.score.toLong, i + 1) } }
-      .toDF("user_id", "item", "score", "rn")
+    scored.groupBy(col("user_id"))
+      .agg(bottomK(struct((-col("score")).as("neg"), col("i")), Q251K).as("top"))
+      .select(col("user_id"), posexplode(col("top")))
+      .select(col("user_id"), col("col.i").as("item"), (-col("col.neg")).as("score"),
+              (col("pos") + 1).as("rn"))
       .orderBy(col("user_id"), col("rn"))
   }
 

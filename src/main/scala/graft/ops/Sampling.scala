@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorFunctions.bottomK
 
 /** Deterministic sampling for training-data pipelines. Spark's
   * `df.sample` is seed-dependent on partitioning (a repartition
@@ -33,9 +34,7 @@ object Sampling {
       .orderBy(col("source"))
 
   /** 52-bit content-hash rank key (first 13 md5 hex chars): a total,
-    * engine-agnostic, layout-independent order over content. 52 bits
-    * so the value is exact as a double (the TopK aggregator scores in
-    * doubles). */
+    * engine-agnostic, layout-independent order over content. */
   def hashRank52(c: Column): Column =
     conv(substring(md5(c), 1, 13), 16, 10).cast("long")
 
@@ -47,28 +46,21 @@ object Sampling {
     * engines, re-runs, and layouts, exactly like q56's rate sample
     * but with a hard per-group budget.
     *
-    * Shaped for scale via the bounded [[graft.functions.TopK]]
-    * aggregator (same machinery as q43), NOT a window: sources are
+    * Shaped for scale via the bounded [[graft.functions.BottomK]]
+    * aggregate (same machinery as q43), NOT a window: sources are
     * few and huge — a window would shuffle and sort the entire
     * corpus into one partition per source (the canonical skew
     * disaster), while the aggregator combines map-side and ships at
     * most k rows per source per partition. The oracle replays it as
     * the window formulation, which must agree exactly. */
-  def q72BalancedSample(s: SparkSession, dir: String, k: Int = Q72K): DataFrame = {
-    val d = Tables.documents(s, dir)
-    import d.sparkSession.implicits._
-    import graft.functions.TopK
-    d.select(col("source"), col("doc_id"), hashRank52(col("text")).as("h"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      // TopK keeps score DESC; negate so the k smallest hashes win
-      .mapValues { case (_, id, h) => TopK.Scored(id, -h.toDouble) }
-      .agg(TopK.topK(k).toColumn.name("top"))
-      .flatMap { case (src, top) =>
-        top.zipWithIndex.map { case (sc, i) => (src, sc.id, (i + 1).toLong) } }
-      .toDF("source", "doc_id", "rk")
+  def q72BalancedSample(s: SparkSession, dir: String, k: Int = Q72K): DataFrame =
+    Tables.documents(s, dir)
+      .groupBy(col("source"))
+      .agg(bottomK(struct(hashRank52(col("text")).as("h"), col("doc_id")), k).as("top"))
+      .select(col("source"), posexplode(col("top")))
+      .select(col("source"), col("col.doc_id").as("doc_id"),
+              (col("pos") + 1).cast("long").as("rk"))
       .orderBy(col("source"), col("rk"))
-  }
 
   /** q76 — deterministic train/val/test split: every doc is assigned
     * by CONTENT hash (md5 16-bit slice mod 100 → 80/10/10), never by
@@ -149,28 +141,26 @@ object Sampling {
     * (token, doc) pairs before the shuffle (dropDuplicates' partial
     * agg); df/bounds come from one scalar aggregate (longs only,
     * map-side combine — safe on any skew); posting lists are then
-    * assembled ONLY for the df ≤ dfCap survivors via a semi-join, so
-    * every collect_list buffer is ≤ dfCap entries by construction. */
+    * assembled ONLY for the df ≤ dfCap survivors via a join on them,
+    * so every collect_list buffer is ≤ dfCap entries by construction.
+    * One hash exchange on token feeds the stats aggregate, the join
+    * and the capped collect, all reading it through exchange reuse:
+    * the scan+dedup chain runs once, with no cache. */
   def q85InvertedIndex(s: SparkSession, dir: String,
                        dfCap: Int = Q85DfCap): DataFrame = {
-    // distinct + one hash exchange on token, PERSISTED: the stats
-    // aggregate, the semi-join probe and the capped collect all read
-    // the cached token-partitioned frame (InMemoryRelation keeps the
-    // child partitioning, so neither aggregate re-exchanges and the
-    // scan+dedup chain runs once, not per branch); the harness drops
-    // the cache after the query (cache-lifecycle contract)
     val pairs = Tables.documents(s, dir)
       .select(explode(TextOps.tokens(col("text"))).as("token"), col("doc_id"))
       .dropDuplicates("token", "doc_id")
       .repartition(col("token"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stats = pairs.groupBy(col("token"))
       .agg(count(lit(1)).as("df"),
            min(col("doc_id")).as("first_doc"),
            max(col("doc_id")).as("last_doc"))
+    // INNER join on the one-row-per-token rare set: the same rows as
+    // a left_semi, which would instead be pushed below the repartition
+    // onto a second scan (the q91 finding)
     val rareMd5 = pairs
-      .join(stats.filter(col("df") <= dfCap).select(col("token")),
-            Seq("token"), "left_semi")
+      .join(stats.filter(col("df") <= dfCap).select(col("token")), Seq("token"))
       .groupBy(col("token"))
       .agg(md5(concat_ws(",", sort_array(collect_list(col("doc_id")))))
              .as("postings_md5"))
@@ -257,31 +247,21 @@ object Sampling {
     * re-runs, and layouts.
     *
     * Scale shape: identical to q72 — the bounded
-    * [[graft.functions.TopK]] aggregator combines map-side and ships
+    * [[graft.functions.BottomK]] aggregate combines map-side and ships
     * ≤ k rows per source per partition; no per-source full sort
     * exists (the window formulation the oracle replays would
-    * one-partition-per-source collapse at corpus scale). Priorities
-    * are ≤ 2^52 so the aggregator's double scores stay exact. */
-  def q105WeightedSample(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir)
-    import d.sparkSession.implicits._
-    import graft.functions.TopK
-    d.select(col("source"), col("doc_id"),
-             hashRank52(col("text")).as("h"), col("n_chars"))
+    * one-partition-per-source collapse at corpus scale). */
+  def q105WeightedSample(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .select(col("source"), col("doc_id"),
+              hashRank52(col("text")).as("h"), col("n_chars"))
       .withColumn("prio", expr("h div n_chars")) // exact integer floor-div
-      .select(col("source"), col("doc_id"), col("prio"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      // TopK keeps score DESC with id-asc ties; negate so the k
-      // smallest priorities win
-      .mapValues { case (_, id, p) => TopK.Scored(id, -p.toDouble) }
-      .agg(TopK.topK(Q105K).toColumn.name("top"))
-      .flatMap { case (src, top) =>
-        top.zipWithIndex.map { case (sc, i) =>
-          (src, sc.id, -sc.score.toLong, (i + 1).toLong) } }
-      .toDF("source", "doc_id", "prio", "rk")
+      .groupBy(col("source"))
+      .agg(bottomK(struct(col("prio"), col("doc_id")), Q105K).as("top"))
+      .select(col("source"), posexplode(col("top")))
+      .select(col("source"), col("col.doc_id").as("doc_id"), col("col.prio").as("prio"),
+              (col("pos") + 1).cast("long").as("rk"))
       .orderBy(col("source"), col("rk"))
-  }
 
   /** q121 — split-leakage audit: for each split-assignment method,
     * how many groups of byte-identical documents straddle more than
@@ -886,14 +866,13 @@ object Sampling {
     *
     * Scale shape: the cap is ONE 1-row aggregate collected to the
     * driver (the A2 global-scalar discipline); survivor selection is
-    * the bounded [[graft.functions.TopK]] aggregator per cell
+    * the bounded [[graft.functions.BottomK]] aggregate per cell
     * (map-side partial, ≤ cap rows per cell per partition cross the
     * shuffle — never a corpus-wide window sort); kept stats re-enter
     * via a broadcast id join (|cells|·cap rows). At 100 TB nothing
     * but per-cell top-cap buffers and the tiny kept-id frame move. */
   def q210CellCaps(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.TopK
     val d = Tables.documents(s, dir)
       .select(col("source"), col("lang"), col("doc_id"), col("n_chars"),
               hashRank52(col("text")).as("h"))
@@ -906,17 +885,10 @@ object Sampling {
       .agg(sum(col("n_docs")), count(lit(1))).as[(Long, Long)]
       .collect().map { case (t, c) => Array(t, c) }.head
     val cap = math.max(1L, (total + 2 * nCells - 1) / (2 * nCells)).toInt
-    val kept = d
-      .select(concat_ws("|", col("source"), col("lang")).as("cell"),
-              col("doc_id"), col("h"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      // smallest hash wins; TopK keeps score DESC with id-asc ties,
-      // so feed -h (ids break exact-duplicate-text hash ties)
-      .mapValues { case (_, id, h) => TopK.Scored(id, -h.toDouble) }
-      .agg(TopK.topK(cap).toColumn.name("top"))
-      .flatMap { case (_, top) => top.map(_.id) }
-      .toDF("doc_id")
+    // smallest hash wins; ids break exact-duplicate-text hash ties
+    val kept = d.groupBy(col("source"), col("lang"))
+      .agg(bottomK(struct(col("h"), col("doc_id")), cap).as("top"))
+      .select(explode(col("top.doc_id")).as("doc_id"))
     val keptStats = d.join(broadcast(kept), Seq("doc_id"))
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("kept_chars"))

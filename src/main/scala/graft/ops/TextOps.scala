@@ -3,6 +3,17 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.collection.mutable
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for a training-data pipeline over the
   * `documents` table: token counting, quality scoring, stopword-based
@@ -1194,11 +1205,30 @@ object TextOps {
       .orderBy(col("step"))
   }
 
-  /** The q188 merge loop, shared with [[q191BpeEncode]]: trains
-    * `merges` BPE merge steps on a (sym, cnt) vocabulary frame and
-    * returns them as (step, l, r, merged, pair_cnt). The frame is
-    * collected ONCE and every round runs on the driver, replaying the
-    * Spark formulation the oracle twin mirrors, step for step:
+  /** The q188 trainer: collects a (sym, cnt) vocabulary frame ONCE
+    * and runs every merge round of [[bpeRounds]] on the driver;
+    * returns the merges as (step, l, r, merged, pair_cnt). */
+  private[graft] def bpeTrain(
+      words: DataFrame,
+      merges: Int): Seq[(Int, String, String, String, Long)] = {
+    val vocab = words.select(col("sym"), col("cnt")).collect()
+    bpeRounds(vocab.map(_.getString(0)), vocab.map(_.getLong(1)), merges)
+  }
+
+  /** Spark's `trim`: strips U+0020 only. */
+  private[ops] def trimSpaces(s: String): String = {
+    var (b, e) = (0, s.length)
+    while (b < e && s.charAt(b) == ' ') b += 1
+    while (e > b && s.charAt(e - 1) == ' ') e -= 1
+    s.substring(b, e)
+  }
+
+  /** The BPE merge loop of q188 and q191: trains `merges` merge steps
+    * on symbol strings `syms` weighted by `cnts`, rewriting `syms` in
+    * place (so on return each entry is its word encoded with the
+    * learned merges), and returns the merges as (step, l, r, merged,
+    * pair_cnt). Every round replays the Spark formulation the oracle
+    * twin mirrors, step for step:
     *  - `trim` strips U+0020 only, and `split(" ", -1)` keeps empty
     *    symbols, as Spark's `trim`/`split` do;
     *  - entries with fewer than 2 symbols contribute no pair;
@@ -1209,19 +1239,10 @@ object TextOps {
     *    past the BMP;
     *  - the rewrite is the pinned double literal replacement;
     *  - a round with no pair left ends training early. */
-  private[graft] def bpeTrain(
-      words: DataFrame,
+  private[ops] def bpeRounds(
+      syms: Array[String],
+      cnts: Array[Long],
       merges: Int): Seq[(Int, String, String, String, Long)] = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val vocab = words.select(col("sym"), col("cnt")).collect()
-    val syms = vocab.map(_.getString(0))
-    val cnts = vocab.map(_.getLong(1))
-    def trim(s: String): String = {
-      var (b, e) = (0, s.length)
-      while (b < e && s.charAt(b) == ' ') b += 1
-      while (e > b && s.charAt(e - 1) == ' ') e -= 1
-      s.substring(b, e)
-    }
     val utf8: Ordering[String] =
       (x, y) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
     val rank = Ordering.Tuple3(Ordering.Long.reverse, utf8, utf8)
@@ -1230,7 +1251,7 @@ object TextOps {
     while (step <= merges) {
       val pc = scala.collection.mutable.HashMap[(String, String), Long]()
       syms.indices.foreach { i =>
-        val a = trim(syms(i)).split(" ", -1)
+        val a = trimSpaces(syms(i)).split(" ", -1)
         (0 until a.length - 1).foreach { j =>
           val p = (a(j), a(j + 1))
           pc(p) = pc.getOrElse(p, 0L) + cnts(i)
@@ -1281,7 +1302,7 @@ object TextOps {
 
   /** q191 — BPE ENCODING with trained merges, q188's natural
     * companion and the other half of the tokenizer workflow: train
-    * the merge table ([[bpeTrain]], identical pinned semantics), then
+    * the merge table ([[bpeRounds]], identical pinned semantics), then
     * tokenize the corpus with it and report per-source token
     * economics — word count, char count, BPE token count, and the
     * integer chars-per-token compression ratio (the number tokenizer
@@ -1289,37 +1310,30 @@ object TextOps {
     *
     * Scale shape — the production-tokenizer recipe: training and
     * encoding both run on the DISTINCT-WORD vocabulary, never on the
-    * corpus. The corpus is touched exactly once, to build cached
-    * per-(source, word) counts; their per-word rollup is collected
-    * once for the driver-side trainer (no job per merge round);
-    * encoding is a static chain of the same pinned double literal
-    * replacements, one map pass over the vocab frame; and the encoded
-    * token lengths come back via a BROADCAST join on the word. At
-    * 100 TB the vocabulary is millions of rows against trillions of
-    * corpus tokens, so the join-back is the only corpus-sized stage
-    * and it is shuffle-free. Integer-exact end to end (counts,
-    * lengths, one exact integer division), so fully oracle-gated. */
+    * corpus. The corpus is touched exactly once, for per-(source,
+    * word) counts; their one exchange is reused by the per-word rollup
+    * and by the join-back, so the query is one action with no cache
+    * and no job at build time. The trainer is one global aggregate
+    * ([[BpeEncodeAgg]]) over the (word, symbols, count) vocabulary: its
+    * single final task holds the vocabulary — the same bound as a
+    * driver collect — runs every merge round in memory (no job per
+    * round), and emits each word's encoded token length, since the
+    * training rewrites ARE the encoding. Those (w, tl) rows come back
+    * via a BROADCAST join on the word. At 100 TB the vocabulary is
+    * millions of rows against trillions of corpus tokens, so the
+    * join-back is the only corpus-sized stage and it is shuffle-free.
+    * Integer-exact end to end (counts, lengths, one exact integer
+    * division), so fully oracle-gated. */
   def q191BpeEncode(s: SparkSession, dir: String, merges: Int = BpeMerges): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val sw = Tables.documents(s, dir)
       .select(col("source"), explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val wc = sw.groupBy(col("w")).agg(sum(col("n")).as("cnt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val symExpr =
-      concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 "))
-    val learned = bpeTrain(wc.select(symExpr.as("sym"), col("cnt")), merges)
-    // apply the learned merges IN TRAINING ORDER to each distinct
-    // word: the same pinned double literal replacement per step,
-    // folded into one static codegen'd expression chain
-    val encodedSym = learned.foldLeft(symExpr) { case (acc, (_, l, r, _, _)) =>
-      val pat = lit(s" $l $r "); val rep = lit(s" $l$r ")
-      replace(replace(acc, pat, rep), pat, rep)
-    }
-    val enc = wc.select(col("w"),
-      size(split(trim(encodedSym), " ")).cast("long").as("tl"))
+    val enc = sw
+      .select(ColumnBridge.column(BpeEncodeAgg(ColumnBridge.expression(struct(
+                col("w"), concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")),
+                col("n"))), merges).toAggregateExpression()).as("enc"))
+      .select(inline(col("enc")))
     sw.join(broadcast(enc), "w")
       .groupBy(col("source"))
       .agg(sum(col("n")).as("n_words"),
@@ -1817,4 +1831,84 @@ object TextOps {
        SELECT node AS word, r AS rank_micro FROM r$Q241Iters
        ORDER BY rank_micro DESC, word LIMIT $Q241TopK"""
   }
+}
+
+/** q191's BPE trainer as one aggregate over (w, sym, n) word-count
+  * structs: the buffer sums each word's counts into the vocabulary,
+  * and `eval` runs [[TextOps.bpeRounds]] on it and returns every word
+  * with its token count under the learned merges
+  * (`size(split(trim(sym), " "))`, since the training rewrites are the
+  * encoding) as `array<struct<w, tl>>`. As a global aggregate its
+  * final task holds the whole vocabulary, the bound a driver collect
+  * has. */
+private[ops] case class BpeEncodeAgg(
+    child: Expression,
+    merges: Int,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[mutable.HashMap[String, (String, Long)]]
+  with UnaryLike[Expression] {
+
+  private type Vocab = mutable.HashMap[String, (String, Long)]
+
+  override def dataType: DataType = ArrayType(
+    new StructType().add("w", StringType).add("tl", LongType), containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "bpe_encode"
+
+  override def createAggregationBuffer(): Vocab = mutable.HashMap.empty
+
+  private def add(buf: Vocab, w: String, sym: String, n: Long): Vocab = {
+    buf(w) = (sym, buf.get(w).fold(0L)(_._2) + n)
+    buf
+  }
+
+  override def update(buf: Vocab, input: InternalRow): Vocab = {
+    val r = child.eval(input).asInstanceOf[InternalRow]
+    add(buf, r.getUTF8String(0).toString, r.getUTF8String(1).toString, r.getLong(2))
+  }
+
+  override def merge(buf: Vocab, other: Vocab): Vocab =
+    other.foldLeft(buf) { case (b, (w, (sym, n))) => add(b, w, sym, n) }
+
+  override def eval(buf: Vocab): Any = {
+    val (words, entries) = buf.toArray.unzip
+    val syms = entries.map(_._1)
+    TextOps.bpeRounds(syms, entries.map(_._2), merges)
+    new GenericArrayData(words.indices.map { i =>
+      InternalRow(UTF8String.fromString(words(i)),
+                  TextOps.trimSpaces(syms(i)).split(" ", -1).length.toLong)
+    }.toArray[Any])
+  }
+
+  override def serialize(buf: Vocab): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream
+    val out = new DataOutputStream(bytes)
+    out.writeInt(buf.size)
+    buf.foreach { case (w, (sym, n)) =>
+      Seq(w, sym).foreach { s =>
+        val b = s.getBytes(UTF_8); out.writeInt(b.length); out.write(b)
+      }
+      out.writeLong(n)
+    }
+    out.flush()
+    bytes.toByteArray
+  }
+
+  override def deserialize(bytes: Array[Byte]): Vocab = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    def str(): String = {
+      val b = new Array[Byte](in.readInt()); in.readFully(b); new String(b, UTF_8)
+    }
+    val buf = createAggregationBuffer()
+    (0 until in.readInt()).foreach(_ => add(buf, str(), str(), in.readLong()))
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): BpeEncodeAgg =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): BpeEncodeAgg =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildInternal(newChild: Expression): BpeEncodeAgg =
+    copy(child = newChild)
 }

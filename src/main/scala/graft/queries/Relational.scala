@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorFunctions.bottomK
 
 /** Classic relational surface: aggregation, joins, windows, set ops,
   * distinct, top-k, rollup — the operator families the reference's
@@ -302,25 +303,22 @@ object Relational {
       .orderBy(col("day"))
   }
 
-  /** q43 — top-3 orders per customer via the custom bounded TopK
-    * Aggregator (graft.functions.TopK) instead of a window: map-side
+  /** q43 — top-3 orders per customer via the bounded
+    * [[graft.functions.BottomK]] aggregate instead of a window: map-side
     * partial combine means the shuffle carries ≤3 rows per customer
-    * per partition rather than every order. Same output (and oracle)
-    * as the window formulation q04 — the two must agree exactly. */
-  def q43TopKAgg(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-    import o.sparkSession.implicits._
-    import graft.functions.TopK
-    o.select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues { case (_, okey, price) => TopK.Scored(okey, price) }
-      .agg(TopK.topK(3).toColumn.name("top"))
-      .flatMap { case (cust, top) =>
-        top.zipWithIndex.map { case (sc, i) => (cust, sc.id, sc.score, i + 1) } }
-      .toDF("o_custkey", "o_orderkey", "o_totalprice", "rn")
+    * per partition rather than every order. Price descending rides as
+    * its negation (exact for doubles), order key ascending breaks ties.
+    * Same output (and oracle) as the window formulation q04 — the two
+    * must agree exactly. */
+  def q43TopKAgg(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .groupBy(col("o_custkey"))
+      .agg(bottomK(struct((-col("o_totalprice")).as("neg"), col("o_orderkey")), 3)
+             .as("top"))
+      .select(col("o_custkey"), posexplode(col("top")))
+      .select(col("o_custkey"), col("col.o_orderkey").as("o_orderkey"),
+              (-col("col.neg")).as("o_totalprice"), (col("pos") + 1).as("rn"))
       .orderBy(col("o_custkey"), col("rn"))
-  }
 
   /** q42 — exact percentiles (linear interpolation, identical
     * definition in both engines) + stddev per priority class: the
@@ -342,51 +340,58 @@ object Relational {
     * (r10 verdict #8 — the q187 KMV replay applied to the production
     * alias itself): the sketch the exact sort-based percentile must
     * swap to at 100 TB, here as a bottom-k-by-replayable-hash sample
-    * (k = 4096 per group, the bounded [[graft.functions.TopK]]
-    * aggregator — map-side mergeable, ≤ k rows per group per
-    * partition cross the shuffle) with pure integer rank selection
-    * over the sample, so DuckDB replays the estimate bit-for-bit —
-    * unlike the engine-internal GK `percentile_approx`
+    * ([[sampledQuantiles]], k = 4096 per group) with pure integer
+    * rank selection over it, so DuckDB replays the estimate
+    * bit-for-bit — unlike the engine-internal GK `percentile_approx`
     * (interpolation is implementation-specific), which stays the
     * one-line production alternative, still runs on the gated q93b
     * fence path, and stays bounded by the RelationalSpec
     * side-by-side error check. At k = 4096 the expected rank error
     * is ~1/√k ≈ 1.6%; groups smaller than k are sampled whole, so
-    * the estimate degrades to near-exact rank selection. */
+    * the estimate degrades to near-exact rank selection. The exact
+    * per-group order count is one more map-side-combined aggregate,
+    * broadcast onto the |groups|-row estimate. */
   def q53ApproxPercentiles(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.TopK
     val o = Tables.orders(s, dir)
-    val sampleIds = o
-      .select(col("o_orderpriority"), col("o_orderkey"),
-              pmod(lit(LcA) * col("o_orderkey") + lit(LcB), lit(LcP)).as("hv"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues { case (_, oid, hv) => TopK.Scored(oid, -hv.toDouble) }
-      .agg(TopK.topK(Q53K).toColumn.name("top"))
-      .flatMap { case (pri, top) => top.map(sc => (pri, sc.id)) }
-      .toDF("pri", "oid")
-    val samp = o
-      .select(col("o_orderpriority").as("pri"), col("o_orderkey").as("oid"),
-              col("o_totalprice").as("v"))
-      .join(broadcast(sampleIds), Seq("pri", "oid"))
     val counts = o.groupBy(col("o_orderpriority").as("pri"))
       .agg(count(lit(1)).as("n_orders"))
-    val w = Window.partitionBy(col("pri")).orderBy(col("v"), col("oid"))
-    val cw = Window.partitionBy(col("pri"))
-    samp
-      .withColumn("rv", row_number().over(w).cast("long"))
-      .withColumn("kn", count(lit(1)).over(cw))
-      .groupBy(col("pri"))
-      .agg(r4(max(when(col("rv") === expr("(kn + 1) div 2"), col("v"))))
-             .as("p50_approx"),
-           r4(max(when(col("rv") === expr("(kn * 9 + 9) div 10"), col("v"))))
-             .as("p90_approx"))
+    sampledQuantiles(o, Q53K)
       .join(broadcast(counts), Seq("pri"))
-      .select(col("pri").as("o_orderpriority"),
-              col("p50_approx"), col("p90_approx"), col("n_orders"))
+      .select(col("pri").as("o_orderpriority"), r4(col("p50")).as("p50_approx"),
+              r4(col("p90")).as("p90_approx"), col("n_orders"))
       .orderBy(col("o_orderpriority"))
+  }
+
+  /** The bottom-k-by-hash (KMV-style) quantile sketch of q53 and q187:
+    * per order priority `pri`, the sample is the k orders with the
+    * SMALLEST replayable affine hash of their key (ties by key) — a
+    * fixed-size, mergeable, uniform sample, order- and
+    * partitioning-invariant unlike rand()-sampling — and each
+    * quantile is the sampled value at an integer rank in (value, key)
+    * order: `(n + 1) div 2` for p50 and `(9n + 9) div 10` for p90 over
+    * the n sampled rows. Returns (pri, sample_n, p50, p90).
+    *
+    * Scale shape: the sample is the bounded [[graft.functions.BottomK]]
+    * aggregate (map-side partial, ≤ k rows per group per partition
+    * cross the shuffle — the same buffer an exact GK/KLL sketch would
+    * carry); the value fetch for the ≤ k·|groups| sampled keys is a
+    * broadcast id-lookup (the q75 re-rank shape — bloom/DPP prunable
+    * at warehouse scale); ranking sorts each group's ≤ k sampled
+    * (value, key) pairs in one array and picks both ranks from it.
+    * Nothing sorts more than k rows per group. */
+  private def sampledQuantiles(o: DataFrame, k: Int): DataFrame = {
+    val hv = pmod(lit(LcA) * col("o_orderkey") + lit(LcB), lit(LcP))
+    val sampleIds = o.groupBy(col("o_orderpriority").as("pri"))
+      .agg(bottomK(struct(hv.as("hv"), col("o_orderkey").as("oid")), k).as("s"))
+      .select(col("pri"), explode(col("s.oid")).as("oid"))
+    o.select(col("o_orderpriority").as("pri"), col("o_orderkey").as("oid"),
+             col("o_totalprice").as("v"))
+      .join(broadcast(sampleIds), Seq("pri", "oid"))
+      .groupBy(col("pri"))
+      .agg(array_sort(collect_list(struct(col("v"), col("oid")))).as("vs"))
+      .select(col("pri"), size(col("vs")).cast("long").as("sample_n"),
+              expr("element_at(vs, int((size(vs) + 1) div 2)).v").as("p50"),
+              expr("element_at(vs, int((size(vs) * 9 + 9) div 10)).v").as("p90"))
   }
 
   /** DuckDB oracle for q53 — identical affine key hash, bottom-k
@@ -1087,57 +1092,16 @@ object Relational {
 
   /** q187 — bottom-k-by-hash (KMV-style) sampled quantiles, FULLY
     * oracle-gated: the deterministic exact-replay twin of q53's GK
-    * approx_percentile (VERDICT r8 #5). Per priority group, the
-    * sketch state is the k = 256 orders with the SMALLEST replayable
-    * affine hash of their key — a fixed-size, mergeable, uniform
-    * sample (bottom-k by a fixed hash is order- and
-    * partitioning-invariant, unlike rand()-sampling) — and the
-    * quantile estimate is pure rank selection over it: the sample
-    * value at rank ⌈q·kn⌉ in (value, key) order. Every step is
-    * integer arithmetic or exact element selection, so the oracle
-    * replays the sketch bit-for-bit.
-    *
-    * Scale shape: the bottom-k sample rides the bounded [[TopK]]
-    * Aggregator (map-side partial, ≤ k rows per group per partition
-    * cross the shuffle — the same buffer an exact GK/KLL sketch
-    * would carry); the value fetch for the ≤ k·|groups| sampled keys
-    * is a broadcast id-lookup (the q75 re-rank shape — bloom/DPP
-    * prunable at warehouse scale); ranking happens on the bounded
-    * sample only. Nothing sorts more than k rows per group. */
-  def q187SampledQuantiles(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.TopK
-    val o = Tables.orders(s, dir)
-    // hv < 2^30, so its negation is double-exact in the aggregator
-    val sampleIds = o
-      .select(col("o_orderpriority"), col("o_orderkey"),
-              pmod(lit(LcA) * col("o_orderkey") + lit(LcB), lit(LcP)).as("hv"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues { case (_, oid, hv) => TopK.Scored(oid, -hv.toDouble) }
-      .agg(TopK.topK(Q187K).toColumn.name("top"))
-      .flatMap { case (pri, top) => top.map(sc => (pri, sc.id)) }
-      .toDF("pri", "oid")
-    val samp = o
-      .select(col("o_orderpriority").as("pri"), col("o_orderkey").as("oid"),
-              col("o_totalprice").as("v"))
-      .join(broadcast(sampleIds), Seq("pri", "oid"))
-    val w = Window.partitionBy(col("pri")).orderBy(col("v"), col("oid"))
-    val cw = Window.partitionBy(col("pri"))
-    samp
-      .withColumn("rv", row_number().over(w).cast("long"))
-      .withColumn("kn", count(lit(1)).over(cw))
-      .groupBy(col("pri"))
-      .agg(max(col("kn")).cast("long").as("sample_n"),
-           max(when(col("rv") === expr("(kn + 1) div 2"), col("v")))
-             .as("p50_est"),
-           max(when(col("rv") === expr("(kn * 9 + 9) div 10"), col("v")))
-             .as("p90_est"))
+    * approx_percentile (VERDICT r8 #5), reporting the raw estimates
+    * and the sample size of [[sampledQuantiles]] at k = 256 per
+    * priority group. Every step is integer arithmetic or exact
+    * element selection, so the oracle replays the sketch
+    * bit-for-bit. */
+  def q187SampledQuantiles(s: SparkSession, dir: String): DataFrame =
+    sampledQuantiles(Tables.orders(s, dir), Q187K)
       .select(col("pri").as("o_orderpriority"), col("sample_n"),
-              col("p50_est"), col("p90_est"))
+              col("p50").as("p50_est"), col("p90").as("p90_est"))
       .orderBy(col("o_orderpriority"))
-  }
 
   /** DuckDB oracle for q187 — identical affine key hash, bottom-k
     * window, and integer rank selection. */
@@ -1354,26 +1318,21 @@ object Relational {
     * arithmetic is int64: est_union ≤ 63·P ≈ 6.3e10.
     *
     * Scale shape: one distinct (type, hash) projection, then the
-    * bounded [[graft.functions.TopK]] aggregator per type (map-side
+    * bounded [[graft.functions.BottomK]] aggregate per type (map-side
     * partial, ≤ k values per type per partition cross the shuffle);
     * pair combination runs on the |types|²-row sketch frame with
     * list HOFs — corpus size never enters the pair stage. Exact
     * baselines are one user-keyed aggregation + a broadcast of the
     * tiny type-pair list. */
   def q213KmvSetOps(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.TopK
     val ev = Tables.events(s, dir)
       .select(col("event_type").as("t"), col("user_id").as("u"))
     // bottom-k of the affine user hash per type, ascending array
     val sk = ev.distinct()
-      .select(col("t"), pmod(lit(LcA) * col("u") + lit(LcB), lit(LcP)).as("hv"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapValues { case (_, hv) => TopK.Scored(hv, -hv.toDouble) }
-      .agg(TopK.topK(Q213K).toColumn.name("top"))
-      .map { case (t, top) => (t, top.map(_.id).sorted.toArray) }
-      .toDF("t", "sk")
+      .groupBy(col("t"))
+      .agg(bottomK(struct(pmod(lit(LcA) * col("u") + lit(LcB), lit(LcP)).as("hv")),
+                   Q213K).as("top"))
+      .select(col("t"), col("top.hv").as("sk"))
     // exact pairwise counts: one user-keyed type-set aggregation,
     // then a broadcast pair probe (|pairs| = |types|·(|types|−1)/2)
     val types = ev.select(col("t")).distinct()

@@ -310,7 +310,7 @@ class SamplingSpec extends SparkSpec {
 
   test("q105 weighted sample agrees with the window form; weight lowers priority") {
     import org.apache.spark.sql.functions._
-    // TopK-aggregator result == window replay on the real corpus
+    // BottomK-aggregate result == window replay on the real corpus
     val agg = Sampling.q105WeightedSample(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val w = org.apache.spark.sql.expressions.Window

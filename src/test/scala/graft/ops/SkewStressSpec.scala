@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.functions.BottomK
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectList}
 import org.apache.spark.sql.catalyst.expressions.LessThanOrEqual
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   * shingle shared by every document — and pins, per operator, that
   * (a) the operator completes on the planted skew and returns the
   * hand-computable answer, and (b) the PLAN is state-bounded: q211
-  * carries NO collect_list at all (the bounded FirstK aggregator
+  * carries NO collect_list at all (the bounded BottomK aggregate
   * replaces it), and every collect_list the posting-list family
   * (q85/q91/q216) still runs reads a stream joined (semi or inner)
   * to the df <= cap set, so no aggregation buffer can exceed the
@@ -116,9 +117,14 @@ class SkewStressSpec extends SparkSpec {
 
   test("q211 whale user: plan is collect_list-free, state bounded at cap") {
     val df = EventOps.q211SeqPatterns(spark, tmp, cap = 5, k = 50)
-    assert(collectListAggs(df.queryExecution.analyzed).isEmpty,
-      "q211 must use the bounded FirstK aggregator, never collect_list " +
+    val lp = df.queryExecution.analyzed
+    assert(collectListAggs(lp).isEmpty,
+      "q211 must use the bounded BottomK aggregate, never collect_list " +
       "over a user's full stream")
+    assert(lp.exists(_.expressions.exists(_.exists {
+      case ae: AggregateExpression => ae.aggregateFunction.isInstanceOf[BottomK]
+      case _ => false
+    })), "q211 must cap each user's stream with the bounded BottomK aggregate")
     val got = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // the whale's 100k-event tail must be invisible: its capped head
     // is five "aa" events, so the only whale pattern is aa>aa>aa

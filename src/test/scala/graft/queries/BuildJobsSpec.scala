@@ -7,9 +7,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Building a query — the DataFrame, before any action — launches no
   * Spark job: table schemas come from driver-side footer reads, and
-  * the BPE trainer collects its vocabulary once instead of running
-  * jobs per merge round. Executing q225, q91 and q249 stays within
-  * each one's job budget. */
+  * q191's BPE trainer runs inside the query's action. Executing q225,
+  * q91, q249, q191, q53, q85 and q216 stays within each one's job
+  * budget. */
 class BuildJobsSpec extends SparkSpec {
 
   /** Jobs started while `body` runs, counted once the listener bus
@@ -66,13 +66,24 @@ class BuildJobsSpec extends SparkSpec {
     }
   }
 
-  test("building q191 launches the same jobs for 2 and 6 merge rounds") {
-    def build(merges: Int): Int = {
-      spark.catalog.clearCache()
-      jobsDuring(graft.ops.TextOps.q191BpeEncode(spark, sf0001, merges))
+  test("building q191 launches no job") {
+    // the trainer runs inside the query's one action, for any number
+    // of merge rounds
+    for (merges <- Seq(2, 6)) {
+      val jobs = jobsDuring(graft.ops.TextOps.q191BpeEncode(spark, sf0001, merges))
+      assert(jobs == 0, s"building q191 with $merges merge rounds launched $jobs jobs")
     }
-    val (two, six) = (build(2), build(6))
-    spark.catalog.clearCache()
-    assert(two == six, s"merge rounds launch jobs: $two jobs at 2 rounds, $six at 6")
+  }
+
+  test("executing q191, q53, q85 and q216 stays within each one's job budget") {
+    // no cache: each reads its shared lineage through reused exchanges
+    // (q191 7, q53 8, q85 7 and q216 8 jobs at sf0.001)
+    for ((q, budget) <- Seq("q191_bpe_encode" -> 8, "q53_approx_percentiles" -> 8,
+                            "q85_inverted_index" -> 7, "q216_containment" -> 8)) {
+      val jobs = jobsDuring(SparkEntry.queries(q)(spark, sf0001)
+        .write.format("noop").mode("overwrite").save())
+      spark.catalog.clearCache()
+      assert(jobs <= budget, s"executing $q launched $jobs jobs, budget $budget")
+    }
   }
 }

@@ -15,7 +15,7 @@ class PartitionInvarianceSpec extends SparkSpec {
 
   private val sample = Seq(
     "q100_gap_fill",          // window chain + map-side explode
-    "q105_weighted_sample",   // TopK aggregator combine tree
+    "q105_weighted_sample",   // BottomK aggregate combine tree
     "q108_source_similarity", // pattern-compression rollup
     "q113_cooccurrence",      // per-doc pair fan-out
     "q124_batch_score",       // per-partition batch assembly
@@ -41,7 +41,7 @@ class PartitionInvarianceSpec extends SparkSpec {
     "q182_curated_mix",       // r8 prefix-budget cut + waterfill
     "q184_minhash_jaccard",   // r8 replayable signatures + band join
     "q185_simhash_pairs",     // r8 packed fingerprints + chunk bands
-    "q26_ann_topk",           // r9 bounded TopK aggregator combine tree
+    "q26_ann_topk",           // r9 bounded BottomK aggregate combine tree
     "q186_linear_count",      // r9 bucket-occupancy sketch state
     "q187_kmv_quantiles",     // r9 bottom-k-by-hash sample + rank pick
     "q188_bpe_merges",        // r9 iterative argmax + vocab rewrite
@@ -59,14 +59,14 @@ class PartitionInvarianceSpec extends SparkSpec {
     "q200_market_basket",     // r9 Apriori prune + basket pair join
     "q201_winnowing",         // r9 per-doc window min + keyed rollup
     "q202_winnow_pairs",      // r9 df-capped fingerprint self-join
-    "q203_matryoshka_recall", // r9 two bounded TopK passes + set join
+    "q203_matryoshka_recall", // r9 two bounded BottomK passes + set join
     "q204_rake_keywords",     // r9 island windows + doc-keyed joins
     "q205_ewma_forecast",     // r9 16-lag dyadic window chain
     "q206_skipgram_cooc",     // r9 HOF pair explode + pair-keyed agg
     "q207_novelty_curve",     // r9 min-attribution double aggregate
     "q208_frame_phash",       // r9 aHash chunk banding + capped buckets
     "q209_hits",              // r9 L-inf fixed-point mutual rounds
-    "q210_cell_caps",         // r10 driver cap scalar + TopK survivors
+    "q210_cell_caps",         // r10 driver cap scalar + BottomK survivors
     "q211_seq_patterns",      // r10 in-array sort + HOF triple fan-out
     "q212_colbert_maxsim",    // r10 max-then-sum interaction reduction
     "q213_kmv_set_ops",       // r10 bottom-k sketches + list HOF combine

@@ -190,7 +190,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Join"), "hops must be materialized, not re-joined")
   }
 
-  /** VERDICT r8 #1: the ANN top-k must be the bounded TopK
+  /** VERDICT r8 #1: the ANN top-k must be the bounded BottomK
     * aggregator (map-side partial ObjectHashAggregate, ≤k rows per
     * query per partition cross the shuffle) — NEVER a
     * row_number window that routes a corpus-sized candidate set
@@ -200,7 +200,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window"),
       s"corpus-sized per-query window found in q26:\n${p.take(1200)}")
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
-      "expected partial+final ObjectHashAggregate pair for the TopK aggregator")
+      "expected partial+final ObjectHashAggregate pair for the BottomK aggregate")
   }
 
   test("q27 top-k is a bounded aggregate; only the C-row probe may window") {
@@ -209,7 +209,7 @@ class PlanAuditSpec extends SparkSpec {
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
-      "expected partial+final ObjectHashAggregate pair for the TopK aggregator")
+      "expected partial+final ObjectHashAggregate pair for the BottomK aggregate")
     // the probe-selection window ranks (query × centroid) rows — its
     // input must be the broadcast-sized centroid cross-join, never a
     // corpus-carrying lineage (embeddings scan under the window)
@@ -276,15 +276,23 @@ class PlanAuditSpec extends SparkSpec {
       org.apache.spark.sql.execution.FormattedMode)
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
       "expected partial+final ObjectHashAggregate pair for the bottom-k sample")
-    // every window must rank the JOINED sample (≤ k·|groups| rows) —
-    // its lineage contains the broadcast id-join, never a bare scan
-    val wins = df.queryExecution.optimizedPlan.collect { case w: LWindow => w }
-    assert(wins.nonEmpty)
-    wins.foreach { w =>
-      assert(w.child.collectFirst {
+    // no window at all: the ranks are picked from each group's sorted
+    // sample, and the collect that gathers it reads the JOINED sample
+    // (≤ k·|groups| rows) — its lineage contains the broadcast
+    // id-join, never a bare scan
+    val op = df.queryExecution.optimizedPlan
+    assert(op.collect { case w: LWindow => w }.isEmpty, s"unexpected window:\n$op")
+    val collects = op.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
+          if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[
+            org.apache.spark.sql.catalyst.expressions.aggregate.CollectList])) => a
+    }
+    assert(collects.nonEmpty)
+    collects.foreach { a =>
+      assert(a.child.collectFirst {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
       }.isDefined,
-        s"window input is not the sample join:\n${w.child.toString.take(400)}")
+        s"rank collect input is not the sample join:\n${a.child.toString.take(400)}")
     }
   }
 
@@ -299,7 +307,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q189 MMR re-rank: bounded aggregator + broadcast join-backs, no window") {
     val p = plan("q189_mmr_rerank")
-    // retrieval is the bounded TopK aggregator and the greedy loop is
+    // retrieval is the bounded BottomK aggregate and the greedy loop is
     // per-query flatMapGroups — a Window over the corpus-sized scored
     // frame would be the q26 r8 defect reappearing
     assert(!p.contains("Window"), s"unexpected window:\n${p.take(1200)}")
@@ -315,12 +323,12 @@ class PlanAuditSpec extends SparkSpec {
       "vector join-backs must broadcast the corpus frame")
   }
 
-  test("q191 BPE encode joins token lengths back via broadcast on the cached corpus pass") {
+  test("q191 BPE encode joins token lengths back via broadcast with no cache") {
     val p = plan("q191_bpe_encode")
     assert(p.contains("BroadcastHashJoin"),
       "vocabulary token lengths must broadcast, never shuffle the corpus side")
-    assert(p.contains("InMemoryTableScan"),
-      "the per-(source,word) frame must come from the single cached corpus pass")
+    assert(!p.contains("InMemoryTableScan"),
+      s"the per-(source,word) frame must be shared by exchange reuse, not a cache:\n${p.take(1200)}")
   }
 
   test("q195 triplet mining is cell-blocked with map-side argmax picks") {
@@ -387,7 +395,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window"),
       s"top-k must not be a per-query window sort:\n${p.take(1200)}")
     assert(p.contains("ObjectHashAggregate"),
-      "bounded TopK aggregator missing from the truncated pass")
+      "bounded BottomK aggregate missing from the truncated pass")
     spark.catalog.clearCache()
   }
 
@@ -528,7 +536,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window"),
       s"survivor pick must be the bounded aggregator, not a window:\n${p.take(1200)}")
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
-      "expected partial+final TopK ObjectHashAggregate pair")
+      "expected partial+final BottomK ObjectHashAggregate pair")
     assert(p.contains("BroadcastHashJoin"),
       "kept-id stats join must broadcast the tiny survivor frame")
     spark.catalog.clearCache()
@@ -548,7 +556,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window"),
       s"top-k must not window the corpus-sized score frame:\n${p.take(1200)}")
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
-      "expected partial+final TopK ObjectHashAggregate pair")
+      "expected partial+final BottomK ObjectHashAggregate pair")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
       "query token vectors must broadcast against the corpus")
   }
@@ -569,10 +577,10 @@ class PlanAuditSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("q216 containment: map-side pair expansion, persisted token frame, no self-join of the corpus") {
+  test("q216 containment: map-side pair expansion, no cache, no self-join of the corpus") {
     val p = plan("q216_containment")
-    assert(p.contains("InMemoryTableScan"),
-      s"token frame must be persisted for postings + both verify sides:\n${p.take(1200)}")
+    assert(!p.contains("InMemoryTableScan"),
+      s"postings, sizes and both verify sides must share exchanges, not a cache:\n${p.take(1200)}")
     assert(p.contains("TakeOrderedAndProject"),
       "top-30 must be TakeOrdered, not a global sort")
     assert(!p.contains("CartesianProduct"),
@@ -585,7 +593,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window"),
       s"retrieval must be the bounded aggregator:\n${p.take(1200)}")
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
-      "expected partial+final TopK ObjectHashAggregate pair")
+      "expected partial+final BottomK ObjectHashAggregate pair")
     assert("BroadcastHashJoin|BroadcastNestedLoopJoin".r.findAllIn(p).length >= 2,
       "label lookups and query attach must ride broadcasts")
   }
@@ -918,10 +926,10 @@ class PlanAuditSpec extends SparkSpec {
       "corpus IVF index must be persisted and probed, not recomputed")
     assert(!p.contains("CartesianProduct"),
       s"batch x corpus probe must stay an equi join on cell:\n${p.take(1200)}")
-    // top-k rides the bounded TopK aggregator (partial+final pair),
+    // top-k rides the bounded BottomK aggregate (partial+final pair),
     // never a corpus-sized per-query window sort
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
-      "expected partial+final ObjectHashAggregate pair for the TopK aggregator")
+      "expected partial+final ObjectHashAggregate pair for the BottomK aggregate")
   }
 
   test("q249 link prediction: long_pairs wedges; known edges go via left-anti") {
@@ -957,7 +965,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"),
       s"no cartesian belongs in CF scoring:\n${p.take(1200)}")
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
-      "expected partial+final ObjectHashAggregate pair for the TopK aggregator")
+      "expected partial+final ObjectHashAggregate pair for the BottomK aggregate")
   }
 
   test("q248 image dHash: codec stages stay map-side — no join, no " +

@@ -7,9 +7,9 @@ import graft.SparkSpec
   * the same explicit (source, bucket) exchange, so the executed plan
   * reuses one shuffle stage instead of re-deriving the scan+tokenize
   * lineage per branch (at corpus scale the second derivation is a
-  * second full scan of the fact table). q91 and q249 go further:
-  * every consumer reads one reused exchange, so each scans its table
-  * once with no cache. */
+  * second full scan of the fact table). q91, q249, q191 and q85 go
+  * further: every consumer reads one reused exchange, so each scans
+  * its table once with no cache. */
 class ScanReuseSpec extends SparkSpec {
 
   private def finalPlan(name: String): String = {
@@ -59,7 +59,9 @@ class ScanReuseSpec extends SparkSpec {
 
   test("q91 and q249 scan their table once and share it through exchange reuse, no cache") {
     for ((name, table) <- Seq("q91_sparse_cosine" -> "documents",
-                              "q249_link_predict" -> "events")) {
+                              "q249_link_predict" -> "events",
+                              "q191_bpe_encode" -> "documents",
+                              "q85_inverted_index" -> "documents")) {
       val p = finalPlan(name)
       val fin = p.split("== Initial Plan ==").head
       // each query reads only its one table
