@@ -135,7 +135,20 @@ object Tables {
     * ignored: it only INCREASES the split count for many-small-file
     * scans, which are past the `< defaultParallelism` gate anyway.
     * A frame with no file-source leaf (constructed data, cuts)
-    * reports "plenty" — widen is a scan remedy, not a general one. */
+    * reports "plenty" — widen is a scan remedy, not a general one.
+    *
+    * Known gaps, all of which only move the estimate away from the
+    * planner's real split count:
+    *  - Spark cuts files at min(maxPartitionBytes, max(openCostInBytes,
+    *    totalBytes / defaultParallelism)), so a small scan gets more,
+    *    smaller splits than this maxPartitionBytes-only count (extra
+    *    splits of a single-row-group file read nothing);
+    *  - partition pruning is ignored: every file of the relation is
+    *    counted, so a pruned scan of a partitioned table reads as
+    *    wider than it is;
+    *  - DataSource V2 relations are not `LogicalRelation`s and are not
+    *    counted at all, so a frame whose only leaves are V2 scans
+    *    reports "plenty" and is never widened. */
   private def scanSplits(df: DataFrame): Int = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val maxSplit = math.max(1L,

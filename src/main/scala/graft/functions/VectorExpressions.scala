@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Generator, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Generator, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -48,9 +48,22 @@ case class DotF32(left: Expression, right: Expression)
   // sum); any null element → null. Never a silent truncation.
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    DotF32.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => Boxed.unbox(ctx, ev,
+      s"graft.functions.DotF32.dot($a, $b)", "Double"))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotF32 {
+  /** Static so generated code can call it directly; null is the
+    * null result. */
+  def dot(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var s = 0.0
@@ -62,28 +75,20 @@ case class DotF32(left: Expression, right: Expression)
     }
     s
   }
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val bad = ctx.freshName("bad")
-      s"""
-         |int $n = $a.numElements();
-         |boolean $bad = $n != $b.numElements();
-         |double $s = 0.0;
-         |for (int $i = 0; !$bad && $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { $bad = true; break; }
-         |  $s += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
-         |}
-         |if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $s; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+/** Generated code for a kernel whose static returns a boxed
+  * `java.lang.$box` (Double, Long), null exactly when the
+  * expression's result is null. */
+private object Boxed {
+  def unbox(ctx: CodegenContext, ev: ExprCode, call: String, box: String): String = {
+    val r = ctx.freshName("boxed")
+    s"""
+       |java.lang.$box $r = $call;
+       |if ($r == null) { ${ev.isNull} = true; }
+       |else { ${ev.value} = $r.${box.toLowerCase}Value(); }
+     """.stripMargin
+  }
 }
 
 /** Squared L2 distance between two array<long> columns — the exact
@@ -119,9 +124,22 @@ case class SqDistL64(left: Expression, right: Expression)
   // element → null, mirroring the HOF's null propagation.
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SqDistL64.sqDist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => Boxed.unbox(ctx, ev,
+      s"graft.functions.SqDistL64.sqDist($a, $b)", "Long"))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SqDistL64 {
+  /** Static so generated code can call it directly; null is the
+    * null result. */
+  def sqDist(x: ArrayData, y: ArrayData): java.lang.Long = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var s = 0L
@@ -134,30 +152,6 @@ case class SqDistL64(left: Expression, right: Expression)
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val bad = ctx.freshName("bad")
-      s"""
-         |int $n = $a.numElements();
-         |boolean $bad = $n != $b.numElements();
-         |long $s = 0L;
-         |for (int $i = 0; !$bad && $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { $bad = true; break; }
-         |  long $d = $a.getLong($i) - $b.getLong($i);
-         |  $s += $d * $d;
-         |}
-         |if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $s; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** MinHash signature from an AFFINE permutation family, as ONE
@@ -183,7 +177,6 @@ case class AffineMinHashSig(child: Expression,
   require(p > 1 && as.forall(a => a > 0 && a < p) && bs.forall(b => b >= 0 && b < p),
     "affine_minhash_sig needs 0 < A < p and 0 <= B < p (bijections mod prime p)")
 
-  private def k: Int = as.length
   private lazy val aArr: Array[Long] = as.toArray
   private lazy val bArr: Array[Long] = bs.toArray
 
@@ -196,8 +189,24 @@ case class AffineMinHashSig(child: Expression,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "affine_minhash_sig"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    AffineMinHashSig.sig(input.asInstanceOf[ArrayData], aArr, bArr, p)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in => {
+      val aRef = ctx.addReferenceObj("affineAs", aArr, "long[]")
+      val bRef = ctx.addReferenceObj("affineBs", bArr, "long[]")
+      s"${ev.value} = graft.functions.AffineMinHashSig.sig($in, $aRef, $bRef, ${p}L);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object AffineMinHashSig {
+  /** Static so generated code can call it directly. */
+  def sig(arr: ArrayData, as: Array[Long], bs: Array[Long], p: Long): ArrayData = {
+    val k = as.length
     val n = arr.numElements()
     val acc = Array.fill(k)(Long.MaxValue)
     var j = 0
@@ -205,42 +214,14 @@ case class AffineMinHashSig(child: Expression,
       val h = arr.getLong(j)
       var i = 0
       while (i < k) {
-        val x = (aArr(i) * h + bArr(i)) % p
+        val x = (as(i) * h + bs(i)) % p
         if (x < acc(i)) acc(i) = x
         i += 1
       }
       j += 1
     }
-    new GenericArrayData(acc)
+    UnsafeArrayData.fromPrimitiveArray(acc)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val aRef = ctx.addReferenceObj("affineAs", aArr, "long[]")
-      val bRef = ctx.addReferenceObj("affineBs", bArr, "long[]")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val x = ctx.freshName("x")
-      s"""
-         |int $n = $in.numElements();
-         |long[] $acc = new long[$k];
-         |java.util.Arrays.fill($acc, Long.MAX_VALUE);
-         |for (int $j = 0; $j < $n; $j++) {
-         |  long $h = $in.getLong($j);
-         |  for (int $i = 0; $i < $k; $i++) {
-         |    long $x = ($aRef[$i] * $h + $bRef[$i]) % ${p}L;
-         |    if ($x < $acc[$i]) $acc[$i] = $x;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($acc);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** 64-bit SimHash fingerprint in ONE codegen'd pass over pre-hashed
@@ -260,8 +241,20 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    SimHash64.hash(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in =>
+      s"${ev.value} = graft.functions.SimHash64.hash($in);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SimHash64 {
+  /** Static so generated code can call it directly. */
+  def hash(arr: ArrayData): Long = {
     val n = arr.numElements()
     val votes = new Array[Long](64)
     var j = 0
@@ -279,34 +272,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     while (b < 64) { if (votes(b) >= 0) out |= (1L << b); b += 1 }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val n = ctx.freshName("n")
-      val votes = ctx.freshName("votes")
-      val j = ctx.freshName("j")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $in.numElements();
-         |long[] $votes = new long[64];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  long $h = $in.getLong($j);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    if ((($h >>> $b) & 1L) != 0L) $votes[$b] += 1; else $votes[$b] -= 1;
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($votes[$b] >= 0) $out |= (1L << $b);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** 64-bit dHash (difference hash) gradient-sign pack — the classic
@@ -335,48 +300,35 @@ case class DHash64(child: Expression) extends UnaryExpression {
   override def nullable: Boolean = true
   override def prettyName: String = "dhash64"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (arr.numElements() < 72) null
-    else {
-      var out = 0L
-      var r = 0
-      while (r < 8) {
-        var c = 0
-        while (c < 8) {
-          if (arr.getLong(r * 9 + c) < arr.getLong(r * 9 + c + 1))
-            out |= (1L << (r * 8 + c))
-          c += 1
-        }
-        r += 1
-      }
-      out
-    }
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    DHash64.hash(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val out = ctx.freshName("out")
-      val r = ctx.freshName("r")
-      val c = ctx.freshName("c")
-      s"""
-         |if ($in.numElements() < 72) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $out = 0L;
-         |  for (int $r = 0; $r < 8; $r++) {
-         |    for (int $c = 0; $c < 8; $c++) {
-         |      if ($in.getLong($r * 9 + $c) < $in.getLong($r * 9 + $c + 1))
-         |        $out |= (1L << ($r * 8 + $c));
-         |    }
-         |  }
-         |  ${ev.value} = $out;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, in => Boxed.unbox(ctx, ev,
+      s"graft.functions.DHash64.hash($in)", "Long"))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object DHash64 {
+  /** Static so generated code can call it directly; null (fewer than
+    * 72 cells) is the null result. */
+  def hash(arr: ArrayData): java.lang.Long = {
+    if (arr.numElements() < 72) return null
+    var out = 0L
+    var r = 0
+    while (r < 8) {
+      var c = 0
+      while (c < 8) {
+        if (arr.getLong(r * 9 + c) < arr.getLong(r * 9 + c + 1))
+          out |= (1L << (r * 8 + c))
+        c += 1
+      }
+      r += 1
+    }
+    out
+  }
 }
 
 /** 60-bit average-hash (aHash) frame fingerprint in ONE codegen'd
@@ -755,8 +707,27 @@ case class PqEncode(child: Expression, codebook: Array[Double],
   // how the HOF chain's null-padded zip nulls the distance sum.
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    PqEncode.encode(input.asInstanceOf[ArrayData], codebook, numSub, numCodes, subDim)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in => {
+      val cb = ctx.addReferenceObj("pqCodebook", codebook, "double[]")
+      s"""
+         |${ev.value} = graft.functions.PqEncode.encode($in, $cb, $numSub, $numCodes, $subDim);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object PqEncode {
+  /** Static so generated code can call it directly; null (short input
+    * or a null element) is the null result. */
+  def encode(arr: ArrayData, codebook: Array[Double],
+             numSub: Int, numCodes: Int, subDim: Int): ArrayData = {
     val dim = numSub * subDim
     if (arr.numElements() < dim) return null
     var i = 0
@@ -779,51 +750,8 @@ case class PqEncode(child: Expression, codebook: Array[Double],
       out(m) = best
       m += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val cb = ctx.addReferenceObj("pqCodebook", codebook, "double[]")
-      val bad = ctx.freshName("bad")
-      val out = ctx.freshName("out")
-      val m = ctx.freshName("m")
-      val k = ctx.freshName("k")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val base = ctx.freshName("base")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val dim = numSub * subDim
-      s"""
-         |boolean $bad = $in.numElements() < $dim;
-         |for (int $i = 0; !$bad && $i < $dim; $i++) {
-         |  if ($in.isNullAt($i)) $bad = true;
-         |}
-         |if ($bad) { ${ev.isNull} = true; } else {
-         |  int[] $out = new int[$numSub];
-         |  for (int $m = 0; $m < $numSub; $m++) {
-         |    int $best = 0; double $bestD = Double.POSITIVE_INFINITY;
-         |    for (int $k = 0; $k < $numCodes; $k++) {
-         |      int $base = ($m * $numCodes + $k) * $subDim;
-         |      double $d = 0.0;
-         |      for (int $j = 0; $j < $subDim; $j++) {
-         |        double $t = ((double) $in.getFloat($m * $subDim + $j)) - $cb[$base + $j];
-         |        $d += $t * $t;
-         |      }
-         |      if ($d < $bestD) { $bestD = $d; $best = $k; }
-         |    }
-         |    $out[$m] = $best;
-         |  }
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Unicode NFC canonical normalization (q111's text-canonicalization

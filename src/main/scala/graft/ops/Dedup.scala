@@ -1201,10 +1201,6 @@ object Dedup {
       .select(col("source"), explode(TextOps.shingleHashes(
         TextOps.tokens(col("text")))).as("gram"))
       .distinct()
-      // shared lineage: feeds both the per-source sizes and the
-      // pattern rollup — persist or the shingle scan runs twice
-      // (the q74 lesson); the harness clears caches between queries
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = g.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
     // Pattern compression instead of a gram self-join: every gram
     // reduces to its sorted source SET (bounded by S = #sources,
@@ -1302,7 +1298,6 @@ object Dedup {
       .select(col("doc_id"), col("source"),
               substring(col("text"), 1, 24).as("sortkey"),
               TextOps.shingleHashes(TextOps.tokens(col("text"))).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val withRn = Sampling.distributedPrefix(
         docs.select(col("doc_id"), col("source"), col("sortkey"))
           .withColumn("n_tokens", lit(0L)),

@@ -553,13 +553,9 @@ object EventOps {
     * the deduped frame, not the event volume; both dedups are
     * keyed aggregations. */
   def q114RollingDistinct(s: SparkSession, dir: String): DataFrame = {
-    // persist: the deduped (day, user) frame feeds the span anchor
-    // AND the 7× window fan-out — uncached, the events scan + distinct
-    // runs twice. The cache is the collapsed frame, not the stream.
     val dayUser = Tables.events(s, dir)
       .select(to_date(col("ts")).as("day"), col("user_id"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val span = dayUser.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     dayUser
       .select(col("user_id"), col("day"),

@@ -814,7 +814,6 @@ object GraphOps {
   def q227Assortativity(s: SparkSession, dir: String): DataFrame = {
     val edges = clickEdges(s, dir)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     edges
       .join(deg.select(col("src"), col("d").as("dx")), Seq("src"))
       .join(deg.select(col("src").as("dst"), col("d").as("dy")), Seq("dst"))
@@ -993,7 +992,6 @@ object GraphOps {
       .select(col("user_id"),
               get_json_object(col("props"), "$.k").cast("long").as("k"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // item-item co-occurrence matrix, from per-user baskets instead
     // of the clicks×clicks self-join (r15, the q249 move): one
     // user-keyed collect_set + the codegen'd LongPairs generator

@@ -287,31 +287,14 @@ object TextOps {
     * Everything after the first aggregate is vocabulary-sized — a
     * d-way explode, a d×w counter aggregate broadcast back onto the
     * per-token frame, a TakeOrdered top-25. */
-  def q58HeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.documents(s, dir)
-      .select(explode(tokens(col("text"))).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rows = (0 until CmsDepth).map { i =>
-      struct(lit(i).as("row_i"),
-             pmod(pmod(lit(CmsA(i)) * col("h") + lit(CmsB(i)), lit(CmsP)),
-                  lit(Q58Width.toLong)).as("bucket"))
-    }
-    val hashed = counts
-      .withColumn("h", graft.functions.VectorFunctions.rollingHash31(col("token")))
-      .select(col("token"), col("freq"), explode(array(rows: _*)).as("rb"))
-      .select(col("token"), col("freq"),
-              col("rb.row_i").as("row_i"), col("rb.bucket").as("bucket"))
-    val sketch = hashed.groupBy(col("row_i"), col("bucket"))
-      .agg(sum(col("freq")).cast("long").as("counter"))
-    hashed.join(broadcast(sketch), Seq("row_i", "bucket"))
-      .groupBy(col("token"))
-      .agg(min(col("freq")).cast("long").as("freq"),
-           min(col("counter")).as("cms_est"))
-      .orderBy(col("freq").desc, col("token"))
+  def q58HeavyHitters(s: SparkSession, dir: String): DataFrame =
+    cmsEstimates(
+        tokenCounts(s, dir)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        Q58Width)
+      .orderBy(col("exact").desc, col("token"))
       .limit(CmsTopK)
-      .select(col("token"), col("freq"), col("cms_est"))
-  }
+      .select(col("token"), col("exact").as("freq"), col("cms_est"))
 
   /** DuckDB oracle for q58 — the q179 sketch replay, ranked by the
     * exact count instead of the estimate. */
@@ -561,13 +544,7 @@ object TextOps {
     * is exactly the vocabulary-build sort every tokenizer pipeline
     * already pays; output is ~log2(|V|) rows. */
   def q131ZipfCoverage(s: SparkSession, dir: String): DataFrame = {
-    // persist the collapsed vocab frame: it feeds the grand total AND
-    // the rank/cum prefix — uncached, the scan+explode+aggregate
-    // lineage would run twice (the distributedPrefix r7 lesson).
-    val counts = Tables.documents(s, dir)
-      .select(explode(tokens(col("text"))).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = tokenCounts(s, dir)
     val tot = counts.agg(sum(col("c")).cast("long").as("n_total"))
     // global (c desc, token) rank + running sum via the two-phase
     // distributed prefix — the pre-r7 single-partition window over
@@ -769,15 +746,12 @@ object TextOps {
     * rollup — nothing global but two scalar aggs. Overflow: ratio
     * diffs ≤ 1e6, squared ≤ 1e12, summed over V ≪ long range. */
   def q109TokenDrift(s: SparkSession, dir: String): DataFrame = {
-    // ONE scan+tokenize pass, collapsed immediately to (source, token)
-    // counts and persisted — corpus totals, per-source totals, the
-    // top-v vocab, and the observed-vocab counts are all rollups of
-    // this one small frame (pre-r7, each was a separate derivation of
-    // the full explode lineage: four corpus scans at warehouse scale).
+    // the scan+tokenize pass collapses immediately to (source, token)
+    // counts — corpus totals, per-source totals, the top-v vocab, and
+    // the observed-vocab counts are all rollups of this one small frame
     val st = Tables.documents(s, dir)
       .select(col("source"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("source"), col("token")).agg(count(lit(1)).as("stc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val corpus = st.groupBy(col("token")).agg(sum(col("stc")).as("c"))
     val vocab = broadcast(corpus.orderBy(col("c").desc, col("token")).limit(Q109Vocab))
     val perSrc = st.groupBy(col("source")).agg(sum(col("stc")).as("n_s"))
@@ -1067,6 +1041,36 @@ object TextOps {
   private val CmsDepth = 4
   private val CmsTopK = 25
 
+  /** Corpus token counts (token, c): the one corpus-linear stage of
+    * q58, q131 and q179. */
+  private def tokenCounts(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .select(explode(tokens(col("text"))).as("token"))
+      .groupBy(col("token")).agg(count(lit(1)).as("c"))
+
+  /** The count-min sketch of q58 and q179 at width `w` over token
+    * counts (token, c): one row per token, (token, exact, cms_est).
+    * The d-way explode, the d×w counter aggregate (tiny, broadcast
+    * back for the probe) and the per-token min are vocabulary-sized. */
+  private def cmsEstimates(counts: DataFrame, w: Int): DataFrame = {
+    val rows = (0 until CmsDepth).map { i =>
+      struct(lit(i).as("row_i"),
+             pmod(pmod(lit(CmsA(i)) * col("h") + lit(CmsB(i)), lit(CmsP)),
+                  lit(w.toLong)).as("bucket"))
+    }
+    val hashed = counts
+      .withColumn("h", graft.functions.VectorFunctions.rollingHash31(col("token")))
+      .select(col("token"), col("c"), explode(array(rows: _*)).as("rb"))
+      .select(col("token"), col("c"),
+              col("rb.row_i").as("row_i"), col("rb.bucket").as("bucket"))
+    val sketch = hashed.groupBy(col("row_i"), col("bucket"))
+      .agg(sum(col("c")).cast("long").as("counter"))
+    hashed.join(broadcast(sketch), Seq("row_i", "bucket"))
+      .groupBy(col("token"))
+      .agg(min(col("c")).cast("long").as("exact"),
+           min(col("counter")).as("cms_est"))
+  }
+
   private val Q179Width = 512
 
   /** q179 — Count-Min-sketch heavy hitters, FULLY oracle-gated (the
@@ -1092,36 +1096,12 @@ object TextOps {
     * frame, and a TakeOrdered top-k. The counter matrix is ~2 KB —
     * the same "tiny state, corpus-linear single pass" contract as
     * q41's HLL and q168's bloom. */
-  def q179CmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    // per-token exact counts: the one corpus-linear stage, persisted —
-    // it feeds the counter build AND the estimate probe (caller owns
-    // cache cleanup per the documented lifecycle contract)
-    val counts = Tables.documents(s, dir)
-      .select(explode(tokens(col("text"))).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rows = (0 until CmsDepth).map { i =>
-      struct(lit(i).as("row_i"),
-             pmod(pmod(lit(CmsA(i)) * col("h") + lit(CmsB(i)), lit(CmsP)),
-                  lit(Q179Width.toLong)).as("bucket"))
-    }
-    val hashed = counts
-      .withColumn("h", graft.functions.VectorFunctions.rollingHash31(col("token")))
-      .select(col("token"), col("c"), explode(array(rows: _*)).as("rb"))
-      .select(col("token"), col("c"),
-              col("rb.row_i").as("row_i"), col("rb.bucket").as("bucket"))
-    // the d×w counter matrix — tiny, broadcast back for the probe
-    val sketch = hashed.groupBy(col("row_i"), col("bucket"))
-      .agg(sum(col("c")).cast("long").as("counter"))
-    hashed.join(broadcast(sketch), Seq("row_i", "bucket"))
-      .groupBy(col("token"))
-      .agg(min(col("counter")).as("cms_est"),
-           min(col("c")).cast("long").as("exact_c"))
+  def q179CmsHeavyHitters(s: SparkSession, dir: String): DataFrame =
+    cmsEstimates(tokenCounts(s, dir), Q179Width)
       .orderBy(col("cms_est").desc, col("token"))
       .limit(CmsTopK)
-      .select(col("token"), col("cms_est"), col("exact_c"),
-              (col("cms_est") - col("exact_c")).as("overcount"))
-  }
+      .select(col("token"), col("cms_est"), col("exact").as("exact_c"),
+              (col("cms_est") - col("exact")).as("overcount"))
 
   /** DuckDB oracle for q179 — the identical sketch, replayed: same
     * base-31 fingerprint, same (A·H+B) mod P mod W row hashes, same

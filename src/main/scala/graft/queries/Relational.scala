@@ -636,14 +636,10 @@ object Relational {
     * aggregate-then-broadcast pass (the F8 two-phase pattern);
     * clamping is map-side; sums are integer micros. */
   def q120Winsorize(s: SparkSession, dir: String): DataFrame = {
-    // persist: the 2-column projection feeds the band computation AND
-    // the clamped rollup — uncached, the orders scan runs twice (r7
-    // single-planning audit)
     val o = graft.Tables.orders(s, dir)
       .select(col("o_orderpriority").as("prio"),
               floor(col("o_totalprice") * lit(1e6d) + lit(0.5d)).cast("long")
                 .as("p_micro"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = o.groupBy(col("prio"))
       // percentile_disc picks a MEMBER value but returns double;
       // cast back to the exact integer micro it selected
@@ -1142,9 +1138,8 @@ object Relational {
     * whose per-group state is bounded by m = 4096 buckets regardless
     * of event volume (the sketch contract); stage 2 merges |days|
     * such sets per type — state ≤ days·m integers per type, the same
-    * bound the daily-rollup table itself has. The projected events
-    * frame is persisted because both the daily and the direct path
-    * consume it (caller owns cleanup per the cache contract); a
+    * bound the daily-rollup table itself has. Both the daily and the
+    * direct path read the projected events frame; a
     * production deployment keeps ONLY the daily partials and drops
     * the direct/exact columns — they ride along as the gate's
     * reference.
@@ -1162,7 +1157,6 @@ object Relational {
               col("user_id"),
               pmod(pmod(lit(LcA) * col("user_id") + lit(LcB), lit(LcP)),
                    lit(Q199M.toLong)).as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val daily = e.groupBy(col("event_type"), col("day"))
       .agg(collect_set(col("bucket")).as("bs"))
       .select(col("event_type"), col("bs"),

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 
@@ -9,6 +9,20 @@ import org.apache.spark.sql.functions._
   * formulation; SQL registration path works. */
 class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Collects `df` through generated code only: ConvertToLocalRelation
+    * is excluded (it folds a projection over a local Seq into a
+    * LocalRelation, evaluated interpreted at optimization time) and
+    * codegen may not fall back to interpreted evaluation. */
+  private def collectCodegen(df: DataFrame): Array[Row] = {
+    val confs = Seq(
+      "spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try df.collect()
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
 
   private val df = Seq(
     (1L, Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f)),
@@ -306,23 +320,27 @@ class VectorExpressionsSpec extends SparkSpec {
       }: _*)
       (array_position(dists, array_min(dists)) - 1).cast("int")
     }: _*)
-    val rows = vecs.select($"vec_id",
+    val rows = collectCodegen(vecs.select($"vec_id",
         VectorFunctions.pqEncode($"embedding", cb, subDim).as("fast"),
-        hofCodes.as("ref")).collect()
+        hofCodes.as("ref"),
+        VectorFunctions.dotF32($"embedding", reverse($"embedding")).as("dot")))
     rows.foreach(r => assert(r.getSeq[Int](1) == r.getSeq[Int](2),
       s"codegen vs HOF diverge at vec ${r.getLong(0)}"))
     // interpreted path (nullSafeEval via a Literal child, no codegen)
     val flat = cb.flatten.flatten
     vecs.collect().foreach { r =>
       val emb = r.getSeq[Float](1).toArray
-      val lit = org.apache.spark.sql.catalyst.expressions.Literal
-        .create(emb, org.apache.spark.sql.types.ArrayType(
+      def floats(v: Array[Float]) = org.apache.spark.sql.catalyst.expressions.Literal
+        .create(v, org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType, containsNull = false))
+      val lit = floats(emb)
       val interp = PqEncode(lit, flat, M, K, subDim).eval(null)
         .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray.toSeq
-      val fromDf = rows.find(_.getLong(0) == r.getLong(0)).get.getSeq[Int](1)
-      assert(interp == fromDf,
+      val fromDf = rows.find(_.getLong(0) == r.getLong(0)).get
+      assert(interp == fromDf.getSeq[Int](1),
         s"interpreted vs codegen diverge at vec ${r.getLong(0)}")
+      assert(DotF32(lit, floats(emb.reverse)).eval(null) == fromDf.getDouble(3),
+        s"dot_f32: interpreted vs codegen diverge at vec ${r.getLong(0)}")
     }
   }
 
@@ -339,21 +357,34 @@ class VectorExpressionsSpec extends SparkSpec {
     val ref = array(as.indices.map { j =>
       array_min(transform($"hs", h => (h * lit(as(j)) + lit(bs(j))) % lit(p)))
     }: _*)
-    val got = df.select($"id",
+    // the same arrays feed the other array<long> kernels: dhash64 sees
+    // 3..120 cells, so both its null (< 72) and its packed path run
+    val got = collectCodegen(df.select($"id",
         VectorFunctions.affineMinhashSig($"hs", as, bs, p).as("fast"),
-        ref.as("ref")).collect()
+        ref.as("ref"),
+        VectorFunctions.sqDistL64($"hs", reverse($"hs")).as("sqdist"),
+        VectorFunctions.simhash64($"hs").as("simhash"),
+        VectorFunctions.dhash64(flatten(array_repeat($"hs", 3))).as("dhash")))
     got.foreach(r => assert(r.getSeq[Long](1) == r.getSeq[Long](2),
       s"codegen vs HOF diverge at row ${r.getLong(0)}"))
+    assert(got.exists(_.isNullAt(5)) && got.exists(!_.isNullAt(5)))
     // interpreted path (nullSafeEval via a Literal child, no codegen)
     rows.foreach { case (id, hs) =>
-      val lit = org.apache.spark.sql.catalyst.expressions.Literal
-        .create(hs.toArray, org.apache.spark.sql.types.ArrayType(
+      def longs(v: Seq[Long]) = org.apache.spark.sql.catalyst.expressions.Literal
+        .create(v.toArray, org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.LongType, containsNull = false))
+      val lit = longs(hs)
       val interp = AffineMinHashSig(lit, as, bs, p).eval(null)
         .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
         .toLongArray.toSeq
-      val fromDf = got.find(_.getLong(0) == id).get.getSeq[Long](1)
-      assert(interp == fromDf, s"interpreted vs codegen diverge at row $id")
+      val fromDf = got.find(_.getLong(0) == id).get
+      assert(interp == fromDf.getSeq[Long](1), s"interpreted vs codegen diverge at row $id")
+      assert(SqDistL64(lit, longs(hs.reverse)).eval(null) == fromDf.getLong(3),
+        s"sqdist_l64: interpreted vs codegen diverge at row $id")
+      assert(SimHash64(lit).eval(null) == fromDf.getLong(4),
+        s"simhash64: interpreted vs codegen diverge at row $id")
+      assert(DHash64(longs(Seq.fill(3)(hs).flatten)).eval(null) == fromDf.get(5),
+        s"dhash64: interpreted vs codegen diverge at row $id")
     }
     // constants outside [0, p) or mismatched lists are rejected loudly
     intercept[IllegalArgumentException] {
@@ -377,9 +408,8 @@ class VectorExpressionsSpec extends SparkSpec {
       shiftleft(shiftright($"a", i).bitwiseAND(1), 2 * i).cast("long") +
       shiftleft(shiftright($"b", i).bitwiseAND(1), 2 * i + 1).cast("long")
     }.reduce(_ + _)
-    val rows = df2.select($"id", $"a", $"b",
-        VectorFunctions.zorder2($"a", $"b").as("fast"), unrolled.as("ref"))
-      .collect()
+    val rows = collectCodegen(df2.select($"id", $"a", $"b",
+        VectorFunctions.zorder2($"a", $"b").as("fast"), unrolled.as("ref")))
     rows.foreach { r =>
       assert(r.getLong(3) == r.getLong(4),
         s"codegen vs unrolled diverge at id ${r.getLong(0)}")

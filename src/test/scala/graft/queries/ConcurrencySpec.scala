@@ -8,8 +8,8 @@ import scala.concurrent.duration._
 /** VERDICT r8 #8: the per-query gate runs one query at a time, so
   * cache/temp-state crosstalk between CONCURRENT queries on one
   * session had no coverage. A production session serves many queries
-  * at once; operators that persist intra-query frames (q24/q35/q128/
-  * q157/q179), collect dimension aggregates to the driver, or run
+  * at once; operators that persist intra-query frames (q24/q35/q157),
+  * collect dimension aggregates to the driver, or run
   * driver-side iteration (BFS hops, k-means) must not corrupt each
   * other through the shared CacheManager / conf / scheduler.
   *
@@ -24,7 +24,7 @@ class ConcurrencySpec extends SparkSpec {
   private val mix = Seq(
     "q27_ivf_topk",        // sampled k-means learn (driver collect) + probe
     "q157_khop_bfs",       // driver-side hop loop, persist + unpersist
-    "q179_cms_heavy_hitters", // intra-query persist of token counts
+    "q24_minhash_lsh",     // intra-query persist of per-doc shingle hashes
     "q02_revenue_by_nation")  // plain broadcast-join aggregate
 
   test("4-query concurrent mix matches sequential results on one session") {

@@ -354,16 +354,14 @@ class PlanAuditSpec extends SparkSpec {
       s"token stream must not shuffle for the lexicon:\n${p.take(800)}")
   }
 
-  test("q199 rollup reads the cached events projection for both sketch paths") {
+  test("q199 rollup: both sketch paths read the events projection uncached") {
     val p = plan("q199_sketch_rollup")
     // daily partials AND the direct reference both consume the
-    // persisted 4-column projection — a second parquet scan here
-    // would double the corpus read the rollup exists to avoid
-    assert("InMemoryTableScan".r.findAllIn(p).length >= 2,
-      s"both paths must read the persisted projection:\n${p.take(1200)}")
+    // 4-column projection; caching it measured slower at sf0.1
+    assert(!p.contains("InMemoryTableScan"),
+      s"q199 holds no cache:\n${p.take(1200)}")
     assert(p.contains("BroadcastHashJoin"),
       "the merged-vs-direct join (rows = |event types|) must broadcast")
-    spark.catalog.clearCache()
   }
 
   test("q200 basket mining broadcasts every metric lookup; top-k not global sort") {
